@@ -1,22 +1,50 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import graft.Memo.memo
 
 /** Loaders for the driver's synthetic parquet corpus (TESTDATA.md).
   *
   * Columnar parquet scans — Catalyst pushes predicates and prunes
   * columns into these reads, so every query should start here rather
   * than caching or collecting (SURVEY.md §1 "Orientation & schema
-  * system"). Schemas are fixed by the driver (FIXTURES.md §A); we read
-  * them as-written rather than coercing, and assert them in tests.
+  * system"). Schemas are fixed by the corpus (FIXTURES.md §A) but have
+  * drifted across corpus regenerations, so we read them as-written
+  * rather than declaring them, and assert them in CorpusCanarySpec.
+  *
+  * Resolve once per session: [[load]] infers a file's schema from its
+  * parquet footer the first time a session reads it, and afterwards
+  * reads with that schema given, so a query's load runs no Spark job.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val schemas = Memo.cache[(String, Long, Long), StructType]
+
+  /** `spark.read.parquet` of `<dir>/<name>.parquet`, with the footer
+    * schema inference (one Spark job) memoized per (session, path,
+    * modification time, length). The cached value is exactly the schema
+    * Spark infers, so plans and outputs equal those of the bare read.
+    * The stamp comes from one Hadoop `getFileStatus` per load (no Spark
+    * job): a file rewritten at the same path is inferred again. For a
+    * directory of part files the stamp is the directory's own, which
+    * changes whenever a writer adds, removes or renames a part file (a
+    * Spark overwrite does all three). */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val schema = memo(schemas, spark, (path, st.getModificationTime, st.getLen)) {
+      spark.read.parquet(path).schema
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(s: SparkSession, dir: String): DataFrame = load(s, dir, "region")
   def nation(s: SparkSession, dir: String): DataFrame = load(s, dir, "nation")
@@ -30,8 +58,9 @@ object Tables {
     * in two parquet encodings across corpus regenerations:
     *
     *   - INT64 TIMESTAMP(NANOS), which Spark 4 refuses to read natively
-    *     (PARQUET_TYPE_ILLEGAL). We read it as long nanos via the legacy
-    *     SQLConf and floor-divide to a microsecond timestamp. `div` is
+    *     (PARQUET_TYPE_ILLEGAL). Only then do we set the legacy SQLConf
+    *     `spark.sql.legacy.parquet.nanosAsLong`, read the column as long
+    *     nanos and floor-divide to a microsecond timestamp. `div` is
     *     integral division: ns values (~1.7e18) would lose precision
     *     through a double `/`; truncation is floor for positive epochs,
     *     matching how every query buckets ts downward.
@@ -48,8 +77,11 @@ object Tables {
   def events(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = load(s, dir, "events")
+    val df = try load(s, dir, "events") catch {
+      case e: Exception if illegalParquetType(e) =>
+        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        load(s, dir, "events")
+    }
     df.schema("ts").dataType match {
       case LongType         => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
@@ -59,6 +91,17 @@ object Tables {
         "expected INT64 nanos, TIMESTAMP_NTZ, or TIMESTAMP")
     }
   }
+
+  /** Whether `e` is Spark refusing a footer type it cannot map (an INT64
+    * TIMESTAMP(NANOS) column without the legacy flag). The footer is read
+    * inside the inference job, so the error arrives as the cause of the
+    * job failure. */
+  private def illegalParquetType(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case t: SparkThrowable => t.getCondition == "PARQUET_TYPE_ILLEGAL"
+      case _ => false
+    }
+
   def documents(s: SparkSession, dir: String): DataFrame = load(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String): DataFrame = load(s, dir, "embeddings")
 }

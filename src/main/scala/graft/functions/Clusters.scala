@@ -1,6 +1,7 @@
 package graft.functions
 
-import graft.Tables
+import graft.{Memo, Tables}
+import graft.Memo.memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -595,21 +596,8 @@ object Clusters {
   def graphAssortativity(s: SparkSession, dir: String): DataFrame =
     graphAssortativityOn(bipartiteEdges(s, dir))
 
-  private val bipCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private val knnCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Memoize per (session, dir) — the [[Dedup]] shingle-cache
-    * discipline: synchronized first-build, stopped-session eviction. */
-  private def memo(cache: scala.collection.concurrent.TrieMap[
-      (SparkSession, String), DataFrame],
-      s: SparkSession, dir: String)(build: => DataFrame): DataFrame =
-    cache.synchronized {
-      cache.filterInPlace { case ((sess, _), _) =>
-        !sess.sparkContext.isStopped }
-      cache.getOrElseUpdate((s, dir), build)
-    }
+  private val bipCache = Memo.cache[String, DataFrame]
+  private val knnCache = Memo.cache[String, DataFrame]
 
   /** kNN similarity edges over the embedding corpus — SEVEN graph
     * catalog wrappers (triangles, degrees, neighbor-jaccard,
@@ -632,8 +620,7 @@ object Clusters {
   private[graft] def bipartiteEdges(s: SparkSession, dir: String): DataFrame =
     memo(bipCache, s, dir) { bipartiteEdgesBuild(s, dir) }
 
-  private val dirTradeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val dirTradeCache = Memo.cache[String, DataFrame]
 
   /** The DIRECTED customer → supplier trade edge list (distinct
     * (o_custkey, l_suppkey + 1e6) pairs of the orders ⋈ lineitem
@@ -786,9 +773,8 @@ object Clusters {
       .orderBy("seed")
   }
 
-  private val seedBfsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (IndexedSeq[DataFrame], IndexedSeq[DataFrame], Int)]
+  private val seedBfsCache =
+    Memo.cache[String, (IndexedSeq[DataFrame], IndexedSeq[DataFrame], Int)]
 
   /** The forward multi-source BFS over the trade graph from the
     * shared catalog seed set (customers < 10, 4-hop horizon) —
@@ -800,14 +786,10 @@ object Clusters {
     * betweenness, the distance census for harmonic. */
   private def tradeSeedBfs(s: SparkSession, dir: String)
       : (IndexedSeq[DataFrame], IndexedSeq[DataFrame], Int) =
-    seedBfsCache.synchronized {
-      seedBfsCache.filterInPlace { case ((sess, _), _) =>
-        !sess.sparkContext.isStopped }
-      seedBfsCache.getOrElseUpdate((s, dir), {
-        val edges = bipartiteEdges(s, dir)
-        seedBfsForward(edges,
-          edges.select(col("src")).filter(col("src") < 10), 4)
-      })
+    memo(seedBfsCache, s, dir) {
+      val edges = bipartiteEdges(s, dir)
+      seedBfsForward(edges,
+        edges.select(col("src")).filter(col("src") < 10), 4)
     }
 
   /** Catalog form: the first nine customers on the trade graph (the
@@ -1086,8 +1068,7 @@ object Clusters {
   def graphClusteringCoeff(s: SparkSession, dir: String): DataFrame =
     clusteringCoeffOn(knnEdges(s, dir).select("qid", "nid"))
 
-  private val minhashCcCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val minhashCcCache = Memo.cache[String, DataFrame]
 
   /** Catalog form: components of the MinHash-verified near-dup pairs
     * (jac >= 0.8), i.e. the full Dedup rung chain
@@ -1872,8 +1853,7 @@ object Clusters {
       .groupBy("cluster_id")
       .agg(count(lit(1)).as("n_members"), max(col("bal")).as("surviving_bal"))
 
-  private val erCcCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val erCcCache = Memo.cache[String, DataFrame]
 
   /** The catalog entity records — customers as ER input (name = match
     * string, nation = hard block, balance = survivorship value). */
@@ -2144,8 +2124,7 @@ object Clusters {
     * degree ≥ 1 in it, so walks never dead-end). The dump orderBy
     * lives HERE, not in the library form — consumers like
     * [[graphSkipgramPairs]] feed the sort-free relation to joins. */
-  private val walkCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val walkCache = Memo.cache[String, DataFrame]
 
   /** The uniform walk corpus, memoized per (session, dir) — BOTH
     * catalog consumers (graph_random_walk itself and the skip-gram
@@ -2395,19 +2374,15 @@ object Clusters {
         expr("(qx - x) * (qx - x) + (qy - y) * (qy - y)").as("d2"))
   }
 
-  private val gridCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Long), DataFrame]
+  private val gridCache = Memo.cache[(String, Long), DataFrame]
 
   /** The complete-within-`cellMicro` pair relation, one stencil join
     * per (session, dir, cell size) — see [[gridPairsBuild]]. */
   private[graft] def gridPairs(s: SparkSession, dir: String,
       cellMicro: Long): DataFrame =
-    gridCache.synchronized {
-      gridCache.filterInPlace { case ((sess, _, _), _) =>
-        !sess.sparkContext.isStopped }
-      gridCache.getOrElseUpdate((s, dir, cellMicro),
-        gridPairsBuild(Tables.embeddings(s, dir), cellMicro)
-          .localCheckpoint(true))
+    memo(gridCache, s, (dir, cellMicro)) {
+      gridPairsBuild(Tables.embeddings(s, dir), cellMicro)
+        .localCheckpoint(true)
     }
 
   /** Grid-bucketed DBSCAN (Ester et al. KDD 1996; the cell-partition

@@ -1,6 +1,7 @@
 package graft.functions
 
-import graft.Tables
+import graft.{Memo, Tables}
+import graft.Memo.memo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,20 +56,7 @@ object Dedup {
     * (measured 2.2x on the dedup tail at sf0.1). ~10s of MB at corpus
     * scale; at 100 TB this staging relation would be written to
     * parquet between stages instead. */
-  private val shCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Memoize `build` per (session, dir): synchronized so concurrent
-    * first calls can't double-persist, and entries of stopped
-    * sessions are evicted on access so a long-lived JVM that cycles
-    * sessions (the library-use pattern) doesn't pin dead object
-    * graphs forever. */
-  private def memo(cache: scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame],
-      s: SparkSession, dir: String)(build: => DataFrame): DataFrame =
-    cache.synchronized {
-      cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      cache.getOrElseUpdate((s, dir), build)
-    }
+  private val shCache = Memo.cache[String, DataFrame]
 
   /** Library form: (doc_id, hs) shingle-hash relation of any corpus
     * with (doc_id, text) columns. Persist (or checkpoint to parquet at
@@ -424,8 +412,7 @@ object Dedup {
   def dedupMinhash(s: SparkSession, dir: String): DataFrame =
     dedupMinhashOn(shingleHashes(s, dir))
 
-  private val mhPairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val mhPairCache = Memo.cache[String, DataFrame]
 
   /** The MinHash-verified near-dup pair relation of the catalog
     * corpus, memoized per (session, dir) — the shingle-cache
@@ -596,8 +583,7 @@ object Dedup {
     * simhash over a ~30-word shared vocabulary is collision-prone, so
     * any nonzero threshold floods with false positives; the planted
     * near-dup pairs all land at distance 0). */
-  private val tokCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val tokCache = Memo.cache[String, DataFrame]
 
   /** Library form: (doc_id, tok, cnt, h) token-count+hash relation of
     * any (doc_id, text) corpus. */

@@ -1,6 +1,7 @@
 package graft.functions
 
-import graft.Tables
+import graft.{Memo, Tables}
+import graft.Memo.memo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -227,16 +228,12 @@ object Lm {
     * the second consumer starts from the materialized relation; at
     * 100 TB this is the "write the scored corpus to parquet once, read
     * it twice" step. */
-  private val perDocCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val perDocCache = Memo.cache[String, DataFrame]
 
   private def backoffPerDocCached(s: SparkSession, dir: String): DataFrame =
-    perDocCache.synchronized {
-      perDocCache.filterInPlace { case ((sess, _), _) =>
-        !sess.sparkContext.isStopped }
-      perDocCache.getOrElseUpdate((s, dir),
-        lmNgramBackoffOn(withBucket(Tables.documents(s, dir)),
-          col("bucket") < TrainPct).localCheckpoint(true))
+    memo(perDocCache, s, dir) {
+      lmNgramBackoffOn(withBucket(Tables.documents(s, dir)),
+        col("bucket") < TrainPct).localCheckpoint(true)
     }
 
   def lmNgramBackoff(s: SparkSession, dir: String): DataFrame =

@@ -1,6 +1,7 @@
 package graft.functions
 
-import graft.{Guards, Tables}
+import graft.{Guards, Memo, Tables}
+import graft.Memo.memo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -415,8 +416,7 @@ object Similarity {
       .orderBy("qid", "rnk")
   }
 
-  private val pairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val pairCache = Memo.cache[String, DataFrame]
 
   /** The corpus all-pairs cosine relation, memoized per (session,
     * dir) — the [[Dedup]] shingle-cache discipline. Both k-NN graph
@@ -432,13 +432,10 @@ object Similarity {
     exactAllPairsGate(Tables.embeddings(s, dir),
       "cosPairsCached (dedup_embedding / sim_knn_join / dedup_semantic)",
       "dedupEmbeddingLshOn / simAnnIvfPq / dedupSemanticClusteredOn")
-    pairCache.synchronized {
-      pairCache.filterInPlace { case ((sess, _), _) =>
-        !sess.sparkContext.isStopped }
-      pairCache.getOrElseUpdate((s, dir),
-        blockCosinePairsOn(Tables.embeddings(s, dir), 8, (l, r) => l =!= r)
-          .select(col("da").as("qid"), col("db").as("nid"), col("cos"))
-          .localCheckpoint(true))
+    memo(pairCache, s, dir) {
+      blockCosinePairsOn(Tables.embeddings(s, dir), 8, (l, r) => l =!= r)
+        .select(col("da").as("qid"), col("db").as("nid"), col("cos"))
+        .localCheckpoint(true)
     }
   }
 
@@ -569,8 +566,7 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  private val kmCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val kmCache = Memo.cache[String, DataFrame]
 
   /** The trained catalog k-means assignment (vec_id, cell, d2,
     * n_members), memoized per (session, dir) — the cosPairsCached /
@@ -579,11 +575,8 @@ object Similarity {
     * sim_ann_ivf_trained, dedup_semantic_clustered) read this exact
     * relation, so a catalog run pays Lloyd's iterations once. */
   private[graft] def kmeansCached(s: SparkSession, dir: String): DataFrame =
-    kmCache.synchronized {
-      kmCache.filterInPlace { case ((sess, _), _) =>
-        !sess.sparkContext.isStopped }
-      kmCache.getOrElseUpdate((s, dir),
-        kmeansOn(Tables.embeddings(s, dir)).localCheckpoint(true))
+    memo(kmCache, s, dir) {
+      kmeansOn(Tables.embeddings(s, dir)).localCheckpoint(true)
     }
 
   def clusterKmeans(s: SparkSession, dir: String): DataFrame =
@@ -845,18 +838,14 @@ object Similarity {
       .orderBy("qid", "rnk")
   }
 
-  private val annEdgeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val annEdgeCache = Memo.cache[String, DataFrame]
 
   /** The degree-[[GraphAnnDegree]] search graph, memoized: one window
     * over the memoized pair relation. */
   private def annGraphEdges(s: SparkSession, dir: String): DataFrame =
-    annEdgeCache.synchronized {
-      annEdgeCache.filterInPlace { case ((sess, _), _) =>
-        !sess.sparkContext.isStopped }
-      annEdgeCache.getOrElseUpdate((s, dir),
-        simKnnJoinCached(s, dir, GraphAnnDegree)
-          .select("qid", "nid").localCheckpoint(true))
+    memo(annEdgeCache, s, dir) {
+      simKnnJoinCached(s, dir, GraphAnnDegree)
+        .select("qid", "nid").localCheckpoint(true)
     }
 
   def simAnnGraph(s: SparkSession, dir: String): DataFrame =
@@ -1031,19 +1020,15 @@ object Similarity {
     (qv, c1)
   }
 
-  private val pqTrainCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val pqTrainCache = Memo.cache[String, (DataFrame, DataFrame)]
 
   /** The catalog PQ training, memoized per (session, dir): three
     * consumers (sim_ann_pq, sim_ann_ivfpq, sim_pq_distortion) read
     * the same grid + codebook, so a catalog run trains once. */
   private def pqTrainCached(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    pqTrainCache.synchronized {
-      pqTrainCache.filterInPlace { case ((sess, _), _) =>
-        !sess.sparkContext.isStopped }
-      pqTrainCache.getOrElseUpdate((s, dir),
-        pqTrain(Tables.embeddings(s, dir), 16, 8))
+    memo(pqTrainCache, s, dir) {
+      pqTrain(Tables.embeddings(s, dir), 16, 8)
     }
 
   def pqAnnOn(emb: DataFrame, queries: DataFrame, subDim: Int = 16,
@@ -1570,19 +1555,15 @@ object Similarity {
       .orderBy("dim")
   }
 
-  private val pcaCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val pcaCache = Memo.cache[String, DataFrame]
 
   /** The corpus top-PC relation (dim, loading_q20, lambda_q),
     * memoized per (session, dir) — the kmeansCached discipline: both
     * catalog consumers (sim_pca_power, sim_whiten_abtt) read this
     * 64-row relation, so a catalog run pays the covariance pass once. */
   private[graft] def pcaCached(s: SparkSession, dir: String): DataFrame =
-    pcaCache.synchronized {
-      pcaCache.filterInPlace { case ((sess, _), _) =>
-        !sess.sparkContext.isStopped }
-      pcaCache.getOrElseUpdate((s, dir),
-        simPcaPowerOn(Tables.embeddings(s, dir)).localCheckpoint(true))
+    memo(pcaCache, s, dir) {
+      simPcaPowerOn(Tables.embeddings(s, dir)).localCheckpoint(true)
     }
 
   def simPcaPower(s: SparkSession, dir: String): DataFrame =

@@ -1,6 +1,7 @@
 package graft.functions
 
-import graft.{Guards, Tables}
+import graft.{Guards, Memo, Tables}
+import graft.Memo.memo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -412,16 +413,12 @@ object Text {
     * running the catalog must train it ONCE (the r6-verdict
     * shared-subtree rule). Entries of stopped sessions evict on
     * access. */
-  private val scoredCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val scoredCache = Memo.cache[String, DataFrame]
 
   private def qualityScored(s: SparkSession, dir: String): DataFrame =
-    scoredCache.synchronized {
-      scoredCache.filterInPlace {
-        case ((sess, _), _) => !sess.sparkContext.isStopped }
-      scoredCache.getOrElseUpdate((s, dir),
-        qualityLogregOn(Tables.documents(s, dir))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    memo(scoredCache, s, dir) {
+      qualityLogregOn(Tables.documents(s, dir))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Per-language batch size for [[sampleUncertaintyOn]]. */

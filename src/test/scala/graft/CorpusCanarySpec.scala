@@ -12,7 +12,10 @@ import org.apache.spark.sql.types._
   *
   * `Tables.events` must normalize EITHER accepted ts encoding to
   * TimestampType; both paths are covered — the current corpus's shape
-  * here, the ns-long shape against a staged fixture.
+  * here, the ns-long shape against staged fixtures (a plain long column
+  * and a real INT64 TIMESTAMP(NANOS) file). `Tables.load` caches each
+  * file's schema per session, so drift written at a path the session
+  * already read must still be named here.
   */
 class CorpusCanarySpec extends SparkSpecBase {
 
@@ -52,16 +55,41 @@ class CorpusCanarySpec extends SparkSpecBase {
     case other            => other
   }
 
-  for ((table, cols) <- expected.toSeq.sortBy(_._1)) {
+  /** The canary's verdict on `table` under `dir`: None when its loaded
+    * schema matches the contract, else the drift spelled out by name. */
+  private def drift(dir: String, table: String): Option[String] = {
+    val got = Tables.load(spark, dir, table).schema.fields
+      .map(f => f.name -> norm(f.dataType)).toSeq
+    val want = expected(table).map { case (n, t) => n -> norm(t) }
+    Option.when(got != want)(
+      s"\nCORPUS RESHAPED: $table schema drifted from " +
+        s"FIXTURES.md §A.\n  expected: $want\n  got:      $got")
+  }
+
+  for (table <- expected.keys.toSeq.sorted) {
     test(s"canary: $table matches the FIXTURES.md §A contract") {
-      val schema = Tables.load(spark, sf, table).schema
-      val got = schema.fields.map(f => f.name -> norm(f.dataType)).toSeq
-      val want = cols.map { case (n, t) => n -> norm(t) }
-      assert(got == want,
-        s"\nDRIVER CORPUS RESHAPED: $table schema drifted from " +
-          s"FIXTURES.md §A.\n  expected: $want\n  got:      $got")
+      drift(sf, table).foreach(msg => fail(msg))
       assert(Tables.load(spark, sf, table).count() > 0)
     }
+  }
+
+  test("canary: drift at the same path is named even after the table was loaded") {
+    import org.apache.spark.sql.functions._
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft_drift")
+    val target = dir.resolve("customer.parquet")
+    Files.copy(Paths.get(s"$sf/customer.parquet"), target)
+    assert(drift(dir.toString, "customer").isEmpty)
+    // rewrite the file in place with c_acctbal as a string: the cached
+    // schema of the earlier load must not hide the change
+    val staged = dir.resolve("staged")
+    Tables.load(spark, dir.toString, "customer")
+      .withColumn("c_acctbal", col("c_acctbal").cast("string"))
+      .coalesce(1).write.parquet(staged.toString)
+    val part = Files.list(staged).filter(_.toString.endsWith(".parquet")).findFirst().get
+    Files.copy(part, target, StandardCopyOption.REPLACE_EXISTING)
+    val msg = drift(dir.toString, "customer")
+    assert(msg.exists(m => m.contains("customer") && m.contains("(c_acctbal,StringType)")), msg)
   }
 
   test("canary: events normalizes to TimestampType through Tables.events") {
@@ -103,5 +131,61 @@ class CorpusCanarySpec extends SparkSpecBase {
     val roundTrip = back.select("event_id", "ts").collect()
     assert(roundTrip.forall(r => expectedTs(r.getLong(0)) == r.getTimestamp(1)),
       "ns-long loader branch changed ts values")
+  }
+
+  test("canary: INT64 TIMESTAMP(NANOS) events set the legacy flag; the current corpus does not") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val flag = "spark.sql.legacy.parquet.nanosAsLong"
+    val saved = spark.conf.getOption(flag)
+    val rows = Tables.events(spark, sf).orderBy("event_id").limit(50).collect()
+    try {
+      spark.conf.unset(flag)
+      // the current corpus (timestamp[us]) loads without the flag
+      val copy = Files.createTempDirectory("graft_us_events")
+      Files.copy(Paths.get(s"$sf/events.parquet"), copy.resolve("events.parquet"))
+      assert(Tables.events(spark, copy.toString).count() == Tables.events(spark, sf).count())
+      assert(spark.conf.get(flag) == "false", "timestamp[us] events must not set the flag")
+
+      // the old encoding, written as real INT64 TIMESTAMP(NANOS) parquet
+      val schema = MessageTypeParser.parseMessageType(
+        """message events {
+          |  optional int64 event_id;
+          |  optional int64 ts (TIMESTAMP(NANOS,false));
+          |  optional int64 user_id;
+          |  optional binary event_type (STRING);
+          |  optional double value;
+          |  optional binary props (STRING);
+          |}""".stripMargin)
+      val dir = Files.createTempDirectory("graft_ns_events")
+      val conf = spark.sparkContext.hadoopConfiguration
+      val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new Path(s"$dir/events.parquet"), conf)).withType(schema).withConf(conf).build()
+      val groups = new SimpleGroupFactory(schema)
+      try rows.foreach { r =>
+        val ts = r.getTimestamp(1)
+        val micros = Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000
+        writer.write(groups.newGroup()
+          .append("event_id", r.getLong(0))
+          .append("ts", micros * 1000L + 999L) // sub-µs digits floor away
+          .append("user_id", r.getLong(2))
+          .append("event_type", r.getString(3))
+          .append("value", r.getDouble(4))
+          .append("props", r.getString(5)))
+      } finally writer.close()
+
+      val back = Tables.events(spark, dir.toString)
+      assert(spark.conf.get(flag) == "true")
+      assert(back.schema == Tables.events(spark, sf).schema)
+      assert(back.orderBy("event_id").collect().toSeq == rows.toSeq,
+        "INT64-nanos loader branch changed values")
+    } finally saved match {
+      case Some(v) => spark.conf.set(flag, v)
+      case None => spark.conf.unset(flag)
+    }
   }
 }
