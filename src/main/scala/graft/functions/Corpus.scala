@@ -622,8 +622,8 @@ object Corpus {
     * simply never enter the candidate set. */
   def corpusDsirOn(raw: DataFrame, target: DataFrame, buckets: Int = 4096,
       topN: Int = 100): DataFrame = {
-    // r13: the bigram hash stream is ONE native codegen expression
-    // (graft.plans.BigramHashes) — the explode(bigramStructs) +
+    // r13: the bigram hash stream is ONE native kernel call
+    // (graft.plans.NgramHashes at n = 2) — the explode(bigramStructs) +
     // concat_ws + poly_hash spelling ran the bigram walk through an
     // interpreted `transform` lambda with a struct and a concatenated
     // string per bigram, which profiled as ~85% of this operator's
@@ -632,8 +632,8 @@ object Corpus {
     // <2-token empty guard) — spec-checked in ExpressionsSpec.
     def feats(docs: DataFrame): DataFrame = docs
       .select(col("doc_id"),
-        explode(graft.plans.GraftFunctions.bigram_hashes(
-          Text.toks(col("text")))).as("h"))
+        explode(graft.plans.GraftFunctions.ngram_hashes(
+          Text.toks(col("text")), 2)).as("h"))
       .select(col("doc_id"), (col("h") % buckets).as("f"))
     // the raw feature stream feeds both the source model and the
     // scoring join: materialize the hashed occurrences once instead of

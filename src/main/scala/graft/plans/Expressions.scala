@@ -1,21 +1,31 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions — SURVEY.md §4 "custom work" 2/3.
+/** Native kernels — SURVEY.md §4 "custom work".
   *
-  * The pure-built-in formulations of these two kernels (higher-order
-  * `aggregate` over `zip_with` / `split`) are semantically right but
-  * evaluate their lambdas interpreted, outside whole-stage codegen —
-  * measured at sf0.1 they dominate the bench (dedup_embedding 26s,
-  * dedup_ngram 12s). These replacements generate tight Java loops and
-  * compute the exact same values (same fold order, same modulus), so
-  * the DuckDB oracles are unchanged.
+  * Each kernel is a plain static method on an object below
+  * (`PolyHash.hash`, `LshBuckets.buckets`, ...). It replaces a
+  * formulation whose higher-order lambdas (`aggregate`, `transform`,
+  * `zip_with`) evaluate interpreted, outside whole-stage codegen, or an
+  * explode ⋈ rollup that materialized rows per element — measured at
+  * sf0.1 these dominated the bench (dedup_embedding 26s, dedup_ngram
+  * 12s). Each kernel computes the exact same values (same fold order,
+  * same modulus), so the DuckDB oracles are unchanged; ExpressionsSpec
+  * checks each one against the spelling it replaced.
+  *
+  * [[GraftFunctions]] makes a kernel a column with Spark's own
+  * `objects.StaticInvoke` (the mechanism `UrlEncode` uses to call
+  * `UrlCodec.encode`): whole-stage codegen emits the plain
+  * `Kernel.method(args)` call, the interpreted path calls the same
+  * method reflectively, and a null argument gives null without calling
+  * the kernel. Plans print the call as
+  * `static_invoke(graft.plans.PolyHash.hash(text#31))`.
   */
 
 /** Polynomial rolling hash over a string's code points:
@@ -24,27 +34,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * DuckDB's unicode() yields code points, so the Spark side iterates
   * code points too (not UTF-16 units) or emoji/CJK-extension chars
   * would diverge. */
-case class PolyHash(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_poly_hash"
-
-  override def nullSafeEval(input: Any): Any =
-    PolyHash.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.PolyHash.hash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PolyHash =
-    copy(child = newChild)
-}
-
 object PolyHash {
   final val P: Long = 1000000007L
 
-  /** Shared by interpreted eval and generated code. */
-  def hash(s: UTF8String): Long = {
+  def hash(s: UTF8String): Long = fold(0L, s)
+
+  /** Continues the fold from `acc0` over `s`'s code points, so a hash
+    * of joined words can run word by word without the joined string. */
+  def fold(acc0: Long, s: UTF8String): Long = {
     val str = s.toString
-    var acc = 0L
+    var acc = acc0
     var i = 0
     val n = str.length
     while (i < n) {
@@ -56,24 +55,27 @@ object PolyHash {
   }
 }
 
-/** Left-to-right dot product of two double arrays (same accumulation
-  * order as aggregate(zip_with(...)) and the oracle's list_reduce). */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    DotProduct.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.DotProduct.dot($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
+/** A string's code points: Spark's length/substring/ascii positions,
+  * DuckDB's unicode() values. */
+private[plans] object CodePoints {
+  def of(s: UTF8String): Array[Int] = {
+    val str = s.toString
+    val n = str.length
+    val cps = new Array[Int](str.codePointCount(0, n))
+    var i = 0
+    var k = 0
+    while (i < n) {
+      val cp = str.codePointAt(i)
+      cps(k) = cp
+      k += 1
+      i += Character.charCount(cp)
+    }
+    cps
+  }
 }
 
+/** Left-to-right dot product of two double arrays (same accumulation
+  * order as aggregate(zip_with(...)) and the oracle's list_reduce). */
 object DotProduct {
   def dot(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
@@ -95,30 +97,12 @@ object DotProduct {
   * the CASE guard of the column formulation; values are identical
   * (same join separator, same first-occurrence distinct), so the
   * DuckDB oracles are unchanged. */
-case class Shingles(child: Expression, n: Int)
-    extends UnaryExpression {
-  require(n >= 1)
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_shingles"
-
-  override def nullSafeEval(input: Any): Any =
-    Shingles.shingle(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Shingles.shingle($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Shingles =
-    copy(child = newChild)
-}
-
 object Shingles {
   private val SEP = UTF8String.fromString(" ")
 
   def shingle(toks: ArrayData, n: Int): ArrayData = {
     val m = toks.numElements()
-    if (m < n) return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array.empty[Any])
+    if (m < n) return new GenericArrayData(Array.empty[Any])
     val seen = new java.util.LinkedHashSet[UTF8String]
     var i = 0
     while (i <= m - n) {
@@ -128,8 +112,7 @@ object Shingles {
       seen.add(UTF8String.concatWs(SEP, parts: _*))
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      seen.toArray.asInstanceOf[Array[AnyRef]])
+    new GenericArrayData(seen.toArray.asInstanceOf[Array[AnyRef]])
   }
 }
 
@@ -144,44 +127,16 @@ object Shingles {
   * same left-to-right accumulation from 0.0, and the empty string
   * keeps split('', '') = [''] semantics (n_chars = n_distinct = 1,
   * s = 1*log2(1) = 0). Output: struct(n_chars, n_distinct, s). */
-case class TextEntropyStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_chars", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("s", DoubleType, nullable = false)))
-  override def prettyName: String = "graft_text_entropy_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    TextEntropyStats.stats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextEntropyStats.stats($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): TextEntropyStats =
-    copy(child = newChild)
-}
-
 object TextEntropyStats {
   // Spark's LOG2 is StrictMath.log(x) / StrictMath.log(2) — Math.log
   // differs by an ulp on some inputs, which the equality spec catches
   private val LN2 = java.lang.StrictMath.log(2.0)
 
-  def stats(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
-    val str = s.toString
-    val n = str.length
-    if (n == 0) // split('', '') = [''] — one empty element, entropy 0
-      return new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](1L, 1L, 0.0))
-    val cps = new Array[Int](str.codePointCount(0, n))
-    var i = 0
-    var k = 0
-    while (i < n) {
-      val cp = str.codePointAt(i)
-      cps(k) = cp
-      k += 1
-      i += Character.charCount(cp)
-    }
+  def stats(s: UTF8String): InternalRow = {
+    if (s.numBytes == 0) // split('', '') = [''] — one empty element, entropy 0
+      return new GenericInternalRow(Array[Any](1L, 1L, 0.0))
+    val cps = CodePoints.of(s)
+    val k = cps.length
     java.util.Arrays.sort(cps)
     var acc = 0.0
     var run = 1.0
@@ -197,120 +152,39 @@ object TextEntropyStats {
       j += 1
     }
     acc += run * (java.lang.StrictMath.log(run) / LN2)
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](k.toLong, distinct, acc))
-  }
-}
-
-/** Polynomial hashes of a token array's adjacent bigrams, native: one
-  * long per bigram, hash = [[PolyHash]] of `w1 ## ' ' ## w2` — the
-  * exact values of explode(bigramStructs(t)) followed by
-  * poly_hash(concat_ws(' ', w1, w2)), without the interpreted
-  * `transform` lambda, the per-bigram struct, or the concatenated
-  * string allocation (the fold runs straight over w1's code points,
-  * the space, then w2's; a space separator can never fuse surrogates
-  * across the boundary, so the per-word iteration equals iterating
-  * the concatenation). Fewer than 2 tokens -> empty array, matching
-  * the CASE guard of the column formulation. */
-case class BigramHashes(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_bigram_hashes"
-
-  override def nullSafeEval(input: Any): Any =
-    BigramHashes.hashes(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.BigramHashes.hashes($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): BigramHashes =
-    copy(child = newChild)
-}
-
-object BigramHashes {
-  private def fold(acc0: Long, w: UTF8String): Long = {
-    val str = w.toString
-    var acc = acc0
-    var i = 0
-    val n = str.length
-    while (i < n) {
-      val cp = str.codePointAt(i)
-      acc = (acc * 31L + cp) % PolyHash.P
-      i += Character.charCount(cp)
-    }
-    acc
-  }
-
-  def hashes(toks: ArrayData): ArrayData = {
-    val m = toks.numElements()
-    if (m < 2) return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array.empty[Long])
-    val out = new Array[Long](m - 1)
-    var i = 0
-    while (i < m - 1) {
-      var acc = fold(0L, toks.getUTF8String(i))
-      acc = (acc * 31L + 32L) % PolyHash.P // the ' ' separator
-      out(i) = fold(acc, toks.getUTF8String(i + 1))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericInternalRow(Array[Any](k.toLong, distinct, acc))
   }
 }
 
 /** Polynomial hashes of a token array's sliding n-grams, native: one
   * long per window position, hash = [[PolyHash]] of
-  * concat_ws(' ', slice(t, i+1, n)) — the generalization of
-  * [[BigramHashes]] the substring-dedup gram stream uses (n = 8).
-  * Fewer than n tokens -> empty array, matching the CASE guard of the
-  * column formulation. */
-case class NgramHashes(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_ngram_hashes"
-
-  override def nullSafeEval(input: Any): Any =
-    NgramHashes.hashes(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NgramHashes.hashes($c, $n)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): NgramHashes =
-    copy(child = newChild)
-}
-
+  * concat_ws(' ', slice(t, i+1, n)) — the exact values of the
+  * transform/concat_ws/poly_hash spelling (n = 8 for the
+  * substring-dedup gram stream, n = 2 for the DSIR bigram features),
+  * without the interpreted `transform` lambda or the concatenated
+  * string per window. The fold runs straight over each word's code
+  * points with the ' ' separator folded in between; a space can never
+  * fuse surrogates across the boundary, so the per-word iteration
+  * equals iterating the concatenation. Fewer than n tokens -> empty
+  * array, matching the CASE guard of the column formulation. */
 object NgramHashes {
-  private def fold(acc0: Long, w: UTF8String): Long = {
-    val str = w.toString
-    var acc = acc0
-    var i = 0
-    val len = str.length
-    while (i < len) {
-      val cp = str.codePointAt(i)
-      acc = (acc * 31L + cp) % PolyHash.P
-      i += Character.charCount(cp)
-    }
-    acc
-  }
-
   def hashes(toks: ArrayData, n: Int): ArrayData = {
     val m = toks.numElements()
-    if (m < n) return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array.empty[Long])
+    if (m < n) return new GenericArrayData(Array.empty[Long])
     val out = new Array[Long](m - n + 1)
     var i = 0
     while (i <= m - n) {
-      var acc = fold(0L, toks.getUTF8String(i))
+      var acc = PolyHash.hash(toks.getUTF8String(i))
       var j = 1
       while (j < n) {
         acc = (acc * 31L + 32L) % PolyHash.P // the ' ' separator
-        acc = fold(acc, toks.getUTF8String(i + j))
+        acc = PolyHash.fold(acc, toks.getUTF8String(i + j))
         j += 1
       }
       out(i) = acc
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 
@@ -324,46 +198,17 @@ object NgramHashes {
   * same sample positions, same div-mean, same power-of-two packing —
   * spec-checked against the column spelling). Empty text -> null
   * (callers filter length >= 1 first, as before). */
-case class PhashSig(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("bits", ArrayType(LongType, containsNull = false),
-      nullable = false),
-    StructField("bands", ArrayType(LongType, containsNull = false),
-      nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_phash_sig"
-
-  override def nullSafeEval(input: Any): Any =
-    PhashSig.sig(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.PhashSig.sig($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PhashSig =
-    copy(child = newChild)
-}
-
 object PhashSig {
   final val Pix = 60
   final val BandBits = 15
 
-  def sig(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
-    val str = s.toString
-    val n0 = str.length
-    if (n0 == 0) return null
-    val cps = new Array[Int](str.codePointCount(0, n0))
-    var i = 0
-    var k = 0
-    while (i < n0) {
-      val cp = str.codePointAt(i)
-      cps(k) = cp
-      k += 1
-      i += Character.charCount(cp)
-    }
-    val n = k.toLong // length(text) = numChars
+  def sig(s: UTF8String): InternalRow = {
+    if (s.numBytes == 0) return null
+    val cps = CodePoints.of(s)
+    val n = cps.length.toLong // length(text) = numChars
     val parr = new Array[Long](Pix)
     var sum = 0L
-    i = 0
+    var i = 0
     while (i < Pix) {
       parr(i) = cps(((i * (n - 1)) / (Pix - 1)).toInt).toLong
       sum += parr(i)
@@ -388,32 +233,14 @@ object PhashSig {
       bands(b) = v
       b += 1
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(bits),
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(bands)))
+    new GenericInternalRow(Array[Any](
+      new GenericArrayData(bits), new GenericArrayData(bands)))
   }
 }
 
 /** Element-wise Hamming distance of two equal-length long arrays —
   * the native form of aggregate(zip_with(a, b, (x,y) -> IF(x<>y,1,0)),
   * 0, +) used by the pHash candidate verify. */
-case class ArrayHamming(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_array_hamming"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ArrayHamming.dist(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.ArrayHamming.dist($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ArrayHamming =
-    copy(left = newLeft, right = newRight)
-}
-
 object ArrayHamming {
   def dist(a: ArrayData, b: ArrayData): Long = {
     val n = math.min(a.numElements(), b.numElements())
@@ -429,31 +256,20 @@ object ArrayHamming {
 
 /** floor(v * 2^20) quantization of a double array — the repo's
   * oracle-portable coordinate convention, native (replaces the
-  * interpreted per-element transform lambda). */
-case class Quantize20(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_quantize20"
-
-  override def nullSafeEval(input: Any): Any =
-    Quantize20.q(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.Quantize20.q($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Quantize20 =
-    copy(child = newChild)
-}
-
+  * interpreted per-element transform lambda). [[quantize]] is the one
+  * scalar form, shared by the LSH and projection kernels. */
 object Quantize20 {
+  def quantize(x: Double): Long = math.floor(x * 1048576.0).toLong
+
   def q(a: ArrayData): ArrayData = {
     val n = a.numElements()
     val out = new Array[Long](n)
     var i = 0
     while (i < n) {
-      out(i) = math.floor(a.getDouble(i) * 1048576.0).toLong
+      out(i) = quantize(a.getDouble(i))
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 
@@ -464,27 +280,6 @@ object Quantize20 {
   * that generated feat_pca_scatter's scatter terms interpreted. Same
   * exact BIGINT products; the downstream explode + groupBy sum is
   * order-free. */
-case class TriangleProducts(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("i", LongType, nullable = false),
-    StructField("j", LongType, nullable = false),
-    StructField("p", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_triangle_products"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TriangleProducts.products(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.plans.TriangleProducts.products($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TriangleProducts =
-    copy(left = newLeft, right = newRight)
-}
-
 object TriangleProducts {
   def products(q: ArrayData, m: ArrayData): ArrayData = {
     val d = math.min(q.numElements(), m.numElements())
@@ -500,14 +295,13 @@ object TriangleProducts {
     while (i < d) {
       var j = i
       while (j < d) {
-        out(k) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](i.toLong, j.toLong, c(i) * c(j)))
+        out(k) = new GenericInternalRow(Array[Any](i.toLong, j.toLong, c(i) * c(j)))
         k += 1
         j += 1
       }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 
@@ -527,28 +321,6 @@ object TriangleProducts {
   * O(deg_cur x deg_prev) scan, not the row shape. Hub caveat stays:
   * a single extreme-degree node is one row's loop; hub-heavy graphs
   * should salt or keep the exploded join spelling. */
-case class Node2vecDraw(nbrsCur: Expression, nbrsPrev: Expression,
-    prev: Expression, rbase: Expression) extends QuaternaryExpression {
-  override def first: Expression = nbrsCur
-  override def second: Expression = nbrsPrev
-  override def third: Expression = prev
-  override def fourth: Expression = rbase
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_n2v_draw"
-
-  override def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    Node2vecDraw.draw(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      c.asInstanceOf[Long], d.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) =>
-      s"graft.plans.Node2vecDraw.draw($a, $b, $c, $d)")
-
-  override protected def withNewChildrenInternal(
-      a: Expression, b: Expression, c: Expression, d: Expression): Node2vecDraw =
-    copy(nbrsCur = a, nbrsPrev = b, prev = c, rbase = d)
-}
-
 object Node2vecDraw {
   final val ReturnW = 1L
   final val CommonW = 2L
@@ -613,28 +385,11 @@ object Node2vecDraw {
   *
   * Null semantics replay the join spelling exactly: null/EMPTY array
   * -> null result (posexplode then yields no rows — the vector is
-  * absent, as the explode side made it); null ELEMENTS are skipped by
+  * absent, as the explode side made it), so the column is nullable
+  * even over a non-null input; null ELEMENTS are skipped by
   * the sum; an all-null non-empty array yields per-table NULL buckets
   * (sj = sum of empty group = null there). Elements beyond i = 63
   * are ignored (the weight relation only carries i < 64). */
-case class LshBuckets(child: Expression, tables: Int, planes: Int)
-    extends UnaryExpression {
-  require(tables >= 1 && planes >= 1 && planes <= 62)
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "graft_lsh_buckets"
-
-  override def nullSafeEval(input: Any): Any =
-    LshBuckets.buckets(input.asInstanceOf[ArrayData], tables, planes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.LshBuckets.buckets($c, $tables, $planes)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): LshBuckets =
-    copy(child = newChild)
-}
-
 object LshBuckets {
   /** Null return = "no rows" for the consuming posexplode. */
   def buckets(arr: ArrayData, tables: Int, planes: Int): ArrayData = {
@@ -647,7 +402,7 @@ object LshBuckets {
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        qv(i) = math.floor(arr.getDouble(i) * 1048576.0).toLong
+        qv(i) = Quantize20.quantize(arr.getDouble(i))
         has(i) = true
         any = true
       }
@@ -677,7 +432,7 @@ object LshBuckets {
       } // else: all-null elements -> NULL bucket per table
       t += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 
@@ -693,30 +448,13 @@ object LshBuckets {
   * the column spelling produced an array of k nulls — divergent only
   * for null embeddings, which the corpus excludes and the consumers
   * null-propagate identically anyway. */
-case class RpProject(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def prettyName: String = "graft_rp_project"
-
-  override def nullSafeEval(input: Any): Any =
-    RpProject.project(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.RpProject.project($c, $k)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): RpProject =
-    copy(child = newChild)
-}
-
 object RpProject {
   def project(arr: ArrayData, k: Int): ArrayData = {
     val n = arr.numElements()
     var i = 0
     while (i < n) {
       if (arr.isNullAt(i))
-        return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          new Array[Any](k)) // poisoned folds: k nulls
+        return new GenericArrayData(new Array[Any](k)) // poisoned folds: k nulls
       i += 1
     }
     val out = new Array[Any](k)
@@ -734,7 +472,7 @@ object RpProject {
       out(j) = acc
       j += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 
@@ -744,36 +482,19 @@ object RpProject {
   * % 1000000007 % 2 == 1 ? 1 : −1 — the exact arithmetic of
   * feat_project's 8 per-column `aggregate` lambdas (i 0-based).
   * Null semantics as [[RpProject]]. */
-case class FeatProject(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1)
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "graft_feat_project"
-
-  override def nullSafeEval(input: Any): Any =
-    FeatProject.project(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.FeatProject.project($c, $k)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): FeatProject =
-    copy(child = newChild)
-}
-
 object FeatProject {
   def project(arr: ArrayData, k: Int): ArrayData = {
     val n = arr.numElements()
     var i = 0
     while (i < n) {
       if (arr.isNullAt(i))
-        return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          new Array[Any](k)) // poisoned folds: k nulls
+        return new GenericArrayData(new Array[Any](k)) // poisoned folds: k nulls
       i += 1
     }
     val qv = new Array[Long](n)
     i = 0
     while (i < n) {
-      qv(i) = math.floor(arr.getDouble(i) * 1048576.0).toLong
+      qv(i) = Quantize20.quantize(arr.getDouble(i))
       i += 1
     }
     val out = new Array[Any](k)
@@ -790,80 +511,113 @@ object FeatProject {
       out(j) = acc
       j += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 
 /** Column-level entry points + SQL registration. */
 object GraftFunctions {
+  import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+  import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+  import org.apache.spark.sql.functions.{array, coalesce, lit}
   import org.apache.spark.sql.graftbridge.Bridge
 
-  def poly_hash(c: Column): Column = Bridge.toColumn(PolyHash(Bridge.toExpr(c)))
+  private val Doubles = ArrayType(DoubleType)
+  private val Longs = ArrayType(LongType)
+  private val LongsNonNull = ArrayType(LongType, containsNull = false)
+
+  /** The one way a kernel becomes a column: a `StaticInvoke` of
+    * `kernel.method(args)`. Each argument is paired with the type the
+    * kernel reads it as, and the analyzer casts an argument of another
+    * type to it (float arrays widen losslessly to double, a number
+    * becomes its string) — for DataFrame and SQL callers alike. A null
+    * argument gives null without calling the kernel; `returnNullable`
+    * is set only for the kernels that return null themselves, so every
+    * other column is nullable exactly when an argument is. */
+  private def invoke(kernel: AnyRef, method: String, dataType: DataType,
+      returnNullable: Boolean = false)(args: (Column, DataType)*)
+      : Column =
+    Bridge.toColumn(StaticInvoke(kernel.getClass, dataType, method,
+      args.map(a => Bridge.toExpr(a._1)), args.map(_._2),
+      returnNullable = returnNullable))
+
+  def poly_hash(c: Column): Column =
+    invoke(PolyHash, "hash", LongType)(c -> StringType)
 
   def text_entropy_stats(c: Column): Column =
-    Bridge.toColumn(TextEntropyStats(Bridge.toExpr(c)))
+    invoke(TextEntropyStats, "stats", StructType(Seq(
+      StructField("n_chars", LongType, nullable = false),
+      StructField("n_distinct", LongType, nullable = false),
+      StructField("s", DoubleType, nullable = false))))(c -> StringType)
 
-  def bigram_hashes(c: Column): Column =
-    Bridge.toColumn(BigramHashes(Bridge.toExpr(c)))
-
-  def ngram_hashes(c: Column, n: Int): Column =
-    Bridge.toColumn(NgramHashes(Bridge.toExpr(c), n))
+  def ngram_hashes(c: Column, n: Int): Column = {
+    require(n >= 1)
+    invoke(NgramHashes, "hashes", LongsNonNull)(
+      c -> ArrayType(StringType), lit(n) -> IntegerType)
+  }
 
   def phash_sig(c: Column): Column =
-    Bridge.toColumn(PhashSig(Bridge.toExpr(c)))
+    invoke(PhashSig, "sig", StructType(Seq(
+      StructField("bits", LongsNonNull, nullable = false),
+      StructField("bands", LongsNonNull, nullable = false))),
+      returnNullable = true)(c -> StringType)
 
-  /** Accepts float or double arrays; floats widen losslessly. */
   def quantize20(c: Column): Column =
-    Bridge.toColumn(Quantize20(Bridge.toExpr(
-      c.cast(ArrayType(DoubleType)))))
+    invoke(Quantize20, "q", LongsNonNull)(c -> Doubles)
 
   def triangle_products(q: Column, m: Column): Column =
-    Bridge.toColumn(TriangleProducts(Bridge.toExpr(q), Bridge.toExpr(m)))
+    invoke(TriangleProducts, "products", ArrayType(StructType(Seq(
+      StructField("i", LongType, nullable = false),
+      StructField("j", LongType, nullable = false),
+      StructField("p", LongType, nullable = false))), containsNull = false))(
+      q -> Longs, m -> Longs)
 
   def array_hamming(a: Column, b: Column): Column =
-    Bridge.toColumn(ArrayHamming(Bridge.toExpr(a), Bridge.toExpr(b)))
+    invoke(ArrayHamming, "dist", LongType)(a -> Longs, b -> Longs)
 
   def n2v_draw(nbrsCur: Column, nbrsPrev: Column, prev: Column,
       rbase: Column): Column =
-    Bridge.toColumn(Node2vecDraw(Bridge.toExpr(nbrsCur),
-      Bridge.toExpr(nbrsPrev), Bridge.toExpr(prev), Bridge.toExpr(rbase)))
+    invoke(Node2vecDraw, "draw", LongType)(nbrsCur -> Longs,
+      nbrsPrev -> Longs, prev -> LongType, rbase -> LongType)
 
   /** Distinct n-gram shingles of a token-array column. Coalesced to
     * an empty array on null input — the contract of the CASE-guarded
-    * column formulation this replaces (a bare null-intolerant
-    * expression would return NULL for a null doc). */
-  def shingles(c: Column, n: Int = 3): Column =
-    org.apache.spark.sql.functions.coalesce(
-      Bridge.toColumn(Shingles(Bridge.toExpr(c), n)),
-      org.apache.spark.sql.functions.array())
+    * column formulation this replaces (the bare kernel call would
+    * return NULL for a null doc). */
+  def shingles(c: Column, n: Int = 3): Column = {
+    require(n >= 1)
+    coalesce(
+      invoke(Shingles, "shingle", ArrayType(StringType, containsNull = false))(
+        c -> ArrayType(StringType), lit(n) -> IntegerType),
+      array())
+  }
 
-  /** Accepts float or double arrays; floats widen losslessly. */
-  def rp_project(c: Column, k: Int): Column =
-    Bridge.toColumn(RpProject(Bridge.toExpr(
-      c.cast(ArrayType(DoubleType))), k))
+  def rp_project(c: Column, k: Int): Column = {
+    require(k >= 1)
+    invoke(RpProject, "project", Doubles)(c -> Doubles, lit(k) -> IntegerType)
+  }
 
-  /** Accepts float or double arrays; floats widen losslessly. */
-  def feat_project(c: Column, k: Int): Column =
-    Bridge.toColumn(FeatProject(Bridge.toExpr(
-      c.cast(ArrayType(DoubleType))), k))
+  def feat_project(c: Column, k: Int): Column = {
+    require(k >= 1)
+    invoke(FeatProject, "project", Longs)(c -> Doubles, lit(k) -> IntegerType)
+  }
 
-  /** Accepts float or double arrays; floats widen losslessly. */
-  def lsh_buckets(c: Column, tables: Int, planes: Int): Column =
-    Bridge.toColumn(LshBuckets(Bridge.toExpr(
-      c.cast(ArrayType(DoubleType))), tables, planes))
+  def lsh_buckets(c: Column, tables: Int, planes: Int): Column = {
+    require(tables >= 1 && planes >= 1 && planes <= 62)
+    invoke(LshBuckets, "buckets", Longs, returnNullable = true)(
+      c -> Doubles, lit(tables) -> IntegerType, lit(planes) -> IntegerType)
+  }
 
-  /** Accepts float or double arrays; floats widen losslessly. */
   def dot(a: Column, b: Column): Column =
-    Bridge.toColumn(DotProduct(
-      Bridge.toExpr(a.cast(ArrayType(DoubleType))),
-      Bridge.toExpr(b.cast(ArrayType(DoubleType)))))
+    invoke(DotProduct, "dot", DoubleType)(a -> Doubles, b -> Doubles)
 
   /** Register as SQL functions in a session: scalar graft_poly_hash(s)
-    * / graft_dot(a, b), and aggregate graft_minhash(h, k) /
+    * / graft_dot(a, b) / graft_shingles(toks[, n]), built by the
+    * column functions above so SQL and DataFrame calls are the same
+    * expression, and aggregate graft_minhash(h, k) /
     * graft_simhash64(h, cnt) — the analyzer wraps raw
     * AggregateFunctions returned from the registry itself. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
     val reg = spark.sessionState.functionRegistry
     // idempotent per session: re-registering emits a "replaced a
     // previously registered function" warning per function per call
@@ -872,25 +626,19 @@ object GraftFunctions {
     if (reg.functionExists(
         org.apache.spark.sql.catalyst.FunctionIdentifier(
           "graft_shingles"))) return
-    reg.createOrReplaceTempFunction(
-      "graft_poly_hash", exprs => PolyHash(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash",
-      exprs => MinHashAgg(exprs(0), exprs(1) match {
-        case Literal(k: Int, _) => k
-        case other => other.eval().toString.toInt // foldable literal
-      }), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash64",
-      exprs => SimHash64Agg(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs => Shingles(exprs(0), exprs.lift(1) match {
-        case Some(Literal(n: Int, _)) => n
-        case Some(other) => other.eval().toString.toInt
-        case None => 3
-      }), "scala_udf")
+    def fn(name: String)(build: Seq[Expression] => Expression): Unit =
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    def scalar(name: String)(f: Seq[Column] => Column): Unit =
+      fn(name)(exprs => Bridge.toExpr(spark, f(exprs.map(Bridge.toColumn))))
+    def intArg(e: Expression): Int = e match {
+      case Literal(k: Int, _) => k
+      case other => other.eval().toString.toInt // foldable literal
+    }
+    scalar("graft_poly_hash")(c => poly_hash(c(0)))
+    scalar("graft_dot")(c => dot(c(0), c(1)))
+    fn("graft_minhash")(exprs => MinHashAgg(exprs(0), intArg(exprs(1))))
+    fn("graft_simhash64")(exprs => SimHash64Agg(exprs(0), exprs(1)))
+    fn("graft_shingles")(exprs => Bridge.toExpr(spark, shingles(
+      Bridge.toColumn(exprs(0)), exprs.lift(1).fold(3)(intArg))))
   }
 }

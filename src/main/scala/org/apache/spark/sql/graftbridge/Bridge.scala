@@ -16,6 +16,13 @@ object Bridge {
   def toExpr(c: Column): Expression = ExpressionUtils.expression(c)
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
 
+  /** `toExpr` with every nested column node converted now, by the
+    * session's converter. A SQL function builder needs this: its result
+    * goes straight into the analyzed plan, where a node left for the
+    * DataFrame API's later conversion would never be converted. */
+  def toExpr(spark: org.apache.spark.sql.SparkSession, c: Column): Expression =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
+
   /** DataFrame from a (possibly custom) logical plan. */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)

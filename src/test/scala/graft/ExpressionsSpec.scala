@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Native codegen expressions (graft.plans) must produce the exact
-  * values of the higher-order formulations they replaced — same fold
-  * order, same modulus — on the real corpus. */
+/** Native kernels (graft.plans, called through StaticInvoke) must
+  * produce the exact values of the higher-order formulations they
+  * replaced — same fold order, same modulus — on the real corpus. */
 class ExpressionsSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -36,6 +37,30 @@ class ExpressionsSpec extends SparkSpecBase {
       "SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
       .as[Double].head()
     assert(d == 11.0)
+    // the SQL functions are built by the column functions, so the same
+    // input casts apply: float arrays widen to double, numbers become
+    // their strings
+    val f = spark.sql(
+      "SELECT graft_dot(array(1.0F, 2.0F), array(3.0F, 4.0F)) AS d")
+      .as[Double].head()
+    assert(f == 11.0)
+    assert(spark.sql("SELECT graft_poly_hash(12) AS h").as[Long].head()
+      == spark.sql("SELECT graft_poly_hash('12') AS h").as[Long].head())
+    val emb = Tables.embeddings(spark, sf)
+    emb.createOrReplaceTempView("embeddings")
+    val viaSql = spark.sql(
+      "SELECT vec_id, graft_dot(embedding, embedding) AS d FROM embeddings")
+    val viaApi = emb.select(col("vec_id"),
+      functions.Similarity.dot(col("embedding"), col("embedding")).as("d"))
+    val joined = viaSql.as("s").join(viaApi.as("a"), "vec_id")
+    assert(joined.count() == viaApi.count() && viaApi.count() > 0)
+    assert(joined.filter(!(col("s.d") <=> col("a.d"))).count() == 0)
+    // graft_shingles is the column function too: a null doc gives []
+    assert(spark.sql("SELECT graft_shingles(split('a b c d', ' ')) AS s")
+      .head().getSeq[String](0) == Seq("a b c", "b c d"))
+    assert(spark.sql(
+      "SELECT graft_shingles(CAST(NULL AS array<string>), 2) AS s")
+      .head().getSeq[String](0).isEmpty)
   }
 
   test("SQL aggregates: graft_minhash / graft_simhash64 == API forms") {
@@ -75,7 +100,8 @@ class ExpressionsSpec extends SparkSpecBase {
       .select(functions.Text.polyHash(col("text")))
       .queryExecution.executedPlan.toString
     // the "*(n)" prefix marks operators inside a WholeStageCodegen span
-    assert(plan.matches("(?s).*\\*\\(\\d+\\) Project \\[graft_poly_hash.*"), plan)
+    assert(plan.matches("(?s).*\\*\\(\\d+\\) Project \\[" +
+      "static_invoke\\(graft\\.plans\\.PolyHash\\.hash.*"), plan)
   }
 
   test("Shingles == array_distinct/transform formulation on every document") {
@@ -99,14 +125,16 @@ class ExpressionsSpec extends SparkSpecBase {
       .select(functions.Dedup.shingles("text"))
       .queryExecution.executedPlan.toString
     // null-coalesce wrapper sits outside the call in the plan string
-    assert(plan.matches("(?s).*\\*\\(\\d+\\) Project \\[.*graft_shingles.*"), plan)
+    assert(plan.matches("(?s).*\\*\\(\\d+\\) Project \\[.*" +
+      "static_invoke\\(graft\\.plans\\.Shingles\\.shingle.*"), plan)
   }
 
   test("DotProduct participates in whole-stage codegen (no fallback)") {
     val plan = Tables.embeddings(spark, sf)
       .select(functions.Similarity.dot(col("embedding"), col("embedding")))
       .queryExecution.executedPlan.toString
-    assert(plan.matches("(?s).*\\*\\(\\d+\\) Project \\[graft_dot.*"), plan)
+    assert(plan.matches("(?s).*\\*\\(\\d+\\) Project \\[" +
+      "static_invoke\\(graft\\.plans\\.DotProduct\\.dot.*"), plan)
   }
 
   test("TextEntropyStats == split/array_sort/aggregate fold on every document") {
@@ -156,7 +184,7 @@ class ExpressionsSpec extends SparkSpecBase {
     val t = functions.Text.toks(col("text"))
     val nat = Tables.documents(spark, sf)
       .select(col("doc_id"),
-        plans.GraftFunctions.bigram_hashes(t).as("hs"))
+        plans.GraftFunctions.ngram_hashes(t, 2).as("hs"))
       .select(col("doc_id"), explode(col("hs")).as("h"))
     val old = Tables.documents(spark, sf)
       .select(col("doc_id"),
@@ -168,8 +196,8 @@ class ExpressionsSpec extends SparkSpecBase {
     assert(nat.exceptAll(old).count() == 0 && old.exceptAll(nat).count() == 0)
     // <2-token guard: one token and empty text both yield zero bigrams
     val edge = Seq((1L, "solo"), (2L, "")).toDF("doc_id", "text")
-    assert(edge.select(explode(plans.GraftFunctions.bigram_hashes(
-      functions.Text.toks(col("text"))))).count() == 0)
+    assert(edge.select(explode(plans.GraftFunctions.ngram_hashes(
+      functions.Text.toks(col("text")), 2))).count() == 0)
   }
 
   test("Quantize20 + TriangleProducts == the transform/zip_with scatter " +
@@ -323,6 +351,13 @@ class ExpressionsSpec extends SparkSpecBase {
     }
   }
 
+  test("LshBuckets: an empty array gives NULL and the column is nullable") {
+    val df = spark.range(1).select(plans.GraftFunctions.lsh_buckets(
+      typedLit(Seq.empty[Double]), 8, 6).as("b"))
+    assert(df.schema("b").nullable)
+    assert(df.select(col("b").isNull).head().getBoolean(0))
+  }
+
   test("RpProject == the transform/aggregate JL fold on every embedding") {
     val k = functions.Similarity.RpDim
     val sign = "CASE WHEN ((d * 131 + j * 31 + 7) * 2654435761) " +
@@ -365,7 +400,59 @@ class ExpressionsSpec extends SparkSpecBase {
     val plan = Tables.documents(spark, sf)
       .select(plans.GraftFunctions.text_entropy_stats(col("text")))
       .queryExecution.executedPlan.toString
-    assert(plan.matches(
-      "(?s).*\\*\\(\\d+\\) Project \\[graft_text_entropy_stats.*"), plan)
+    assert(plan.matches("(?s).*\\*\\(\\d+\\) Project \\[" +
+      "static_invoke\\(graft\\.plans\\.TextEntropyStats\\.stats.*"), plan)
+  }
+
+  /** One projection per kernel: (kernel.method, key + kernel column). */
+  private def kernelCases: Seq[(String, DataFrame)] = {
+    val g = plans.GraftFunctions
+    val docs = Tables.documents(spark, sf)
+    val emb = Tables.embeddings(spark, sf)
+    val toks = split(col("text"), " ")
+    val q = g.quantize20(col("embedding"))
+    def onDocs(k: Column) = docs.select(col("doc_id"), k.as("k"))
+    def onEmb(k: Column) = emb.select(col("vec_id"), k.as("k"))
+    Seq(
+      "PolyHash.hash" -> onDocs(g.poly_hash(col("text"))),
+      "Shingles.shingle" -> onDocs(g.shingles(toks, 3)),
+      "TextEntropyStats.stats" -> onDocs(g.text_entropy_stats(col("text"))),
+      "NgramHashes.hashes" -> onDocs(g.ngram_hashes(toks, 8)),
+      "PhashSig.sig" -> onDocs(g.phash_sig(col("text"))),
+      "DotProduct.dot" -> onEmb(g.dot(col("embedding"), col("embedding"))),
+      "Quantize20.q" -> onEmb(q),
+      "ArrayHamming.dist" -> onEmb(g.array_hamming(q, q)),
+      "TriangleProducts.products" -> onEmb(g.triangle_products(q, q)),
+      "Node2vecDraw.draw" ->
+        onEmb(g.n2v_draw(q, q, col("vec_id"), col("vec_id"))),
+      "LshBuckets.buckets" -> onEmb(g.lsh_buckets(col("embedding"), 8, 6)),
+      "RpProject.project" -> onEmb(g.rp_project(col("embedding"), 16)),
+      "FeatProject.project" -> onEmb(g.feat_project(col("embedding"), 8)))
+  }
+
+  test("every kernel participates in whole-stage codegen (no fallback)") {
+    for ((kernel, df) <- kernelCases) {
+      val plan = df.queryExecution.executedPlan.toString
+      // the kernel call sits on the line of a "*(n) Project [" operator
+      val call = "static_invoke\\(graft\\.plans\\." +
+        kernel.replace(".", "\\.") + "\\("
+      assert(plan.matches(
+        "(?s).*\\*\\(\\d+\\) Project \\[[^\\n]*" + call + ".*"),
+        s"$kernel:\n$plan")
+    }
+  }
+
+  test("every kernel gives the same values interpreted as compiled") {
+    def run(): Seq[Seq[String]] =
+      kernelCases.map(_._2.collect().map(_.toString).toSeq.sorted)
+    val compiled = run()
+    assert(compiled.forall(_.nonEmpty))
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      for (((kernel, _), (c, i)) <- kernelCases.zip(compiled.zip(run())))
+        assert(c == i, kernel)
+    } finally interpreted.foreach { case (k, _) => spark.conf.unset(k) }
   }
 }
