@@ -59,15 +59,14 @@ object Clusters {
     // derived from the MEASURED edge count, not the session width — a
     // V-sized iterate across cpus-many partitions made per-round cost
     // grow with the core count (the r12 anti-scaling verdict; §2.2)
-    val width = Iterates.widthFor(pairs.sparkSession, edges.count())
-    var labels: DataFrame = null
-    var iter = 0
-    var changed = 1L
-    try Iterates.withWidth(pairs.sparkSession, width) {
-    labels = edges.select(col("a").as("node")).distinct()
+    val m = edges.count()
+    // seed labels lbl = node; round 0 materializes them, so the seed's
+    // distinct also runs at the loop width
+    val seed = edges.select(col("a").as("node")).distinct()
       .withColumn("lbl", col("node"))
-      .localCheckpoint(true)
-    while (changed > 0 && iter < maxIter) {
+    try Iterates.fixpoint(pairs.sparkSession, "connected components",
+        maxIter, seed)(_ => m) { (state, round) =>
+      val labels = if (round.index == 0) state.localCheckpoint(true) else state
       // min label among neighbors, one shuffle on the edge endpoint
       val nbrMin = edges.as("e")
         .join(labels.as("l"), col("e.b") === col("l.node"))
@@ -85,28 +84,17 @@ object Clusters {
       // usually near-cliques that converge by round 1, where the extra
       // self-join is pure overhead; chains recoup it from round 1 on.
       val jumped =
-        if (iter == 0) hop
+        if (round.index == 0) hop
         else {
           val hopMap = hop.select(col("node").as("pnode"), col("lbl").as("plbl"))
           hop.join(hopMap, col("lbl") === col("pnode"), "left")
             .select(col("node"), col("old"),
               least(col("lbl"), coalesce(col("plbl"), col("lbl"))).as("lbl"))
         }
-      val step = jumped.persist(StorageLevel.MEMORY_AND_DISK)
-      changed = step.filter(col("lbl") < col("old")).count()
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(s"[cc] iter=$iter changed=$changed")
-      val prev = labels
-      labels = step.select("node", "lbl").localCheckpoint(true)
-      step.unpersist()
-      prev.unpersist()
-      iter += 1
-    }
+      val step = round.persist(jumped)
+      val changed = step.filter(col("lbl") < col("old")).count()
+      (step.select("node", "lbl").localCheckpoint(true), changed == 0)
     } finally edges.unpersist()
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connected components did not converge within $maxIter rounds")
-    labels
   }
 
   /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
@@ -142,7 +130,7 @@ object Clusters {
       .select(col(ca).cast("long").as("a"), col(cb).cast("long").as("b"))
     val nodes = raw.select(explode(array(col("a"), col("b"))).as("node"))
       .distinct().localCheckpoint(true)
-    var edges = raw.filter(col("a") =!= col("b"))
+    val edges0 = raw.filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .distinct().localCheckpoint(true)
@@ -176,14 +164,12 @@ object Clusters {
       // .distinct() exchange is folded away (r13, guide §2.4)
       rewired.unionByName(self).filter(col("a") =!= col("b"))
     }
-    var iter = 0
-    var converged = false
     // r13: size the round shuffles + checkpoints from the measured
-    // edge count (cheap: `edges` is checkpointed), not the session
+    // edge count (cheap: `edges0` is checkpointed), not the session
     // width — see [[connectedComponentsOn]] and Iterates
-    Iterates.withWidthFor(pairs.sparkSession, edges.count()) {
-    while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
+    val m = edges0.count()
+    val star = Iterates.fixpoint(pairs.sparkSession, "alternating star",
+        maxIter, edges0)(_ => m) { (edges, _) =>
       // ONE exchange closes the round: the (a, b) groupBy that used to
       // be smallStar's trailing distinct ALSO carries the old edge set
       // as a flagged side, so set-dedup AND the exact convergence
@@ -191,32 +177,18 @@ object Clusters {
       // action is then a map-only scan of the cached blocks (the
       // pre-r13 spelling paid a separate union+groupBy exchange per
       // round just to compare the two checkpointed sets)
-      val round = smallStar(largeStar(edges))
+      val merged = smallStar(largeStar(edges))
         .select(col("a"), col("b"), lit(1).as("side"))
         .unionByName(edges.select(col("a"), col("b"), lit(2).as("side")))
         .groupBy("a", "b")
         .agg(max(when(col("side") === 1, 1)).as("in_new"),
           max(when(col("side") === 2, 1)).as("in_old"))
-      // checkpoint-hidden sub-plan evidence (VERDICT r12 item 7): the
-      // final explain of a consumer can't witness the round's shape,
-      // so dump it here on demand (plans/r13 width evidence)
-      if (iter == 0 && sys.env.contains("GRAFT_CC_PLAN"))
-        System.err.println(round.queryExecution.executedPlan.toString)
-      val merged = round.localCheckpoint(true)
-      val t1 = System.nanoTime()
-      converged = merged
+        .localCheckpoint(true)
+      val converged = merged
         .filter(col("in_new").isNull || col("in_old").isNull).isEmpty
-      edges = merged.filter(col("in_new") === 1).select("a", "b")
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(f"[altstar] iter=$iter%d ckpt=${(t1 - t0) / 1e9}%.3f" +
-          f" conv=${(System.nanoTime() - t1) / 1e9}%.3f")
-      iter += 1
+      (merged.filter(col("in_new") === 1).select("a", "b"), converged)
     }
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"alternating star did not converge within $maxIter rounds")
-    nodes.join(edges.select(col("b").as("node"), col("a").as("plbl")),
+    nodes.join(star.select(col("b").as("node"), col("a").as("plbl")),
         Seq("node"), "left")
       .select(col("node"), coalesce(col("plbl"), col("node")).as("lbl"))
   }
@@ -1603,35 +1575,28 @@ object Clusters {
       maxIter: Int = KcoreRounds): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
     val Array(ca, cb) = edges.columns.take(2)
-    var e = edges
+    val e0 = edges
       .select(least(col(ca), col(cb)).cast("long").as("a"),
         greatest(col(ca), col(cb)).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
       .localCheckpoint(true)
-    var iter = 0
-    var weakCount = 1L
     // r13: the peel's shrinking edge set rides an edge-count-derived
     // shuffle width (see Iterates)
-    Iterates.withWidthFor(e.sparkSession, e.count()) {
-    while (weakCount > 0) {
-      if (iter >= maxIter)
-        throw new IllegalStateException(
-          s"k-core peel did not converge in $maxIter rounds")
-      iter += 1
+    val m = e0.count()
+    val core = Iterates.fixpoint(e0.sparkSession, "k-core peel", maxIter,
+        e0)(_ => m) { (e, _) =>
       val deg = e.select(explode(array(col("a"), col("b"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("deg"))
       val weak = deg.filter(col("deg") < k).select("node")
         .localCheckpoint(true)
-      weakCount = weak.count()
-      if (weakCount > 0)
-        e = e
-          .join(weak.select(col("node").as("a")), Seq("a"), "left_anti")
-          .join(weak.select(col("node").as("b")), Seq("b"), "left_anti")
-          .localCheckpoint(true)
+      if (weak.count() == 0) (e, true)
+      else (e
+        .join(weak.select(col("node").as("a")), Seq("a"), "left_anti")
+        .join(weak.select(col("node").as("b")), Seq("b"), "left_anti")
+        .localCheckpoint(true), false)
     }
-    }
-    e.select(explode(array(col("a"), col("b"))).as("node"))
+    core.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("core_deg"))
       .orderBy("node")
   }
@@ -1708,37 +1673,28 @@ object Clusters {
         .select(col("p.a").as("a"), col("p.b").as("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("sup"))
     }
-    var e = edges
+    val e0 = edges
       .select(least(col(ca), col(cb)).cast("long").as("a"),
         greatest(col(ca), col(cb)).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
       .localCheckpoint(true)
-    var n = e.count()
-    var iter = 0
-    var removed = 1L
     // r13: peel rounds at an edge-count-derived shuffle width (see
     // Iterates); the wedge join's map side keeps the checkpointed
     // edge relation's own block parallelism
-    Iterates.withWidthFor(e.sparkSession, n) {
-    while (removed > 0 && n > 0) {
-      if (iter >= maxIter)
-        throw new IllegalStateException(
-          s"k-truss peel did not converge in $maxIter rounds")
-      iter += 1
+    val m = e0.count()
+    val (truss, _) = Iterates.fixpoint(e0.sparkSession, "k-truss peel",
+        maxIter, (e0, m))(_ => m) { case ((e, n), _) =>
       val kept = e.join(supportOf(e), Seq("a", "b"))
         .filter(col("sup") >= k - 2)
         .select("a", "b")
         .localCheckpoint(true)
       val keptN = kept.count()
-      removed = n - keptN
-      n = keptN
-      e = kept
-    }
+      ((kept, keptN), keptN == n || keptN == 0)
     }
     // fixpoint support readout (all surviving edges qualify by
     // construction, so the join keeps every row)
-    e.join(supportOf(e), Seq("a", "b"))
+    truss.join(supportOf(truss), Seq("a", "b"))
       .select(col("a"), col("b"), col("sup"))
       .orderBy("a", "b")
   }

@@ -2,11 +2,16 @@ package graft.functions
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
+import scala.annotation.tailrec
+import scala.collection.mutable.ArrayBuffer
 
-/** Size-aware shuffle width for ITERATIVE loop bodies (guide §2.2/§2.4:
-  * "fewer, larger reduce partitions"; the round-12 verdict's
-  * anti-scaling diagnosis).
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
+
+/** Driver-side skeleton of the iterative operators: the convergence
+  * loop ([[fixpoint]]) and the size-aware shuffle width its rounds run
+  * under ([[withWidth]]; guide §2.2/§2.4: "fewer, larger reduce
+  * partitions"; the round-12 verdict's anti-scaling diagnosis).
   *
   * The iterative graph/closure loops re-materialize a per-round state
   * relation (eager localCheckpoint keeps the plan constant-size). That
@@ -27,7 +32,7 @@ import org.apache.spark.sql.SparkSession
   * the session width (big iterates keep full parallelism at any
   * scale), and run the loop body under that width. The width is
   * row-count-scale-adaptive, not core-count-tuned: at 100 TB a
-  * billion-edge CC loop computes the same `rows / rowsPerPartition`
+  * billion-edge CC loop computes the same `rows / RowsPerPartition`
   * and lands at (or above, clamped to) the configured session width,
   * while the 25-node closure still collapses to one partition — the
   * same reason AQE's advisory byte target exists (§2.2), applied where
@@ -36,55 +41,58 @@ import org.apache.spark.sql.SparkSession
 private[graft] object Iterates {
 
   private val ShuffleKey = "spark.sql.shuffle.partitions"
-
-  /** Rows per post-shuffle partition for loop iterates. Iterate rows
-    * here are 2-4 longs (~50 B serialized), so the 1M default targets
-    * ~50 MB partitions — guide §2.2's 100 MB-1 GB band from below,
-    * deliberately conservative so the cap only bites when the iterate
-    * is orders of magnitude under the session width's natural load.
-    * Override: spark.graft.iterate.rowsPerPartition (session conf) or
-    * GRAFT_ITERATE_ROWS_PER_PART (env — the A/B lever for a forked
-    * bench JVM; 1 reproduces the pre-r13 session-width behavior since
-    * the cap then clamps to the configured width). */
-  private def rowsPerPartition(s: SparkSession): Long =
-    s.conf.get("spark.graft.iterate.rowsPerPartition",
-      sys.env.getOrElse("GRAFT_ITERATE_ROWS_PER_PART", "1000000")).toLong
-
-  /** Shuffle width for an iterate of `rows` rows: ceil(rows/target),
-    * clamped to [1, session width] — never widens, only narrows. */
-  def widthFor(s: SparkSession, rows: Long): Int = {
-    val session = math.max(1, s.conf.get(ShuffleKey, "200").toInt)
-    val per = math.max(1L, rowsPerPartition(s))
-    val ideal = ((math.max(rows, 1L) + per - 1L) / per).min(session.toLong)
-    ideal.toInt
-  }
-
   private val AqeKey = "spark.sql.adaptive.enabled"
 
+  /** Rows per post-shuffle partition for loop iterates. Iterate rows
+    * here are 2-4 longs (~50 B serialized), so 1M targets ~50 MB
+    * partitions — guide §2.2's 100 MB-1 GB band from below,
+    * deliberately conservative so the cap only bites when the iterate
+    * is orders of magnitude under the session width's natural load. */
+  private val RowsPerPartition = 1000000L
+
+  /** Shuffle width for an iterate of `rows` rows: ceil(rows/target),
+    * clamped to [1, session width]. */
+  def widthFor(s: SparkSession, rows: Long): Int = {
+    val session = math.max(1, s.conf.get(ShuffleKey, "200").toInt)
+    ((math.max(rows, 1L) - 1L) / RowsPerPartition + 1L)
+      .min(session.toLong).toInt
+  }
+
   private final class Hold {
-    var depth = 0; var saved: String = ""; var savedAqe: String = ""
+    var depth = 0
+    var width = 0
+    var saved = Map.empty[String, Option[String]]
   }
   private val holds = new ConcurrentHashMap[SparkSession, Hold]()
 
-  /** Runs `body` with the session shuffle width capped at `n`,
-    * restoring the configured width afterwards. Loop bodies both PLAN
-    * and EXECUTE inside (eager per-round localCheckpoint), so the
-    * narrowed width covers every round's exchanges; relations a caller
-    * builds on the RETURNED (already-checkpointed) state plan outside
-    * and keep the session width. Nesting- and concurrency-safe per
-    * session (the linkage ladder runs four CC loops in parallel): the
-    * first holder saves the configured width, the last one restores
-    * it; concurrent holders may momentarily see each other's cap,
-    * which only ever narrows — never widens — a loop's shuffles. */
+  /** Runs `body` with the session shuffle width capped at `n`, then
+    * puts both keys it writes back as they were when the session's
+    * first holder entered: a value the session had set is restored, a
+    * key it had left unset is unset again. Loop bodies both PLAN and
+    * EXECUTE inside (eager per-round localCheckpoint), so the narrowed
+    * width covers every round's exchanges; relations a caller builds
+    * on the RETURNED (already-checkpointed) state plan outside and keep
+    * the session width.
+    *
+    * Holders of one session share its conf (the linkage ladder runs
+    * four CC loops in parallel, and nested loops hold inside each
+    * other): the first holder saves the keys, the last one restores
+    * them, and in between every entry writes its own cap, clamped only
+    * to the width saved by the first. So the LAST writer's cap — and
+    * its AQE switch — applies to every holder's later rounds, which can
+    * widen an earlier holder's shuffles as well as narrow them, and an
+    * unrelated query on the session sees it too. ROADMAP item 3 tracks
+    * moving the width into the plan. */
   def withWidth[T](s: SparkSession, n: Int)(body: => T): T = {
     val hold = holds.computeIfAbsent(s, _ => new Hold)
     hold.synchronized {
       if (hold.depth == 0) {
-        hold.saved = s.conf.get(ShuffleKey, "200")
-        hold.savedAqe = s.conf.get(AqeKey, "true")
+        val set = s.conf.getAll
+        hold.saved = Seq(ShuffleKey, AqeKey).map(k => k -> set.get(k)).toMap
+        hold.width = s.conf.get(ShuffleKey, "200").toInt
       }
       hold.depth += 1
-      val cap = math.min(math.max(1, n), math.max(1, hold.saved.toInt))
+      val cap = math.min(math.max(1, n), math.max(1, hold.width))
       s.conf.set(ShuffleKey, cap.toString)
       // When the measured size collapses the loop to ONE partition,
       // AQE has nothing left to re-optimize (no coalescing, no skew,
@@ -100,9 +108,9 @@ private[graft] object Iterates {
     try body
     finally hold.synchronized {
       hold.depth -= 1
-      if (hold.depth == 0) {
-        s.conf.set(ShuffleKey, hold.saved)
-        s.conf.set(AqeKey, hold.savedAqe)
+      if (hold.depth == 0) hold.saved.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
       }
     }
   }
@@ -110,4 +118,40 @@ private[graft] object Iterates {
   /** [[withWidth]] with the width derived from a measured row count. */
   def withWidthFor[T](s: SparkSession, rows: Long)(body: => T): T =
     withWidth(s, widthFor(s, rows))(body)
+
+  /** One round of a [[fixpoint]] loop: its 0-based index, and the
+    * relations it persists, which the loop releases when the round
+    * ends (the round's next state must not read them lazily). */
+  final class Round private[Iterates] (val index: Int) {
+    private[Iterates] val held = ArrayBuffer.empty[DataFrame]
+    def persist(df: DataFrame): DataFrame = {
+      held += df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+  }
+
+  /** The convergence loop of the iterative operators. Runs
+    * `step(state, round)`, which returns the next state and whether
+    * the round observed the fixpoint, from `init` until a round
+    * converges, and returns that round's state. At most `maxIter`
+    * rounds run: when round `maxIter` reports no convergence, throws
+    * an `IllegalStateException` naming `label` and `maxIter` rather
+    * than return a partial fixpoint (the oracle's fixed-round unrolls
+    * of the peels rely on exactly this budget). Each round runs under [[withWidthFor]] sized from
+    * `rows(state)`, a row count the loop has already measured, and
+    * releases what it persisted through [[Round.persist]]. */
+  def fixpoint[S](s: SparkSession, label: String, maxIter: Int, init: S)(
+      rows: S => Long)(step: (S, Round) => (S, Boolean)): S = {
+    @tailrec def loop(state: S, index: Int): S = {
+      if (index >= maxIter)
+        throw new IllegalStateException(
+          s"$label did not converge within $maxIter rounds")
+      val round = new Round(index)
+      val (next, converged) =
+        try withWidthFor(s, rows(state))(step(state, round))
+        finally round.held.foreach(_.unpersist())
+      if (converged) next else loop(next, index + 1)
+    }
+    loop(init, 0)
+  }
 }

@@ -49,56 +49,47 @@ object Spanning {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val spark = edges.sparkSession
     import spark.implicits._
-    var comp = edges.select(explode(array(col("src"), col("dst"))).as("node"))
+    val comp0 = edges.select(explode(array(col("src"), col("dst"))).as("node"))
       .distinct().withColumn("c", col("node"))
       .localCheckpoint(true)
-    var forest = Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")
-    var iter = 0
-    var crossLeft = 1L
+    val forest0 = Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")
     try {
       // r13: Borůvka rounds at an edge-count-derived shuffle width
       // (see Iterates); the count also forces the persist once, where
       // round 1's cross join used to
-      Iterates.withWidthFor(spark, edges.count()) {
-      while (crossLeft > 0 && iter < maxRounds) {
-        val cs = comp.select(col("node").as("src"), col("c").as("cs"))
-        val cd = comp.select(col("node").as("dst"), col("c").as("cd"))
-        val cross = edges.join(cs, "src").join(cd, "dst")
-          .filter(col("cs") =!= col("cd"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        crossLeft = cross.count()
-        if (crossLeft > 0) {
-          // each component's minimum incident edge, both orientations
-          val picked = cross
-            .select(explode(array(col("cs"), col("cd"))).as("c"),
-              struct(col("w"), col("src"), col("dst")).as("e"))
-            .groupBy("c").agg(min(col("e")).as("m"))
-            .select(col("m.src").as("src"), col("m.dst").as("dst"),
-              col("m.w").as("w"))
-            .distinct() // mutual-min pairs pick the same edge twice
-            .localCheckpoint(true)
-          forest = forest.union(picked).localCheckpoint(true)
-          // contract: CC over the merge graph of component ids
-          val merge = picked
-            .join(cs, "src").join(cd, "dst").select("cs", "cd")
-          val relabel = Clusters.connectedComponentsOn(merge)
-            .select(col("node").as("oc"), col("lbl").as("nc"))
-          // plain equi-join: the relabel relation is one row per
-          // pre-merge component — small here, but at graph scale AQE
-          // should pick the strategy, not a hardcoded broadcast
-          comp = comp.join(relabel, col("c") === col("oc"), "left")
-            .select(col("node"), coalesce(col("nc"), col("c")).as("c"))
-            .localCheckpoint(true)
-        }
-        cross.unpersist()
-        iter += 1
-      }
-      }
+      val m = edges.count()
+      Iterates.fixpoint(spark, "Boruvka", maxRounds, (comp0, forest0))(_ => m) {
+        case ((comp, forest), round) =>
+          val cs = comp.select(col("node").as("src"), col("c").as("cs"))
+          val cd = comp.select(col("node").as("dst"), col("c").as("cd"))
+          val cross = round.persist(edges.join(cs, "src").join(cd, "dst")
+            .filter(col("cs") =!= col("cd")))
+          if (cross.count() == 0) ((comp, forest), true)
+          else {
+            // each component's minimum incident edge, both orientations
+            val picked = cross
+              .select(explode(array(col("cs"), col("cd"))).as("c"),
+                struct(col("w"), col("src"), col("dst")).as("e"))
+              .groupBy("c").agg(min(col("e")).as("m"))
+              .select(col("m.src").as("src"), col("m.dst").as("dst"),
+                col("m.w").as("w"))
+              .distinct() // mutual-min pairs pick the same edge twice
+              .localCheckpoint(true)
+            val grown = forest.union(picked).localCheckpoint(true)
+            // contract: CC over the merge graph of component ids
+            val merge = picked
+              .join(cs, "src").join(cd, "dst").select("cs", "cd")
+            val relabel = Clusters.connectedComponentsOn(merge)
+              .select(col("node").as("oc"), col("lbl").as("nc"))
+            // plain equi-join: the relabel relation is one row per
+            // pre-merge component — small here, but at graph scale AQE
+            // should pick the strategy, not a hardcoded broadcast
+            ((comp.join(relabel, col("c") === col("oc"), "left")
+              .select(col("node"), coalesce(col("nc"), col("c")).as("c"))
+              .localCheckpoint(true), grown), false)
+          }
+      }._2
     } finally edges.unpersist()
-    if (crossLeft > 0)
-      throw new IllegalStateException(
-        s"Boruvka did not converge within $maxRounds rounds")
-    forest
   }
 
   /** Nation-to-nation trade edges: total lineitem cents between the
@@ -150,33 +141,24 @@ object Spanning {
     * FW-BW/coloring instead and say so. Convergence checked by row
     * count (monotone growing set), throws past maxRounds. */
   def transitiveClosureOn(edges: DataFrame, maxRounds: Int = 12): DataFrame = {
-    var r = edges.select(col("src").cast("long").as("u"),
+    val r0 = edges.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v"))
       .distinct().localCheckpoint(true)
-    var n = r.count()
-    var grew = true
-    var iter = 0
-    while (grew && iter < maxRounds) {
-      // r13: each doubling round runs at a shuffle width derived from
-      // the closure's CURRENT row count (see Iterates) — the bounded
-      // collapsed relations this spelling is documented for sat on
-      // cpus-wide exchanges per round (the r12 anti-scaling verdict)
-      val step = Iterates.withWidthFor(r.sparkSession, n) {
-        r.union(
+    // r13: each doubling round runs at a shuffle width derived from
+    // the closure's CURRENT row count (see Iterates) — the bounded
+    // collapsed relations this spelling is documented for sat on
+    // cpus-wide exchanges per round (the r12 anti-scaling verdict)
+    Iterates.fixpoint(r0.sparkSession, "transitive closure", maxRounds,
+        (r0, r0.count()))(_._2) {
+      case ((r, n), _) =>
+        val step = r.union(
             r.select(col("u"), col("v").as("m"))
               .join(r.select(col("u").as("m"), col("v")), "m")
               .select("u", "v"))
           .distinct().localCheckpoint(true)
-      }
-      val n2 = step.count()
-      grew = n2 > n
-      n = n2
-      r = step
-      iter += 1
-    }
-    if (grew) throw new IllegalStateException(
-      s"closure did not converge within $maxRounds doubling rounds")
-    r
+        val n2 = step.count()
+        ((step, n2), n2 == n)
+    }._1
   }
 
   /** Strongly connected components of the DIRECTED nation trade
@@ -295,39 +277,29 @@ object Spanning {
         struct(col("v").as("u"), col("u").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .distinct()
-    var d = sym.withColumn("d", lit(1L))
+    val d0 = sym.withColumn("d", lit(1L))
       .union(sym.select(explode(array(col("u"), col("v"))).as("u"))
         .distinct().select(col("u"), col("u").as("v"), lit(0L).as("d")))
       .groupBy("u", "v").agg(min(col("d")).as("d"))
       .localCheckpoint(true)
-    var sig = (-1L, -1L)
-    var iter = 0
-    var stable = false
     // r13: rounds at a current-row-count-derived shuffle width (see
     // Iterates and [[transitiveClosureOn]]); the count rides the
-    // convergence signature, no extra action
-    var n = d.count()
-    while (!stable && iter < maxRounds) {
-      val step = Iterates.withWidthFor(d.sparkSession, n) {
-        d.union(
+    // convergence signature (row count, Σd), no extra action. The
+    // seed's Σd of -1 never matches, so round 0 never converges.
+    Iterates.fixpoint(d0.sparkSession, "min-plus closure", maxRounds,
+        (d0, (d0.count(), -1L)))(_._2._1) {
+      case ((d, sig), _) =>
+        val step = d.union(
             d.select(col("u"), col("v").as("m"), col("d").as("d1"))
               .join(d.select(col("u").as("m"), col("v"), col("d").as("d2")),
                 "m")
               .select(col("u"), col("v"), (col("d1") + col("d2")).as("d")))
           .groupBy("u", "v").agg(min(col("d")).as("d"))
           .localCheckpoint(true)
-      }
-      val row = step.agg(count(lit(1)), sum(col("d"))).head()
-      n = row.getLong(0)
-      val next = (row.getLong(0), row.getLong(1))
-      stable = next == sig
-      sig = next
-      d = step
-      iter += 1
-    }
-    if (!stable) throw new IllegalStateException(
-      s"min-plus closure did not converge within $maxRounds rounds")
-    d
+        val row = step.agg(count(lit(1)), sum(col("d"))).head()
+        val next = (row.getLong(0), row.getLong(1))
+        ((step, next), next == sig)
+    }._1
   }
 
   /** Per-node eccentricity plus per-component diameter and radius of
