@@ -42,6 +42,11 @@ object Codecs {
     (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
       ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
 
+  /** The four ASCII bytes at `off`: a RIFF chunk id, an ISO-BMFF box
+    * type or any other fourcc field. */
+  private[multimodal] def fourcc(b: Array[Byte], off: Int): String =
+    new String(b, off, 4, "US-ASCII")
+
   private[multimodal] def w16(b: Array[Byte], off: Int, v: Int): Unit = {
     b(off) = (v & 0xff).toByte
     b(off + 1) = ((v >> 8) & 0xff).toByte
@@ -106,6 +111,30 @@ object Codecs {
     rgb
   }
 
+  /** The 40-byte BITMAPINFOHEADER of a bottom-up 24-bit single-plane
+    * BI_RGB raster: the header of a BMP body and of an AVI video strf. */
+  private[multimodal] def bitmapInfo(width: Int, height: Int,
+      sizeImage: Int): Array[Byte] = {
+    val h = new Array[Byte](40)
+    w32(h, 0, 40)
+    w32(h, 4, width); w32(h, 8, height) // positive = bottom-up
+    w16(h, 12, 1); w16(h, 14, 24) // planes, bpp
+    w32(h, 20, sizeImage) // biCompression at 16 stays 0 = BI_RGB
+    h
+  }
+
+  /** Read the BITMAPINFOHEADER at `f` (at least 40 bytes: a BMP's or
+    * an AVI video strf's), which must be 24-bit single-plane BI_RGB,
+    * into (width, height, top-down); a negative height means top-down
+    * rows. */
+  private def readBitmapInfo(b: Array[Byte], f: Int): (Int, Int, Boolean) = {
+    require(u16(b, f + 12) == 1 && u16(b, f + 14) == 24,
+      "only 24-bit single-plane supported")
+    require(s32(b, f + 16) == 0, "only BI_RGB (uncompressed) supported")
+    val hRaw = s32(b, f + 8)
+    (s32(b, f + 4), math.abs(hRaw), hRaw < 0)
+  }
+
   /** Encode a top-down RGB raster as a standard bottom-up 24-bit
     * BI_RGB BMP (BITMAPFILEHEADER + BITMAPINFOHEADER = 54 bytes). */
   def bmpEncode(width: Int, height: Int, rgb: Array[Byte]): Array[Byte] = {
@@ -116,11 +145,7 @@ object Codecs {
     val out = new Array[Byte](size)
     out(0) = 'B'; out(1) = 'M'
     w32(out, 2, size); w32(out, 10, 54)
-    w32(out, 14, 40) // BITMAPINFOHEADER
-    w32(out, 18, width); w32(out, 22, height) // positive = bottom-up
-    w16(out, 26, 1); w16(out, 28, 24) // planes, bpp
-    w32(out, 30, 0) // BI_RGB
-    w32(out, 34, stride * height)
+    System.arraycopy(bitmapInfo(width, height, stride * height), 0, out, 14, 40)
     writeDib(width, height, rgb, out, 54)
     out
   }
@@ -132,13 +157,7 @@ object Codecs {
       require(b.length >= 54 && b(0) == 'B' && b(1) == 'M', "not a BMP")
       val dataOff = s32(b, 10)
       require(s32(b, 14) >= 40, "unsupported DIB header")
-      val width = s32(b, 18)
-      val hRaw = s32(b, 22)
-      val topDown = hRaw < 0
-      val height = math.abs(hRaw)
-      require(u16(b, 26) == 1 && u16(b, 28) == 24,
-        "only 24-bit single-plane supported")
-      require(s32(b, 30) == 0, "only BI_RGB (uncompressed) supported")
+      val (width, height, topDown) = readBitmapInfo(b, 14)
       // readDib range-checks dimensions and the raster extent before
       // allocating — a crafted header fails fast with a clear message
       // instead of overflowing width*height*3 or indexing past the
@@ -149,23 +168,36 @@ object Codecs {
     }
   }
 
+  /** The 16-byte WAVEFORMAT of mono `bits`-bit audio under format tag
+    * `tag` (1 PCM, 6 A-law, 7 µ-law): the payload of a WAV fmt chunk
+    * and of an AVI audio strf. */
+  private def waveFormat(tag: Int, sampleRate: Int, bits: Int): Array[Byte] = {
+    val f = new Array[Byte](16)
+    w16(f, 0, tag)
+    w16(f, 2, 1) // mono
+    w32(f, 4, sampleRate)
+    w32(f, 8, sampleRate * (bits / 8)) // byte rate
+    w16(f, 12, bits / 8) // block align
+    w16(f, 14, bits)
+    f
+  }
+
+  /** A canonical 44-byte-header RIFF/WAVE (fmt + data) for `dataLen`
+    * bytes of audio, which the caller writes at offset 44. RIFF chunks
+    * pad to even length: an odd data chunk gets one zero pad byte,
+    * which the RIFF size counts and the data size does not. */
+  private def wavHeader(format: Array[Byte], dataLen: Int): Array[Byte] = {
+    val out = new Array[Byte](44 + dataLen + (dataLen & 1))
+    wTag(out, 0, "RIFF"); w32(out, 4, out.length - 8); wTag(out, 8, "WAVE")
+    wTag(out, 12, "fmt "); w32(out, 16, 16)
+    System.arraycopy(format, 0, out, 20, 16)
+    wTag(out, 36, "data"); w32(out, 40, dataLen)
+    out
+  }
+
   /** Encode PCM16 mono samples as a canonical 44-byte-header RIFF/WAVE. */
   def wavEncode(sampleRate: Int, samples: Array[Short]): Array[Byte] = {
-    val dataLen = samples.length * 2
-    val out = new Array[Byte](44 + dataLen)
-    out(0) = 'R'; out(1) = 'I'; out(2) = 'F'; out(3) = 'F'
-    w32(out, 4, 36 + dataLen)
-    out(8) = 'W'; out(9) = 'A'; out(10) = 'V'; out(11) = 'E'
-    out(12) = 'f'; out(13) = 'm'; out(14) = 't'; out(15) = ' '
-    w32(out, 16, 16) // PCM fmt chunk size
-    w16(out, 20, 1) // PCM
-    w16(out, 22, 1) // mono
-    w32(out, 24, sampleRate)
-    w32(out, 28, sampleRate * 2) // byte rate
-    w16(out, 32, 2) // block align
-    w16(out, 34, 16) // bits per sample
-    out(36) = 'd'; out(37) = 'a'; out(38) = 't'; out(39) = 'a'
-    w32(out, 40, dataLen)
+    val out = wavHeader(waveFormat(1, sampleRate, 16), samples.length * 2)
     var i = 0
     while (i < samples.length) {
       w16(out, 44 + i * 2, samples(i) & 0xffff)
@@ -244,90 +276,97 @@ object Codecs {
     * byte stream as data — the files telephony pipelines carry. */
   def wavEncodeG711(sampleRate: Int, codes: Array[Byte],
       mulaw: Boolean): Array[Byte] = {
-    // RIFF chunks pad to even length: one zero pad byte after an
-    // odd-length data chunk (1 byte/sample makes odd counts common
-    // here, unlike PCM16). The 'data' size field stays codes.length;
-    // the RIFF size counts the pad (it is part of the chunk stream).
-    val pad = codes.length & 1
-    val out = new Array[Byte](44 + codes.length + pad)
-    out(0) = 'R'; out(1) = 'I'; out(2) = 'F'; out(3) = 'F'
-    w32(out, 4, 36 + codes.length + pad)
-    out(8) = 'W'; out(9) = 'A'; out(10) = 'V'; out(11) = 'E'
-    out(12) = 'f'; out(13) = 'm'; out(14) = 't'; out(15) = ' '
-    w32(out, 16, 16)
-    w16(out, 20, if (mulaw) 7 else 6)
-    w16(out, 22, 1) // mono
-    w32(out, 24, sampleRate)
-    w32(out, 28, sampleRate) // byte rate: 1 byte/sample
-    w16(out, 32, 1) // block align
-    w16(out, 34, 8) // bits per sample
-    out(36) = 'd'; out(37) = 'a'; out(38) = 't'; out(39) = 'a'
-    w32(out, 40, codes.length)
+    // 1 byte/sample makes odd data lengths (and so the pad) common
+    val out = wavHeader(waveFormat(if (mulaw) 7 else 6, sampleRate, 8),
+      codes.length)
     System.arraycopy(codes, 0, out, 44, codes.length)
     out
   }
 
-  /** The real decoder: walks the RIFF chunk list (fmt may be followed
-    * by LIST/fact chunks before data in the wild), validates PCM16 or
-    * G.711 (format tags 6/7, 8-bit) and expands companded streams to
-    * PCM16 through the exact G.711 integer tables. */
+  /** The one RIFF chunk walk, shared by every WAV and AVI reader.
+    * Checks the form ('RIFF' + `form`, e.g. "WAVE" or "AVI "), then
+    * hands each chunk to `visit` in file order as (list type of the
+    * enclosing LIST, or `form` at top level; fourcc; data offset;
+    * data length), descending into every LIST instead of visiting it.
+    * Each length is checked against its parent's end before anything
+    * reads the chunk (a negative one would loop forever, an oversized
+    * one index past the buffer), and the walk steps over the pad byte
+    * after an odd-length chunk. */
+  private def riffWalk(b: Array[Byte], form: String)(
+      visit: (String, String, Int, Int) => Unit): Unit = {
+    require(b.length >= 12 && fourcc(b, 0) == "RIFF" &&
+      fourcc(b, 8) == form, s"not a RIFF/${form.trim}")
+    def walk(parent: String, from: Int, end: Int): Unit = {
+      var off = from
+      while (off + 8 <= end) {
+        val id = fourcc(b, off)
+        val len = s32(b, off + 4)
+        require(len >= 0 && off + 8 + len.toLong <= end,
+          s"corrupt RIFF chunk '$id' len $len at offset $off")
+        if (id == "LIST" && len >= 4)
+          walk(fourcc(b, off + 8), off + 12, off + 8 + len)
+        else visit(parent, id, off + 8, len)
+        off += 8 + len + (len & 1)
+      }
+    }
+    walk(form, 12, b.length)
+  }
+
+  /** Check the WAVEFORMAT at `f` (a WAV fmt chunk or an AVI audio
+    * strf, at least 16 bytes): PCM16 (tag 1) or 8-bit G.711 (tag 6
+    * A-law, 7 µ-law). Returns the format tag. */
+  private def waveFormatTag(b: Array[Byte], f: Int): Int = {
+    val tag = u16(b, f)
+    require(tag == 1 || tag == 6 || tag == 7,
+      s"unsupported WAVE format tag $tag (PCM / A-law / mu-law only)")
+    val bits = u16(b, f + 14)
+    require(bits == (if (tag == 1) 16 else 8),
+      s"bad bits/sample $bits for format tag $tag")
+    tag
+  }
+
+  /** The `len` audio bytes at `off`, in format `tag`, as PCM16:
+    * little-endian PCM read as is, G.711 codewords expanded through
+    * the exact integer tables. */
+  private def waveSamples(b: Array[Byte], off: Int, len: Int,
+      tag: Int): Array[Short] = {
+    val s = new Array[Short](if (tag == 1) len / 2 else len)
+    var i = 0
+    while (i < s.length) {
+      s(i) = tag match {
+        case 1 => u16(b, off + i * 2).toShort
+        case 7 => mulawDecode(b(off + i))
+        case _ => alawDecode(b(off + i))
+      }
+      i += 1
+    }
+    s
+  }
+
+  /** The real decoder: walks the RIFF chunk list ([[riffWalk]]; fmt
+    * may be followed by LIST/fact chunks before data in the wild),
+    * validates PCM16 or G.711 (format tags 6/7, 8-bit) and expands
+    * companded streams to PCM16 through the exact G.711 integer
+    * tables. */
   final class WavDecoder extends AudioDecoder {
     def decode(b: Array[Byte]): DecodedAudio = {
-      require(b.length >= 44 && b(0) == 'R' && b(1) == 'I' &&
-        b(2) == 'F' && b(3) == 'F' && b(8) == 'W' && b(9) == 'A' &&
-        b(10) == 'V' && b(11) == 'E', "not a RIFF/WAVE")
-      var off = 12
-      var rate = 0
-      var channels = 0
-      var fmtTag = -1
-      var dataOff = -1
-      var dataLen = -1
-      while (off + 8 <= b.length) {
-        val id = new String(b, off, 4, "US-ASCII")
-        val len = s32(b, off + 4)
-        // A negative len (crafted bytes) would leave `off` unchanged
-        // and loop forever; an oversized one would index past the
-        // buffer mid-parse. Fail fast on either.
-        require(len >= 0 && off + 8 + len.toLong <= b.length,
-          s"corrupt RIFF chunk '$id' len $len at offset $off")
-        if (id == "fmt ") {
+      require(b.length >= 44, "not a RIFF/WAVE")
+      var fmt = -1; var fmtTag = -1
+      var dataOff = -1; var dataLen = -1
+      riffWalk(b, "WAVE") { (parent, id, off, len) =>
+        if (parent == "WAVE" && id == "fmt ") {
           require(len >= 16, s"fmt chunk too short ($len)")
-          fmtTag = u16(b, off + 8)
-          require(fmtTag == 1 || fmtTag == 6 || fmtTag == 7,
-            s"unsupported WAVE format tag $fmtTag " +
-              "(PCM / A-law / mu-law only)")
-          channels = u16(b, off + 10)
-          rate = s32(b, off + 12)
-          val bits = u16(b, off + 22)
-          if (fmtTag == 1) require(bits == 16, "PCM must be 16-bit")
-          else require(bits == 8, "G.711 must be 8-bit")
-        } else if (id == "data") {
-          dataOff = off + 8
+          fmt = off
+          fmtTag = waveFormatTag(b, off)
+        } else if (parent == "WAVE" && id == "data") {
+          dataOff = off
           dataLen = len
         }
-        off += 8 + len + (len & 1) // chunks pad to even length
       }
-      require(rate > 0 && dataOff >= 0 && fmtTag >= 0,
+      require(fmt >= 0 && s32(b, fmt + 4) > 0 && dataOff >= 0,
         "missing fmt or data chunk")
-      val samples: Array[Short] = fmtTag match {
-        case 1 =>
-          val n = dataLen / 2
-          val s = new Array[Short](n)
-          var i = 0
-          while (i < n) { s(i) = u16(b, dataOff + i * 2).toShort; i += 1 }
-          s
-        case 7 =>
-          val s = new Array[Short](dataLen)
-          var i = 0
-          while (i < dataLen) { s(i) = mulawDecode(b(dataOff + i)); i += 1 }
-          s
-        case _ =>
-          val s = new Array[Short](dataLen)
-          var i = 0
-          while (i < dataLen) { s(i) = alawDecode(b(dataOff + i)); i += 1 }
-          s
-      }
-      DecodedAudio(rate, channels, samples)
+      DecodedAudio(s32(b, fmt + 4), u16(b, fmt + 2),
+        waveSamples(b, dataOff, dataLen, fmtTag))
     }
   }
 
@@ -343,6 +382,93 @@ object Codecs {
     var i = 0
     while (i < 4) { b(off + i) = tag.charAt(i).toByte; i += 1 }
   }
+
+  /** One stream of an AVI for [[aviMux]]: strh fccType ('vids' /
+    * 'auds') and handler fourcc ("" = 0), rate per second (scale is
+    * 1), length in rate units, suggested buffer size (its largest chunk
+    * + 8), sample size, and the strf format block. */
+  private[multimodal] final case class AviStreamOut(kind: String,
+      handler: String, rate: Int, length: Int, buffer: Int,
+      sampleSize: Int, strf: Array[Byte])
+
+  /** One movi chunk for [[aviMux]]: fourcc, data length, and the
+    * writer of its data at the given offset of the output. */
+  private[multimodal] final case class AviChunkOut(id: String, len: Int,
+      write: (Array[Byte], Int) => Unit)
+
+  /** The one AVI muxer: 'RIFF…AVI ' + LIST hdrl (avih main header +
+    * one LIST strl of strh + strf per stream) + LIST movi holding the
+    * chunks in order, each odd-length chunk followed by its RIFF pad
+    * byte. The main header's frame count and buffer size are the first
+    * stream's; its byte rate is fps x the sum of every stream's
+    * per-frame chunk bytes; video streams carry the frame rectangle. */
+  private[multimodal] def aviMux(width: Int, height: Int, fps: Int,
+      streams: Seq[AviStreamOut], movi: Seq[AviChunkOut]): Array[Byte] = {
+    // per strl: LIST header 12 + strh chunk 64 + strf chunk 8 + format
+    val hdrlLen = 4 + 64 + streams.map(84 + _.strf.length).sum
+    val moviLen = 4 + movi.map(c => 8 + c.len + (c.len & 1)).sum
+    val out = new Array[Byte](20 + hdrlLen + 8 + moviLen)
+    var o = 0
+    def chunk(id: String, len: Int): Unit = {
+      wTag(out, o, id); w32(out, o + 4, len); o += 8
+    }
+    def list(tp: String, len: Int): Unit = {
+      chunk("LIST", len); wTag(out, o, tp); o += 4
+    }
+    wTag(out, 0, "RIFF"); w32(out, 4, out.length - 8); wTag(out, 8, "AVI ")
+    o = 12
+    list("hdrl", hdrlLen)
+    chunk("avih", 56) // MainAVIHeader
+    w32(out, o, 1000000 / fps)                           // dwMicroSecPerFrame
+    w32(out, o + 4, fps * streams.map(_.buffer - 8).sum) // dwMaxBytesPerSec
+    w32(out, o + 16, streams.head.length)                // dwTotalFrames
+    w32(out, o + 24, streams.length)                     // dwStreams
+    w32(out, o + 28, streams.head.buffer)                // dwSuggestedBufferSize
+    w32(out, o + 32, width); w32(out, o + 36, height)
+    o += 56
+    streams.foreach { s =>
+      list("strl", 76 + s.strf.length)
+      chunk("strh", 56)
+      wTag(out, o, s.kind)
+      if (s.handler.nonEmpty) wTag(out, o + 4, s.handler)
+      w32(out, o + 20, 1)              // dwScale
+      w32(out, o + 24, s.rate)         // dwRate (units/sec = rate/scale)
+      w32(out, o + 32, s.length)       // dwLength
+      w32(out, o + 36, s.buffer)       // dwSuggestedBufferSize
+      w32(out, o + 44, s.sampleSize)   // dwSampleSize
+      if (s.kind == "vids") { w16(out, o + 52, width); w16(out, o + 54, height) }
+      o += 56
+      chunk("strf", s.strf.length)
+      System.arraycopy(s.strf, 0, out, o, s.strf.length)
+      o += s.strf.length
+    }
+    list("movi", moviLen)
+    movi.foreach { c =>
+      chunk(c.id, c.len)
+      c.write(out, o)
+      o += c.len + (c.len & 1)
+    }
+    out
+  }
+
+  private def requireFrames(width: Int, height: Int,
+      frames: Seq[Array[Byte]]): Unit =
+    frames.foreach(f => require(f.length == width * height * 3,
+      s"frame length ${f.length} != $width x $height x 3"))
+
+  /** The uncompressed video stream of an AVI: 'vids'/'DIB ' with a
+    * BITMAPINFOHEADER strf, one '00db' DIB chunk per frame. */
+  private def dibStream(width: Int, height: Int, fps: Int,
+      nFrames: Int): AviStreamOut = {
+    val frameBytes = bmpStride(width) * height
+    AviStreamOut("vids", "DIB ", fps, nFrames, frameBytes + 8, 0,
+      bitmapInfo(width, height, frameBytes))
+  }
+
+  private def dibChunk(width: Int, height: Int,
+      frame: Array[Byte]): AviChunkOut =
+    AviChunkOut("00db", bmpStride(width) * height,
+      (out, o) => writeDib(width, height, frame, out, o))
 
   /** Closed-form byte size of [[aviEncode]]'s output: 12-byte RIFF
     * header + 200-byte hdrl LIST (avih 64 + strl 124) + movi LIST
@@ -360,52 +486,9 @@ object Codecs {
   def aviEncode(width: Int, height: Int, fps: Int,
       frames: Seq[Array[Byte]]): Array[Byte] = {
     require(fps > 0 && frames.nonEmpty, "need fps > 0 and >= 1 frame")
-    frames.foreach(f => require(f.length == width * height * 3,
-      s"frame length ${f.length} != $width x $height x 3"))
-    val stride = bmpStride(width)
-    val frameBytes = stride * height
-    val nf = frames.length
-    val size = aviSize(width, height, nf)
-    val out = new Array[Byte](size)
-    wTag(out, 0, "RIFF"); w32(out, 4, size - 8); wTag(out, 8, "AVI ")
-    // LIST hdrl: content = 'hdrl' + avih(64) + strl LIST(124) = 192
-    wTag(out, 12, "LIST"); w32(out, 16, 192); wTag(out, 20, "hdrl")
-    // avih (MainAVIHeader, 56 bytes)
-    wTag(out, 24, "avih"); w32(out, 28, 56)
-    val avih = 32
-    w32(out, avih, 1000000 / fps)          // dwMicroSecPerFrame
-    w32(out, avih + 4, fps * frameBytes)   // dwMaxBytesPerSec
-    w32(out, avih + 16, nf)                // dwTotalFrames
-    w32(out, avih + 24, 1)                 // dwStreams
-    w32(out, avih + 28, frameBytes + 8)    // dwSuggestedBufferSize
-    w32(out, avih + 32, width); w32(out, avih + 36, height)
-    // LIST strl: content = 'strl' + strh(64) + strf(48) = 116
-    wTag(out, 88, "LIST"); w32(out, 92, 116); wTag(out, 96, "strl")
-    wTag(out, 100, "strh"); w32(out, 104, 56)
-    val strh = 108
-    wTag(out, strh, "vids"); wTag(out, strh + 4, "DIB ")
-    w32(out, strh + 20, 1)                 // dwScale
-    w32(out, strh + 24, fps)               // dwRate (fps = rate/scale)
-    w32(out, strh + 32, nf)                // dwLength
-    w32(out, strh + 36, frameBytes + 8)    // dwSuggestedBufferSize
-    w16(out, strh + 52, width); w16(out, strh + 54, height) // rcFrame
-    wTag(out, 164, "strf"); w32(out, 168, 40)
-    val strf = 172
-    w32(out, strf, 40)                     // biSize
-    w32(out, strf + 4, width); w32(out, strf + 8, height) // bottom-up
-    w16(out, strf + 12, 1); w16(out, strf + 14, 24) // planes, bpp
-    w32(out, strf + 16, 0)                 // BI_RGB
-    w32(out, strf + 20, frameBytes)        // biSizeImage
-    // LIST movi
-    wTag(out, 212, "LIST"); w32(out, 216, 4 + nf * (8 + frameBytes))
-    wTag(out, 220, "movi")
-    var off = 224
-    frames.foreach { f =>
-      wTag(out, off, "00db"); w32(out, off + 4, frameBytes)
-      writeDib(width, height, f, out, off + 8)
-      off += 8 + frameBytes // stride is 4-aligned, so never odd
-    }
-    out
+    requireFrames(width, height, frames)
+    aviMux(width, height, fps, Seq(dibStream(width, height, fps, frames.length)),
+      frames.map(dibChunk(width, height, _)))
   }
 
   /** One multimodal container: video frames AND the audio track
@@ -432,84 +515,15 @@ object Codecs {
     * two streams cover the same wall-clock. */
   def aviEncodeAv(width: Int, height: Int, fps: Int,
       frames: Seq[Array[Byte]], samplesPerFrame: Int,
-      samples: Array[Short]): Array[Byte] = {
-    require(fps > 0 && frames.nonEmpty && samplesPerFrame > 0,
-      "need fps > 0, >= 1 frame, samplesPerFrame > 0")
-    val nf = frames.length
-    require(samples.length == nf * samplesPerFrame,
-      s"audio length ${samples.length} != $nf x $samplesPerFrame")
-    frames.foreach(f => require(f.length == width * height * 3,
-      s"frame length ${f.length} != $width x $height x 3"))
-    val stride = bmpStride(width)
-    val frameBytes = stride * height
-    val audioBytesPerFrame = 2 * samplesPerFrame
-    val sampleRate = fps * samplesPerFrame
-    val size = aviAvSize(width, height, nf, samplesPerFrame)
-    val out = new Array[Byte](size)
-    wTag(out, 0, "RIFF"); w32(out, 4, size - 8); wTag(out, 8, "AVI ")
-    // LIST hdrl: 'hdrl' + avih(64) + vids strl(124) + auds strl(100)
-    wTag(out, 12, "LIST"); w32(out, 16, 292); wTag(out, 20, "hdrl")
-    wTag(out, 24, "avih"); w32(out, 28, 56)
-    val avih = 32
-    w32(out, avih, 1000000 / fps)
-    w32(out, avih + 4, fps * (frameBytes + audioBytesPerFrame))
-    w32(out, avih + 16, nf)
-    w32(out, avih + 24, 2) // dwStreams: video + audio
-    w32(out, avih + 28, frameBytes + 8)
-    w32(out, avih + 32, width); w32(out, avih + 36, height)
-    // vids strl (identical to aviEncode's)
-    wTag(out, 88, "LIST"); w32(out, 92, 116); wTag(out, 96, "strl")
-    wTag(out, 100, "strh"); w32(out, 104, 56)
-    val strh = 108
-    wTag(out, strh, "vids"); wTag(out, strh + 4, "DIB ")
-    w32(out, strh + 20, 1); w32(out, strh + 24, fps)
-    w32(out, strh + 32, nf); w32(out, strh + 36, frameBytes + 8)
-    w16(out, strh + 52, width); w16(out, strh + 54, height)
-    wTag(out, 164, "strf"); w32(out, 168, 40)
-    val strf = 172
-    w32(out, strf, 40)
-    w32(out, strf + 4, width); w32(out, strf + 8, height)
-    w16(out, strf + 12, 1); w16(out, strf + 14, 24)
-    w32(out, strf + 16, 0); w32(out, strf + 20, frameBytes)
-    // auds strl: strh(64) + WAVEFORMATEX strf(24)
-    wTag(out, 212, "LIST"); w32(out, 216, 92); wTag(out, 220, "strl")
-    wTag(out, 224, "strh"); w32(out, 228, 56)
-    val ash = 232
-    wTag(out, ash, "auds") // fccHandler 0 for PCM
-    w32(out, ash + 20, 1)               // dwScale
-    w32(out, ash + 24, sampleRate)      // dwRate (samples/sec)
-    w32(out, ash + 32, samples.length)  // dwLength in samples
-    w32(out, ash + 36, audioBytesPerFrame + 8)
-    w32(out, ash + 44, 2)               // dwSampleSize
-    wTag(out, 288, "strf"); w32(out, 292, 16)
-    val asf = 296
-    w16(out, asf, 1)                    // wFormatTag PCM
-    w16(out, asf + 2, 1)                // nChannels mono
-    w32(out, asf + 4, sampleRate)
-    w32(out, asf + 8, sampleRate * 2)   // nAvgBytesPerSec
-    w16(out, asf + 12, 2)               // nBlockAlign
-    w16(out, asf + 14, 16)              // wBitsPerSample
-    // LIST movi: interleave 00db / 01wb per frame
-    wTag(out, 312, "LIST")
-    w32(out, 316, 4 + nf * (16 + frameBytes + audioBytesPerFrame))
-    wTag(out, 320, "movi")
-    var off = 324
-    var f = 0
-    while (f < nf) {
-      wTag(out, off, "00db"); w32(out, off + 4, frameBytes)
-      writeDib(width, height, frames(f), out, off + 8)
-      off += 8 + frameBytes
-      wTag(out, off, "01wb"); w32(out, off + 4, audioBytesPerFrame)
-      var i = 0
-      while (i < samplesPerFrame) {
-        w16(out, off + 8 + i * 2, samples(f * samplesPerFrame + i) & 0xffff)
-        i += 1
-      }
-      off += 8 + audioBytesPerFrame
-      f += 1
-    }
-    out
-  }
+      samples: Array[Short]): Array[Byte] =
+    aviEncodeInterleaved(width, height, fps, frames, samplesPerFrame,
+      samples.length, 1, 16, (f, out, o) => {
+        var i = 0
+        while (i < samplesPerFrame) {
+          w16(out, o + i * 2, samples(f * samplesPerFrame + i) & 0xffff)
+          i += 1
+        }
+      })
 
   /** Closed-form byte size of [[aviEncodeAvG711]]'s output: as
     * [[aviAvSize]] but the audio chunks carry ONE companded byte per
@@ -528,208 +542,137 @@ object Codecs {
     * RIFF pad byte. */
   def aviEncodeAvG711(width: Int, height: Int, fps: Int,
       frames: Seq[Array[Byte]], samplesPerFrame: Int,
-      codes: Array[Byte], mulaw: Boolean): Array[Byte] = {
+      codes: Array[Byte], mulaw: Boolean): Array[Byte] =
+    aviEncodeInterleaved(width, height, fps, frames, samplesPerFrame,
+      codes.length, if (mulaw) 7 else 6, 8, (f, out, o) =>
+        System.arraycopy(codes, f * samplesPerFrame, out, o,
+          samplesPerFrame))
+
+  /** The two-stream AVI both AV writers emit: a DIB video stream and a
+    * mono audio stream of `nSamples` samples in WAVEFORMAT `tag` /
+    * `bits`, at fps x samplesPerFrame samples/sec; movi alternates
+    * each frame's '00db' with a '01wb' chunk of its audio span, which
+    * `writeAudio(frame, out, offset)` fills. */
+  private def aviEncodeInterleaved(width: Int, height: Int, fps: Int,
+      frames: Seq[Array[Byte]], samplesPerFrame: Int, nSamples: Int,
+      tag: Int, bits: Int,
+      writeAudio: (Int, Array[Byte], Int) => Unit): Array[Byte] = {
     require(fps > 0 && frames.nonEmpty && samplesPerFrame > 0,
       "need fps > 0, >= 1 frame, samplesPerFrame > 0")
     val nf = frames.length
-    require(codes.length == nf * samplesPerFrame,
-      s"audio length ${codes.length} != $nf x $samplesPerFrame")
-    frames.foreach(f => require(f.length == width * height * 3,
-      s"frame length ${f.length} != $width x $height x 3"))
-    val stride = bmpStride(width)
-    val frameBytes = stride * height
-    val audioChunk = samplesPerFrame
-    val audioPad = samplesPerFrame & 1
+    require(nSamples == nf * samplesPerFrame,
+      s"audio length $nSamples != $nf x $samplesPerFrame")
+    requireFrames(width, height, frames)
     val sampleRate = fps * samplesPerFrame
-    val size = aviAvG711Size(width, height, nf, samplesPerFrame)
-    val out = new Array[Byte](size)
-    wTag(out, 0, "RIFF"); w32(out, 4, size - 8); wTag(out, 8, "AVI ")
-    wTag(out, 12, "LIST"); w32(out, 16, 292); wTag(out, 20, "hdrl")
-    wTag(out, 24, "avih"); w32(out, 28, 56)
-    val avih = 32
-    w32(out, avih, 1000000 / fps)
-    w32(out, avih + 4, fps * (frameBytes + audioChunk))
-    w32(out, avih + 16, nf)
-    w32(out, avih + 24, 2) // dwStreams: video + audio
-    w32(out, avih + 28, frameBytes + 8)
-    w32(out, avih + 32, width); w32(out, avih + 36, height)
-    wTag(out, 88, "LIST"); w32(out, 92, 116); wTag(out, 96, "strl")
-    wTag(out, 100, "strh"); w32(out, 104, 56)
-    val strh = 108
-    wTag(out, strh, "vids"); wTag(out, strh + 4, "DIB ")
-    w32(out, strh + 20, 1); w32(out, strh + 24, fps)
-    w32(out, strh + 32, nf); w32(out, strh + 36, frameBytes + 8)
-    w16(out, strh + 52, width); w16(out, strh + 54, height)
-    wTag(out, 164, "strf"); w32(out, 168, 40)
-    val strf = 172
-    w32(out, strf, 40)
-    w32(out, strf + 4, width); w32(out, strf + 8, height)
-    w16(out, strf + 12, 1); w16(out, strf + 14, 24)
-    w32(out, strf + 16, 0); w32(out, strf + 20, frameBytes)
-    wTag(out, 212, "LIST"); w32(out, 216, 92); wTag(out, 220, "strl")
-    wTag(out, 224, "strh"); w32(out, 228, 56)
-    val ash = 232
-    wTag(out, ash, "auds")
-    w32(out, ash + 20, 1)               // dwScale
-    w32(out, ash + 24, sampleRate)      // dwRate (samples/sec)
-    w32(out, ash + 32, codes.length)    // dwLength in samples
-    w32(out, ash + 36, audioChunk + 8)
-    w32(out, ash + 44, 1)               // dwSampleSize: 1 byte
-    wTag(out, 288, "strf"); w32(out, 292, 16)
-    val asf = 296
-    w16(out, asf, if (mulaw) 7 else 6)  // wFormatTag G.711
-    w16(out, asf + 2, 1)                // nChannels mono
-    w32(out, asf + 4, sampleRate)
-    w32(out, asf + 8, sampleRate)       // nAvgBytesPerSec: 1 byte/sample
-    w16(out, asf + 12, 1)               // nBlockAlign
-    w16(out, asf + 14, 8)               // wBitsPerSample
-    wTag(out, 312, "LIST")
-    w32(out, 316, 4 + nf * (16 + frameBytes + audioChunk + audioPad))
-    wTag(out, 320, "movi")
-    var off = 324
-    var f = 0
-    while (f < nf) {
-      wTag(out, off, "00db"); w32(out, off + 4, frameBytes)
-      writeDib(width, height, frames(f), out, off + 8)
-      off += 8 + frameBytes
-      wTag(out, off, "01wb"); w32(out, off + 4, audioChunk)
-      System.arraycopy(codes, f * samplesPerFrame, out, off + 8,
-        samplesPerFrame)
-      off += 8 + audioChunk + audioPad
-      f += 1
-    }
-    out
+    val audioBytes = samplesPerFrame * (bits / 8)
+    val auds = AviStreamOut("auds", "", sampleRate, nSamples,
+      audioBytes + 8, bits / 8, waveFormat(tag, sampleRate, bits))
+    aviMux(width, height, fps, Seq(dibStream(width, height, fps, nf), auds),
+      (0 until nf).flatMap(f => Seq(dibChunk(width, height, frames(f)),
+        AviChunkOut("01wb", audioBytes, (out, o) => writeAudio(f, out, o)))))
   }
 
-  /** The real two-stream decoder: same chunk walk as [[AviDecoder]],
-    * but the hdrl parse tracks WHICH stream each strl describes
-    * (strh fccType routes the following strf), and the movi walk
-    * routes '00db'/'00dc' to the raster path and '01wb' to the audio
-    * path (PCM16, or G.711 µ/A-law expanded through the exact
-    * integer tables) — one parse of one byte stream yields both
-    * typed outputs. */
-  final class AviAvDecoder extends AvDecoder {
-    private def tag(b: Array[Byte], off: Int): String =
-      new String(b, off, 4, "US-ASCII")
-
-    private def checkedLen(b: Array[Byte], off: Int, end: Int): Int = {
-      val len = s32(b, off + 4)
-      require(len >= 0 && off + 8 + len.toLong <= end,
-        s"corrupt RIFF chunk '${tag(b, off)}' len $len at offset $off")
-      len
+  /** One AVI stream as its strl declares it: strh fccType and handler
+    * fourcc, scale and rate, and the extent of its strf (offset -1
+    * when the strl has none). */
+  private[multimodal] final case class AviStream(kind: String,
+      handler: String, scale: Int, rate: Int, strf: Int, strfLen: Int) {
+    /** Units per second (rate / scale). */
+    def perSecond: Int = {
+      require(scale > 0 && rate > 0, "missing or zero strh timing")
+      rate / scale
     }
 
+    /** Offset of the strf, checked to hold `need` bytes. */
+    def format(need: Int): Int = {
+      require(strfLen >= need, s"$kind strf too short ($strfLen)")
+      strf
+    }
+  }
+
+  /** One chunk inside an AVI's movi LIST: fourcc, data offset, length. */
+  private[multimodal] final case class AviChunk(id: String, off: Int,
+      len: Int)
+
+  /** A parsed AVI: its streams in strl order and its movi chunks. */
+  private[multimodal] final case class AviFile(streams: Seq[AviStream],
+      movi: Seq[AviChunk]) {
+    /** The last stream of type `kind` ('vids' or 'auds'). */
+    def stream(kind: String): AviStream = {
+      val i = streams.lastIndexWhere(_.kind == kind)
+      require(i >= 0, s"missing $kind stream")
+      streams(i)
+    }
+  }
+
+  /** The one AVI stream-header parse, on [[riffWalk]]: each hdrl strl's
+    * strh becomes an [[AviStream]] (with the extent of the strf that
+    * follows it), and each movi chunk an [[AviChunk]]. A movi chunk
+    * ahead of every stream header fails. What a stream's strf and
+    * chunks hold (DIB, MJPG or audio) is left to the decoders. */
+  private[multimodal] def aviParse(b: Array[Byte]): AviFile = {
+    val streams = scala.collection.mutable.ArrayBuffer.empty[AviStream]
+    val movi = scala.collection.mutable.ArrayBuffer.empty[AviChunk]
+    riffWalk(b, "AVI ") { (parent, id, off, len) =>
+      (parent, id) match {
+        case ("strl", "strh") =>
+          require(len >= 56, s"strh too short ($len)")
+          streams += AviStream(fourcc(b, off), fourcc(b, off + 4),
+            s32(b, off + 20), s32(b, off + 24), -1, 0)
+        case ("strl", "strf") if streams.nonEmpty =>
+          streams(streams.length - 1) =
+            streams.last.copy(strf = off, strfLen = len)
+        case ("movi", _) =>
+          require(streams.nonEmpty, "movi chunk before the stream headers")
+          movi += AviChunk(id, off, len)
+        case _ => ()
+      }
+    }
+    AviFile(streams.toSeq, movi.toSeq)
+  }
+
+  /** The DIB video of a parsed AVI: its 'vids' stream must be
+    * uncompressed ('DIB ' or a zero handler, with a BI_RGB
+    * BITMAPINFOHEADER strf as a BMP has), and every
+    * '00db'/'00dc' movi chunk is one frame, unpacked through the same
+    * stride/BGR/bottom-up raster logic as BMP. */
+  private def dibVideo(b: Array[Byte], avi: AviFile): DecodedVideo = {
+    val v = avi.stream("vids")
+    require(v.handler == "DIB " || v.handler.forall(_ == 0),
+      "only uncompressed DIB video")
+    val (width, height, topDown) = readBitmapInfo(b, v.format(40))
+    val frames = avi.movi.filter(c => c.id == "00db" || c.id == "00dc")
+      .map { c =>
+        require(c.len >= bmpStride(width) * height,
+          s"frame chunk len ${c.len} short of the raster")
+        readDib(b, c.off, width, height, topDown)
+      }
+    require(frames.nonEmpty, "no movi frames")
+    DecodedVideo(width, height, v.perSecond, frames.toArray)
+  }
+
+  /** The real decoder: [[aviParse]] for the stream headers and movi
+    * chunks, then [[dibVideo]] for the 'vids' stream's frames. A
+    * two-stream file's audio strl and '01wb' chunks are left alone. */
+  final class AviDecoder extends VideoDecoder {
+    def decode(b: Array[Byte]): DecodedVideo = dibVideo(b, aviParse(b))
+  }
+
+  /** The real two-stream decoder: one [[aviParse]] of the byte stream
+    * yields both typed outputs — the 'vids' stream's frames through
+    * [[dibVideo]], and the 'auds' stream's '01wb' chunks (PCM16, or
+    * G.711 µ/A-law expanded through the exact integer tables) as one
+    * sample array. */
+  final class AviAvDecoder extends AvDecoder {
     def decode(b: Array[Byte]): DecodedAv = {
-      require(b.length >= 12 && tag(b, 0) == "RIFF" &&
-        tag(b, 8) == "AVI ", "not a RIFF/AVI")
-      var width = 0; var height = 0; var topDown = false
-      var vScale = 0; var vRate = 0
-      var aRate = 0; var aChannels = 0; var aFmt = 0
-      val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-      val audio = scala.collection.mutable.ArrayBuffer.empty[Short]
-
-      def parseStrl(from: Int, end: Int): Unit = {
-        var off = from
-        var cur = "" // fccType of the strh seen last in THIS strl
-        while (off + 8 <= end) {
-          val len = checkedLen(b, off, end)
-          tag(b, off) match {
-            case "strh" =>
-              require(len >= 56, s"strh too short ($len)")
-              cur = tag(b, off + 8)
-              if (cur == "vids") {
-                require(tag(b, off + 12) == "DIB " ||
-                  s32(b, off + 12) == 0, "only uncompressed DIB video")
-                vScale = s32(b, off + 28); vRate = s32(b, off + 32)
-              }
-            case "strf" if cur == "vids" =>
-              require(len >= 40, s"strf too short ($len)")
-              width = s32(b, off + 12)
-              val hRaw = s32(b, off + 16)
-              topDown = hRaw < 0
-              height = math.abs(hRaw)
-              require(u16(b, off + 20) == 1 && u16(b, off + 22) == 24,
-                "only 24-bit single-plane supported")
-              require(s32(b, off + 24) == 0, "only BI_RGB supported")
-            case "strf" if cur == "auds" =>
-              require(len >= 16, s"audio strf too short ($len)")
-              aFmt = u16(b, off + 8)
-              require(aFmt == 1 || aFmt == 6 || aFmt == 7,
-                s"only PCM or G.711 audio (got format tag $aFmt)")
-              aChannels = u16(b, off + 10)
-              aRate = s32(b, off + 12)
-              val bits = u16(b, off + 22)
-              require(if (aFmt == 1) bits == 16 else bits == 8,
-                s"bad bits/sample $bits for format tag $aFmt")
-            case _ => ()
-          }
-          off += 8 + len + (len & 1)
-        }
-      }
-
-      def parseHdrl(from: Int, end: Int): Unit = {
-        var off = from
-        while (off + 8 <= end) {
-          val len = checkedLen(b, off, end)
-          if (tag(b, off) == "LIST" && len >= 4 &&
-            tag(b, off + 8) == "strl") parseStrl(off + 12, off + 8 + len)
-          off += 8 + len + (len & 1)
-        }
-      }
-
-      def parseMovi(from: Int, end: Int): Unit = {
-        var off = from
-        while (off + 8 <= end) {
-          val len = checkedLen(b, off, end)
-          tag(b, off) match {
-            case "00db" | "00dc" =>
-              require(width > 0 && height > 0,
-                "movi frame before stream headers")
-              require(len >= bmpStride(width) * height,
-                s"frame chunk len $len short of the raster")
-              frames += readDib(b, off + 8, width, height, topDown)
-            case "01wb" =>
-              require(aFmt != 0, "movi audio before the auds strf")
-              if (aFmt == 1) {
-                var i = 0
-                while (i < len / 2) {
-                  audio += u16(b, off + 8 + i * 2).toShort
-                  i += 1
-                }
-              } else {
-                // companded: expand each codeword byte (G.711)
-                var i = 0
-                while (i < len) {
-                  val c = b(off + 8 + i)
-                  audio += (if (aFmt == 7) mulawDecode(c) else alawDecode(c))
-                  i += 1
-                }
-              }
-            case _ => ()
-          }
-          off += 8 + len + (len & 1)
-        }
-      }
-
-      var off = 12
-      while (off + 8 <= b.length) {
-        val len = checkedLen(b, off, b.length)
-        if (tag(b, off) == "LIST" && len >= 4) {
-          tag(b, off + 8) match {
-            case "hdrl" => parseHdrl(off + 12, off + 8 + len)
-            case "movi" => parseMovi(off + 12, off + 8 + len)
-            case _ => ()
-          }
-        }
-        off += 8 + len + (len & 1)
-      }
-      require(width > 0 && height > 0, "missing vids strf header")
-      require(vScale > 0 && vRate > 0, "missing or zero strh timing")
-      require(frames.nonEmpty, "no movi frames")
-      require(aRate > 0 && audio.nonEmpty, "missing audio stream")
-      DecodedAv(
-        DecodedVideo(width, height, vRate / vScale, frames.toArray),
-        DecodedAudio(aRate, aChannels, audio.toArray))
+      val avi = aviParse(b)
+      val f = avi.stream("auds").format(16)
+      val tag = waveFormatTag(b, f)
+      val audio = Array.concat(avi.movi.filter(_.id == "01wb")
+        .map(c => waveSamples(b, c.off, c.len, tag)): _*)
+      require(s32(b, f + 4) > 0 && audio.nonEmpty, "missing audio stream")
+      DecodedAv(dibVideo(b, avi),
+        DecodedAudio(s32(b, f + 4), u16(b, f + 2), audio))
     }
   }
 
@@ -957,7 +900,8 @@ object Codecs {
     * form, with Long-safe bounds (a corrupted count must not
     * overflow the Int size guard) and a fits-the-container check
     * before the fixed-form allocation. Shared by every MP4 reader. */
-  private def parseStsz(b: Array[Byte], off: Int, size: Int): Array[Int] = {
+  private def parseStsz(b: Array[Byte], off: Int): Array[Int] = {
+    val size = be32(b, off)
     require(size >= 20, s"stsz too short ($size)")
     val fixed = be32(b, off + 12)
     val n = be32(b, off + 16)
@@ -967,43 +911,30 @@ object Codecs {
         s"stsz table for $n samples overruns box size $size")
       Array.tabulate(n)(i => be32(b, off + 20 + i * 4))
     } else {
-      require(fixed.toLong * n <= b.length,
+      // a negative fixed size would pass the product check and reach
+      // the allocation of a crafted (huge) count
+      require(fixed > 0 && fixed.toLong * n <= b.length,
         s"$n samples of $fixed bytes exceed the container")
       Array.fill(n)(fixed)
     }
   }
 
   /** Parse one single-run stsc box into samples-per-chunk. */
-  private def parseStsc(b: Array[Byte], off: Int, size: Int): Int = {
-    require(size >= 28 && be32(b, off + 12) == 1,
+  private def parseStsc(b: Array[Byte], off: Int): Int = {
+    require(be32(b, off) >= 28 && be32(b, off + 12) == 1,
       "only the single-run stsc layout is supported")
     be32(b, off + 20)
   }
 
   /** Parse one stco box into absolute chunk offsets (one or many). */
-  private def parseStco(b: Array[Byte], off: Int, size: Int): Array[Long] = {
+  private def parseStco(b: Array[Byte], off: Int): Array[Long] = {
+    val size = be32(b, off)
     require(size >= 16, s"stco too short ($size)")
     val c = be32(b, off + 12)
     require(c >= 1 && size.toLong >= 16L + c.toLong * 4,
       s"stco table for $c chunks overruns box size $size")
     Array.tabulate(c)(i =>
       be32(b, off + 16 + i * 4).toLong & 0xffffffffL)
-  }
-
-  /** Parse the 'raw ' VisualSampleEntry of a single-entry stsd into
-    * (width, height), validating depth 24 and the raster bound. The
-    * caller has already read and dispatched on the entry's fourcc. */
-  private def parseRawVideoEntry(b: Array[Byte], off: Int,
-      size: Int): (Int, Int) = {
-    require(size >= 102, s"video stsd too short ($size)")
-    val e = off + 16
-    require(be16(b, e + 82) == 24,
-      s"only depth-24 packed RGB supported (${be16(b, e + 82)})")
-    val w = be16(b, e + 32)
-    val h = be16(b, e + 34)
-    require(w > 0 && h > 0 && w.toLong * h * 3 <= Int.MaxValue,
-      s"corrupt stsd dimensions ${w}x$h")
-    (w, h)
   }
 
   /** Cumulate (stsz sizes, stsc samples-per-chunk, stco chunk
@@ -1015,9 +946,7 @@ object Codecs {
     * chunks x spc must equal the stsz count. */
   private[multimodal] def resolveSamples(sizes: Array[Int], spc: Int,
       chunkOffs: Array[Long], totalLen: Int): Array[Mp4Sample] = {
-    require(sizes != null, "missing stsz")
     require(spc >= 1, s"stsc samples/chunk $spc")
-    require(chunkOffs != null && chunkOffs.nonEmpty, "missing stco")
     require(chunkOffs.length.toLong * spc == sizes.length,
       s"stsc ${chunkOffs.length} chunks x $spc samples/chunk != " +
         s"stsz count ${sizes.length}")
@@ -1035,164 +964,190 @@ object Codecs {
     out
   }
 
-  /** The real indexer: the [[Mp4Probe]] box walk extended to the
-    * sample tables — stsz's per-sample sizes (fixed or table form),
-    * stsc's samples-per-chunk, stco's absolute chunk offsets (ONE OR
-    * MANY — the multi-chunk layout interleaved real muxers emit) —
-    * cumulated into one (ordinal, absolute offset, size) row per
-    * sample, each verified to lie inside the buffer. This is the
-    * seek path of every real MP4 reader: resolve the index, then
-    * read sample bytes straight out of mdat without touching a
-    * decoder. */
-  final class Mp4Indexer extends ContainerIndexer {
-    private def tag(b: Array[Byte], off: Int): String =
-      new String(b, off, 4, "US-ASCII")
-
-    def index(b: Array[Byte]): Array[Mp4Sample] = {
-      require(b.length >= 16, "too short for an MP4")
-      var sizes: Array[Int] = null
-      var chunkOffs: Array[Long] = null
-      var samplesPerChunk = -1
-
-      def walk(from: Int, end: Int): Unit = {
-        var off = from
-        while (off + 8 <= end) {
-          val size = be32(b, off)
-          require(size >= 8 && off.toLong + size <= end,
-            s"corrupt box size $size at offset $off")
-          tag(b, off + 4) match {
-            case "moov" | "trak" | "mdia" | "minf" | "stbl" =>
-              walk(off + 8, off + size)
-            case "stsz" => sizes = parseStsz(b, off, size)
-            case "stsc" => samplesPerChunk = parseStsc(b, off, size)
-            case "stco" => chunkOffs = parseStco(b, off, size)
-            case _ => ()
-          }
-          off += size
-        }
-      }
-
-      walk(0, b.length)
-      resolveSamples(sizes, samplesPerChunk, chunkOffs, b.length)
+  /** The one ISO-BMFF box walk: hands each box in [from, end) to
+    * `visit` as (type, box offset, size), in file order. A size below 8
+    * (0 = "to end of file" and 1 = 64-bit largesize are rejected as
+    * unsupported rather than misparsed) or past the parent's end fails
+    * before the box is read, so crafted sizes can neither loop nor
+    * over-index. */
+  private def boxWalk(b: Array[Byte], from: Int, end: Int)(
+      visit: (String, Int, Int) => Unit): Unit = {
+    var off = from
+    while (off + 8 <= end) {
+      val size = be32(b, off)
+      val tp = fourcc(b, off + 4)
+      require(size >= 8 && off.toLong + size <= end,
+        s"corrupt box '$tp' size $size at offset $off")
+      visit(tp, off, size)
+      off += size
     }
   }
 
-  /** The real probe: walks the top-level box list (big-endian sizes,
-    * each validated against its parent before descent — size==0
-    * (to-end) and size==1 (64-bit largesize) are rejected as
-    * unsupported rather than misparsed), descends
-    * moov/trak/mdia/minf/stbl, and reads brand (ftyp), movie
-    * timescale + duration (mvhd v0), track count and dims (tkhd v0,
-    * 16.16 fixed), handler type (hdlr), the stts sample count/delta,
-    * and the mdat extent + payload byte sum. Box ORDER is free (a
-    * streaming muxer puts moov after mdat) — the walk never assumes
-    * offsets. */
+  /** One trak of an MP4, located by [[mp4Walk]]: the offset of the last
+    * box of each type in its mdia/minf/stbl subtree. Each accessor
+    * checks the box it reads. */
+  private final class Mp4Trak(b: Array[Byte]) {
+    val boxes = scala.collection.mutable.HashMap.empty[String, Int]
+
+    /** Offset of the trak's `tp` box, or -1 when it has none; a box
+      * that is there must hold `min` bytes. */
+    def box(tp: String, min: Int): Int = boxes.get(tp) match {
+      case Some(o) =>
+        require(be32(b, o) >= min, s"$tp too short (${be32(b, o)})")
+        o
+      case None => -1
+    }
+
+    /** hdlr handler type ('vide', 'soun', ...; "" without an hdlr). */
+    def handler: String = {
+      val o = box("hdlr", 24)
+      if (o < 0) "" else fourcc(b, o + 16)
+    }
+
+    /** Media timescale of the version-0 mdhd. */
+    def timescale: Int = {
+      val o = box("mdhd", 32)
+      require(o >= 0 && (b(o + 8) & 0xff) == 0,
+        "missing or non-version-0 mdhd")
+      be32(b, o + 20)
+    }
+
+    /** Fourcc of the single stsd sample entry. */
+    def format: String = {
+      val o = box("stsd", 24)
+      require(o >= 0 && be32(b, o + 12) == 1,
+        "only a single-entry stsd is supported")
+      fourcc(b, o + 20)
+    }
+
+    /** Sample delta of a single-run stts. */
+    def sampleDelta: Int = {
+      val o = box("stts", 24)
+      require(o >= 0 && be32(b, o + 12) == 1,
+        "only the single-run stts layout is supported")
+      be32(b, o + 20)
+    }
+
+    /** Every sample's absolute extent, from stsz/stsc/stco. */
+    def samples: Array[Mp4Sample] = {
+      val (z, c, o) = (box("stsz", 0), box("stsc", 0), box("stco", 0))
+      require(z >= 0 && c >= 0 && o >= 0, "missing stsz, stsc or stco")
+      resolveSamples(parseStsz(b, z), parseStsc(b, c), parseStco(b, o),
+        b.length)
+    }
+  }
+
+  /** Walk an MP4 with [[boxWalk]]: the top level and moov go to `visit`
+    * (type, offset, size), except that each trak's subtree (through
+    * mdia/minf/stbl) is located into its own [[Mp4Trak]] — a second
+    * track's boxes (an audio trak's 0x0 tkhd, its own stts) never
+    * shadow the first's. Box ORDER is free (a streaming muxer puts
+    * moov after mdat); the walk never assumes offsets. */
+  private def mp4Walk(b: Array[Byte])(
+      visit: (String, Int, Int) => Unit = (_, _, _) => ()): Seq[Mp4Trak] = {
+    require(b.length >= 16, "too short for an MP4")
+    val traks = scala.collection.mutable.ArrayBuffer.empty[Mp4Trak]
+    def trak(t: Mp4Trak, from: Int, end: Int): Unit =
+      boxWalk(b, from, end) { (tp, off, size) =>
+        if (tp == "mdia" || tp == "minf" || tp == "stbl")
+          trak(t, off + 8, off + size)
+        else t.boxes(tp) = off
+      }
+    def walk(from: Int, end: Int): Unit =
+      boxWalk(b, from, end) { (tp, off, size) =>
+        tp match {
+          case "moov" => walk(off + 8, off + size)
+          case "trak" =>
+            traks += new Mp4Trak(b)
+            trak(traks.last, off + 8, off + size)
+          case _ => visit(tp, off, size)
+        }
+      }
+    walk(0, b.length)
+    traks.toSeq
+  }
+
+  /** The one trak with handler `handler`: a second one is ambiguous. */
+  private def mp4Track(traks: Seq[Mp4Trak],
+      handler: String): Mp4Trak = {
+    val ts = traks.filter(_.handler == handler)
+    require(ts.length == 1,
+      s"need one '$handler' trak, found ${ts.length}")
+    ts.head
+  }
+
+  /** The real indexer: [[mp4Walk]] to the 'vide' trak's sample tables
+    * — stsz's per-sample sizes (fixed or table form), stsc's
+    * samples-per-chunk, stco's absolute chunk offsets (ONE OR MANY —
+    * the multi-chunk layout interleaved real muxers emit) — cumulated
+    * into one (ordinal, absolute offset, size) row per sample, each
+    * verified to lie inside the buffer. This is the seek path of every
+    * real MP4 reader: resolve the index, then read sample bytes
+    * straight out of mdat without touching a decoder. */
+  final class Mp4Indexer extends ContainerIndexer {
+    def index(b: Array[Byte]): Array[Mp4Sample] =
+      mp4Track(mp4Walk(b)(), "vide").samples
+  }
+
+  /** The real probe: [[mp4Walk]] reads brand (ftyp), movie timescale +
+    * duration (mvhd v0) and the mdat extent + payload byte sum; then
+    * each trak's dims (tkhd v0, 16.16 fixed), handler type (hdlr) and
+    * stts sample count/delta. The 'vide' trak's fields win, else the
+    * first trak with a handler; a second video trak is rejected
+    * rather than silently shadowed. */
   final class Mp4Probe extends ContainerProbe {
-    private def tag(b: Array[Byte], off: Int): String =
-      new String(b, off, 4, "US-ASCII")
-
     def probe(b: Array[Byte]): Mp4Meta = {
-      require(b.length >= 16, "too short for an MP4")
       var brand = ""; var timescale = 0; var duration = 0L
-      var nTracks = 0; var handler = ""
-      var width = 0; var height = 0
-      var nSamples = 0L; var sampleDelta = 0
       var mdatBytes = -1L; var payloadSum = 0L
-
-      def version(off: Int): Int = b(off + 8) & 0xff
-
-      def checked(off: Int, end: Int): (Int, String) = {
-        val size = be32(b, off)
-        require(size >= 8 && off.toLong + size <= end,
-          s"corrupt box '${if (size >= 8) tag(b, off + 4) else "?"}' " +
-            s"size $size at offset $off")
-        (size, tag(b, off + 4))
-      }
-
-      // One trak subtree parses into ITS OWN fields (the AviDecoder
-      // stream-scoping lesson: a second track's tkhd carries 0x0 dims
-      // and its stts different timing — blindly merging traks would
-      // corrupt the video fields). The 'vide' track's fields win; a
-      // second video track is rejected rather than silently shadowed.
-      def parseTrak(from: Int, end: Int): Unit = {
-        var tHandler = ""; var tW = 0; var tH = 0
-        var tN = 0L; var tDelta = 0
-        def walkT(f: Int, e: Int): Unit = {
-          var off = f
-          while (off + 8 <= e) {
-            val (size, tp) = checked(off, e)
-            tp match {
-              case "mdia" | "minf" | "stbl" => walkT(off + 8, off + size)
-              case "tkhd" =>
-                require(version(off) == 0 && size >= 92,
-                  "only version-0 tkhd supported")
-                tW = be32(b, off + 84) >>> 16
-                tH = be32(b, off + 88) >>> 16
-              case "hdlr" =>
-                require(size >= 24, s"hdlr too short ($size)")
-                tHandler = tag(b, off + 16)
-              case "stts" =>
-                require(size >= 16, s"stts too short ($size)")
-                val n = be32(b, off + 12)
-                require(n >= 1 && size.toLong >= 16L + n.toLong * 8,
-                  s"stts entry count $n overruns box size $size")
-                var i = 0
-                while (i < n) {
-                  tN += be32(b, off + 16 + i * 8).toLong & 0xffffffffL
-                  if (i == 0) tDelta = be32(b, off + 20 + i * 8)
-                  i += 1
-                }
-              case _ => ()
+      val traks = mp4Walk(b) { (tp, off, size) =>
+        tp match {
+          case "ftyp" =>
+            require(size >= 16, s"ftyp too short ($size)")
+            brand = fourcc(b, off + 8)
+          case "mvhd" =>
+            require(size >= 108 && (b(off + 8) & 0xff) == 0,
+              "only version-0 mvhd supported")
+            timescale = be32(b, off + 20)
+            duration = be32(b, off + 24).toLong & 0xffffffffL
+          case "mdat" =>
+            mdatBytes = (size - 8).toLong
+            var i = off + 8
+            while (i < off + size) {
+              payloadSum += b(i) & 0xff
+              i += 1
             }
-            off += size
-          }
-        }
-        walkT(from, end)
-        nTracks += 1
-        if (handler.isEmpty || tHandler == "vide") {
-          require(!(handler == "vide" && tHandler == "vide"),
-            "two video tracks: ambiguous probe target")
-          handler = tHandler
-          width = tW; height = tH
-          nSamples = tN; sampleDelta = tDelta
+          case _ => ()
         }
       }
-
-      def walk(from: Int, end: Int): Unit = {
-        var off = from
-        while (off + 8 <= end) {
-          val (size, tp) = checked(off, end)
-          tp match {
-            case "moov" => walk(off + 8, off + size)
-            case "trak" => parseTrak(off + 8, off + size)
-            case "ftyp" =>
-              require(size >= 16, s"ftyp too short ($size)")
-              brand = tag(b, off + 8)
-            case "mvhd" =>
-              require(version(off) == 0 && size >= 108,
-                "only version-0 mvhd supported")
-              timescale = be32(b, off + 20)
-              duration = be32(b, off + 24).toLong & 0xffffffffL
-            case "mdat" =>
-              mdatBytes = (size - 8).toLong
-              var i = off + 8
-              while (i < off + size) {
-                payloadSum += b(i) & 0xff
-                i += 1
-              }
-            case _ => ()
-          }
-          off += size
+      // (handler, width, height, stts sample count, first delta)
+      val tracks = traks.map { t =>
+        val k = t.box("tkhd", 92)
+        require(k < 0 || (b(k + 8) & 0xff) == 0,
+          "only version-0 tkhd supported")
+        val s = t.box("stts", 16)
+        val runs = if (s < 0) 0 else be32(b, s + 12)
+        require(s < 0 || runs >= 1 && be32(b, s) >= 16L + runs.toLong * 8,
+          s"stts entry count $runs overruns its box")
+        var n = 0L
+        var i = 0
+        while (i < runs) {
+          n += be32(b, s + 16 + i * 8).toLong & 0xffffffffL
+          i += 1
         }
+        (t.handler, if (k < 0) 0 else be32(b, k + 84) >>> 16,
+          if (k < 0) 0 else be32(b, k + 88) >>> 16, n,
+          if (runs > 0) be32(b, s + 20) else 0)
       }
-
-      walk(0, b.length)
+      val vide = tracks.filter(_._1 == "vide")
+      require(vide.length <= 1, "two video tracks: ambiguous probe target")
       require(brand.nonEmpty, "missing ftyp")
       require(timescale > 0, "missing or zero mvhd timescale")
-      require(nTracks > 0 && handler.nonEmpty, "missing trak/hdlr")
+      val pick = vide.headOption.orElse(tracks.find(_._1.nonEmpty))
+      require(pick.isDefined, "missing trak/hdlr")
+      val (handler, width, height, nSamples, sampleDelta) = pick.get
       require(nSamples > 0 && sampleDelta > 0, "missing stts timing")
       require(mdatBytes >= 0, "missing mdat")
-      Mp4Meta(brand, timescale, duration, nTracks, handler,
+      Mp4Meta(brand, timescale, duration, traks.length, handler,
         width, height, nSamples, sampleDelta, mdatBytes, payloadSum)
     }
   }
@@ -1310,12 +1265,12 @@ object Codecs {
 
   /** The real MP4 VIDEO decoder — frame rasters parsed out of the
     * reference's actual container format (raw_to_samples.py opens
-    * .mp4; ISO/IEC 14496-12). Composes the two machines the probe
-    * and indexer already prove on real bytes: a box walk for the
-    * in-band metadata (stsd's VisualSampleEntry gives the sample
-    * FORMAT — required to be the uncompressed 'raw ' RGB24 entry —
-    * and dims; mdhd gives the media timescale; stts the sample
-    * delta, so fps = timescale / delta) plus the [[Mp4Indexer]]
+    * .mp4; ISO/IEC 14496-12). Reads the 'vide' trak of the shared
+    * per-trak parse ([[mp4Walk]]; a two-track file's 'soun' trak is
+    * left alone) for the in-band metadata (stsd's VisualSampleEntry
+    * gives the sample FORMAT — required to be the uncompressed 'raw '
+    * RGB24 entry — and dims; mdhd gives the media timescale; stts the
+    * sample delta, so fps = timescale / delta) and the [[Mp4Indexer]]
     * stsz/stsc/stco seek path for each sample's absolute extent;
     * each sample is then read straight out of mdat as a top-down
     * packed-RGB raster. With this, the surrogate boundary covers
@@ -1323,68 +1278,37 @@ object Codecs {
     * the container, index, timing, and uncompressed-frame rungs of
     * the reference's cv2.VideoCapture loop all run on parsed bytes. */
   final class Mp4VideoDecoder extends VideoDecoder {
-    private def tag(b: Array[Byte], off: Int): String =
-      new String(b, off, 4, "US-ASCII")
+    def decode(b: Array[Byte]): DecodedVideo =
+      rawVideo(b, mp4Track(mp4Walk(b)(), "vide"))
+  }
 
-    def decode(b: Array[Byte]): DecodedVideo = {
-      require(b.length >= 16, "too short for an MP4")
-      var width = 0; var height = 0; var format = ""
-      var timescale = 0; var sampleDelta = 0
-      var sizes: Array[Int] = null; var spc = -1
-      var chunkOffs: Array[Long] = null
-
-      def walk(from: Int, end: Int): Unit = {
-        var off = from
-        while (off + 8 <= end) {
-          val size = be32(b, off)
-          require(size >= 8 && off.toLong + size <= end,
-            s"corrupt box size $size at offset $off")
-          tag(b, off + 4) match {
-            case "moov" | "trak" | "mdia" | "minf" | "stbl" =>
-              walk(off + 8, off + size)
-            case "mdhd" =>
-              require(size >= 32 && (b(off + 8) & 0xff) == 0,
-                "only version-0 mdhd supported")
-              timescale = be32(b, off + 20)
-            case "stsd" =>
-              require(size >= 24 && be32(b, off + 12) == 1,
-                "only a single-entry stsd is supported")
-              format = tag(b, off + 20)
-              require(format == "raw ",
-                s"unsupported sample format '$format' — only the " +
-                  "uncompressed 'raw ' RGB entry decodes without a codec")
-              val (w, h) = parseRawVideoEntry(b, off, size)
-              width = w; height = h
-            case "stts" =>
-              require(size >= 24 && be32(b, off + 12) == 1,
-                "only the single-run stts layout is supported")
-              sampleDelta = be32(b, off + 20)
-            case "stsz" => sizes = parseStsz(b, off, size)
-            case "stsc" => spc = parseStsc(b, off, size)
-            case "stco" => chunkOffs = parseStco(b, off, size)
-            case _ => ()
-          }
-          off += size
-        }
-      }
-
-      walk(0, b.length)
-      require(format == "raw ", "missing stsd 'raw ' sample entry")
-      require(timescale > 0 && sampleDelta > 0,
-        "missing mdhd/stts timing")
-      val fsize = width * height * 3
-      // one walk collected metadata AND the sample tables; resolve
-      // the seek index directly (no second pass over the box tree)
-      val frames = resolveSamples(sizes, spc, chunkOffs, b.length)
-        .map { sm =>
-          require(sm.size == fsize,
-            s"sample ${sm.k} is ${sm.size} bytes, raster needs $fsize")
-          val f = new Array[Byte](fsize)
-          System.arraycopy(b, sm.off.toInt, f, 0, fsize)
-          f
-        }
-      DecodedVideo(width, height, timescale / sampleDelta, frames)
+  /** The frames of a 'raw ' RGB24 video trak: dims from its
+    * VisualSampleEntry (depth 24, raster bound checked), fps = mdhd
+    * timescale / single-run stts delta, and each sample, at its
+    * index-resolved extent, one top-down packed-RGB raster. */
+  private def rawVideo(b: Array[Byte], t: Mp4Trak): DecodedVideo = {
+    val format = t.format
+    require(format == "raw ",
+      s"unsupported sample format '$format' — only the " +
+        "uncompressed 'raw ' RGB entry decodes without a codec")
+    val e = t.box("stsd", 102) + 16 // the VisualSampleEntry
+    require(be16(b, e + 82) == 24,
+      s"only depth-24 packed RGB supported (${be16(b, e + 82)})")
+    val width = be16(b, e + 32)
+    val height = be16(b, e + 34)
+    require(width > 0 && height > 0 &&
+      width.toLong * height * 3 <= Int.MaxValue,
+      s"corrupt stsd dimensions ${width}x$height")
+    val timescale = t.timescale
+    val sampleDelta = t.sampleDelta
+    require(timescale > 0 && sampleDelta > 0, "missing mdhd/stts timing")
+    val fsize = width * height * 3
+    val frames = t.samples.map { sm =>
+      require(sm.size == fsize,
+        s"sample ${sm.k} is ${sm.size} bytes, raster needs $fsize")
+      java.util.Arrays.copyOfRange(b, sm.off.toInt, sm.off.toInt + fsize)
     }
+    DecodedVideo(width, height, timescale / sampleDelta, frames)
   }
 
   /** Closed-form byte size of [[mp4EncodeAv]]'s output: ftyp 32 +
@@ -1562,233 +1486,32 @@ object Codecs {
     out
   }
 
-  /** The real TWO-TRACK MP4 decoder: per-trak scoped box walk (the
-    * [[Mp4Probe]] lesson — each trak's stsd/stts/stsz/stsc/stco
-    * parse into ITS OWN fields, routed by hdlr), then each track's
-    * samples resolve through the shared multi-chunk index cumulation
-    * ([[resolveSamples]]) and read straight out of the interleaved
-    * mdat: video rasters from the 'raw ' track, little-endian PCM16
-    * from the 'sowt' track — one parse of one byte stream yields
-    * both typed modalities, through the genuinely multi-chunk stco
-    * layout interleaving forces. */
+  /** The real TWO-TRACK MP4 decoder: the per-trak parse of
+    * [[mp4Walk]] keeps each trak's stsd/stts/stsz/stsc/stco apart
+    * (routed by hdlr), then each track's samples resolve through the
+    * shared multi-chunk index cumulation ([[resolveSamples]]) and read
+    * straight out of the interleaved mdat: video rasters from the
+    * 'raw ' track ([[rawVideo]]), little-endian PCM16 from the 'sowt'
+    * track — one parse of one byte stream yields both typed
+    * modalities, through the genuinely multi-chunk stco layout
+    * interleaving forces. */
   final class Mp4AvDecoder extends AvDecoder {
-    private def tag(b: Array[Byte], off: Int): String =
-      new String(b, off, 4, "US-ASCII")
-
     def decode(b: Array[Byte]): DecodedAv = {
-      require(b.length >= 16, "too short for an MP4")
-      // video track fields
-      var vW = 0; var vH = 0; var vTs = 0; var vDelta = 0
-      var vSizes: Array[Int] = null; var vSpc = -1
-      var vOffs: Array[Long] = null
-      // audio track fields
-      var aRate = 0; var aChannels = 0
-      var aSizes: Array[Int] = null; var aSpc = -1
-      var aOffs: Array[Long] = null
-      var sawVide = false; var sawSoun = false
-
-      def parseTrak(from: Int, end: Int): Unit = {
-        var handler = ""; var format = ""
-        var w = 0; var h = 0; var ts = 0; var delta = 0
-        var channels = 0
-        var sizes: Array[Int] = null; var spc = -1
-        var offs: Array[Long] = null
-        def walkT(f0: Int, e0: Int): Unit = {
-          var off = f0
-          while (off + 8 <= e0) {
-            val size = be32(b, off)
-            require(size >= 8 && off.toLong + size <= e0,
-              s"corrupt box size $size at offset $off")
-            tag(b, off + 4) match {
-              case "mdia" | "minf" | "stbl" => walkT(off + 8, off + size)
-              case "mdhd" =>
-                require(size >= 32 && (b(off + 8) & 0xff) == 0,
-                  "only version-0 mdhd supported")
-                ts = be32(b, off + 20)
-              case "hdlr" =>
-                require(size >= 24, s"hdlr too short ($size)")
-                handler = tag(b, off + 16)
-              case "stsd" =>
-                require(size >= 24 && be32(b, off + 12) == 1,
-                  "only a single-entry stsd is supported")
-                val e = off + 16
-                format = tag(b, e + 4)
-                if (format == "raw ") {
-                  val (vw, vh) = parseRawVideoEntry(b, off, size)
-                  w = vw; h = vh
-                } else if (format == "sowt") {
-                  require(size >= 52, s"audio stsd too short ($size)")
-                  channels = be16(b, e + 24)
-                  require(be16(b, e + 26) == 16,
-                    "only 16-bit PCM supported")
-                } else throw new IllegalArgumentException(
-                  s"unsupported sample format '$format' — only " +
-                    "'raw ' video and 'sowt' PCM decode without a codec")
-              case "stts" =>
-                require(size >= 24 && be32(b, off + 12) == 1,
-                  "only the single-run stts layout is supported")
-                delta = be32(b, off + 20)
-              case "stsz" => sizes = parseStsz(b, off, size)
-              case "stsc" => spc = parseStsc(b, off, size)
-              case "stco" => offs = parseStco(b, off, size)
-              case _ => ()
-            }
-            off += size
-          }
-        }
-        walkT(from, end)
-        if (handler == "vide") {
-          require(!sawVide, "two video tracks: ambiguous")
-          sawVide = true
-          require(format == "raw ", "video trak missing 'raw ' stsd")
-          vW = w; vH = h; vTs = ts; vDelta = delta
-          vSizes = sizes; vSpc = spc; vOffs = offs
-        } else if (handler == "soun") {
-          require(!sawSoun, "two audio tracks: ambiguous")
-          sawSoun = true
-          require(format == "sowt", "audio trak missing 'sowt' stsd")
-          aRate = ts // media timescale IS the PCM sample rate
-          aChannels = channels
-          aSizes = sizes; aSpc = spc; aOffs = offs
-        }
-      }
-
-      def walk(from: Int, end: Int): Unit = {
-        var off = from
-        while (off + 8 <= end) {
-          val size = be32(b, off)
-          require(size >= 8 && off.toLong + size <= end,
-            s"corrupt box size $size at offset $off")
-          tag(b, off + 4) match {
-            case "moov" => walk(off + 8, off + size)
-            case "trak" => parseTrak(off + 8, off + size)
-            case _ => ()
-          }
-          off += size
-        }
-      }
-
-      walk(0, b.length)
-      require(sawVide && sawSoun, "need one video and one audio trak")
-      require(vTs > 0 && vDelta > 0, "missing video mdhd/stts timing")
-      require(aRate > 0, "missing audio mdhd timescale")
-      val fsize = vW * vH * 3
-      val frames = resolveSamples(vSizes, vSpc, vOffs, b.length).map {
-        sm =>
-          require(sm.size == fsize,
-            s"sample ${sm.k} is ${sm.size} bytes, raster needs $fsize")
-          val fr = new Array[Byte](fsize)
-          System.arraycopy(b, sm.off.toInt, fr, 0, fsize)
-          fr
-      }
-      val pcm = resolveSamples(aSizes, aSpc, aOffs, b.length).map { sm =>
+      val traks = mp4Walk(b)()
+      val video = rawVideo(b, mp4Track(traks, "vide"))
+      val a = mp4Track(traks, "soun")
+      val format = a.format
+      require(format == "sowt", s"unsupported sample format '$format' — " +
+        "only 'raw ' video and 'sowt' PCM decode without a codec")
+      val e = a.box("stsd", 52) + 16 // the AudioSampleEntry
+      require(be16(b, e + 26) == 16, "only 16-bit PCM supported")
+      val rate = a.timescale // media timescale IS the PCM sample rate
+      require(rate > 0, "missing audio mdhd timescale")
+      val pcm = a.samples.map { sm =>
         require(sm.size == 2, s"PCM sample ${sm.k} is ${sm.size} bytes")
         u16(b, sm.off.toInt).toShort // 'sowt': little-endian
       }
-      DecodedAv(
-        DecodedVideo(vW, vH, vTs / vDelta, frames),
-        DecodedAudio(aRate, aChannels, pcm))
-    }
-  }
-
-  /** The real decoder: walks the top-level RIFF chunk list, descends
-    * the hdrl LIST for the stream headers (avih dims, strh
-    * rate/scale timing, strf raster format), then the movi LIST
-    * collecting '00db'/'00dc' DIB frames — each unpacked through the
-    * same stride/BGR/bottom-up raster logic as BMP. Every chunk
-    * length is validated against the buffer before reading, so
-    * crafted bytes fail fast instead of looping or over-indexing. */
-  final class AviDecoder extends VideoDecoder {
-    private def tag(b: Array[Byte], off: Int): String =
-      new String(b, off, 4, "US-ASCII")
-
-    private def checkedLen(b: Array[Byte], off: Int, end: Int): Int = {
-      val len = s32(b, off + 4)
-      require(len >= 0 && off + 8 + len.toLong <= end,
-        s"corrupt RIFF chunk '${tag(b, off)}' len $len at offset $off")
-      len
-    }
-
-    def decode(b: Array[Byte]): DecodedVideo = {
-      require(b.length >= 12 && tag(b, 0) == "RIFF" &&
-        tag(b, 8) == "AVI ", "not a RIFF/AVI")
-      var width = 0; var height = 0; var topDown = false
-      var scale = 0; var rate = 0
-      val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-
-      def parseStrl(from: Int, end: Int): Unit = {
-        var off = from
-        var cur = "" // fccType of the strh seen last in THIS strl —
-        // a two-stream file's audio strl also carries a strf
-        // (WAVEFORMATEX), which must not be parsed as a bitmap header
-        while (off + 8 <= end) {
-          val len = checkedLen(b, off, end)
-          tag(b, off) match {
-            case "strh" =>
-              require(len >= 56, s"strh too short ($len)")
-              cur = tag(b, off + 8)
-              if (cur == "vids") {
-                require(tag(b, off + 12) == "DIB " ||
-                  s32(b, off + 12) == 0, "only uncompressed DIB video")
-                scale = s32(b, off + 28); rate = s32(b, off + 32)
-              }
-            case "strf" if cur == "vids" =>
-              require(len >= 40, s"strf too short ($len)")
-              width = s32(b, off + 12)
-              val hRaw = s32(b, off + 16)
-              topDown = hRaw < 0
-              height = math.abs(hRaw)
-              require(u16(b, off + 20) == 1 && u16(b, off + 22) == 24,
-                "only 24-bit single-plane supported")
-              require(s32(b, off + 24) == 0, "only BI_RGB supported")
-            case _ => ()
-          }
-          off += 8 + len + (len & 1)
-        }
-      }
-
-      def parseHdrl(from: Int, end: Int): Unit = {
-        var off = from
-        while (off + 8 <= end) {
-          val len = checkedLen(b, off, end)
-          if (tag(b, off) == "LIST" && len >= 4 &&
-            tag(b, off + 8) == "strl") parseStrl(off + 12, off + 8 + len)
-          off += 8 + len + (len & 1)
-        }
-      }
-
-      def parseMovi(from: Int, end: Int): Unit = {
-        var off = from
-        while (off + 8 <= end) {
-          val len = checkedLen(b, off, end)
-          val id = tag(b, off)
-          if (id == "00db" || id == "00dc") {
-            require(width > 0 && height > 0,
-              "movi frame before stream headers")
-            require(len >= bmpStride(width) * height,
-              s"frame chunk len $len short of the raster")
-            frames += readDib(b, off + 8, width, height, topDown)
-          }
-          off += 8 + len + (len & 1)
-        }
-      }
-
-      var off = 12
-      while (off + 8 <= b.length) {
-        val len = checkedLen(b, off, b.length)
-        if (tag(b, off) == "LIST" && len >= 4) {
-          tag(b, off + 8) match {
-            case "hdrl" => parseHdrl(off + 12, off + 8 + len)
-            case "movi" => parseMovi(off + 12, off + 8 + len)
-            case _ => ()
-          }
-        }
-        off += 8 + len + (len & 1)
-      }
-      require(width > 0 && height > 0, "missing strf header")
-      require(scale > 0 && rate > 0, "missing or zero strh timing")
-      require(frames.nonEmpty, "no movi frames")
-      DecodedVideo(width, height, rate / scale, frames.toArray)
+      DecodedAv(video, DecodedAudio(rate, be16(b, e + 24), pcm))
     }
   }
 

@@ -10,7 +10,8 @@ package graft.multimodal
   * actually hit — the reference's cv2 frame-decode loop
   * (raw_to_samples.py:173-196) reads JPEG-family codecs in practice,
   * and M-JPEG AVI ([[Jpeg.aviEncodeMjpeg]] / [[Jpeg.MjpegAviDecoder]])
-  * puts these scans inside the engine's existing RIFF chunk walk.
+  * puts these scans inside the engine's one AVI muxer and stream-header
+  * parse ([[Codecs.aviMux]], [[Codecs.aviParse]]).
   *
   * JPEG is LOSSY, so the oracle convention differs from PNG/GIF: the
   * catalog op's rasters are CONSTANT per 8x8 block with even sample
@@ -1697,163 +1698,60 @@ object Jpeg {
 
   // ----------------------------------------------------------------
   // M-JPEG AVI: JPEG scans as the per-frame payload of the engine's
-  // existing RIFF/AVI chunk walk — a genuinely COMPRESSED video
-  // codec inside a real container, the shape the reference's frame
-  // loop (raw_to_samples.py:173-196) actually decodes in practice.
+  // existing RIFF/AVI muxer and stream-header parse — a genuinely
+  // COMPRESSED video codec inside a real container, the shape the
+  // reference's frame loop (raw_to_samples.py:173-196) actually
+  // decodes in practice.
   // ----------------------------------------------------------------
 
   /** Mux pre-encoded JPEG frames into a RIFF/AVI with an 'MJPG'
-    * stream: same header layout as [[Codecs.aviEncode]] but
-    * biCompression = 'MJPG' and one '00dc' chunk per JPEG (odd
-    * lengths padded per RIFF). Frame byte sizes are entropy-coded
-    * and thus data-dependent — there is deliberately no closed-form
-    * size companion; containers are measured, not replayed. */
+    * stream through [[Codecs.aviMux]]: same header layout as
+    * [[Codecs.aviEncode]] but biCompression = 'MJPG' and one '00dc'
+    * chunk per JPEG (odd lengths padded per RIFF). Frame byte sizes
+    * are entropy-coded and thus data-dependent — there is deliberately
+    * no closed-form size companion; containers are measured, not
+    * replayed. */
   def aviEncodeMjpeg(width: Int, height: Int, fps: Int,
       jpegFrames: Seq[Array[Byte]]): Array[Byte] = {
     require(width > 0 && height > 0 && fps > 0 && jpegFrames.nonEmpty,
       "need positive dims/fps and >= 1 frame")
-    val nf = jpegFrames.length
-    val padded = jpegFrames.map(f => f.length + (f.length & 1))
-    val moviContent = 4 + padded.map(_ + 8).sum
-    val size = 224 + moviContent - 4 // RIFF(12) + hdrl(208) + LIST movi hdr(8) + content
-    val out = new Array[Byte](size)
-    import Codecs.{w16, w32, wTag}
-    val maxF = jpegFrames.map(_.length).max
-    wTag(out, 0, "RIFF"); w32(out, 4, size - 8); wTag(out, 8, "AVI ")
-    wTag(out, 12, "LIST"); w32(out, 16, 192); wTag(out, 20, "hdrl")
-    wTag(out, 24, "avih"); w32(out, 28, 56)
-    val avih = 32
-    w32(out, avih, 1000000 / fps)
-    w32(out, avih + 4, fps * maxF)
-    w32(out, avih + 16, nf)
-    w32(out, avih + 24, 1)
-    w32(out, avih + 28, maxF + 8)
-    w32(out, avih + 32, width); w32(out, avih + 36, height)
-    wTag(out, 88, "LIST"); w32(out, 92, 116); wTag(out, 96, "strl")
-    wTag(out, 100, "strh"); w32(out, 104, 56)
-    val strh = 108
-    wTag(out, strh, "vids"); wTag(out, strh + 4, "MJPG")
-    w32(out, strh + 20, 1)
-    w32(out, strh + 24, fps)
-    w32(out, strh + 32, nf)
-    w32(out, strh + 36, maxF + 8)
-    w16(out, strh + 52, width); w16(out, strh + 54, height)
-    wTag(out, 164, "strf"); w32(out, 168, 40)
-    val strf = 172
-    w32(out, strf, 40)
-    w32(out, strf + 4, width); w32(out, strf + 8, height)
-    w16(out, strf + 12, 1); w16(out, strf + 14, 24)
-    wTag(out, strf + 16, "MJPG") // biCompression fourcc
-    w32(out, strf + 20, Codecs.bmpStride(width) * height)
-    wTag(out, 212, "LIST"); w32(out, 216, moviContent)
-    wTag(out, 220, "movi")
-    var off = 224
-    jpegFrames.foreach { f =>
-      wTag(out, off, "00dc"); w32(out, off + 4, f.length)
-      System.arraycopy(f, 0, out, off + 8, f.length)
-      off += 8 + f.length + (f.length & 1)
-    }
-    out
+    val strf = Codecs.bitmapInfo(width, height,
+      Codecs.bmpStride(width) * height)
+    Codecs.wTag(strf, 16, "MJPG") // biCompression fourcc
+    val vids = Codecs.AviStreamOut("vids", "MJPG", fps, jpegFrames.length,
+      jpegFrames.map(_.length).max + 8, 0, strf)
+    Codecs.aviMux(width, height, fps, Seq(vids), jpegFrames.map(f =>
+      Codecs.AviChunkOut("00dc", f.length,
+        (out, o) => System.arraycopy(f, 0, out, o, f.length))))
   }
 
-  /** M-JPEG AVI decoder: the RIFF chunk walk of [[Codecs.AviDecoder]]
-    * with 'MJPG' stream headers, each '00dc' chunk a complete
-    * baseline JPEG decoded by [[JpegDecoder]]. Frame dimensions must
-    * match the stream header — a mux that lies about dims fails
-    * fast. */
+  /** M-JPEG AVI decoder: the stream-header parse of
+    * [[Codecs.aviParse]] with an 'MJPG' video stream, each '00dc'
+    * chunk a complete baseline JPEG decoded by [[JpegDecoder]]. Frame
+    * dimensions must match the stream header — a mux that lies about
+    * dims fails fast. */
   final class MjpegAviDecoder extends Codecs.VideoDecoder {
     private val jpeg = new JpegDecoder
 
-    private def tag(b: Array[Byte], off: Int): String =
-      new String(b, off, 4, "US-ASCII")
-
-    private def checkedLen(b: Array[Byte], off: Int, end: Int): Int = {
-      val len = Codecs.s32(b, off + 4)
-      require(len >= 0 && off + 8 + len.toLong <= end,
-        s"corrupt RIFF chunk '${tag(b, off)}' len $len at offset $off")
-      len
-    }
-
     def decode(b: Array[Byte]): Codecs.DecodedVideo = {
-      require(b.length >= 12 && tag(b, 0) == "RIFF" &&
-        tag(b, 8) == "AVI ", "not a RIFF/AVI")
-      var width = 0; var height = 0
-      var scale = 0; var rate = 0
-      val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-
-      def parseStrl(from: Int, end: Int): Unit = {
-        var off = from
-        var cur = ""
-        while (off + 8 <= end) {
-          val len = checkedLen(b, off, end)
-          tag(b, off) match {
-            case "strh" =>
-              require(len >= 56, s"strh too short ($len)")
-              cur = tag(b, off + 8)
-              if (cur == "vids") {
-                require(tag(b, off + 12) == "MJPG",
-                  "not an MJPG video stream")
-                scale = Codecs.s32(b, off + 28)
-                rate = Codecs.s32(b, off + 32)
-              }
-            case "strf" if cur == "vids" =>
-              require(len >= 40, s"strf too short ($len)")
-              width = Codecs.s32(b, off + 12)
-              height = Codecs.s32(b, off + 16)
-              require(width > 0 && height > 0,
-                s"bad MJPG dims ${width}x$height")
-              require(tag(b, off + 24) == "MJPG",
-                "strf biCompression != MJPG")
-            case _ => ()
-          }
-          off += 8 + len + (len & 1)
-        }
+      val avi = Codecs.aviParse(b)
+      val v = avi.stream("vids")
+      require(v.handler == "MJPG", "not an MJPG video stream")
+      val f = v.format(40)
+      val width = Codecs.s32(b, f + 4)
+      val height = Codecs.s32(b, f + 8)
+      require(width > 0 && height > 0, s"bad MJPG dims ${width}x$height")
+      require(Codecs.fourcc(b, f + 16) == "MJPG",
+        "strf biCompression != MJPG")
+      val frames = avi.movi.filter(_.id == "00dc").map { c =>
+        val im = jpeg.decode(
+          java.util.Arrays.copyOfRange(b, c.off, c.off + c.len))
+        require(im.width == width && im.height == height,
+          s"frame ${im.width}x${im.height} != stream ${width}x$height")
+        im.rgb
       }
-
-      def parseHdrl(from: Int, end: Int): Unit = {
-        var off = from
-        while (off + 8 <= end) {
-          val len = checkedLen(b, off, end)
-          if (tag(b, off) == "LIST" && len >= 4 &&
-            tag(b, off + 8) == "strl") parseStrl(off + 12, off + 8 + len)
-          off += 8 + len + (len & 1)
-        }
-      }
-
-      def parseMovi(from: Int, end: Int): Unit = {
-        var off = from
-        while (off + 8 <= end) {
-          val len = checkedLen(b, off, end)
-          if (tag(b, off) == "00dc") {
-            require(width > 0 && height > 0,
-              "movi frame before stream headers")
-            val fb = new Array[Byte](len)
-            System.arraycopy(b, off + 8, fb, 0, len)
-            val im = jpeg.decode(fb)
-            require(im.width == width && im.height == height,
-              s"frame ${im.width}x${im.height} != stream ${width}x$height")
-            frames += im.rgb
-          }
-          off += 8 + len + (len & 1)
-        }
-      }
-
-      var off = 12
-      while (off + 8 <= b.length) {
-        val len = checkedLen(b, off, b.length)
-        if (tag(b, off) == "LIST" && len >= 4) {
-          tag(b, off + 8) match {
-            case "hdrl" => parseHdrl(off + 12, off + 8 + len)
-            case "movi" => parseMovi(off + 12, off + 8 + len)
-            case _ => ()
-          }
-        }
-        off += 8 + len + (len & 1)
-      }
-      require(width > 0 && height > 0, "missing strf header")
-      require(scale > 0 && rate > 0, "missing or zero strh timing")
       require(frames.nonEmpty, "no movi frames")
-      Codecs.DecodedVideo(width, height, rate / scale, frames.toArray)
+      Codecs.DecodedVideo(width, height, v.perSecond, frames.toArray)
     }
   }
 }

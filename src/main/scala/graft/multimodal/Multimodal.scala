@@ -1005,7 +1005,7 @@ object Multimodal {
   }
 
   /** L5z2: M-JPEG AVI — JPEG scans as the per-frame payload of the
-    * engine's RIFF chunk walk ([[Jpeg.aviEncodeMjpeg]] /
+    * engine's one AVI muxer and RIFF chunk walk ([[Jpeg.aviEncodeMjpeg]] /
     * [[Jpeg.MjpegAviDecoder]]): a genuinely COMPRESSED video codec
     * inside a real container, which is what the reference's
     * cv2.VideoCapture loop (raw_to_samples.py:173-196) actually

@@ -487,6 +487,12 @@ class MultimodalSpec extends SparkSpecBase {
     // container (routes nothing from 01wb, ignores the audio strf)
     val v = new Codecs.AviDecoder().decode(bytes)
     assert(v.frames.length == 3 && v.frames(2).toSeq == frames(2).toSeq)
+    // likewise the MP4 video decoder takes the 'vide' trak of a
+    // two-track MP4 and leaves the 'soun' trak alone
+    val mv = new Codecs.Mp4VideoDecoder().decode(
+      Codecs.mp4EncodeAv(600, 60, w, h, frames, spf, samples))
+    assert(mv.width == w && mv.height == h && mv.fps == 10 &&
+      mv.frames.length == 3 && mv.frames(2).toSeq == frames(2).toSeq)
     // a single-stream file has no audio -> the AV decoder refuses
     val videoOnly = Codecs.aviEncode(w, h, 10, frames)
     intercept[IllegalArgumentException](
@@ -661,16 +667,109 @@ class MultimodalSpec extends SparkSpecBase {
     val gif = Codecs.gifEncode(7, 5,
       Array.tabulate(35)(i => (i * 23 % 256).toByte))
     run("gif", new Codecs.GifLzwDecoder().decode, gif)
-    // truncations at every length must also fail fast or succeed
+    val mjpeg = multimodal.Jpeg.aviEncodeMjpeg(16, 8, 10, (0 until 2).map(
+      f => multimodal.Jpeg.encodeGray(16, 8,
+        Array.tabulate(16 * 8)(i => ((i / 8) * 40 + f * 90).toByte))))
+    val md = new multimodal.Jpeg.MjpegAviDecoder()
+    run("mjpeg", md.decode, mjpeg)
+    val probe = new Codecs.Mp4Probe()
+    val mp4 = Codecs.mp4Encode(600, 6, 50, 5, 4,
+      Array.tabulate(23)(i => (i * 5).toByte))
+    run("mp4probe", probe.probe, mp4)
+    val indexer = new Codecs.Mp4Indexer()
+    val mp4idx = Codecs.mp4EncodeIndexed(600, 50, 5, 4, Array(6, 0, 9),
+      Array.tabulate(15)(i => (i * 3).toByte))
+    run("mp4indexer", indexer.index, mp4idx)
+    // every truncation and every single-byte corruption (each offset
+    // set to each adversarial value) of every container reader's input
+    // must also fail fast or succeed. The seeded table above cannot
+    // stand in for the byte sweep: its LCG ties the value to the
+    // offset's low bits, so it never writes 0x80/0xff at an offset
+    // 3 mod 4 — the high byte of every aligned RIFF length.
+    def failsFast(what: String)(run: => Any): Unit =
+      try { run; () } catch {
+        case _: IllegalArgumentException => ()
+        case e: Throwable => fail(s"$what threw ${e.getClass.getName}")
+      }
     for ((name, d, base) <- Seq[(String, Array[Byte] => Any,
-        Array[Byte])](("avi", vd.decode, avi),
-        ("mp4video", new Codecs.Mp4VideoDecoder().decode, mp4v)))
+        Array[Byte])](("wav", wd.decode, wav), ("avi", vd.decode, avi),
+        ("avi_av", ad.decode, avAvi), ("mjpeg", md.decode, mjpeg),
+        ("mp4probe", probe.probe, mp4), ("mp4indexer", indexer.index, mp4idx),
+        ("mp4video", new Codecs.Mp4VideoDecoder().decode, mp4v),
+        ("mp4av", new Codecs.Mp4AvDecoder().decode, mp4av))) {
       for (n <- 0 until base.length)
-        try { d(base.take(n)); () } catch {
-          case _: IllegalArgumentException => ()
-          case e: Throwable =>
-            fail(s"$name truncation $n threw ${e.getClass.getName}")
-        }
+        failsFast(s"$name truncation $n")(d(base.take(n)))
+      for (off <- base.indices; v <- Seq(0x00, 0xff, 0x7f, 0x80))
+        failsFast(s"$name byte $off := $v")(d(base.updated(off, v.toByte)))
+    }
+  }
+
+  test("container writers are byte-stable: SHA-256 of every AVI, WAV " +
+    "and BMP writer over widths 5-8 (every stride pad), odd and even " +
+    "G.711 spans (the RIFF pad byte) and odd-length M-JPEG frames; " +
+    "lengths equal the closed-form sizes") {
+    import multimodal.{Codecs, Jpeg}
+    def sha(parts: Seq[Array[Byte]]): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      parts.foreach(md.update)
+      md.digest().map(x => f"${x & 0xff}%02x").mkString
+    }
+    val h = 3; val nf = 2
+    def frames(w: Int): Seq[Array[Byte]] = (0 until nf).map(f =>
+      Array.tabulate(w * h * 3)(i => ((i * 29 + f * 71 + w) % 256).toByte))
+    val avi = (5 to 8).map { w =>
+      val b = Codecs.aviEncode(w, h, 10, frames(w))
+      assert(b.length == Codecs.aviSize(w, h, nf), s"aviSize w=$w")
+      b
+    }
+    val av = for (w <- 5 to 8; spf <- Seq(7, 8)) yield {
+      val s = Array.tabulate(nf * spf)(i => ((i * 1237) % 65536 - 32768).toShort)
+      val b = Codecs.aviEncodeAv(w, h, 10, frames(w), spf, s)
+      assert(b.length == Codecs.aviAvSize(w, h, nf, spf), s"aviAvSize w=$w")
+      b
+    }
+    def g711(mu: Boolean) = for (w <- 5 to 8; spf <- Seq(7, 8)) yield {
+      val c = Array.tabulate(nf * spf)(i => ((i * 53 + 7) % 256).toByte)
+      val b = Codecs.aviEncodeAvG711(w, h, 10, frames(w), spf, c, mu)
+      assert(b.length == Codecs.aviAvG711Size(w, h, nf, spf),
+        s"aviAvG711Size w=$w spf=$spf mu=$mu")
+      b
+    }
+    // the muxer never reads its payloads, so plain byte strings of odd
+    // and even lengths stand in for entropy-coded JPEG frames
+    val mjpeg = Seq(Seq(13, 10, 1), Seq(6), Seq(7, 7)).zipWithIndex.map {
+      case (lens, k) => Jpeg.aviEncodeMjpeg(16 + k, 8 + k, 12 + k,
+        lens.map(n => Array.tabulate(n)(i => (i * 19 + n + k).toByte)))
+    }
+    val wav = Seq(50, 51).map(n => Codecs.wavEncode(8000 + n,
+      Array.tabulate(n)(i => ((i * 321) % 4096 - 2048).toShort)))
+    val wavG711 = for (n <- Seq(50, 51); mu <- Seq(true, false))
+      yield Codecs.wavEncodeG711(8000 + n,
+        Array.tabulate(n)(i => ((i * 37) % 256).toByte), mu)
+    val bmp = (5 to 8).map(w => Codecs.bmpEncode(w, h, frames(w).head))
+    val got = Map("aviEncode" -> sha(avi), "aviEncodeAv" -> sha(av),
+      "aviEncodeAvG711 mu-law" -> sha(g711(true)),
+      "aviEncodeAvG711 A-law" -> sha(g711(false)),
+      "aviEncodeMjpeg" -> sha(mjpeg), "wavEncode" -> sha(wav),
+      "wavEncodeG711" -> sha(wavG711), "bmpEncode" -> sha(bmp))
+    val pinned = Map(
+      "aviEncode" ->
+        "a2a84d9d58271b71b815dc72eced4fa5e25f9a7573565bc944f17fb3e703ff9b",
+      "aviEncodeAv" ->
+        "b4bec3604a1505b23d9aaabdcce31c6fb8ad699f449fc0b174bebc17ab28c80b",
+      "aviEncodeAvG711 mu-law" ->
+        "eebed1cff05f26a992c43dde86af943c412b4cef5403e8013c60bdd370394ea5",
+      "aviEncodeAvG711 A-law" ->
+        "5a88181692a40d72ede9235534b1fa98eb60f8d7024850133736bfa16eeaf4cc",
+      "aviEncodeMjpeg" ->
+        "03cf35a8282b275103c27bf9f59d94f7e9d313cd3add074a9401ee4a6d436d7e",
+      "wavEncode" ->
+        "831202f65343b3f7688f673219a4a94e34969534594b7d5e97016f5482d31385",
+      "wavEncodeG711" ->
+        "dac5554d9d2028147a5344c70a2accc4f5539faea6f1fc8006e1d617c0a376ae",
+      "bmpEncode" ->
+        "5042102abe70b47351ed522e459b75df16036d10fe267732513a0fcbec75ba62")
+    assert(got == pinned)
   }
 
   test("mm_argmax_track: per-frame argmax detections from decoded " +
@@ -836,6 +935,11 @@ class MultimodalSpec extends SparkSpecBase {
       probe.probe(canon.slice(0, canon.length - payload.length - 12)))
     // ftyp alone (no moov): missing-metadata contract
     intercept[IllegalArgumentException](probe.probe(canon.slice(0, 32)))
+    // an empty 8-byte mvhd as the file's last box: its size is checked
+    // before its version byte (which would lie past the buffer) is read
+    val bareMvhd = canon.slice(0, 32) ++ Array[Byte](0, 0, 0, 16,
+      'm', 'o', 'o', 'v', 0, 0, 0, 8, 'm', 'v', 'h', 'd')
+    intercept[IllegalArgumentException](probe.probe(bareMvhd))
   }
 
   test("Mp4Indexer resolves stsz/stsc/stco to real byte ranges in both " +
@@ -890,6 +994,20 @@ class MultimodalSpec extends SparkSpecBase {
     val mismatch = canon.clone()
     be32set(mismatch, boxOff("stsc") + 20, 7)
     intercept[IllegalArgumentException](idx.index(mismatch))
+    // fixed-size stsz with a negative size (0xFFFFFFFF) and a huge
+    // count: fails the size check, never reaches the allocation
+    val negFixed = canon.clone()
+    be32set(negFixed, boxOff("stsz") + 12, -1)
+    be32set(negFixed, boxOff("stsz") + 16, Int.MaxValue)
+    intercept[IllegalArgumentException](idx.index(negFixed))
+    // the same stsz in a decodable file (fixed form already)
+    val video = Codecs.mp4EncodeVideo(600, 50, 4, 3,
+      Seq(Array.tabulate(4 * 3 * 3)(i => (i * 7).toByte)))
+    val vStsz = video.indexOfSlice("stsz".getBytes("US-ASCII").toSeq) - 4
+    be32set(video, vStsz + 12, -1)
+    be32set(video, vStsz + 16, Int.MaxValue)
+    intercept[IllegalArgumentException](
+      new Codecs.Mp4VideoDecoder().decode(video))
   }
 
   test("mm_mp4_extract reads sample bytes at index-resolved offsets: " +
