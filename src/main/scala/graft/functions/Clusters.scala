@@ -2,7 +2,7 @@ package graft.functions
 
 import graft.{Memo, Tables}
 import graft.Memo.memo
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -55,10 +55,6 @@ object Clusters {
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // r13: the loop's shuffles + per-round checkpoints run at a width
-    // derived from the MEASURED edge count, not the session width — a
-    // V-sized iterate across cpus-many partitions made per-round cost
-    // grow with the core count (the r12 anti-scaling verdict; §2.2)
     val m = edges.count()
     // seed labels lbl = node; round 0 materializes them, so the seed's
     // distinct also runs at the loop width
@@ -164,10 +160,7 @@ object Clusters {
       // .distinct() exchange is folded away (r13, guide §2.4)
       rewired.unionByName(self).filter(col("a") =!= col("b"))
     }
-    // r13: size the round shuffles + checkpoints from the measured
-    // edge count (cheap: `edges0` is checkpointed), not the session
-    // width — see [[connectedComponentsOn]] and Iterates
-    val m = edges0.count()
+    val m = edges0.count() // cheap: `edges0` is checkpointed
     val star = Iterates.fixpoint(pairs.sparkSession, "alternating star",
         maxIter, edges0)(_ => m) { (edges, _) =>
       // ONE exchange closes the round: the (a, b) groupBy that used to
@@ -312,21 +305,17 @@ object Clusters {
     // checkpoint overhead dominated, these are V-sized and re-derived
     // multiplicatively by the union fan.
     val pc = p.localCheckpoint(true)
-    var x = nodes.withColumn("x", lit(1000000000L))
-    // r13: the V-sized hop checkpoints ride an edge-count-derived
-    // shuffle width (see Iterates); the hop's map side — the partial
-    // aggregation over the edge join — keeps the edge relation's own
-    // parallelism, only the V-row reduce/checkpoint side narrows
-    val hops = Iterates.withWidthFor(e.sparkSession, e.count()) {
-      (1 to iters).map { _ =>
-        x = e.join(x, col("src") === col("node"))
-          .crossJoin(broadcast(pc))
-          .groupBy(col("dst"), col("p"))
-          .agg(expr("sum(x) div p").as("x"))
-          .select(col("dst").as("node"), col("x"))
-          .localCheckpoint(true) // read by hop k+1 AND the union
-        x
-      }
+    val m = e.count()
+    val (_, hops) = Iterates.fixpoint(e.sparkSession, "katz hops", iters,
+        (nodes.withColumn("x", lit(1000000000L)), Vector.empty[DataFrame]))(
+        _ => m) { case ((x, done), round) =>
+      val hop = e.join(x, col("src") === col("node"))
+        .crossJoin(broadcast(pc))
+        .groupBy(col("dst"), col("p"))
+        .agg(expr("sum(x) div p").as("x"))
+        .select(col("dst").as("node"), col("x"))
+        .localCheckpoint(true) // read by hop k+1 AND the union
+      ((hop, done :+ hop), round.index == iters - 1)
     }
     hops.reduce(_ union _)
       .groupBy("node").agg(sum(col("x")).as("katz_scaled"))
@@ -679,20 +668,16 @@ object Clusters {
     val Array(cs, cd) = edges.columns.take(2)
     val e = edges.select(col(cs).cast("long").as("src"),
       col(cd).cast("long").as("dst"))
-    // r13: V-bounded distance iterate — rounds run at an edge-count-
-    // derived shuffle width (see Iterates)
-    val dist = Iterates.withWidthFor(e.sparkSession, e.count()) {
-      var d = e.agg(min(col("src")).as("node"))
-        .withColumn("dist", lit(0L))
-        .localCheckpoint(true)
-      for (_ <- 1 to maxHops) {
-        val nxt = d.join(e, col("node") === col("src"))
-          .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
-        d = d.union(nxt)
-          .groupBy("node").agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-      }
-      d
+    val m = e.count()
+    val source = e.agg(min(col("src")).as("node")).withColumn("dist", lit(0L))
+    val dist = Iterates.fixpoint(e.sparkSession, "bfs hops", maxHops,
+        source)(_ => m) { (state, round) =>
+      // round 0 materializes the source row, so it runs at the loop width
+      val d = if (round.index == 0) state.localCheckpoint(true) else state
+      val nxt = d.join(e, col("node") === col("src"))
+        .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
+      (d.union(nxt).groupBy("node").agg(min(col("dist")).as("dist"))
+        .localCheckpoint(true), round.index == maxHops - 1)
     }
     dist.orderBy("node")
   }
@@ -719,23 +704,20 @@ object Clusters {
     val Array(cs, cd) = edges.columns.take(2)
     val e = edges.select(col(cs).cast("long").as("src"),
       col(cd).cast("long").as("dst")).localCheckpoint(true)
-    // r13: |seeds|·|reached|-bounded iterate — rounds run at an
-    // edge-count-derived shuffle width (see Iterates)
-    val dist = Iterates.withWidthFor(e.sparkSession, e.count()) {
-      var d = seeds
-        .select(col(seeds.columns.head).cast("long").as("seed")).distinct()
-        .select(col("seed"), col("seed").as("node"))
-        .withColumn("dist", lit(0L))
-        .localCheckpoint(true)
-      for (_ <- 1 to maxHops) {
-        val nxt = d.join(e, col("node") === col("src"))
-          .select(col("seed"), col("dst").as("node"),
-            (col("dist") + 1).as("dist"))
-        d = d.union(nxt)
-          .groupBy("seed", "node").agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-      }
-      d
+    val m = e.count()
+    val level0 = seeds
+      .select(col(seeds.columns.head).cast("long").as("seed")).distinct()
+      .select(col("seed"), col("seed").as("node"))
+      .withColumn("dist", lit(0L))
+    val dist = Iterates.fixpoint(e.sparkSession, "harmonic hops", maxHops,
+        level0)(_ => m) { (state, round) =>
+      // round 0 materializes the seed rows, so they run at the loop width
+      val d = if (round.index == 0) state.localCheckpoint(true) else state
+      val nxt = d.join(e, col("node") === col("src"))
+        .select(col("seed"), col("dst").as("node"),
+          (col("dist") + 1).as("dist"))
+      (d.union(nxt).groupBy("seed", "node").agg(min(col("dist")).as("dist"))
+        .localCheckpoint(true), round.index == maxHops - 1)
     }
     dist.filter(col("node") =!= col("seed"))
       .groupBy("seed").agg(
@@ -746,7 +728,7 @@ object Clusters {
   }
 
   private val seedBfsCache =
-    Memo.cache[String, (IndexedSeq[DataFrame], IndexedSeq[DataFrame], Int)]
+    Memo.cache[String, (IndexedSeq[DataFrame], IndexedSeq[DataFrame], Long)]
 
   /** The forward multi-source BFS over the trade graph from the
     * shared catalog seed set (customers < 10, 4-hop horizon) —
@@ -757,7 +739,7 @@ object Clusters {
     * only its own consumption — Brandes' backward pass for
     * betweenness, the distance census for harmonic. */
   private def tradeSeedBfs(s: SparkSession, dir: String)
-      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame], Int) =
+      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame], Long) =
     memo(seedBfsCache, s, dir) {
       val edges = bipartiteEdges(s, dir)
       seedBfsForward(edges,
@@ -811,8 +793,8 @@ object Clusters {
     * No window, no single-partition hop. */
   def graphBetweennessOn(edges: DataFrame, seeds: DataFrame,
       maxHops: Int = 4): DataFrame = {
-    val (frontiers, dagAt, width) = seedBfsForward(edges, seeds, maxHops)
-    betweennessBackward(frontiers, dagAt, maxHops, width)
+    val (frontiers, dagAt, rows) = seedBfsForward(edges, seeds, maxHops)
+    betweennessBackward(frontiers, dagAt, maxHops, rows)
   }
 
   /** Forward multi-source BFS carrying the shortest-path count σ —
@@ -820,11 +802,12 @@ object Clusters {
     * Brandes' backward pass over it) and the catalog
     * [[graphHarmonic]] (whose census needs only the first-reached
     * distances, a projection of the same frontiers). Returns one
-    * checkpointed frontier per level (level 0 = the seeds) plus the
-    * per-level shortest-path-DAG slices. */
+    * checkpointed frontier per level (level 0 = the seeds), the
+    * per-level shortest-path-DAG slices, and the |seeds|·|E| row count
+    * both passes size their rounds from. */
   private def seedBfsForward(edges: DataFrame, seeds: DataFrame,
       maxHops: Int)
-      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame], Int) = {
+      : (IndexedSeq[DataFrame], IndexedSeq[DataFrame], Long) = {
     require(maxHops >= 2, s"need maxHops >= 2, got $maxHops")
     val Array(cs, cd) = edges.columns.take(2)
     val e = edges.select(col(cs).cast("long").as("src"),
@@ -839,32 +822,27 @@ object Clusters {
       .select(col("seed"), col("seed").as("node"))
       .withColumn("dist", lit(0L)).withColumn("sigma", lit(1L))
       .localCheckpoint(true)
-    // r13: forward levels (and, via the returned width, the backward
-    // δ rounds) run at a measured-size-derived shuffle width (see
-    // Iterates; the r12 anti-scaling verdict). The expansions and the
-    // lazily-recomputed DAG slices are (seed, edge)-keyed, so the
-    // bound is |seeds|·|E| — the edge count alone under-sized the
-    // backward joins into single-task sort-merges (measured +0.4 s
-    // on the catalog graph before the seed multiplier)
-    val width = Iterates.widthFor(e.sparkSession,
-      e.count() * math.max(1L, f0.count()))
-    Iterates.withWidth(e.sparkSession, width) {
-    val frontiers = scala.collection.mutable.ArrayBuffer(f0)
+    // the expansions and the lazily-recomputed DAG slices are (seed,
+    // edge)-keyed, so both passes size their rounds from |seeds|·|E|
+    // — the edge count alone under-sized the backward joins into
+    // single-task sort-merges (measured +0.4 s on the catalog graph)
+    val rows = e.count() * math.max(1L, f0.count())
     // per-level slice of the shortest-path DAG, built INSIDE the
     // forward loop off the same checkpointed expansion that feeds the
     // σ rollup — a separate reached⋈E⋈reached pass afterwards would
     // re-derive every expansion a second time (measured ~1/3 of the
     // op's cost before this fusion)
-    val dagAt = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var reached = f0
-    for (l <- 1 to maxHops) {
+    val (frontiers, dagAt, _) = Iterates.fixpoint(e.sparkSession,
+        "seed bfs forward", maxHops, (Vector(f0), Vector.empty[DataFrame], f0))(
+        _ => rows) { case ((levels, slices, reached), round) =>
+      val l = round.index + 1
       // NOT checkpointed: the σ rollup reads it now; the DAG slice
       // recomputes it lazily IF the backward pass reads that level
       // (dagAt(0) never is — edges into level 1 only feed the seeds'
       // own δ, which Brandes drops). Re-deriving a frontier⋈E join
       // on demand measured cheaper than eagerly materializing every
       // Σdeg-row expansion.
-      val expand = frontiers(l - 1)
+      val expand = levels(l - 1)
         .select(col("seed"), col("node").as("u"), col("sigma").as("su"))
         .join(e, col("u") === col("src"))
         .select(col("seed"), col("u"), col("su"), col("dst"))
@@ -876,19 +854,18 @@ object Clusters {
         .select(col("seed"), col("dst").as("node"),
           lit(l.toLong).as("dist"), col("sigma"))
         .localCheckpoint(true)
-      frontiers += fresh
-      reached = reached.union(fresh)
       // DAG edges ending at level l: expansion rows whose target was
       // FIRST reached at l (equi-join on (seed, dst) — a successor's
       // dist is always its predecessor's + 1, no filter needed)
-      dagAt += expand
+      val slice = expand
         .join(fresh.select(col("seed"), col("node").as("dst"),
           col("sigma").as("sv")), Seq("seed", "dst"))
         .select(col("seed"), col("u"), col("su"),
           col("dst").as("v"), col("sv"))
+      ((levels :+ fresh, slices :+ slice, reached.union(fresh)),
+        l == maxHops)
     }
-    (frontiers.toIndexedSeq, dagAt.toIndexedSeq, width)
-    }
+    (frontiers, dagAt, rows)
   }
 
   /** Brandes' dependency accumulation over a [[seedBfsForward]]
@@ -896,16 +873,17 @@ object Clusters {
     * before the order-free sum. */
   private def betweennessBackward(frontiers: IndexedSeq[DataFrame],
       dagAt: IndexedSeq[DataFrame], maxHops: Int,
-      width: Int): DataFrame = {
+      rows: Long): DataFrame = {
     val f0 = frontiers(0)
-    var delta = frontiers(maxHops)
+    val horizon = frontiers(maxHops)
       .select(col("seed"), col("node"))
       .withColumn("delta_micro", lit(0L))
-    var acc = delta
-    // r13: δ rounds at the forward pass's edge-derived width — the
-    // lazily-recomputed DAG slices also execute (and plan) here
-    Iterates.withWidth(f0.sparkSession, width) {
-    for (l <- (maxHops - 1) to 1 by -1) {
+    // levels maxHops-1 down to 1; the lazily-recomputed DAG slices
+    // also execute (and plan) inside these rounds
+    val (_, acc) = Iterates.fixpoint(f0.sparkSession,
+        "betweenness backward", maxHops - 1, (horizon, horizon))(
+        _ => rows) { case ((delta, total), round) =>
+      val l = maxHops - 1 - round.index
       val contrib = dagAt(l) // edges u@l -> v@l+1 (0-indexed buffer)
         .join(delta.select(col("seed"), col("node").as("v"),
           col("delta_micro").as("dv")), Seq("seed", "v"), "left")
@@ -914,15 +892,14 @@ object Clusters {
           expr("su * (1000000 + dv) div sv").as("term"))
         .groupBy(col("seed"), col("u"))
         .agg(sum(col("term")).as("d"))
-      delta = frontiers(l)
+      val next = frontiers(l)
         .select(col("seed"), col("node"))
         .join(contrib.select(col("seed"), col("u").as("node"),
           col("d")), Seq("seed", "node"), "left")
         .na.fill(0L, Seq("d"))
         .select(col("seed"), col("node"), col("d").as("delta_micro"))
         .localCheckpoint(true)
-      acc = acc.union(delta)
-    }
+      ((next, total.union(next)), l == 1)
     }
     acc
       .join(f0.select(col("node")).distinct(), Seq("node"), "left_anti")
@@ -938,8 +915,8 @@ object Clusters {
     * Brandes' backward pass over the [[tradeSeedBfs]] forward
     * expansion shared with graph_harmonic. */
   def graphBetweenness(s: SparkSession, dir: String): DataFrame = {
-    val (frontiers, dagAt, width) = tradeSeedBfs(s, dir)
-    betweennessBackward(frontiers, dagAt, 4, width)
+    val (frontiers, dagAt, rows) = tradeSeedBfs(s, dir)
+    betweennessBackward(frontiers, dagAt, 4, rows)
   }
 
   /** Per-node triangle counts over an undirected edge list — the
@@ -1474,23 +1451,20 @@ object Clusters {
         struct(col("b").as("node"), col("a").as("nb")))).as("p"))
       .select(col("p.node").as("node"), col("p.nb").as("nb"))
       .localCheckpoint(true)
-    // r13: rounds run at an adjacency-count-derived shuffle width
-    // (see Iterates) — V-sized label checkpoints at the session width
-    // made per-round cost scale with the core count
-    val labels = Iterates.withWidthFor(adj.sparkSession, adj.count()) {
-      var lbl = adj.select(col("node")).distinct()
-        .withColumn("lbl", col("node"))
-        .localCheckpoint(true)
-      for (_ <- 1 to rounds) {
-        lbl = adj
-          .join(lbl.select(col("node").as("nb"), col("lbl")), "nb")
-          .groupBy("node", "lbl").agg(count(lit(1)).as("cnt"))
-          .groupBy("node")
-          .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("m"))
-          .select(col("node"), (-col("m.neg")).as("lbl"))
-          .localCheckpoint(true)
-      }
-      lbl
+    val m = adj.count()
+    val own = adj.select(col("node")).distinct()
+      .withColumn("lbl", col("node"))
+    val labels = Iterates.fixpoint(adj.sparkSession, "label propagation",
+        rounds, own)(_ => m) { (state, round) =>
+      // round 0 materializes the own-label seed at the loop width
+      val lbl = if (round.index == 0) state.localCheckpoint(true) else state
+      (adj
+        .join(lbl.select(col("node").as("nb"), col("lbl")), "nb")
+        .groupBy("node", "lbl").agg(count(lit(1)).as("cnt"))
+        .groupBy("node")
+        .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("m"))
+        .select(col("node"), (-col("m.neg")).as("lbl"))
+        .localCheckpoint(true), round.index == rounds - 1)
     }
     labels.select(col("node"), col("lbl").as("community"))
       .orderBy("node")
@@ -1581,8 +1555,6 @@ object Clusters {
       .filter(col("a") =!= col("b"))
       .distinct()
       .localCheckpoint(true)
-    // r13: the peel's shrinking edge set rides an edge-count-derived
-    // shuffle width (see Iterates)
     val m = e0.count()
     val core = Iterates.fixpoint(e0.sparkSession, "k-core peel", maxIter,
         e0)(_ => m) { (e, _) =>
@@ -1679,9 +1651,6 @@ object Clusters {
       .filter(col("a") =!= col("b"))
       .distinct()
       .localCheckpoint(true)
-    // r13: peel rounds at an edge-count-derived shuffle width (see
-    // Iterates); the wedge join's map side keeps the checkpointed
-    // edge relation's own block parallelism
     val m = e0.count()
     val (truss, _) = Iterates.fixpoint(e0.sparkSession, "k-truss peel",
         maxIter, (e0, m))(_ => m) { case ((e, n), _) =>
@@ -2023,6 +1992,15 @@ object Clusters {
     * replay tractable while exercising the full join shape). */
   val WalkSteps = 4
 
+  /** The walks' derandomized LCG draw at step `k`,
+    * r(w, k) = (w·1103515245 + k·12345 + 6789) mod 2³¹ as the
+    * NON-NEGATIVE residue (pmod): a negative walk id draws in
+    * [0, 2³¹) like any other, so each spelling's `r mod degree` lands
+    * on a neighbor. Shared by the three walk spellings; the oracle
+    * replays spell the same residue as ((x % m) + m) % m. */
+  private def walkDraw(k: Int): Column =
+    expr(s"pmod(walk_id * 1103515245 + $k * 12345 + 6789, 2147483648)")
+
   /** L18n: deterministic DeepWalk-style walk corpus (Perozzi et al.,
     * KDD 2014) — the graph-embedding training-data generator: one
     * walk per node, each step moving to a pseudo-randomly chosen
@@ -2052,25 +2030,24 @@ object Clusters {
       .localCheckpoint(true) // read once per unrolled step
     val degs = nbrs.groupBy("src").agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
-    var frontier = degs.select(col("src").as("walk_id"))
+    val start = degs.select(col("src").as("walk_id"))
       .withColumn("node", col("walk_id"))
-    var out = frontier.withColumn("step", lit(0L))
-    // r13: walk-count-sized frontier checkpoints at an edge-count-
-    // derived shuffle width (see Iterates)
-    Iterates.withWidthFor(nbrs.sparkSession, nbrs.count()) {
-    for (k <- 1 to steps) {
+    val m = nbrs.count()
+    val (_, out) = Iterates.fixpoint(nbrs.sparkSession, "random walk", steps,
+        (start, start.withColumn("step", lit(0L))))(
+        _ => m) { case ((frontier, walked), round) =>
+      val k = round.index + 1
       val draw = frontier
         .join(degs, frontier("node") === degs("src"))
         .select(col("walk_id"), col("node"),
-          expr(s"((walk_id * 1103515245 + $k * 12345 + 6789) " +
-            "% 2147483648) % deg").as("rnk"))
-      frontier = draw.join(nbrs,
+          (walkDraw(k) % col("deg")).as("rnk"))
+      val moved = draw.join(nbrs,
           draw("node") === nbrs("src") && draw("rnk") === nbrs("rn"))
         .select(col("walk_id"), col("dst").as("node"))
         .localCheckpoint(true) // each union branch would otherwise
         // re-derive every earlier step's draw chain
-      out = out.union(frontier.withColumn("step", lit(k.toLong)))
-    }
+      ((moved, walked.union(moved.withColumn("step", lit(k.toLong)))),
+        k == steps)
     }
     out.select("walk_id", "step", "node")
   }
@@ -2130,21 +2107,20 @@ object Clusters {
     val e = edges.select(col(cs).cast("long").as("src"),
       col(cd).cast("long").as("dst")).distinct()
       .localCheckpoint(true) // read by every step's move and classify
-    var frontier = e.select(col("src").as("walk_id")).distinct()
+    val start = e.select(col("src").as("walk_id")).distinct()
       .select(col("walk_id"), col("walk_id").as("prev"),
         col("walk_id").as("cur"))
-    var out = frontier.select(col("walk_id"), lit(0L).as("step"),
-      col("cur").as("node"))
-    // r13: step checkpoints at an edge-count-derived shuffle width
-    // (see Iterates)
-    val stepWidth = Iterates.widthFor(e.sparkSession, e.count())
+    val m = e.count()
     // ONE window spec (partition+order shared) so cumw and tot land
     // in the SAME WindowExec pass — tot's frame is unbounded-both,
     // order-insensitive, and a separate orderless spec would cost a
     // second window operator over the candidate relation per step
     val wC = Window.partitionBy("walk_id").orderBy("dst")
-    Iterates.withWidth(e.sparkSession, stepWidth) {
-    for (k <- 1 to steps) {
+    val (_, out) = Iterates.fixpoint(e.sparkSession, "node2vec walk", steps,
+        (start, start.select(col("walk_id"), lit(0L).as("step"),
+          col("cur").as("node"))))(
+        _ => m) { case ((frontier, walked), round) =>
+      val k = round.index + 1
       val cand = frontier
         .join(e, frontier("cur") === e("src"))
         .select(col("walk_id"), col("prev"), col("cur"), col("dst"))
@@ -2161,16 +2137,14 @@ object Clusters {
           .over(wC.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .withColumn("tot", sum(col("w")).over(wC.rowsBetween(
           Window.unboundedPreceding, Window.unboundedFollowing)))
-        .withColumn("r", expr(
-          s"((walk_id * 1103515245 + $k * 12345 + 6789) % 2147483648) % tot"))
+        .withColumn("r", walkDraw(k) % col("tot"))
         .filter(col("cumw") > col("r") && col("cumw") - col("w") <= col("r"))
-      frontier = drawn.select(col("walk_id"), col("cur").as("prev"),
+      val moved = drawn.select(col("walk_id"), col("cur").as("prev"),
         col("dst").as("cur"))
         .localCheckpoint(true) // each union branch would otherwise
         // re-derive every earlier step's candidate/window chain
-      out = out.union(frontier.select(col("walk_id"),
-        lit(k.toLong).as("step"), col("cur").as("node")))
-    }
+      ((moved, walked.union(moved.select(col("walk_id"),
+        lit(k.toLong).as("step"), col("cur").as("node")))), k == steps)
     }
     out.orderBy("walk_id", "step")
   }
@@ -2211,9 +2185,9 @@ object Clusters {
     * higher-order lambda (boxed struct state per element) and its
     * O(deg_cur x deg_prev) linear probes — the compiled kernel
     * removes both. Identical draw arithmetic (same sorted-dst order,
-    * same 1/2/4 weights, same LCG residue including the negative-r ->
-    * arr[0] edge), equivalence against the untouched join spelling
-    * stays spec-checked in WalkBudgetSpec. Scale caveat: one extreme
+    * same 1/2/4 weights, same non-negative LCG residue, negative walk
+    * ids included), equivalence against the join spelling stays
+    * spec-checked in WalkBudgetSpec. Scale caveat: one extreme
     * hub's draw is a single row's loop; hub-heavy graphs prefer the
     * join spelling ([[graphNode2vecWalkOn]]). */
   def graphNode2vecWalkAdjOn(edges: DataFrame, steps: Int = 3): DataFrame = {
@@ -2228,34 +2202,33 @@ object Clusters {
     val nbrs = e.groupBy("src")
       .agg(sort_array(collect_set(col("dst"))).as("nbrs"))
       .localCheckpoint(true) // read by every step's expand
-    var frontier = nbrs.select(col("src").as("walk_id"),
+    val start = nbrs.select(col("src").as("walk_id"),
       col("src").as("prev"), col("src").as("cur"),
       col("nbrs").as("nbrs_prev"))
-    var out = frontier.select(col("walk_id"), lit(0L).as("step"),
-      col("cur").as("node"))
-    // r13: the frontier's rows are walk-count-sized but its adjacency
-    // payload cells total |E| — width from the CELL count (one cheap
-    // map-side aggregate over the checkpointed adjacency, no second
-    // distinct over the edge input) keeps the per-step
-    // shuffle+checkpoint right-sized at every scale (see Iterates)
+    // the frontier's rows are walk-count-sized but its adjacency
+    // payload cells total |E|: the rounds are sized from the CELL
+    // count (one cheap map-side aggregate over the checkpointed
+    // adjacency, no second distinct over the edge input)
     val cells = nbrs.agg(coalesce(sum(size(col("nbrs"))), lit(0))
       .cast("long")).head().getLong(0)
-    Iterates.withWidthFor(e.sparkSession, cells) {
-    for (k <- 1 to steps) {
-      frontier = frontier.as("f")
+    val (_, out) = Iterates.fixpoint(e.sparkSession,
+        "node2vec adjacency walk", steps,
+        (start, start.select(col("walk_id"), lit(0L).as("step"),
+          col("cur").as("node"))))(
+        _ => cells) { case ((frontier, walked), round) =>
+      val k = round.index + 1
+      val moved = frontier.as("f")
         .join(nbrs.as("n"), col("f.cur") === col("n.src"))
         .select(col("f.walk_id"),
           col("f.cur").as("prev"),
           graft.plans.GraftFunctions.n2v_draw(
             col("n.nbrs"), col("f.nbrs_prev"), col("f.prev"),
-            expr(s"((walk_id * 1103515245 + $k * 12345 + 6789)" +
-              " % 2147483648)")).as("cur"),
+            walkDraw(k)).as("cur"),
           col("n.nbrs").as("nbrs_prev"))
         .localCheckpoint(true) // each union branch would otherwise
         // re-derive every earlier step's draw chain
-      out = out.union(frontier.select(col("walk_id"),
-        lit(k.toLong).as("step"), col("cur").as("node")))
-    }
+      ((moved, walked.union(moved.select(col("walk_id"),
+        lit(k.toLong).as("step"), col("cur").as("node")))), k == steps)
     }
     out.orderBy("walk_id", "step")
   }
@@ -2375,10 +2348,10 @@ object Clusters {
   def clusterDbscanOnPairs(pairs: DataFrame, epsMicro: Long = 20000L,
       minPts: Long = 4L): DataFrame = {
     val eps2 = epsMicro * epsMicro
-    // r13: the op's eager stages (nbrs/deg/core-label checkpoints and
-    // the CC loop) run at a width derived from the measured pair
-    // count — density-bounded relations far under the session width's
-    // natural load (see Iterates)
+    // not a loop, but its eager stages (nbrs/deg/core-label
+    // checkpoints around the CC loop) hold the width the loop would:
+    // the measured pair count, density-bounded far under the session
+    // width's natural load (see Iterates)
     Iterates.withWidthFor(pairs.sparkSession, pairs.count()) {
     val nbrs = pairs.filter(col("d2") <= eps2)
       .select(col("qid"), col("nid"))
@@ -2882,6 +2855,13 @@ object Clusters {
        |  WHERE a.grp = b.grp AND levenshtein(a.name, b.name) <= 1),
        |$ccCoreSql""".stripMargin
 
+  /** DuckDB spelling of [[walkDraw]]: `%` keeps the dividend's sign,
+    * so the non-negative residue is ((x % m) + m) % m. */
+  private def walkDrawSql(walkId: String, k: Int): String = {
+    val x = s"($walkId * 1103515245 + $k * 12345 + 6789)"
+    s"(($x % 2147483648) + 2147483648) % 2147483648"
+  }
+
   /** Unrolled walk steps — each wk CTE replays the engine's LCG draw
     * and (node, rank) neighbor selection for step k exactly. */
   private val walkIterSql = (1 to WalkSteps).map { k =>
@@ -2889,8 +2869,7 @@ object Clusters {
     s"""w$k AS MATERIALIZED (SELECT w.walk_id, nb.dst AS node
        |  FROM $prev w JOIN deg d ON w.node = d.src
        |  JOIN nb ON nb.src = w.node
-       |    AND nb.rn = ((w.walk_id * 1103515245 + $k * 12345 + 6789)
-       |                 % 2147483648) % d.deg)""".stripMargin
+       |    AND nb.rn = ${walkDrawSql("w.walk_id", k)} % d.deg)""".stripMargin
   }.mkString(",\n")
 
   private val walkUnionSql = (0 to WalkSteps).map { k =>
@@ -2914,10 +2893,8 @@ object Clusters {
        |  FROM c$k),
        |f$k AS MATERIALIZED (SELECT walk_id, cur AS prev, dst AS cur
        |  FROM d$k
-       |  WHERE cumw > ((walk_id * 1103515245 + $k * 12345 + 6789)
-       |                % 2147483648) % tot
-       |    AND cumw - w <= ((walk_id * 1103515245 + $k * 12345 + 6789)
-       |                     % 2147483648) % tot)""".stripMargin
+       |  WHERE cumw > ${walkDrawSql("walk_id", k)} % tot
+       |    AND cumw - w <= ${walkDrawSql("walk_id", k)} % tot)""".stripMargin
   }.mkString(",\n")
 
   private val n2vUnionSql = (0 to 3).map { k =>

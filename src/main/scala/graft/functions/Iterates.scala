@@ -8,9 +8,9 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Driver-side skeleton of the iterative operators: the convergence
-  * loop ([[fixpoint]]) and the size-aware shuffle width its rounds run
-  * under ([[withWidth]]; guide §2.2/§2.4: "fewer, larger reduce
+/** Driver-side skeleton of the iterative operators: the round loop
+  * ([[fixpoint]]) and the size-aware shuffle width its rounds run
+  * under ([[withWidthFor]]; guide §2.2/§2.4: "fewer, larger reduce
   * partitions"; the round-12 verdict's anti-scaling diagnosis).
   *
   * The iterative graph/closure loops re-materialize a per-round state
@@ -65,14 +65,15 @@ private[graft] object Iterates {
   }
   private val holds = new ConcurrentHashMap[SparkSession, Hold]()
 
-  /** Runs `body` with the session shuffle width capped at `n`, then
-    * puts both keys it writes back as they were when the session's
-    * first holder entered: a value the session had set is restored, a
-    * key it had left unset is unset again. Loop bodies both PLAN and
-    * EXECUTE inside (eager per-round localCheckpoint), so the narrowed
-    * width covers every round's exchanges; relations a caller builds
-    * on the RETURNED (already-checkpointed) state plan outside and keep
-    * the session width.
+  /** Runs `body` with the session shuffle width capped at
+    * [[widthFor]]`(s, rows)`, then puts both keys it writes back as
+    * they were when the session's first holder entered: a value the
+    * session had set is restored, a key it had left unset is unset
+    * again. Loop bodies both PLAN and EXECUTE inside (eager per-round
+    * localCheckpoint), so the narrowed width covers every round's
+    * exchanges; relations a caller builds on the RETURNED
+    * (already-checkpointed) state plan outside and keep the session
+    * width.
     *
     * Holders of one session share its conf (the linkage ladder runs
     * four CC loops in parallel, and nested loops hold inside each
@@ -83,7 +84,8 @@ private[graft] object Iterates {
     * widen an earlier holder's shuffles as well as narrow them, and an
     * unrelated query on the session sees it too. ROADMAP item 3 tracks
     * moving the width into the plan. */
-  def withWidth[T](s: SparkSession, n: Int)(body: => T): T = {
+  def withWidthFor[T](s: SparkSession, rows: Long)(body: => T): T = {
+    val n = widthFor(s, rows)
     val hold = holds.computeIfAbsent(s, _ => new Hold)
     hold.synchronized {
       if (hold.depth == 0) {
@@ -92,7 +94,7 @@ private[graft] object Iterates {
         hold.width = s.conf.get(ShuffleKey, "200").toInt
       }
       hold.depth += 1
-      val cap = math.min(math.max(1, n), math.max(1, hold.width))
+      val cap = math.min(n, math.max(1, hold.width))
       s.conf.set(ShuffleKey, cap.toString)
       // When the measured size collapses the loop to ONE partition,
       // AQE has nothing left to re-optimize (no coalescing, no skew,
@@ -115,10 +117,6 @@ private[graft] object Iterates {
     }
   }
 
-  /** [[withWidth]] with the width derived from a measured row count. */
-  def withWidthFor[T](s: SparkSession, rows: Long)(body: => T): T =
-    withWidth(s, widthFor(s, rows))(body)
-
   /** One round of a [[fixpoint]] loop: its 0-based index, and the
     * relations it persists, which the loop releases when the round
     * ends (the round's next state must not read them lazily). */
@@ -130,16 +128,25 @@ private[graft] object Iterates {
     }
   }
 
-  /** The convergence loop of the iterative operators. Runs
-    * `step(state, round)`, which returns the next state and whether
-    * the round observed the fixpoint, from `init` until a round
-    * converges, and returns that round's state. At most `maxIter`
-    * rounds run: when round `maxIter` reports no convergence, throws
-    * an `IllegalStateException` naming `label` and `maxIter` rather
-    * than return a partial fixpoint (the oracle's fixed-round unrolls
-    * of the peels rely on exactly this budget). Each round runs under [[withWidthFor]] sized from
-    * `rows(state)`, a row count the loop has already measured, and
-    * releases what it persisted through [[Round.persist]]. */
+  /** The round loop of every iterative operator that holds a shuffle
+    * width. Runs `step(state, round)`, which returns the next state
+    * and whether the round observed the fixpoint, from `init` until a
+    * round converges, and returns that round's state. At most
+    * `maxIter` rounds run: when round `maxIter` reports no
+    * convergence, throws an `IllegalStateException` naming `label` and
+    * `maxIter` rather than return a partial fixpoint (the oracle's
+    * fixed-round unrolls of the peels rely on exactly this budget). A
+    * fixed-round loop of `n` rounds passes `maxIter = n` and reports
+    * `round.index == n - 1`, so it never throws.
+    *
+    * Each round runs under [[withWidthFor]] sized from `rows(state)`,
+    * a row count the loop has already measured — its edge, adjacency
+    * or pair relation, whichever bounds the round's shuffles — and
+    * releases what it persisted through [[Round.persist]]. This is
+    * the one place a loop's width is held (why: see the object doc),
+    * so a round runs its jobs inside `step` by checkpointing its
+    * state; work it leaves lazy, and what a caller builds on the
+    * returned state, runs wherever it is executed. */
   def fixpoint[S](s: SparkSession, label: String, maxIter: Int, init: S)(
       rows: S => Long)(step: (S, Round) => (S, Boolean)): S = {
     @tailrec def loop(state: S, index: Int): S = {

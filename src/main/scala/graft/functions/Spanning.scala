@@ -54,9 +54,8 @@ object Spanning {
       .localCheckpoint(true)
     val forest0 = Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")
     try {
-      // r13: Borůvka rounds at an edge-count-derived shuffle width
-      // (see Iterates); the count also forces the persist once, where
-      // round 1's cross join used to
+      // the count also forces the persist once, where round 1's cross
+      // join used to
       val m = edges.count()
       Iterates.fixpoint(spark, "Boruvka", maxRounds, (comp0, forest0))(_ => m) {
         case ((comp, forest), round) =>
@@ -144,10 +143,7 @@ object Spanning {
     val r0 = edges.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v"))
       .distinct().localCheckpoint(true)
-    // r13: each doubling round runs at a shuffle width derived from
-    // the closure's CURRENT row count (see Iterates) — the bounded
-    // collapsed relations this spelling is documented for sat on
-    // cpus-wide exchanges per round (the r12 anti-scaling verdict)
+    // rounds are sized from the closure's CURRENT row count
     Iterates.fixpoint(r0.sparkSession, "transitive closure", maxRounds,
         (r0, r0.count()))(_._2) {
       case ((r, n), _) =>
@@ -282,10 +278,10 @@ object Spanning {
         .distinct().select(col("u"), col("u").as("v"), lit(0L).as("d")))
       .groupBy("u", "v").agg(min(col("d")).as("d"))
       .localCheckpoint(true)
-    // r13: rounds at a current-row-count-derived shuffle width (see
-    // Iterates and [[transitiveClosureOn]]); the count rides the
-    // convergence signature (row count, Σd), no extra action. The
-    // seed's Σd of -1 never matches, so round 0 never converges.
+    // rounds are sized from the closure's current row count, which
+    // rides the convergence signature (row count, Σd): no extra
+    // action. The seed's Σd of -1 never matches, so round 0 never
+    // converges.
     Iterates.fixpoint(d0.sparkSession, "min-plus closure", maxRounds,
         (d0, (d0.count(), -1L)))(_._2._1) {
       case ((d, sig), _) =>

@@ -2662,13 +2662,15 @@ object Codecs {
         case t =>
           throw new IllegalArgumentException(s"unsupported tag type $t")
       }
-      // a vector of count integral values (inline when they fit)
+      // a vector of count integral values (inline when they fit); the
+      // values must lie inside the buffer before any is allocated
       def vector(entryOff: Int, tpe: Int, count: Int): Array[Long] = {
-        val size = (if (tpe == 3) 2 else 4) * count
-        val base =
-          if (size <= 4) entryOff + 8 else u32(entryOff + 8).toInt
-        Array.tabulate(count)(i =>
-          scalar(base + i * (if (tpe == 3) 2 else 4), tpe))
+        val step = if (tpe == 3) 2 else 4
+        val size = step.toLong * count
+        val base = if (size <= 4) entryOff + 8L else u32(entryOff + 8)
+        require(base + size <= b.length,
+          s"$count tag values past buffer at $base")
+        Array.tabulate(count)(i => scalar(base.toInt + i * step, tpe))
       }
       var width = 0L; var height = 0L
       var compression = 1L; var photometric = -1L

@@ -309,11 +309,11 @@ object TriangleProducts {
   * sorted adjacency, the PREVIOUS node's sorted adjacency, the
   * previous node and the walk's LCG residue rbase, classify each
   * candidate (return=1 / common=2 / forward=4), draw index
-  * sel = #(prefix sums <= rbase % tot) and return adjacency[sel] —
-  * the exact arithmetic of the explode + groupBy + sort_array +
-  * interpreted-`aggregate` spelling it replaces (same sorted-dst
-  * order, same weights, same Java % remainder semantics including
-  * negative rbase -> sel 0), without materializing one row per
+  * sel = #(prefix sums <= floorMod(rbase, tot)) and return
+  * adjacency[sel] — the exact arithmetic of the explode + groupBy +
+  * sort_array + interpreted-`aggregate` spelling it replaces (same
+  * sorted-dst order, same weights, same non-negative residue as the
+  * join spelling's pmod draw), without materializing one row per
   * candidate edge or shuffling them back into per-walk groups.
   * Membership probes use binary search on the sorted previous
   * adjacency (O(deg log deg) per row, compiled) — the r12 rejection
@@ -356,7 +356,9 @@ object Node2vecDraw {
       tot += wi
       i += 1
     }
-    val r = rbase % tot // Java remainder == Spark's % on BIGINT
+    // the non-negative residue, as the join spelling's pmod draw: a
+    // negative rbase lands on the cumulative line like any other
+    val r = Math.floorMod(rbase, tot)
     var cum = 0L
     var sel = 0
     i = 0
@@ -365,10 +367,7 @@ object Node2vecDraw {
       if (cum <= r) sel += 1
       i += 1
     }
-    // r in [0, tot) for non-negative rbase so sel < n; a negative
-    // rbase gives r < 0 -> sel = 0 (the adjacency-array spelling's
-    // arr[0] behavior, pinned by the equivalence spec)
-    cur.getLong(sel)
+    cur.getLong(sel) // r in [0, tot), so sel < n
   }
 }
 

@@ -320,7 +320,9 @@ class ExpressionsSpec extends SparkSpecBase {
     assert(drawWith(3L) == 20L) // r=3: prefixes 2,3 <= 3 -> sel 2
     assert(drawWith(6L) == 20L) // r=6: sel 2 (last)
     assert(drawWith(7L) == 1L)  // rbase 7 % tot 7 = 0 -> sel 0
-    assert(drawWith(-3L) == 1L) // negative residue -> sel 0 (arr[0])
+    // a negative rbase lands on the line like any other: floorMod(-3,
+    // 7) = 4, prefixes 2,3 <= 4 -> sel 2
+    assert(drawWith(-3L) == 20L)
   }
 
   test("LshBuckets == the posexplode/weight-join/rollup spelling on the corpus") {

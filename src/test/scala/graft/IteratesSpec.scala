@@ -12,8 +12,10 @@ import graft.functions.{Clusters, Iterates, Spanning}
 
 /** The loop skeleton (functions.Iterates): the shuffle-width hold
   * leaves the session conf as it found it, the width clamp, the
-  * convergence budget every fixpoint loop shares, and the rule that
-  * library code takes no settings from the environment. */
+  * convergence budget every fixpoint loop shares, outputs that do not
+  * depend on the width or AQE, that no loop holds a width outside the
+  * skeleton, and the rule that library code takes no settings from
+  * the environment. */
 class IteratesSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -24,26 +26,27 @@ class IteratesSpec extends SparkSpecBase {
     "and a throwing body") {
     val entry = spark.conf.getAll
     assert(!entry.contains(AqeKey), "the test session leaves AQE unset")
-    Iterates.withWidth(spark, 1) {
+    Iterates.withWidthFor(spark, 1L) {
       assert(spark.conf.get(ShuffleKey) == "1")
       assert(spark.conf.get(AqeKey) == "false")
     }
     assert(spark.conf.getAll == entry)
-    Iterates.withWidth(spark, 3) {
-      Iterates.withWidth(spark, 1) {
+    Iterates.withWidthFor(spark, 3000000L) {
+      assert(spark.conf.get(ShuffleKey) == "3")
+      Iterates.withWidthFor(spark, 1L) {
         assert(spark.conf.get(ShuffleKey) == "1")
       }
     }
     assert(spark.conf.getAll == entry)
     intercept[ArithmeticException] {
-      Iterates.withWidth(spark, 1)(throw new ArithmeticException("round"))
+      Iterates.withWidthFor(spark, 1L)(throw new ArithmeticException("round"))
     }
     assert(spark.conf.getAll == entry)
     // a key the session HAD set comes back with its value
     spark.conf.set(AqeKey, "true")
     try {
       val set = spark.conf.getAll
-      Iterates.withWidth(spark, 1)(())
+      Iterates.withWidthFor(spark, 1L)(())
       assert(spark.conf.getAll == set)
     } finally spark.conf.unset(AqeKey)
     assert(spark.conf.getAll == entry)
@@ -129,6 +132,80 @@ class IteratesSpec extends SparkSpecBase {
         s"${b.loop} did not converge within ${b.rounds - 1} rounds")
       assert(spark.conf.getAll == entry, b.loop)
     }
+  }
+
+  /** The fixed-round loops on one small graph with a negative id
+    * (betweenness runs two: the forward levels and the backward δ
+    * rounds), and the two peels again on it, where, unlike their
+    * budget inputs, rows survive. */
+  private lazy val onSmallGraph: Seq[(String, () => DataFrame)] = {
+    val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L),
+      (5L, 6L), (6L, 4L), (-7L, 1L), (8L, 9L))
+      .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
+    val seeds = Seq(1L, 5L, 8L).toDF("seed")
+    Seq(
+      "katz hops" -> (() => Clusters.graphKatzOn(und, 3)),
+      "bfs hops" -> (() => Clusters.graphBfsOn(und, 4)),
+      "harmonic hops" -> (() => Clusters.graphHarmonicOn(und, seeds, 4)),
+      "betweenness" -> (() => Clusters.graphBetweennessOn(und, seeds, 4)),
+      "label propagation" -> (() => Clusters.labelPropagationOn(und, 2)),
+      "random walk" -> (() => Clusters.graphRandomWalkOn(und)),
+      "node2vec walk" -> (() => Clusters.graphNode2vecWalkOn(und)),
+      "node2vec adjacency walk" ->
+        (() => Clusters.graphNode2vecWalkAdjOn(und)),
+      "k-core peel, triangles left" -> (() => Clusters.kcoreOn(und, 2)),
+      "k-truss peel, triangles left" -> (() => Clusters.trussOn(und, 3)))
+  }
+
+  test("every width-holding loop returns the same rows at width 1 without " +
+    "AQE and at width 7 with it, and leaves the conf as it found it") {
+    val loops = budgets.map(b => b.loop -> (() => b.run(b.rounds))) ++
+      onSmallGraph
+    def under(width: Int, aqe: Boolean): Seq[Seq[String]] = {
+      spark.conf.set(ShuffleKey, width.toString)
+      spark.conf.set(AqeKey, aqe.toString)
+      val set = spark.conf.getAll
+      loops.map { case (loop, run) =>
+        val rows = run().collect().map(_.toString).sorted.toSeq
+        assert(spark.conf.getAll == set, loop)
+        rows
+      }
+    }
+    val entry = spark.conf.getAll
+    val (narrow, wide) =
+      try (under(1, aqe = false), under(7, aqe = true))
+      finally Seq(ShuffleKey, AqeKey).foreach { k =>
+        entry.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+      }
+    assert(spark.conf.getAll == entry)
+    loops.map(_._1).lazyZip(narrow).lazyZip(wide).foreach {
+      (loop, a, b) => assert(a == b, loop)
+    }
+    // only the budget inputs of the two peels leave no rows
+    assert(narrow.count(_.isEmpty) == 2)
+  }
+
+  test("no loop holds a shuffle width outside Iterates: withWidth( and " +
+    "widthFor( appear only there, withWidthFor once elsewhere (dbscan)") {
+    val root = new File("src/main/scala/graft")
+    assert(root.isDirectory, root.getAbsolutePath)
+    val skeleton = new File(root, "functions/Iterates.scala").getCanonicalFile
+    val hits = Files.walk(root.toPath).iterator().asScala
+      .map(_.toFile).filter(_.getName.endsWith(".scala"))
+      .filterNot(_.getCanonicalFile == skeleton)
+      .flatMap { f =>
+        Files.readAllLines(f.toPath).asScala.zipWithIndex.map {
+          case (line, i) => (s"${f.getName}:${i + 1}", line)
+        }
+      }.toList
+    def where(name: String) = hits.collect {
+      case (at, line) if line.contains(name) => at
+    }
+    assert(where("withWidth(").isEmpty, where("withWidth(").mkString("\n"))
+    assert(where("widthFor(").isEmpty, where("widthFor(").mkString("\n"))
+    val held = where("withWidthFor(")
+    assert(held.size == 1 && held.head.startsWith("Clusters.scala:"),
+      held.mkString("\n"))
   }
 
   test("library code reads no environment variables; only the mains do") {

@@ -620,17 +620,19 @@ class MultimodalSpec extends SparkSpecBase {
     val vd = new Codecs.AviDecoder()
     val ad = new Codecs.AviAvDecoder()
     // deterministic LCG over (container, trial): flip 1-4 bytes to
-    // adversarial values at pseudorandom offsets
+    // adversarial values at pseudorandom offsets. Every draw reads the
+    // state's high bits (s >>> 33, never negative): a power-of-two
+    // LCG's low two bits repeat every four draws, which would tie each
+    // value to its offset's low bits.
     def corrupt(base: Array[Byte], seed: Long): Array[Byte] = {
       val b = base.clone()
       var s = seed * 6364136223846793005L + 1442695040888963407L
-      val flips = 1 + (math.abs(s) % 4).toInt
+      val flips = 1 + ((s >>> 33) % 4).toInt
       for (_ <- 0 until flips) {
         s = s * 6364136223846793005L + 1442695040888963407L
-        val off = (math.abs(s) % b.length).toInt
+        val off = ((s >>> 33) % b.length).toInt
         s = s * 6364136223846793005L + 1442695040888963407L
-        b(off) = Seq(0x00, 0xff, 0x7f, 0x80)(
-          (math.abs(s) % 4).toInt).toByte
+        b(off) = Seq(0x00, 0xff, 0x7f, 0x80)(((s >>> 33) % 4).toInt).toByte
       }
       b
     }
@@ -682,10 +684,8 @@ class MultimodalSpec extends SparkSpecBase {
     run("mp4indexer", indexer.index, mp4idx)
     // every truncation and every single-byte corruption (each offset
     // set to each adversarial value) of every container reader's input
-    // must also fail fast or succeed. The seeded table above cannot
-    // stand in for the byte sweep: its LCG ties the value to the
-    // offset's low bits, so it never writes 0x80/0xff at an offset
-    // 3 mod 4 — the high byte of every aligned RIFF length.
+    // must also fail fast or succeed: the seeded table samples ~750
+    // flips per reader, the sweep covers every offset and value.
     def failsFast(what: String)(run: => Any): Unit =
       try { run; () } catch {
         case _: IllegalArgumentException => ()
@@ -1497,7 +1497,7 @@ class MultimodalSpec extends SparkSpecBase {
     for (t <- 0 until 300) {
       val b = tiff.clone()
       s0 = s0 * 6364136223846793005L + 1442695040888963407L
-      b((math.abs(s0) % b.length).toInt) =
+      b(((s0 >>> 33) % b.length).toInt) =
         Seq(0x00, 0xff, 0x7f, 0x80)((t % 4)).toByte
       try { dec.decode(b); () }
       catch {
@@ -1697,7 +1697,7 @@ class MultimodalSpec extends SparkSpecBase {
     for (t <- 0 until 300) {
       val b = small.clone()
       s0 = s0 * 6364136223846793005L + 1442695040888963407L
-      b((math.abs(s0) % b.length).toInt) =
+      b(((s0 >>> 33) % b.length).toInt) =
         Seq(0x00, 0xff, 0x7f, 0x80)((t % 4)).toByte
       try { dec.decode(b); () }
       catch {

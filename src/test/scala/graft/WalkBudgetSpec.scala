@@ -71,6 +71,24 @@ class WalkBudgetSpec extends SparkSpecBase {
     }
   }
 
+  test("walk: negative node ids walk full length along edges") {
+    // r(w, k) is the non-negative residue for a negative walk id too,
+    // so `r mod degree` always ranks a neighbor
+    val e = edges((-1L, -2L), (-2L, -3L), (-3L, -1L), (-3L, 4L), (4L, 5L))
+    val byWalk = Clusters.graphRandomWalkOn(e).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
+    val edgeSet = e.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(byWalk.keySet === Set(-1L, -2L, -3L, 4L, 5L))
+    byWalk.foreach { case (start, path) =>
+      assert(path.length === Clusters.WalkSteps + 1, s"walk $start")
+      assert(path.head === start)
+      path.sliding(2).foreach { case Seq(a, b) =>
+        assert(edgeSet.contains((a, b)), s"($a,$b) not an edge")
+      }
+    }
+  }
+
   test("walk: deterministic across runs") {
     val e = edges((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
     val a = Clusters.graphRandomWalkOn(e)
@@ -147,6 +165,17 @@ class WalkBudgetSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(a == b && a.nonEmpty)
+    // the same graph on ids -6..-1: negative walk ids draw the same
+    // non-negative residue in both spellings, so every walk keeps all
+    // of its steps
+    val neg = e.select(($"src" - 7L).as("src"), ($"dst" - 7L).as("dst"))
+    val na = Clusters.graphNode2vecWalkOn(neg, steps = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSet
+    val nb = Clusters.graphNode2vecWalkAdjOn(neg, steps = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSet
+    assert(na == nb && na.size == 6 * 5)
     // and on the real catalog corpus: the JOIN spelling vs the
     // ADJACENCY spelling (the catalog key delegates to the latter,
     // so comparing through graphNode2vecWalk would be a tautology)
