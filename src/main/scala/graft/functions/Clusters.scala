@@ -1996,10 +1996,13 @@ object Clusters {
     * r(w, k) = (w·1103515245 + k·12345 + 6789) mod 2³¹ as the
     * NON-NEGATIVE residue (pmod): a negative walk id draws in
     * [0, 2³¹) like any other, so each spelling's `r mod degree` lands
-    * on a neighbor. Shared by the three walk spellings; the oracle
-    * replays spell the same residue as ((x % m) + m) % m. */
-  private def walkDraw(k: Int): Column =
-    expr(s"pmod(walk_id * 1103515245 + $k * 12345 + 6789, 2147483648)")
+    * on a neighbor. The id is reduced mod 2³¹ before the multiply (the
+    * same residue), so the product stays inside the long range for
+    * every id, not only for ids below ~8.4·10⁹. Shared by the three
+    * walk spellings; the oracle replays spell the same residue as
+    * ((x % m) + m) % m. */
+  private def walkDraw(k: Int): Column = expr("pmod(pmod(walk_id, " +
+    s"2147483648) * 1103515245 + $k * 12345 + 6789, 2147483648)")
 
   /** L18n: deterministic DeepWalk-style walk corpus (Perozzi et al.,
     * KDD 2014) — the graph-embedding training-data generator: one
@@ -2856,10 +2859,11 @@ object Clusters {
        |$ccCoreSql""".stripMargin
 
   /** DuckDB spelling of [[walkDraw]]: `%` keeps the dividend's sign,
-    * so the non-negative residue is ((x % m) + m) % m. */
+    * so the non-negative residue is ((x % m) + m) % m, taken of the id
+    * first and of the draw after, as the engine does. */
   private def walkDrawSql(walkId: String, k: Int): String = {
-    val x = s"($walkId * 1103515245 + $k * 12345 + 6789)"
-    s"(($x % 2147483648) + 2147483648) % 2147483648"
+    def pmod(x: String) = s"((($x) % 2147483648) + 2147483648) % 2147483648"
+    pmod(s"${pmod(walkId)} * 1103515245 + $k * 12345 + 6789")
   }
 
   /** Unrolled walk steps — each wk CTE replays the engine's LCG draw

@@ -47,32 +47,250 @@ object Multimodal {
     def transcode(bytes: Array[Byte]): String
   }
 
-  val DetectorConfKey = "spark.graft.media.detector"
-  val TranscoderConfKey = "spark.graft.media.transcoder"
-  val ImageDecoderConfKey = "spark.graft.media.imageDecoder"
-  val AudioDecoderConfKey = "spark.graft.media.audioDecoder"
-  val VideoDecoderConfKey = "spark.graft.media.videoDecoder"
-  val AvDecoderConfKey = "spark.graft.media.avDecoder"
-  val Mp4ProbeConfKey = "spark.graft.media.mp4Probe"
-  val Mp4IndexerConfKey = "spark.graft.media.mp4Indexer"
-  val PngDecoderConfKey = "spark.graft.media.pngDecoder"
-  val GifDecoderConfKey = "spark.graft.media.gifDecoder"
-  val Mp4VideoDecoderConfKey = "spark.graft.media.mp4VideoDecoder"
-  val Mp4AvDecoderConfKey = "spark.graft.media.mp4AvDecoder"
-  val JpegDecoderConfKey = "spark.graft.media.jpegDecoder"
-  val MjpegDecoderConfKey = "spark.graft.media.mjpegDecoder"
+  /** One pluggable boundary: its `spark.graft.media.*` conf key, the
+    * class it defaults to, and (as `T`) the trait that class
+    * implements. `resolve` runs where the plan is built and ships only
+    * the class NAME — the task closure must not capture a session,
+    * and a loaded model need not be serializable — and each partition
+    * instantiates its own (M1). */
+  private[multimodal] final class Binding[T](val key: String,
+      default: Class[_ <: T]) {
+    def resolve(s: SparkSession): Bound[T] =
+      Bound[T](s.conf.get(key, default.getName))
+  }
 
-  /** Conf key binding the TIFF decoder implementation. */
-  val TiffDecoderConfKey = "spark.graft.media.tiffDecoder"
+  /** A resolved [[Binding]]: `load` runs once per partition. */
+  private[multimodal] final case class Bound[T](className: String) {
+    def load(): T = {
+      // context classloader first: REPL/notebook-defined impls and
+      // runtime-added jars are visible there but not to this class's
+      // own loader
+      val loader = Option(Thread.currentThread().getContextClassLoader)
+        .getOrElse(getClass.getClassLoader)
+      Class.forName(className, true, loader).getDeclaredConstructor()
+        .newInstance().asInstanceOf[T]
+    }
+  }
 
-  private[multimodal] def instantiate[T](className: String): T = {
-    // context classloader first: REPL/notebook-defined impls and
-    // runtime-added jars are visible there but not to this class's
-    // own loader
-    val loader = Option(Thread.currentThread().getContextClassLoader)
-      .getOrElse(getClass.getClassLoader)
-    Class.forName(className, true, loader).getDeclaredConstructor()
-      .newInstance().asInstanceOf[T]
+  private val detector = new Binding[FrameDetector](
+    "spark.graft.media.detector", classOf[SurrogateDetector])
+  private val transcoder = new Binding[Transcoder](
+    "spark.graft.media.transcoder", classOf[SurrogateTranscoder])
+  private val imageDecoder = new Binding[Codecs.ImageDecoder](
+    "spark.graft.media.imageDecoder", classOf[Codecs.BmpDecoder])
+  private val audioDecoder = new Binding[Codecs.AudioDecoder](
+    "spark.graft.media.audioDecoder", classOf[Codecs.WavDecoder])
+  private val videoDecoder = new Binding[Codecs.VideoDecoder](
+    "spark.graft.media.videoDecoder", classOf[Codecs.AviDecoder])
+  private val avDecoder = new Binding[Codecs.AvDecoder](
+    "spark.graft.media.avDecoder", classOf[Codecs.AviAvDecoder])
+  private val mp4Probe = new Binding[Codecs.ContainerProbe](
+    "spark.graft.media.mp4Probe", classOf[Codecs.Mp4Probe])
+  private val mp4Indexer = new Binding[Codecs.ContainerIndexer](
+    "spark.graft.media.mp4Indexer", classOf[Codecs.Mp4Indexer])
+  private val pngDecoder = new Binding[Codecs.ImageDecoder](
+    "spark.graft.media.pngDecoder", classOf[Codecs.PngDecoder])
+  private val gifDecoder = new Binding[Codecs.GifDecoder](
+    "spark.graft.media.gifDecoder", classOf[Codecs.GifLzwDecoder])
+  private val mp4VideoDecoder = new Binding[Codecs.VideoDecoder](
+    "spark.graft.media.mp4VideoDecoder", classOf[Codecs.Mp4VideoDecoder])
+  private val mp4AvDecoder = new Binding[Codecs.AvDecoder](
+    "spark.graft.media.mp4AvDecoder", classOf[Codecs.Mp4AvDecoder])
+  private val jpegDecoder = new Binding[Codecs.ImageDecoder](
+    "spark.graft.media.jpegDecoder", classOf[Jpeg.JpegDecoder])
+  private val mjpegDecoder = new Binding[Codecs.VideoDecoder](
+    "spark.graft.media.mjpegDecoder", classOf[Jpeg.MjpegAviDecoder])
+  private val tiffDecoder = new Binding[Codecs.ImageDecoder](
+    "spark.graft.media.tiffDecoder", classOf[Codecs.TiffDecoder])
+
+  val DetectorConfKey: String = detector.key
+  val TranscoderConfKey: String = transcoder.key
+  val ImageDecoderConfKey: String = imageDecoder.key
+  val AudioDecoderConfKey: String = audioDecoder.key
+  val VideoDecoderConfKey: String = videoDecoder.key
+  val AvDecoderConfKey: String = avDecoder.key
+  val Mp4ProbeConfKey: String = mp4Probe.key
+  val Mp4IndexerConfKey: String = mp4Indexer.key
+  val PngDecoderConfKey: String = pngDecoder.key
+  val GifDecoderConfKey: String = gifDecoder.key
+  val Mp4VideoDecoderConfKey: String = mp4VideoDecoder.key
+  val Mp4AvDecoderConfKey: String = mp4AvDecoder.key
+  val JpegDecoderConfKey: String = jpegDecoder.key
+  val MjpegDecoderConfKey: String = mjpegDecoder.key
+  val TiffDecoderConfKey: String = tiffDecoder.key
+
+  /** Every document id — the id source of the batch codec operators
+    * (their streaming-legal `*On` cores take any id Dataset). */
+  private def docIds(s: SparkSession, dir: String): Dataset[Long] =
+    Tables.documents(s, dir).select(col("doc_id"))
+      .as[Long](org.apache.spark.sql.Encoders.scalaLong)
+
+  /** One synthetic raster pattern, named once per coefficient set.
+    * Channel c of pixel (x, y) in frame f of the raster seeded by
+    * `seed` is
+    *   ((seed·k(4c) + f·k(4c+1) + (x/cell)·k(4c+2)
+    *     + ((y/cell) mod yMod)·k(4c+3)) mod `mod`)·scale + offset,
+    * so a pattern has k.length / 4 channels. */
+  private final class Pattern(val k: Array[Int],
+      val cell: Int = 1, val yMod: Int = Int.MaxValue, val mod: Int = 256,
+      val scale: Int = 1, val offset: Int = 0)
+
+  /** The still / clip RGB pattern (a still is its f = 0 raster). */
+  private val ClipRgb =
+    new Pattern(Array(7, 41, 13, 31, 11, 19, 17, 5, 3, 53, 29, 23))
+  /** mm_decode_png's RGB pattern (stills only). */
+  private val PngRgb =
+    new Pattern(Array(5, 0, 19, 37, 13, 0, 7, 11, 17, 0, 23, 3))
+  /** The two-stream AVI clips' video pattern. */
+  private val AvRgb =
+    new Pattern(Array(5, 37, 11, 19, 13, 23, 7, 3, 17, 29, 31, 41))
+  /** The MP4 video clips' pattern. */
+  private val Mp4Rgb =
+    new Pattern(Array(9, 43, 11, 29, 15, 23, 19, 7, 5, 47, 31, 17))
+  /** The two-track MP4 clips' video pattern. */
+  private val Mp4AvRgb =
+    new Pattern(Array(7, 31, 17, 13, 19, 11, 23, 29, 3, 41, 37, 7))
+  /** The GIF index plane (one channel; rows repeat with period 3). */
+  private val GifIndex =
+    new Pattern(Array(3, 0, 7, 11), yMod = 3)
+  /** Gray constant 8x8 blocks, even values in [32, 222] — the class
+    * the whole JPEG transform chain inverts exactly (see [[Jpeg]]
+    * scaladoc: FDCT of a constant block is DC-only with coefficient
+    * 8*(v-128), the K.1 DC quantizer 16 divides it for even v, and
+    * the integer IDCT maps dc = 8k back to k+128 exactly — all three
+    * steps spec-proven exhaustively). The TIFF corpus uses it too, for
+    * its 24-byte runs. */
+  private val BlockGray =
+    new Pattern(Array(5, 29, 19, 37), cell = 8, mod = 96, scale = 2,
+      offset = 32)
+  /** mm_phash_real's gray base image (the per-doc brightness offset
+    * rides `raster`'s `bias`). */
+  private val PhashGray =
+    new Pattern(Array(7, 0, 13, 31), mod = 240)
+
+  /** The one pixel loop: frame `f` of pattern `p` seeded by `seed`,
+    * `w` x `h` pixels row-major, channels interleaved, plus `bias` on
+    * every value. A primitive loop (no per-pixel tuple or closure);
+    * the seed, frame and row terms are summed once per row. */
+  private def raster(p: Pattern, seed: Long, f: Int, w: Int,
+      h: Int, bias: Int = 0): Array[Byte] = {
+    val nc = p.k.length / 4
+    val out = new Array[Byte](w * h * nc)
+    val row = new Array[Long](nc)
+    var o = 0
+    var y = 0
+    while (y < h) {
+      var c = 0
+      while (c < nc) {
+        row(c) = seed * p.k(4 * c) + f * p.k(4 * c + 1) +
+          (y / p.cell) % p.yMod * p.k(4 * c + 3)
+        c += 1
+      }
+      var x = 0
+      while (x < w) {
+        val xt = if (p.cell == 1) x else x / p.cell
+        c = 0
+        while (c < nc) {
+          val v = row(c) + xt * p.k(4 * c + 2)
+          // the byte cast keeps v mod 256 already, negative v included
+          val r = if (p.mod == 256) v else v % p.mod
+          out(o) = (r * p.scale + p.offset + bias).toByte
+          o += 1
+          c += 1
+        }
+        x += 1
+      }
+      y += 1
+    }
+    out
+  }
+
+  /** Frames 0 until nf of a pattern — a synthetic clip. */
+  private def clip(p: Pattern, seed: Long, nf: Int, w: Int, h: Int)
+      : IndexedSeq[Array[Byte]] =
+    (0 until nf).map(f => raster(p, seed, f, w, h))
+
+  /** A one-channel gray plane as R = G = B interleaved RGB. */
+  private def grayToRgb(g: Array[Byte]): Array[Byte] = {
+    val rgb = new Array[Byte](g.length * 3)
+    var i = 0
+    while (i < g.length) {
+      rgb(3 * i) = g(i); rgb(3 * i + 1) = g(i); rgb(3 * i + 2) = g(i)
+      i += 1
+    }
+    rgb
+  }
+
+  /** The mm_decode_jpeg / mm_decode_mjpeg grayscale raster: `bw` x
+    * `bh` [[BlockGray]] blocks; `f` offsets the pattern per frame. */
+  private def jpegBlockGray(id: Long, f: Int, bw: Int, bh: Int)
+      : Array[Byte] =
+    raster(BlockGray, id, f, bw * 8, bh * 8)
+
+  /** One synthetic sequence, named once per coefficient pair: element
+    * i of the sequence seeded by `seed` is (seed·a + i²·b), reduced
+    * to PCM16 samples (mod 4096, centred) or to bytes (mod `mod`). */
+  private final class Wave(a: Int, b: Int) {
+    private def at(seed: Long, i: Int): Long = seed * a + i.toLong * i * b
+    def pcm(seed: Long, n: Int): Array[Short] = {
+      val out = new Array[Short](n)
+      var i = 0
+      while (i < n) { out(i) = (at(seed, i) % 4096 - 2048).toShort; i += 1 }
+      out
+    }
+    def bytes(seed: Long, n: Int, mod: Int = 256): Array[Byte] = {
+      val out = new Array[Byte](n)
+      var i = 0
+      while (i < n) { out(i) = (at(seed, i) % mod).toByte; i += 1 }
+      out
+    }
+  }
+
+  /** The WAV corpus' PCM waveform. */
+  private val WavPcm = new Wave(37, 13)
+  /** The G.711 corpus' codewords. */
+  private val G711Codes = new Wave(29, 7)
+  /** The two-stream AVI clips' audio: PCM16, or G.711 codewords. */
+  private val AvAudio = new Wave(53, 7)
+  /** The two-track MP4 clips' PCM16 audio. */
+  private val Mp4AvPcm = new Wave(61, 11)
+  /** mm_mp4_probe's opaque mdat payload (bytes mod 251). */
+  private val Mp4Payload = new Wave(31, 5)
+  /** mm_mp4_extract's indexed sample payload (bytes mod 251). */
+  private val Mp4IndexedPayload = new Wave(13, 3)
+
+  /** Sum of a byte array read unsigned. */
+  private def byteSum(a: Array[Byte]): Long = {
+    var s = 0L
+    var i = 0
+    while (i < a.length) { s += a(i) & 0xff; i += 1 }
+    s
+  }
+
+  /** Per-channel sums of an interleaved RGB raster. */
+  private def channelSums(a: Array[Byte]): (Long, Long, Long) = {
+    var sr = 0L; var sg = 0L; var sb = 0L
+    var i = 0
+    while (i < a.length) {
+      sr += a(i) & 0xff
+      sg += a(i + 1) & 0xff
+      sb += a(i + 2) & 0xff
+      i += 3
+    }
+    (sr, sg, sb)
+  }
+
+  /** Sum and max of |sample| over a PCM track. */
+  private def absStats(a: Array[Short]): (Long, Long) = {
+    var sum = 0L; var max = 0L
+    var i = 0
+    while (i < a.length) {
+      val v = math.abs(a(i).toLong)
+      sum += v
+      if (v > max) max = v
+      i += 1
+    }
+    (sum, max)
   }
 
   /** Deterministic surrogate for the YOLO tracker (M1, :170,187).
@@ -108,17 +326,13 @@ object Multimodal {
     * exchange here would be two wasted shuffles inside their plans. */
   private[graft] def inferenceDet(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // resolve the binding on the driver, ship only the class NAME:
-    // the task closure must not capture a session, and the real
-    // detector (a loaded model) would not be serializable anyway
-    val detectorClass =
-      s.conf.get(DetectorConfKey, classOf[SurrogateDetector].getName)
+    val model = detector.resolve(s)
     val frames: Dataset[FrameRow] = Tables.events(s, dir)
       .filter(col("event_id") < 1000)
       .select(col("event_id").as("frame_id")).as[FrameRow]
     frames.mapPartitions { it =>
-      val model = instantiate[FrameDetector](detectorClass) // per-partition init (M1 :170)
-      it.flatMap(f => model.detect(f.frame_id))
+      val m = model.load() // per-partition init (M1 :170)
+      it.flatMap(f => m.detect(f.frame_id))
     }.toDF()
   }
 
@@ -187,12 +401,11 @@ object Multimodal {
     * surrogate keeps the same byte-level plumbing and is
     * deterministic so the oracle can reproduce it. */
   def udfTranscode(s: SparkSession, dir: String): DataFrame = {
-    val transcoderClass =
-      s.conf.get(TranscoderConfKey, classOf[SurrogateTranscoder].getName)
+    val bound = transcoder.resolve(s)
     val transcodeUdf = udf { (bytes: Array[Byte]) =>
       // lazy per-executor init via the thread-local-free holder: the
       // closure ships the class name, not a codec instance
-      TranscoderCache.get(transcoderClass).transcode(bytes)
+      TranscoderCache.get(bound).transcode(bytes)
     }
     Tables.documents(s, dir)
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
@@ -206,9 +419,9 @@ object Multimodal {
     * (executor, class), not per row. */
   private[multimodal] object TranscoderCache {
     private val cache =
-      scala.collection.concurrent.TrieMap.empty[String, Transcoder]
-    def get(className: String): Transcoder =
-      cache.getOrElseUpdate(className, instantiate[Transcoder](className))
+      scala.collection.concurrent.TrieMap.empty[Bound[Transcoder], Transcoder]
+    def get(b: Bound[Transcoder]): Transcoder =
+      cache.getOrElseUpdate(b, b.load())
   }
 
   /** L5c: media shard packing — lay the (lang-partitioned) media rows
@@ -507,8 +720,8 @@ object Multimodal {
     * deterministic RGB raster (pixel = integer pattern of doc_id,x,y)
     * is encoded into genuine 24-bit BI_RGB BMP bytes
     * ([[Codecs.bmpEncode]]: 54-byte header, bottom-up rows, BGR,
-    * 4-byte stride padding) carried as a binary column, then DECODED
-    * by the conf-pluggable [[Codecs.ImageDecoder]] (default: the
+    * 4-byte stride padding), then DECODED in the same pass by the
+    * conf-pluggable [[Codecs.ImageDecoder]] (default: the
     * pure-JVM [[Codecs.BmpDecoder]], a real parser of the actual
     * header fields) inside mapPartitions with per-partition decoder
     * init (the M1 model-load contract). Output: real byte size plus
@@ -518,52 +731,30 @@ object Multimodal {
     * hash mismatch. Dimensions stay small (w<=31, h<=19) so the
     * oracle's explicit pixel relation stays bounded.
     *
-    * Scale: encode+decode are map-only over the documents scan — no
-    * shuffle before the final orderBy; at 100 TB binary payloads ride
-    * their source partitioning and decoders amortize per partition. */
+    * Scale: encode+decode are ONE map-only pass over the documents
+    * scan — no shuffle before the final orderBy; at 100 TB binary
+    * payloads ride their source partitioning and decoders amortize
+    * per partition. */
   def mmDecodeImage(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val decoderClass =
-      s.conf.get(ImageDecoderConfKey, classOf[Codecs.BmpDecoder].getName)
-    val encoded = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val w = (16 + id % 16).toInt
-          val h = (12 + id % 8).toInt
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val base = (y * w + x) * 3
-              px(base) = ((id * 7 + x * 13 + y * 31) % 256).toByte
-              px(base + 1) = ((id * 11 + x * 17 + y * 5) % 256).toByte
-              px(base + 2) = ((id * 3 + x * 29 + y * 23) % 256).toByte
-              x += 1
-            }
-            y += 1
-          }
-          (id, Codecs.bmpEncode(w, h, px))
-        }
-      }.toDF("doc_id", "img")
-    encoded.as[(Long, Array[Byte])].mapPartitions { it =>
-      val dec = instantiate[Codecs.ImageDecoder](decoderClass)
-      it.map { case (id, bytes) =>
+    val bound = imageDecoder.resolve(s)
+    docIds(s, dir).mapPartitions { it =>
+      val dec = bound.load()
+      it.map { id =>
+        val (w, h) = stillDims(id)
+        val bytes = Codecs.bmpEncode(w, h, raster(ClipRgb, id, 0, w, h))
         val im = dec.decode(bytes)
-        var sr = 0L; var sg = 0L; var sb = 0L
-        var i = 0
-        while (i < im.rgb.length) {
-          sr += im.rgb(i) & 0xff
-          sg += im.rgb(i + 1) & 0xff
-          sb += im.rgb(i + 2) & 0xff
-          i += 3
-        }
+        val (sr, sg, sb) = channelSums(im.rgb)
         (id, bytes.length.toLong, im.width, im.height, sr, sg, sb)
       }
     }.toDF("doc_id", "n_bytes", "width", "height",
       "sum_r", "sum_g", "sum_b")
       .orderBy("doc_id")
   }
+
+  /** The stills' dims: w in [16, 31], h in [12, 19]. */
+  private def stillDims(id: Long): (Int, Int) =
+    ((16 + id % 16).toInt, (12 + id % 8).toInt)
 
   /** L5s: REAL COMPRESSED-format decode — PNG round trip through
     * genuine DEFLATE. Every other real codec in the engine parses an
@@ -588,45 +779,20 @@ object Multimodal {
     * Scale: encode+decode are ONE map-only pass over the documents
     * scan; decoders amortize per partition (the M1 contract). */
   def mmDecodePng(s: SparkSession, dir: String): DataFrame =
-    mmDecodePngOn(
-      Tables.documents(s, dir).select(col("doc_id"))
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong))
-      .orderBy("doc_id")
+    mmDecodePngOn(docIds(s, dir)).orderBy("doc_id")
 
   /** Streaming-legal core (no sort; one pure mapPartitions pass). */
-  def mmDecodePngOn(ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  def mmDecodePngOn(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
-    val decoderClass =
-      s.conf.get(PngDecoderConfKey, classOf[Codecs.PngDecoder].getName)
+    val bound = pngDecoder.resolve(s)
     ids.mapPartitions { it =>
-      val dec = instantiate[Codecs.ImageDecoder](decoderClass)
+      val dec = bound.load()
       it.map { id =>
-        val w = (16 + id % 16).toInt
-        val h = (12 + id % 8).toInt
-        val px = new Array[Byte](w * h * 3)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val base = (y * w + x) * 3
-            px(base) = ((id * 5 + x * 19 + y * 37) % 256).toByte
-            px(base + 1) = ((id * 13 + x * 7 + y * 11) % 256).toByte
-            px(base + 2) = ((id * 17 + x * 23 + y * 3) % 256).toByte
-            x += 1
-          }
-          y += 1
-        }
-        val png = Codecs.pngEncode(w, h, px)
+        val (w, h) = stillDims(id)
+        val png = Codecs.pngEncode(w, h, raster(PngRgb, id, 0, w, h))
         val im = dec.decode(png)
-        var sr = 0L; var sg = 0L; var sb = 0L
-        var i = 0
-        while (i < im.rgb.length) {
-          sr += im.rgb(i) & 0xff
-          sg += im.rgb(i + 1) & 0xff
-          sb += im.rgb(i + 2) & 0xff
-          i += 3
-        }
+        val (sr, sg, sb) = channelSums(im.rgb)
         (id, im.width, im.height, sr, sg, sb,
           png.length < 57 + Codecs.pngRawLen(w, h))
       }
@@ -654,79 +820,36 @@ object Multimodal {
     *
     * Scale: one map-only pass, per-partition decoder init. */
   def mmDecodeGif(s: SparkSession, dir: String): DataFrame =
-    mmDecodeGifOn(
-      Tables.documents(s, dir).select(col("doc_id"))
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong))
-      .orderBy("doc_id")
+    mmDecodeGifOn(docIds(s, dir)).orderBy("doc_id")
 
   /** Streaming-legal core (no sort; one pure mapPartitions pass). */
-  def mmDecodeGifOn(ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  def mmDecodeGifOn(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
-    val decoderClass =
-      s.conf.get(GifDecoderConfKey, classOf[Codecs.GifLzwDecoder].getName)
+    val bound = gifDecoder.resolve(s)
     ids.mapPartitions { it =>
-      val dec = instantiate[Codecs.GifDecoder](decoderClass)
+      val dec = bound.load()
       it.map { id =>
-        val w = (16 + id % 12).toInt
-        val h = (10 + id % 6).toInt
-        val idx = new Array[Byte](w * h)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            idx(y * w + x) = ((id * 3 + x * 7 + (y % 3) * 11) % 256).toByte
-            x += 1
-          }
-          y += 1
-        }
-        val gif = Codecs.gifEncode(w, h, idx)
+        val (w, h) = gifDims(id)
+        val gif = Codecs.gifEncode(w, h, raster(GifIndex, id, 0, w, h))
         val im = dec.decode(gif)
-        var sr = 0L; var sg = 0L; var sb = 0L
-        var i = 0
-        while (i < im.rgb.length) {
-          sr += im.rgb(i) & 0xff
-          sg += im.rgb(i + 1) & 0xff
-          sb += im.rgb(i + 2) & 0xff
-          i += 3
-        }
-        // stored-equivalent bound: header 13 + palette 768 + image
-        // descriptor 10 + code-size byte 1 + raw indices in sub-blocks
-        // + terminator 1 + trailer 1
-        val bound = 794 + w * h + (w * h + 254) / 255
-        (id, im.width, im.height, sr, sg, sb, gif.length < bound)
+        val (sr, sg, sb) = channelSums(im.rgb)
+        (id, im.width, im.height, sr, sg, sb,
+          gif.length < gifStoredBound(w, h))
       }
     }.toDF("doc_id", "width", "height", "sum_r", "sum_g", "sum_b",
       "compressed")
   }
 
-  /** The mm_decode_jpeg / mm_decode_mjpeg grayscale raster: CONSTANT
-    * per 8x8 block, even values in [32, 222] — the class the whole
-    * JPEG transform chain inverts exactly (see [[Jpeg]] scaladoc:
-    * FDCT of a constant block is DC-only with coefficient 8*(v-128),
-    * the K.1 DC quantizer 16 divides it for even v, and the integer
-    * IDCT maps dc = 8k back to k+128 exactly — all three steps
-    * spec-proven exhaustively). `f` offsets the pattern per frame. */
-  private def jpegBlockGray(id: Long, f: Int, bw: Int, bh: Int): Array[Byte] = {
-    val w = bw * 8
-    val g = new Array[Byte](w * bh * 8)
-    var bj = 0
-    while (bj < bh) {
-      var bi = 0
-      while (bi < bw) {
-        val v = (2 * ((id * 5 + f * 29 + bi * 19 + bj * 37) % 96) + 32).toByte
-        var y = 0
-        while (y < 8) {
-          var x = 0
-          while (x < 8) { g((bj * 8 + y) * w + bi * 8 + x) = v; x += 1 }
-          y += 1
-        }
-        bi += 1
-      }
-      bj += 1
-    }
-    g
-  }
+  /** The GIF corpus' dims: w in [16, 27], h in [10, 15]. */
+  private def gifDims(id: Long): (Int, Int) =
+    ((16 + id % 12).toInt, (10 + id % 6).toInt)
+
+  /** A GIF's stored-equivalent size: header 13 + palette 768 + image
+    * descriptor 10 + code-size byte 1 + raw indices in sub-blocks +
+    * terminator 1 + trailer 1 — LZW must beat it. */
+  private def gifStoredBound(w: Int, h: Int): Int =
+    794 + w * h + (w * h + 254) / 255
 
   /** L5z: the THIRD compressed format — baseline JPEG (ITU-T T.81)
     * with a from-scratch canonical-Huffman entropy coder AND a
@@ -747,32 +870,34 @@ object Multimodal {
     *
     * Scale: one map-only pass, per-partition decoder init. */
   def mmDecodeJpeg(s: SparkSession, dir: String): DataFrame =
-    mmDecodeJpegOn(
-      Tables.documents(s, dir).select(col("doc_id"))
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong))
-      .orderBy("doc_id")
+    mmDecodeJpegOn(docIds(s, dir)).orderBy("doc_id")
 
   /** Streaming-legal core (no sort; one pure mapPartitions pass). */
-  def mmDecodeJpegOn(ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  def mmDecodeJpegOn(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
-    val decoderClass =
-      s.conf.get(JpegDecoderConfKey, classOf[Jpeg.JpegDecoder].getName)
+    val bound = jpegDecoder.resolve(s)
     ids.mapPartitions { it =>
-      val dec = instantiate[Codecs.ImageDecoder](decoderClass)
+      val dec = bound.load()
       it.map { id =>
         val bw = (2 + id % 3).toInt
         val bh = (1 + id % 2).toInt
         val g = jpegBlockGray(id, 0, bw, bh)
         val jpeg = Jpeg.encodeGray(bw * 8, bh * 8, g)
         val im = dec.decode(jpeg)
-        var sl = 0L
-        var i = 0
-        while (i < im.rgb.length) { sl += im.rgb(i) & 0xff; i += 3 }
-        (id, im.width, im.height, sl,
+        (id, im.width, im.height, lumaSum(im.rgb),
           jpeg.length < Jpeg.GrayHeaderLen + g.length)
       }
     }.toDF("doc_id", "width", "height", "sum_luma", "compressed")
+  }
+
+  /** Sum of the R channel of an interleaved raster — the luma of a
+    * gray-valued one. */
+  private def lumaSum(rgb: Array[Byte]): Long = {
+    var sl = 0L
+    var i = 0
+    while (i < rgb.length) { sl += rgb(i) & 0xff; i += 3 }
+    sl
   }
 
   /** L5z2b: PROGRESSIVE JPEG decode over in-repo bytes — the
@@ -792,41 +917,41 @@ object Multimodal {
     * stays the mm_decode_jpeg closed form unchanged.
     *
     * Scale: one map-only pass, per-partition decoder init. */
-  def mmDecodeJpegProg(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    mmDecodeJpegProgOn(
-      Tables.documents(s, dir).select(col("doc_id")).as[Long])
-      .orderBy("doc_id")
-  }
+  def mmDecodeJpegProg(s: SparkSession, dir: String): DataFrame =
+    mmDecodeJpegProgOn(docIds(s, dir)).orderBy("doc_id")
 
   /** Streaming-legal core (no sort; one pure mapPartitions pass —
     * batch == readStream proven in StreamingSpec alongside the other
     * ingest decode cores). */
-  def mmDecodeJpegProgOn(
-      ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  def mmDecodeJpegProgOn(ids: Dataset[Long]): DataFrame =
+    jpegProgressiveOn(ids, Jpeg.encodeGrayProgressive(_, _, _), 2)
+
+  /** The progressive-decode body both scan progressions share: the
+    * mm_decode_jpeg corpus through `encode`, whose SOF2 stream must
+    * carry exactly `nScans` scans and decode byte-identically to the
+    * baseline encoding. */
+  private def jpegProgressiveOn(ids: Dataset[Long],
+      encode: (Int, Int, Array[Byte]) => Array[Byte],
+      nScans: Int): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
-    val decoderClass =
-      s.conf.get(JpegDecoderConfKey, classOf[Jpeg.JpegDecoder].getName)
+    val bound = jpegDecoder.resolve(s)
     ids.mapPartitions { it =>
-        val dec = instantiate[Codecs.ImageDecoder](decoderClass)
-        it.map { id =>
-          val bw = (2 + id % 3).toInt
-          val bh = (1 + id % 2).toInt
-          val g = jpegBlockGray(id, 0, bw, bh)
-          val prog = Jpeg.encodeGrayProgressive(bw * 8, bh * 8, g)
-          val im = dec.decode(prog)
-          var sl = 0L
-          var i = 0
-          while (i < im.rgb.length) { sl += im.rgb(i) & 0xff; i += 3 }
-          val base = dec.decode(Jpeg.encodeGray(bw * 8, bh * 8, g))
-          val (sof2, nSos) = jpegMarkerCensus(prog)
-          (id, im.width, im.height, sl, sof2 && nSos == 2,
-            im.width == base.width && im.height == base.height &&
-              java.util.Arrays.equals(im.rgb, base.rgb))
-        }
-      }.toDF("doc_id", "width", "height", "sum_luma", "progressive",
-        "matches_baseline")
+      val dec = bound.load()
+      it.map { id =>
+        val bw = (2 + id % 3).toInt
+        val bh = (1 + id % 2).toInt
+        val g = jpegBlockGray(id, 0, bw, bh)
+        val prog = encode(bw * 8, bh * 8, g)
+        val im = dec.decode(prog)
+        val base = dec.decode(Jpeg.encodeGray(bw * 8, bh * 8, g))
+        val (sof2, nSos) = jpegMarkerCensus(prog)
+        (id, im.width, im.height, lumaSum(im.rgb), sof2 && nSos == nScans,
+          im.width == base.width && im.height == base.height &&
+            java.util.Arrays.equals(im.rgb, base.rgb))
+      }
+    }.toDF("doc_id", "width", "height", "sum_luma", "progressive",
+      "matches_baseline")
   }
 
   /** L5z2c: SUCCESSIVE-APPROXIMATION progressive decode — the same
@@ -841,40 +966,12 @@ object Multimodal {
     * mm_decode_jpeg closed form.
     *
     * Scale: one map-only pass, per-partition decoder init. */
-  def mmDecodeJpegProgSa(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    mmDecodeJpegProgSaOn(
-      Tables.documents(s, dir).select(col("doc_id")).as[Long])
-      .orderBy("doc_id")
-  }
+  def mmDecodeJpegProgSa(s: SparkSession, dir: String): DataFrame =
+    mmDecodeJpegProgSaOn(docIds(s, dir)).orderBy("doc_id")
 
   /** Streaming-legal core (no sort; one pure mapPartitions pass). */
-  def mmDecodeJpegProgSaOn(
-      ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
-    val s = ids.sparkSession
-    import s.implicits._
-    val decoderClass =
-      s.conf.get(JpegDecoderConfKey, classOf[Jpeg.JpegDecoder].getName)
-    ids.mapPartitions { it =>
-        val dec = instantiate[Codecs.ImageDecoder](decoderClass)
-        it.map { id =>
-          val bw = (2 + id % 3).toInt
-          val bh = (1 + id % 2).toInt
-          val g = jpegBlockGray(id, 0, bw, bh)
-          val sa = Jpeg.encodeGrayProgressiveSA(bw * 8, bh * 8, g)
-          val im = dec.decode(sa)
-          var sl = 0L
-          var i = 0
-          while (i < im.rgb.length) { sl += im.rgb(i) & 0xff; i += 3 }
-          val base = dec.decode(Jpeg.encodeGray(bw * 8, bh * 8, g))
-          val (sof2, nSos) = jpegMarkerCensus(sa)
-          (id, im.width, im.height, sl, sof2 && nSos == 6,
-            im.width == base.width && im.height == base.height &&
-              java.util.Arrays.equals(im.rgb, base.rgb))
-        }
-      }.toDF("doc_id", "width", "height", "sum_luma", "progressive",
-        "matches_baseline")
-  }
+  def mmDecodeJpegProgSaOn(ids: Dataset[Long]): DataFrame =
+    jpegProgressiveOn(ids, Jpeg.encodeGrayProgressiveSA(_, _, _), 6)
 
   /** Entropy-aware JPEG marker census: (SOF2 present, number of SOS
     * scans) — the checked-column helper behind mm_decode_jpeg_prog
@@ -920,41 +1017,55 @@ object Multimodal {
     * Emitted sums come from the FINAL decode.
     *
     * Scale: one map-only pass, per-partition decoder init. */
-  def mmTranscodeJpeg(s: SparkSession, dir: String): DataFrame = {
+  def mmTranscodeJpeg(s: SparkSession, dir: String): DataFrame =
+    bmpTranscode(s, dir, jpegTranscodeRaster, Jpeg.encodeColor444(_, _, _),
+      jpegDecoder, smallerThanBmp)
+      .withColumnRenamed("flag", "jpeg_smaller").orderBy("doc_id")
+
+  /** The JPEG transcodes' source: gray-valued constant blocks, 4-6 x
+    * 2-3 of them. */
+  private def jpegTranscodeRaster(id: Long): (Int, Int, Array[Byte]) = {
+    val bw = (4 + id % 3).toInt
+    val bh = (2 + id % 2).toInt
+    (bw * 8, bh * 8, grayToRgb(jpegBlockGray(id, 0, bw, bh)))
+  }
+
+  /** The transcodes' size flag: the re-encoded container beat the BMP. */
+  private val smallerThanBmp: (Array[Byte], Array[Byte]) => Boolean =
+    (bmp, out) => out.length < bmp.length
+
+  /** The body of the six BMP-in transcodes: per doc the `src` raster
+    * (w, h, interleaved RGB) is written as real BMP bytes, parsed by
+    * the BMP binding, re-encoded by `encode` and parsed again by the
+    * `to` binding. Emits the BMP size, the final raster's dims and
+    * byte sum, `lossless_ok` (the final raster equals the source,
+    * dims included) and `flag`, the operator's checked container
+    * column over the (BMP, re-encoded) bytes. One map-only pass, two
+    * per-partition decoder inits. */
+  private def bmpTranscode(s: SparkSession, dir: String,
+      src: Long => (Int, Int, Array[Byte]),
+      encode: (Int, Int, Array[Byte]) => Array[Byte],
+      to: Binding[Codecs.ImageDecoder],
+      flag: (Array[Byte], Array[Byte]) => Boolean): DataFrame = {
     import s.implicits._
-    val bmpClass =
-      s.conf.get(ImageDecoderConfKey, classOf[Codecs.BmpDecoder].getName)
-    val jpegClass =
-      s.conf.get(JpegDecoderConfKey, classOf[Jpeg.JpegDecoder].getName)
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        val bmpDec = instantiate[Codecs.ImageDecoder](bmpClass)
-        val jpegDec = instantiate[Codecs.ImageDecoder](jpegClass)
-        it.map { id =>
-          val bw = (4 + id % 3).toInt
-          val bh = (2 + id % 2).toInt
-          val g = jpegBlockGray(id, 0, bw, bh)
-          val rgb = new Array[Byte](g.length * 3)
-          var i = 0
-          while (i < g.length) {
-            rgb(3 * i) = g(i); rgb(3 * i + 1) = g(i)
-            rgb(3 * i + 2) = g(i)
-            i += 1
-          }
-          val bmp = Codecs.bmpEncode(bw * 8, bh * 8, rgb)
-          val im1 = bmpDec.decode(bmp)
-          val jpeg = Jpeg.encodeColor444(im1.width, im1.height, im1.rgb)
-          val im2 = jpegDec.decode(jpeg)
-          var sum = 0L
-          i = 0
-          while (i < im2.rgb.length) { sum += im2.rgb(i) & 0xff; i += 1 }
-          (id, bmp.length.toLong, im2.width, im2.height, sum,
-            java.util.Arrays.equals(im2.rgb, rgb),
-            jpeg.length < bmp.length)
-        }
-      }.toDF("doc_id", "bmp_bytes", "width", "height", "sum_rgb",
-        "lossless_ok", "jpeg_smaller")
-      .orderBy("doc_id")
+    val bmpBound = imageDecoder.resolve(s)
+    val toBound = to.resolve(s)
+    docIds(s, dir).mapPartitions { it =>
+      val bd = bmpBound.load()
+      val td = toBound.load()
+      it.map { id =>
+        val (w, h, px) = src(id)
+        val bmp = Codecs.bmpEncode(w, h, px)
+        val im1 = bd.decode(bmp)
+        val out = encode(im1.width, im1.height, im1.rgb)
+        val im2 = td.decode(out)
+        (id, bmp.length.toLong, im2.width, im2.height, byteSum(im2.rgb),
+          im2.width == w && im2.height == h &&
+            java.util.Arrays.equals(im2.rgb, px),
+          flag(bmp, out))
+      }
+    }.toDF("doc_id", "bmp_bytes", "width", "height", "sum_rgb",
+      "lossless_ok", "flag")
   }
 
   /** L5z4: [[mmTranscodeJpeg]]'s SUBSAMPLED twin — BMP in, 4:2:0
@@ -967,42 +1078,10 @@ object Multimodal {
     * flags). A separate catalog key — not extra columns on the 4:4:4
     * op — so the cross-round bench cost of each transcode form stays
     * individually visible. */
-  def mmTranscodeJpeg420(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val bmpClass =
-      s.conf.get(ImageDecoderConfKey, classOf[Codecs.BmpDecoder].getName)
-    val jpegClass =
-      s.conf.get(JpegDecoderConfKey, classOf[Jpeg.JpegDecoder].getName)
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        val bmpDec = instantiate[Codecs.ImageDecoder](bmpClass)
-        val jpegDec = instantiate[Codecs.ImageDecoder](jpegClass)
-        it.map { id =>
-          val bw = (4 + id % 3).toInt
-          val bh = (2 + id % 2).toInt
-          val g = jpegBlockGray(id, 0, bw, bh)
-          val rgb = new Array[Byte](g.length * 3)
-          var i = 0
-          while (i < g.length) {
-            rgb(3 * i) = g(i); rgb(3 * i + 1) = g(i)
-            rgb(3 * i + 2) = g(i)
-            i += 1
-          }
-          val bmp = Codecs.bmpEncode(bw * 8, bh * 8, rgb)
-          val im1 = bmpDec.decode(bmp)
-          val jpeg = Jpeg.encodeColor420(im1.width, im1.height, im1.rgb)
-          val im2 = jpegDec.decode(jpeg)
-          var sum = 0L
-          i = 0
-          while (i < im2.rgb.length) { sum += im2.rgb(i) & 0xff; i += 1 }
-          (id, bmp.length.toLong, im2.width, im2.height, sum,
-            java.util.Arrays.equals(im2.rgb, rgb),
-            jpeg.length < bmp.length)
-        }
-      }.toDF("doc_id", "bmp_bytes", "width", "height", "sum_rgb",
-        "lossless_ok", "jpeg_smaller")
-      .orderBy("doc_id")
-  }
+  def mmTranscodeJpeg420(s: SparkSession, dir: String): DataFrame =
+    bmpTranscode(s, dir, jpegTranscodeRaster, Jpeg.encodeColor420(_, _, _),
+      jpegDecoder, smallerThanBmp)
+      .withColumnRenamed("flag", "jpeg_smaller").orderBy("doc_id")
 
   /** L5z2: M-JPEG AVI — JPEG scans as the per-frame payload of the
     * engine's one AVI muxer and RIFF chunk walk ([[Jpeg.aviEncodeMjpeg]] /
@@ -1020,43 +1099,31 @@ object Multimodal {
     * Scale: map-only, per-partition decoder init, one container per
     * row — the same shape that ScaleProbes flat on the DIB path. */
   def mmDecodeMjpeg(s: SparkSession, dir: String): DataFrame =
-    mmDecodeMjpegOn(
-      Tables.documents(s, dir).select(col("doc_id"))
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong))
-      .orderBy("doc_id")
+    mmDecodeMjpegOn(docIds(s, dir)).orderBy("doc_id")
 
   /** Streaming-legal core (no sort; one pure mapPartitions pass). */
-  def mmDecodeMjpegOn(ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  def mmDecodeMjpegOn(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
-    val decoderClass =
-      s.conf.get(MjpegDecoderConfKey, classOf[Jpeg.MjpegAviDecoder].getName)
-    ids
-      .mapPartitions { it =>
-        val dec = instantiate[Codecs.VideoDecoder](decoderClass)
-        it.map { id =>
-          val bw = (2 + id % 2).toInt
-          val bh = (1 + id % 2).toInt
-          val nf = (2 + id % 3).toInt
-          val fps = (8 + (id % 5) * 2).toInt
-          val frames = (0 until nf).map(f =>
-            Jpeg.encodeGray(bw * 8, bh * 8, jpegBlockGray(id, f, bw, bh)))
-          val avi = Jpeg.aviEncodeMjpeg(bw * 8, bh * 8, fps, frames)
-          val vid = dec.decode(avi)
-          var sl = 0L
-          var fi = 0
-          while (fi < vid.frames.length) {
-            val fr = vid.frames(fi)
-            var i = 0
-            while (i < fr.length) { sl += fr(i) & 0xff; i += 3 }
-            fi += 1
-          }
-          // stored-DIB bound: the uncompressed AVI of the same clip
-          (id, vid.width, vid.height, vid.frames.length.toLong, vid.fps,
-            sl, avi.length < Codecs.aviSize(bw * 8, bh * 8, nf))
-        }
-      }.toDF("doc_id", "width", "height", "n_frames", "fps", "sum_luma",
-        "compressed")
+    val bound = mjpegDecoder.resolve(s)
+    ids.mapPartitions { it =>
+      val dec = bound.load()
+      it.map { id =>
+        val bw = (2 + id % 2).toInt
+        val bh = (1 + id % 2).toInt
+        val nf = (2 + id % 3).toInt
+        val fps = (8 + (id % 5) * 2).toInt
+        val frames = (0 until nf).map(f =>
+          Jpeg.encodeGray(bw * 8, bh * 8, jpegBlockGray(id, f, bw, bh)))
+        val avi = Jpeg.aviEncodeMjpeg(bw * 8, bh * 8, fps, frames)
+        val vid = dec.decode(avi)
+        // stored-DIB bound: the uncompressed AVI of the same clip
+        (id, vid.width, vid.height, vid.frames.length.toLong, vid.fps,
+          vid.frames.map(lumaSum).sum,
+          avi.length < Codecs.aviSize(bw * 8, bh * 8, nf))
+      }
+    }.toDF("doc_id", "width", "height", "n_frames", "fps", "sum_luma",
+      "compressed")
   }
 
   /** L5y: SNIFF-AND-DISPATCH over a MIXED-format corpus — the
@@ -1078,17 +1145,13 @@ object Multimodal {
     *
     * Scale: one map-only pass; the dispatch is per-row and the eight
     * decoders amortize per partition like any other binding. */
-  def mmSniffDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    mmSniffDecodeOn(
-      Tables.documents(s, dir).select(col("doc_id")).as[Long])
-      .orderBy("doc_id")
-  }
+  def mmSniffDecode(s: SparkSession, dir: String): DataFrame =
+    mmSniffDecodeOn(docIds(s, dir)).orderBy("doc_id")
 
   /** Streaming-legal core (no sort; sniff + dispatch is one pure
     * mapPartitions pass — proven batch == readStream in
     * StreamingSpec). */
-  def mmSniffDecodeOn(ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  def mmSniffDecodeOn(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
     mmSniffCoreOn(ids).mapPartitions { it =>
@@ -1108,19 +1171,13 @@ object Multimodal {
     * [[mmDecodeQuarantine]]. `sum` is the unified decoded-payload
     * mass: RGB sum for rasters/frames, |PCM| sum for audio. */
   private final class SniffDecoders extends Serializable {
-    private val bmp = new Codecs.BmpDecoder()
-    private val png = new Codecs.PngDecoder()
+    private val images = Map[String, Codecs.ImageDecoder](
+      "bmp" -> new Codecs.BmpDecoder(), "png" -> new Codecs.PngDecoder(),
+      "jpeg" -> new Jpeg.JpegDecoder(), "tiff" -> new Codecs.TiffDecoder())
+    private val videos = Map[String, Codecs.VideoDecoder](
+      "avi" -> new Codecs.AviDecoder(), "mp4" -> new Codecs.Mp4VideoDecoder())
     private val gif = new Codecs.GifLzwDecoder()
     private val wav = new Codecs.WavDecoder()
-    private val avi = new Codecs.AviDecoder()
-    private val mp4 = new Codecs.Mp4VideoDecoder()
-    private val jpeg = new Jpeg.JpegDecoder()
-    private val tiff = new Codecs.TiffDecoder()
-    private def rgbSum(a: Array[Byte]): Long = {
-      var s = 0L; var i = 0
-      while (i < a.length) { s += a(i) & 0xff; i += 1 }
-      s
-    }
     def sum(format: String, bytes: Array[Byte]): Long =
       stats(format, bytes)._1
 
@@ -1129,36 +1186,19 @@ object Multimodal {
       * Audio has no raster: w = h = 0, payload = PCM byte count. */
     def stats(format: String, bytes: Array[Byte]): (Long, Int, Int, Long) =
       format match {
-        case "bmp" =>
-          val im = bmp.decode(bytes)
-          (rgbSum(im.rgb), im.width, im.height, im.rgb.length.toLong)
-        case "png" =>
-          val im = png.decode(bytes)
-          (rgbSum(im.rgb), im.width, im.height, im.rgb.length.toLong)
         case "gif" =>
           val im = gif.decode(bytes)
-          (rgbSum(im.rgb), im.width, im.height, im.rgb.length.toLong)
+          (byteSum(im.rgb), im.width, im.height, im.rgb.length.toLong)
         case "wav" =>
           val au = wav.decode(bytes)
-          var s = 0L; var i = 0
-          while (i < au.samples.length) {
-            s += math.abs(au.samples(i).toLong); i += 1
-          }
-          (s, 0, 0, au.samples.length * 2L)
-        case "avi" =>
-          val v = avi.decode(bytes)
-          (v.frames.map(rgbSum).sum, v.width, v.height,
+          (absStats(au.samples)._1, 0, 0, au.samples.length * 2L)
+        case f if videos.contains(f) =>
+          val v = videos(f).decode(bytes)
+          (v.frames.map(byteSum).sum, v.width, v.height,
             v.frames.map(_.length.toLong).sum)
-        case "mp4" =>
-          val v = mp4.decode(bytes)
-          (v.frames.map(rgbSum).sum, v.width, v.height,
-            v.frames.map(_.length.toLong).sum)
-        case "jpeg" =>
-          val im = jpeg.decode(bytes)
-          (rgbSum(im.rgb), im.width, im.height, im.rgb.length.toLong)
-        case "tiff" =>
-          val im = tiff.decode(bytes)
-          (rgbSum(im.rgb), im.width, im.height, im.rgb.length.toLong)
+        case f if images.contains(f) =>
+          val im = images(f).decode(bytes)
+          (byteSum(im.rgb), im.width, im.height, im.rgb.length.toLong)
         case other => throw new IllegalStateException(
           s"no decoder for sniffed format '$other'")
       }
@@ -1167,18 +1207,10 @@ object Multimodal {
   /** The mixed-format container corpus both sniff ops share: per doc
     * parity one of eight container formats, each built with the SAME
     * deterministic pattern its dedicated mm_decode_* op uses (the
-    * shared-literal rule, eight times over). */
-  private def mmSniffCore(s: SparkSession, dir: String)
-      : org.apache.spark.sql.Dataset[(Long, Array[Byte])] = {
-    import s.implicits._
-    mmSniffCoreOn(Tables.documents(s, dir).select(col("doc_id")).as[Long])
-  }
-
-  /** Streaming-legal form of the mixed-format corpus builder (one
-    * pure mapPartitions over an id source — batch or readStream). */
-  private[multimodal] def mmSniffCoreOn(
-      ids: org.apache.spark.sql.Dataset[Long])
-      : org.apache.spark.sql.Dataset[(Long, Array[Byte])] = {
+    * shared-literal rule, eight times over). Streaming-legal: one
+    * pure mapPartitions over an id source — batch or readStream. */
+  private[multimodal] def mmSniffCoreOn(ids: Dataset[Long])
+      : Dataset[(Long, Array[Byte])] = {
     val s = ids.sparkSession
     import s.implicits._
     ids.mapPartitions(it => it.map(id => (id, sniffContainer(id))))
@@ -1188,144 +1220,81 @@ object Multimodal {
     * GIF, WAV, AVI, MP4, JPEG, TIFF) — the per-id byte builder behind
     * the sniff / quarantine / pipeline corpora. */
   private[multimodal] def sniffContainer(id: Long): Array[Byte] = {
-        def raster(w: Int, h: Int)(px: (Int, Int) => (Long, Long, Long))
-            : Array[Byte] = {
-          val out = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val (r, g, b) = px(x, y)
-              val base = (y * w + x) * 3
-              out(base) = (r % 256).toByte
-              out(base + 1) = (g % 256).toByte
-              out(base + 2) = (b % 256).toByte
-              x += 1
-            }
-            y += 1
-          }
-          out
-        }
-        // dims and counts derive from the CLASS INDEX q = id/8, not id:
-        // within a fixed residue class mod 8, id % k collapses for any
-        // k sharing a factor with 8 (every BMP would be 12 px tall,
-        // every JPEG one block high), while q cycles ALL residues of
-        // every modulus — full dim coverage per format. Pixel patterns
-        // stay id-based (each format's dedicated mm_decode_* literal).
-        val q = id / 8
-          (id % 8) match {
-            case 0 =>
-              val w = (16 + q % 16).toInt; val h = (12 + q % 8).toInt
-              Codecs.bmpEncode(w, h, raster(w, h)((x, y) => (
-                id * 7 + x * 13 + y * 31, id * 11 + x * 17 + y * 5,
-                id * 3 + x * 29 + y * 23)))
-            case 1 =>
-              val w = (16 + q % 16).toInt; val h = (12 + q % 8).toInt
-              val px = raster(w, h)((x, y) => (
-                id * 5 + x * 19 + y * 37, id * 13 + x * 7 + y * 11,
-                id * 17 + x * 23 + y * 3))
-              // half the class ships Adam7 INTERLACED (the progressive
-              // form web encoders emit) — deinterlaced pixels are
-              // identical, so every stat and oracle is unchanged while
-              // the ingest tier exercises the seven-pass path per run
-              // ((q/2)%2, decorrelated from the q%2 dim parity)
-              if ((q / 2) % 2 == 0) Codecs.pngEncode(w, h, px)
-              else Codecs.pngEncodeAdam7(w, h, px)
-            case 2 =>
-              val w = (16 + q % 12).toInt; val h = (10 + q % 6).toInt
-              Codecs.gifEncode(w, h, Array.tabulate(w * h) { p =>
-                val x = p % w; val y = p / w
-                ((id * 3 + x * 7 + (y % 3) * 11) % 256).toByte
-              })
-            case 3 =>
-              val n = (160 + q % 64).toInt
-              Codecs.wavEncode(8000, Array.tabulate(n)(i =>
-                (((id * 37 + i.toLong * i * 13) % 4096) - 2048).toShort))
-            case 4 =>
-              val w = (8 + q % 8).toInt; val h = (6 + q % 5).toInt
-              val nf = (3 + q % 4).toInt
-              Codecs.aviEncode(w, h, 10, (0 until nf).map(f =>
-                raster(w, h)((x, y) => (
-                  id * 7 + f * 41 + x * 13 + y * 31,
-                  id * 11 + f * 19 + x * 17 + y * 5,
-                  id * 3 + f * 53 + x * 29 + y * 23))))
-            case 5 =>
-              val w = (8 + q % 6).toInt; val h = (6 + q % 4).toInt
-              val nf = (3 + q % 4).toInt
-              Codecs.mp4EncodeVideo(600, (20 + (q % 3) * 20).toInt,
-                w, h, (0 until nf).map(f =>
-                  raster(w, h)((x, y) => (
-                    id * 9 + f * 43 + x * 11 + y * 29,
-                    id * 15 + f * 23 + x * 19 + y * 7,
-                    id * 5 + f * 47 + x * 31 + y * 17))),
-                moovLast = q % 2 == 0)
-            case 6 =>
-              // the LOSSY format joins the mixed ingest: baseline
-              // JPEG from the invertible class (the mm_decode_jpeg
-              // pattern verbatim — the shared-literal rule). Half the
-              // class ships as subsampled 4:2:0 COLOR JPEG (the form
-              // real pipelines emit), half as grayscale: the decoded
-              // raster is IDENTICAL either way (R=G=B gray-valued
-              // rasters invert exactly through both paths), so every
-              // downstream stat is format-path-independent and the
-              // oracles are untouched — but the mixed corpus now
-              // exercises the decoder's chroma upsampling on every
-              // sniff/quarantine/pipeline/streaming pass
-              val bw = (2 + q % 3).toInt; val bh = (1 + q % 2).toInt
-              val g = jpegBlockGray(id, 0, bw, bh)
-              if ((q / 2) % 2 == 0) {
-                // the gray half further splits baseline/PROGRESSIVE:
-                // the invertible class decodes byte-identically
-                // through every path, so stats and oracles are
-                // unchanged while the ingest tier exercises the
-                // multi-scan decoder (two-scan spectral split and
-                // six-scan successive approximation) on every pass
-                if ((q / 2) % 4 == 0) Jpeg.encodeGray(bw * 8, bh * 8, g)
-                else if ((q / 2) % 8 == 2)
-                  Jpeg.encodeGrayProgressive(bw * 8, bh * 8, g)
-                else Jpeg.encodeGrayProgressiveSA(bw * 8, bh * 8, g)
-              } else {
-                val rgb = new Array[Byte](g.length * 3)
-                var i = 0
-                while (i < g.length) {
-                  rgb(3 * i) = g(i); rgb(3 * i + 1) = g(i)
-                  rgb(3 * i + 2) = g(i)
-                  i += 1
-                }
-                Jpeg.encodeColor420(bw * 8, bh * 8, rgb)
-              }
-            case _ =>
-              // the FOURTH container architecture joins the mixed
-              // ingest: baseline TIFF with the mm_decode_tiff
-              // gray-blocky pattern verbatim (the shared-literal
-              // rule). Half the class ships PackBits-compressed
-              // strips, half uncompressed — TIFF is lossless, so the
-              // decoded raster (and every downstream stat and oracle)
-              // is identical either way while the ingest tier
-              // exercises BOTH strip paths per run
-              val w = (16 + q % 16).toInt; val h = (12 + q % 8).toInt
-              val px = new Array[Byte](w * h * 3)
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  val v = (2 * ((id * 5 + (x / 8) * 19 + (y / 8) * 37)
-                    % 96) + 32).toByte
-                  val base = (y * w + x) * 3
-                  px(base) = v; px(base + 1) = v; px(base + 2) = v
-                  x += 1
-                }
-                y += 1
-              }
-              // the TIFF slice cycles all three strip compressions
-              // (stats are decode-side, so the split is oracle-
-              // neutral like the JPEG progressive one above)
-              if ((q / 2) % 2 == 0)
-                Codecs.tiffEncode(w, h, px, packbits = true)
-              else if ((q / 2) % 4 == 1)
-                Codecs.tiffEncodeLzw(w, h, px)
-              else Codecs.tiffEncode(w, h, px, packbits = false)
-          }
+    // dims and counts derive from the CLASS INDEX q = id/8, not id:
+    // within a fixed residue class mod 8, id % k collapses for any
+    // k sharing a factor with 8 (every BMP would be 12 px tall,
+    // every JPEG one block high), while q cycles ALL residues of
+    // every modulus — full dim coverage per format. Pixel patterns
+    // stay id-based (each format's dedicated mm_decode_* literal).
+    val q = id / 8
+    (id % 8) match {
+      case 0 =>
+        val (w, h) = stillDims(q)
+        Codecs.bmpEncode(w, h, raster(ClipRgb, id, 0, w, h))
+      case 1 =>
+        val (w, h) = stillDims(q)
+        val px = raster(PngRgb, id, 0, w, h)
+        // half the class ships Adam7 INTERLACED (the progressive
+        // form web encoders emit) — deinterlaced pixels are
+        // identical, so every stat and oracle is unchanged while
+        // the ingest tier exercises the seven-pass path per run
+        // ((q/2)%2, decorrelated from the q%2 dim parity)
+        if ((q / 2) % 2 == 0) Codecs.pngEncode(w, h, px)
+        else Codecs.pngEncodeAdam7(w, h, px)
+      case 2 =>
+        val (w, h) = gifDims(q)
+        Codecs.gifEncode(w, h, raster(GifIndex, id, 0, w, h))
+      case 3 =>
+        Codecs.wavEncode(8000, WavPcm.pcm(id, (160 + q % 64).toInt))
+      case 4 =>
+        val (w, h, nf) = aviClipDims(q)
+        Codecs.aviEncode(w, h, 10, clip(ClipRgb, id, nf, w, h))
+      case 5 =>
+        val (w, h, nf) = mp4ClipDims(q)
+        Codecs.mp4EncodeVideo(600, (20 + (q % 3) * 20).toInt,
+          w, h, clip(Mp4Rgb, id, nf, w, h), moovLast = q % 2 == 0)
+      case 6 =>
+        // the LOSSY format joins the mixed ingest: baseline
+        // JPEG from the invertible class (the mm_decode_jpeg
+        // pattern verbatim — the shared-literal rule). Half the
+        // class ships as subsampled 4:2:0 COLOR JPEG (the form
+        // real pipelines emit), half as grayscale: the decoded
+        // raster is IDENTICAL either way (R=G=B gray-valued
+        // rasters invert exactly through both paths), so every
+        // downstream stat is format-path-independent and the
+        // oracles are untouched — but the mixed corpus now
+        // exercises the decoder's chroma upsampling on every
+        // sniff/quarantine/pipeline/streaming pass
+        val bw = (2 + q % 3).toInt; val bh = (1 + q % 2).toInt
+        val g = jpegBlockGray(id, 0, bw, bh)
+        if ((q / 2) % 2 == 0) {
+          // the gray half further splits baseline/PROGRESSIVE:
+          // the invertible class decodes byte-identically
+          // through every path, so stats and oracles are
+          // unchanged while the ingest tier exercises the
+          // multi-scan decoder (two-scan spectral split and
+          // six-scan successive approximation) on every pass
+          if ((q / 2) % 4 == 0) Jpeg.encodeGray(bw * 8, bh * 8, g)
+          else if ((q / 2) % 8 == 2)
+            Jpeg.encodeGrayProgressive(bw * 8, bh * 8, g)
+          else Jpeg.encodeGrayProgressiveSA(bw * 8, bh * 8, g)
+        } else Jpeg.encodeColor420(bw * 8, bh * 8, grayToRgb(g))
+      case _ =>
+        // the FOURTH container architecture joins the mixed
+        // ingest: baseline TIFF with the mm_decode_tiff
+        // gray-blocky pattern verbatim (the shared-literal
+        // rule). The slice cycles all three strip compressions —
+        // TIFF is lossless, so the decoded raster (and every
+        // downstream stat and oracle) is identical either way
+        // while the ingest tier exercises every strip path per run
+        val (w, h) = stillDims(q)
+        val px = grayToRgb(raster(BlockGray, id, 0, w, h))
+        if ((q / 2) % 2 == 0)
+          Codecs.tiffEncode(w, h, px, packbits = true)
+        else if ((q / 2) % 4 == 1)
+          Codecs.tiffEncodeLzw(w, h, px)
+        else Codecs.tiffEncode(w, h, px, packbits = false)
+    }
   }
 
   /** L5z: the reference's ERROR CHANNEL on real bytes — its
@@ -1344,17 +1313,9 @@ object Multimodal {
     *
     * Scale: one map-only pass; quarantine is a column, not a
     * second job. */
-  def mmDecodeQuarantine(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    mmDecodeQuarantineOn(
-      Tables.documents(s, dir).select(col("doc_id")).as[Long])
-      .orderBy("doc_id")
-  }
+  def mmDecodeQuarantine(s: SparkSession, dir: String): DataFrame =
+    mmDecodeQuarantineOn(docIds(s, dir)).orderBy("doc_id")
 
-  /** Streaming-legal core: the error channel is a COLUMN of one pure
-    * map pass, so it runs unchanged under readStream/foreachBatch —
-    * the reference's quarantine catalog in streaming spelling
-    * (proven in StreamingSpec). */
   /** The deterministic corruption classes shared by the quarantine op
     * and the pipeline capstone: a slice of every format class gets its
     * magic bytes flipped, a slice of the PNGs one IDAT byte flipped
@@ -1388,8 +1349,11 @@ object Multimodal {
     } else bytes0
   }
 
-  def mmDecodeQuarantineOn(
-      ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  /** Streaming-legal core: the error channel is a COLUMN of one pure
+    * map pass, so it runs unchanged under readStream/foreachBatch —
+    * the reference's quarantine catalog in streaming spelling
+    * (proven in StreamingSpec). */
+  def mmDecodeQuarantineOn(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
     mmSniffCoreOn(ids).mapPartitions { it =>
@@ -1438,18 +1402,14 @@ object Multimodal {
     * prefix-sum spelling in Curation.scala is the drop-in at real
     * format counts); the funnel aggregation is 9 rows (8 formats +
     * the unknown channel). */
-  def mmPipelineFull(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    mmPipelineStagesOn(mmPipelineDecodedOn(
-      Tables.documents(s, dir).select(col("doc_id")).as[Long]))
-  }
+  def mmPipelineFull(s: SparkSession, dir: String): DataFrame =
+    mmPipelineStagesOn(mmPipelineDecodedOn(docIds(s, dir)))
 
   /** The capstone's decode pass on an arbitrary id source — split out
     * so the planted-skew spec can feed a PATHOLOGICAL id multiset
     * (90% one format class, high corruption-class density) through
     * the real decode path. */
-  private[graft] def mmPipelineDecodedOn(
-      ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  private[graft] def mmPipelineDecodedOn(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
     ids.mapPartitions { it =>
@@ -1547,47 +1507,15 @@ object Multimodal {
     * (the shared-literal rule — one pattern, one oracle CTE family).
     *
     * Scale: one map-only pass, two per-partition decoder inits. */
-  def mmTranscodePng(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val bmpDecClass =
-      s.conf.get(ImageDecoderConfKey, classOf[Codecs.BmpDecoder].getName)
-    val pngDecClass =
-      s.conf.get(PngDecoderConfKey, classOf[Codecs.PngDecoder].getName)
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        val bd = instantiate[Codecs.ImageDecoder](bmpDecClass)
-        val pd = instantiate[Codecs.ImageDecoder](pngDecClass)
-        it.map { id =>
-          val w = (16 + id % 16).toInt
-          val h = (12 + id % 8).toInt
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val base = (y * w + x) * 3
-              px(base) = ((id * 7 + x * 13 + y * 31) % 256).toByte
-              px(base + 1) = ((id * 11 + x * 17 + y * 5) % 256).toByte
-              px(base + 2) = ((id * 3 + x * 29 + y * 23) % 256).toByte
-              x += 1
-            }
-            y += 1
-          }
-          val bmp = Codecs.bmpEncode(w, h, px)
-          val im1 = bd.decode(bmp)
-          val png = Codecs.pngEncode(im1.width, im1.height, im1.rgb)
-          val im2 = pd.decode(png)
-          val lossless = im2.width == w && im2.height == h &&
-            java.util.Arrays.equals(im2.rgb, px)
-          var sum = 0L
-          var i = 0
-          while (i < im2.rgb.length) { sum += im2.rgb(i) & 0xff; i += 1 }
-          (id, bmp.length.toLong, im2.width, im2.height, sum,
-            lossless, png.length < bmp.length)
-        }
-      }.toDF("doc_id", "bmp_bytes", "width", "height", "sum_rgb",
-        "lossless_ok", "png_smaller")
-      .orderBy("doc_id")
+  def mmTranscodePng(s: SparkSession, dir: String): DataFrame =
+    bmpTranscode(s, dir, stillRaster, Codecs.pngEncode(_, _, _), pngDecoder,
+      smallerThanBmp)
+      .withColumnRenamed("flag", "png_smaller").orderBy("doc_id")
+
+  /** The lossless transcodes' source: the [[mmDecodeImage]] still. */
+  private def stillRaster(id: Long): (Int, Int, Array[Byte]) = {
+    val (w, h) = stillDims(id)
+    (w, h, raster(ClipRgb, id, 0, w, h))
   }
 
   /** L5t2: [[mmTranscodePng]]'s INTERLACED twin — BMP in, Adam7
@@ -1598,48 +1526,10 @@ object Multimodal {
     * `png_smaller` proves even the interlaced layout beats the
     * uncompressed container on every class. A separate catalog key
     * for the same reason as [[mmTranscodeJpeg420]]. */
-  def mmTranscodePngAdam7(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val bmpDecClass =
-      s.conf.get(ImageDecoderConfKey, classOf[Codecs.BmpDecoder].getName)
-    val pngDecClass =
-      s.conf.get(PngDecoderConfKey, classOf[Codecs.PngDecoder].getName)
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        val bd = instantiate[Codecs.ImageDecoder](bmpDecClass)
-        val pd = instantiate[Codecs.ImageDecoder](pngDecClass)
-        it.map { id =>
-          val w = (16 + id % 16).toInt
-          val h = (12 + id % 8).toInt
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val base = (y * w + x) * 3
-              px(base) = ((id * 7 + x * 13 + y * 31) % 256).toByte
-              px(base + 1) = ((id * 11 + x * 17 + y * 5) % 256).toByte
-              px(base + 2) = ((id * 3 + x * 29 + y * 23) % 256).toByte
-              x += 1
-            }
-            y += 1
-          }
-          val bmp = Codecs.bmpEncode(w, h, px)
-          val im1 = bd.decode(bmp)
-          val png = Codecs.pngEncodeAdam7(im1.width, im1.height, im1.rgb)
-          val im2 = pd.decode(png)
-          val lossless = im2.width == w && im2.height == h &&
-            java.util.Arrays.equals(im2.rgb, px)
-          var sum = 0L
-          var i = 0
-          while (i < im2.rgb.length) { sum += im2.rgb(i) & 0xff; i += 1 }
-          (id, bmp.length.toLong, im2.width, im2.height, sum,
-            lossless, png.length < bmp.length)
-        }
-      }.toDF("doc_id", "bmp_bytes", "width", "height", "sum_rgb",
-        "lossless_ok", "png_smaller")
-      .orderBy("doc_id")
-  }
+  def mmTranscodePngAdam7(s: SparkSession, dir: String): DataFrame =
+    bmpTranscode(s, dir, stillRaster, Codecs.pngEncodeAdam7(_, _, _),
+      pngDecoder, smallerThanBmp)
+      .withColumnRenamed("flag", "png_smaller").orderBy("doc_id")
 
   /** L5t3: the PALETTE transcode — BMP in, GIF87a out, both ends
     * parsed. GIF is palette-indexed, so this conversion is color
@@ -1662,14 +1552,12 @@ object Multimodal {
     * Scale: one map-only pass, two per-partition decoder inits. */
   def mmTranscodeGif(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val bmpClass =
-      s.conf.get(ImageDecoderConfKey, classOf[Codecs.BmpDecoder].getName)
-    val gifClass =
-      s.conf.get(GifDecoderConfKey, classOf[Codecs.GifLzwDecoder].getName)
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
+    val bmpBound = imageDecoder.resolve(s)
+    val gifBound = gifDecoder.resolve(s)
+    docIds(s, dir)
       .mapPartitions { it =>
-        val bd = instantiate[Codecs.ImageDecoder](bmpClass)
-        val gd = instantiate[Codecs.GifDecoder](gifClass)
+        val bd = bmpBound.load()
+        val gd = gifBound.load()
         // the palette's red channel is a bijection (37 odd): r -> index
         val idxOfR = {
           val m = new Array[Byte](256)
@@ -1681,29 +1569,21 @@ object Multimodal {
           m
         }
         it.map { id =>
-          val w = (16 + id % 12).toInt
-          val h = (10 + id % 6).toInt
-          val idx = new Array[Byte](w * h)
+          val (w, h) = gifDims(id)
+          val idx = raster(GifIndex, id, 0, w, h)
           val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val v = ((id * 3 + x * 7 + (y % 3) * 11) % 256).toInt
-              idx(y * w + x) = v.toByte
-              val (r, g, b) = Codecs.gifPalette(v)
-              val base = (y * w + x) * 3
-              px(base) = r.toByte; px(base + 1) = g.toByte
-              px(base + 2) = b.toByte
-              x += 1
-            }
-            y += 1
+          var i = 0
+          while (i < idx.length) {
+            val (r, g, b) = Codecs.gifPalette(idx(i) & 0xff)
+            px(3 * i) = r.toByte; px(3 * i + 1) = g.toByte
+            px(3 * i + 2) = b.toByte
+            i += 1
           }
           val bmp = Codecs.bmpEncode(w, h, px)
           val im1 = bd.decode(bmp)
           // palettize: exact inverse on this corpus, fail-fast contract
           val rec = new Array[Byte](w * h)
-          var i = 0
+          i = 0
           while (i < rec.length) {
             val r = im1.rgb(3 * i) & 0xff
             val ix = idxOfR(r) & 0xff
@@ -1716,17 +1596,13 @@ object Multimodal {
           }
           val gif = Codecs.gifEncode(w, h, rec, interlaced = id % 2 == 1)
           val im2 = gd.decode(gif)
-          var sum = 0L
-          i = 0
-          while (i < im2.rgb.length) { sum += im2.rgb(i) & 0xff; i += 1 }
           // the mm_decode_gif stored-equivalent bound: the LZW stream
           // must beat raw index storage (the 768-byte global palette
           // makes a BMP size comparison meaningless at these rasters)
-          val bound = 794 + w * h + (w * h + 254) / 255
-          (id, bmp.length.toLong, im2.width, im2.height, sum,
+          (id, bmp.length.toLong, im2.width, im2.height, byteSum(im2.rgb),
             java.util.Arrays.equals(im2.indices, idx) &&
               java.util.Arrays.equals(im2.rgb, px),
-            gif.length < bound)
+            gif.length < gifStoredBound(w, h))
         }
       }.toDF("doc_id", "bmp_bytes", "width", "height", "sum_rgb",
         "lossless_ok", "compressed")
@@ -1746,63 +1622,39 @@ object Multimodal {
     * (theorem spec over the pattern period). ImageIO's TIFF plugin
     * is the conformance reference (both directions, all three
     * compressions, MultimodalSpec). */
-  def mmDecodeTiff(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    mmDecodeTiffOn(
-      Tables.documents(s, dir).select(col("doc_id")).as[Long])
-      .orderBy("doc_id")
-  }
+  def mmDecodeTiff(s: SparkSession, dir: String): DataFrame =
+    mmDecodeTiffOn(docIds(s, dir)).orderBy("doc_id")
 
   /** Streaming-legal core (no sort; the IFD walk + strip reads are
     * one pure mapPartitions pass — batch == readStream proven in
     * StreamingSpec, same contract as the sniff/JPEG/M-JPEG/G.711
     * cores). */
-  def mmDecodeTiffOn(
-      ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  def mmDecodeTiffOn(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
-    val decoderClass = s.conf.get(TiffDecoderConfKey,
-      classOf[Codecs.TiffDecoder].getName)
-    ids
-      .mapPartitions { it =>
-        val dec = instantiate[Codecs.ImageDecoder](decoderClass)
-        it.map { id =>
-          val w = (16 + id % 16).toInt
-          val h = (12 + id % 8).toInt
-          val mode = (id % 3).toInt // 0 stored, 1 PackBits, 2 LZW
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val v =
-                (2 * ((id * 5 + (x / 8) * 19 + (y / 8) * 37) % 96) + 32)
-                  .toByte
-              val base = (y * w + x) * 3
-              px(base) = v; px(base + 1) = v; px(base + 2) = v
-              x += 1
-            }
-            y += 1
-          }
-          val tiff = mode match {
-            case 0 => Codecs.tiffEncode(w, h, px, packbits = false)
-            case 1 => Codecs.tiffEncode(w, h, px, packbits = true)
-            case _ => Codecs.tiffEncodeLzw(w, h, px)
-          }
-          val im = dec.decode(tiff)
-          var sum = 0L
-          var i = 0
-          while (i < im.rgb.length) { sum += im.rgb(i) & 0xff; i += 1 }
-          val nStrips = (h + Codecs.TiffRowsPerStrip - 1) /
-            Codecs.TiffRowsPerStrip
-          val plainSize = 140 + 3 * w * h + 8 * nStrips
-          (id, im.width, im.height,
-            Seq("none", "packbits", "lzw")(mode), sum,
-            if (mode == 0) tiff.length == plainSize
-            else tiff.length < plainSize)
+    val bound = tiffDecoder.resolve(s)
+    ids.mapPartitions { it =>
+      val dec = bound.load()
+      it.map { id =>
+        val (w, h) = stillDims(id)
+        val mode = (id % 3).toInt // 0 stored, 1 PackBits, 2 LZW
+        val px = grayToRgb(raster(BlockGray, id, 0, w, h))
+        val tiff = mode match {
+          case 0 => Codecs.tiffEncode(w, h, px, packbits = false)
+          case 1 => Codecs.tiffEncode(w, h, px, packbits = true)
+          case _ => Codecs.tiffEncodeLzw(w, h, px)
         }
-      }.toDF("doc_id", "width", "height", "compression", "sum_rgb",
-        "size_ok")
+        val im = dec.decode(tiff)
+        val nStrips = (h + Codecs.TiffRowsPerStrip - 1) /
+          Codecs.TiffRowsPerStrip
+        val plainSize = 140 + 3 * w * h + 8 * nStrips
+        (id, im.width, im.height,
+          Seq("none", "packbits", "lzw")(mode), byteSum(im.rgb),
+          if (mode == 0) tiff.length == plainSize
+          else tiff.length < plainSize)
+      }
+    }.toDF("doc_id", "width", "height", "compression", "sum_rgb",
+      "size_ok")
   }
 
   /** L5t5: the TIFF transcode — BMP in, PackBits TIFF out, both ends
@@ -1812,47 +1664,10 @@ object Multimodal {
     * the original raster; PackBits on non-run content may expand, so
     * there is deliberately no size flag here (the size theorems live
     * in mm_decode_tiff's run-heavy corpus). */
-  def mmTranscodeTiff(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val bmpClass =
-      s.conf.get(ImageDecoderConfKey, classOf[Codecs.BmpDecoder].getName)
-    val tiffClass = s.conf.get(TiffDecoderConfKey,
-      classOf[Codecs.TiffDecoder].getName)
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        val bd = instantiate[Codecs.ImageDecoder](bmpClass)
-        val td = instantiate[Codecs.ImageDecoder](tiffClass)
-        it.map { id =>
-          val w = (16 + id % 16).toInt
-          val h = (12 + id % 8).toInt
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val base = (y * w + x) * 3
-              px(base) = ((id * 7 + x * 13 + y * 31) % 256).toByte
-              px(base + 1) = ((id * 11 + x * 17 + y * 5) % 256).toByte
-              px(base + 2) = ((id * 3 + x * 29 + y * 23) % 256).toByte
-              x += 1
-            }
-            y += 1
-          }
-          val bmp = Codecs.bmpEncode(w, h, px)
-          val im1 = bd.decode(bmp)
-          val tiff = Codecs.tiffEncode(im1.width, im1.height, im1.rgb,
-            packbits = true)
-          val im2 = td.decode(tiff)
-          var sum = 0L
-          var i = 0
-          while (i < im2.rgb.length) { sum += im2.rgb(i) & 0xff; i += 1 }
-          (id, bmp.length.toLong, im2.width, im2.height, sum,
-            java.util.Arrays.equals(im2.rgb, px))
-        }
-      }.toDF("doc_id", "bmp_bytes", "width", "height", "sum_rgb",
-        "lossless_ok")
-      .orderBy("doc_id")
-  }
+  def mmTranscodeTiff(s: SparkSession, dir: String): DataFrame =
+    bmpTranscode(s, dir, stillRaster,
+      Codecs.tiffEncode(_, _, _, packbits = true), tiffDecoder,
+      smallerThanBmp).drop("flag").orderBy("doc_id")
 
   /** L5t6: the LZW TIFF transcode — BMP in, LZW TIFF out (TIFF 6.0
     * §13: MSB-first variable-width codes with the spec's early
@@ -1861,47 +1676,12 @@ object Multimodal {
     * `lzw_tag` is the checked container column — a direct IFD walk
     * of the emitted bytes proves Compression(259) == 5 (a silent
     * fallback to stored/PackBits could not pass it). */
-  def mmTranscodeTiffLzw(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val bmpClass =
-      s.conf.get(ImageDecoderConfKey, classOf[Codecs.BmpDecoder].getName)
-    val tiffClass = s.conf.get(TiffDecoderConfKey,
-      classOf[Codecs.TiffDecoder].getName)
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        val bd = instantiate[Codecs.ImageDecoder](bmpClass)
-        val td = instantiate[Codecs.ImageDecoder](tiffClass)
-        it.map { id =>
-          val w = (16 + id % 16).toInt
-          val h = (12 + id % 8).toInt
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val base = (y * w + x) * 3
-              px(base) = ((id * 7 + x * 13 + y * 31) % 256).toByte
-              px(base + 1) = ((id * 11 + x * 17 + y * 5) % 256).toByte
-              px(base + 2) = ((id * 3 + x * 29 + y * 23) % 256).toByte
-              x += 1
-            }
-            y += 1
-          }
-          val bmp = Codecs.bmpEncode(w, h, px)
-          val im1 = bd.decode(bmp)
-          val tiff = Codecs.tiffEncodeLzw(im1.width, im1.height, im1.rgb)
-          val im2 = td.decode(tiff)
-          var sum = 0L
-          var i = 0
-          while (i < im2.rgb.length) { sum += im2.rgb(i) & 0xff; i += 1 }
-          (id, bmp.length.toLong, im2.width, im2.height, sum,
-            tiffCompressionTag(tiff) == 5,
-            java.util.Arrays.equals(im2.rgb, px))
-        }
-      }.toDF("doc_id", "bmp_bytes", "width", "height", "sum_rgb",
-        "lzw_tag", "lossless_ok")
+  def mmTranscodeTiffLzw(s: SparkSession, dir: String): DataFrame =
+    bmpTranscode(s, dir, stillRaster, Codecs.tiffEncodeLzw(_, _, _),
+      tiffDecoder, (_, tiff) => tiffCompressionTag(tiff) == 5)
+      .select(col("doc_id"), col("bmp_bytes"), col("width"), col("height"),
+        col("sum_rgb"), col("flag").as("lzw_tag"), col("lossless_ok"))
       .orderBy("doc_id")
-  }
 
   /** Direct little-endian IFD walk for Compression(259) — the
     * checked-column helper behind mm_transcode_tiff_lzw (reads only
@@ -1932,38 +1712,21 @@ object Multimodal {
     *
     * Scale: one map-only pass, per-partition decoder init. */
   def mmDecodeG711(s: SparkSession, dir: String): DataFrame =
-    mmDecodeG711On(
-      Tables.documents(s, dir).select(col("doc_id"))
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong))
-      .orderBy("doc_id")
+    mmDecodeG711On(docIds(s, dir)).orderBy("doc_id")
 
   /** Streaming-legal core (no sort; one pure mapPartitions pass). */
-  def mmDecodeG711On(ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  def mmDecodeG711On(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
-    val decoderClass =
-      s.conf.get(AudioDecoderConfKey, classOf[Codecs.WavDecoder].getName)
+    val bound = audioDecoder.resolve(s)
     ids.mapPartitions { it =>
-      val dec = instantiate[Codecs.AudioDecoder](decoderClass)
+      val dec = bound.load()
       it.map { id =>
-        val n = (160 + id % 64).toInt
         val mu = id % 2 == 0
-        val codes = new Array[Byte](n)
-        var i = 0
-        while (i < n) {
-          codes(i) = ((id * 29 + i.toLong * i * 7) % 256).toByte
-          i += 1
-        }
-        val wav = Codecs.wavEncodeG711(8000, codes, mu)
+        val wav = Codecs.wavEncodeG711(8000,
+          G711Codes.bytes(id, (160 + id % 64).toInt), mu)
         val au = dec.decode(wav)
-        var sumAbs = 0L; var maxAbs = 0L
-        i = 0
-        while (i < au.samples.length) {
-          val a = math.abs(au.samples(i).toLong)
-          sumAbs += a
-          if (a > maxAbs) maxAbs = a
-          i += 1
-        }
+        val (sumAbs, maxAbs) = absStats(au.samples)
         (id, wav.length.toLong, if (mu) "mulaw" else "alaw",
           au.sampleRate, au.samples.length.toLong, sumAbs, maxAbs)
       }
@@ -1985,42 +1748,24 @@ object Multimodal {
     * Scale: one map-only pass, per-partition decoder init. */
   def mmTranscodeG711(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val decoderClass =
-      s.conf.get(AudioDecoderConfKey, classOf[Codecs.WavDecoder].getName)
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
+    val bound = audioDecoder.resolve(s)
+    docIds(s, dir)
       .mapPartitions { it =>
-        val dec = instantiate[Codecs.AudioDecoder](decoderClass)
+        val dec = bound.load()
         it.map { id =>
-          val n = (160 + id % 64).toInt
           val mu = id % 2 == 0
-          val samples = new Array[Short](n)
-          var i = 0
-          while (i < n) {
-            val c = ((id * 29 + i.toLong * i * 7) % 256).toByte
-            samples(i) =
-              if (mu) Codecs.mulawDecode(c) else Codecs.alawDecode(c)
-            i += 1
-          }
+          val samples = G711Codes.bytes(id, (160 + id % 64).toInt).map(c =>
+            if (mu) Codecs.mulawDecode(c) else Codecs.alawDecode(c))
           val pcm = Codecs.wavEncode(8000, samples)
           val au1 = dec.decode(pcm)
-          val codes = new Array[Byte](au1.samples.length)
-          i = 0
-          while (i < codes.length) {
-            codes(i) =
-              if (mu) Codecs.mulawEncode(au1.samples(i))
-              else Codecs.alawEncode(au1.samples(i))
-            i += 1
-          }
+          val codes = au1.samples.map(v =>
+            if (mu) Codecs.mulawEncode(v) else Codecs.alawEncode(v))
           val g711 = Codecs.wavEncodeG711(8000, codes, mu)
           val au2 = dec.decode(g711)
-          var sumAbs = 0L
-          i = 0
-          while (i < au2.samples.length) {
-            sumAbs += math.abs(au2.samples(i).toLong); i += 1
-          }
           (id, pcm.length.toLong, g711.length.toLong,
             if (mu) "mulaw" else "alaw", au2.samples.length.toLong,
-            sumAbs, java.util.Arrays.equals(au2.samples, samples),
+            absStats(au2.samples)._1,
+            java.util.Arrays.equals(au2.samples, samples),
             g711.length < pcm.length)
         }
       }.toDF("doc_id", "pcm_bytes", "g711_bytes", "law", "n_samples",
@@ -2035,36 +1780,18 @@ object Multimodal {
     * pure-JVM chunk-walking [[Codecs.WavDecoder]]); the emitted
     * sample statistics come from the DECODED samples, so endianness /
     * chunk-offset / sign bugs hash-mismatch against the oracle's
-    * arithmetic replay. */
+    * arithmetic replay. Encode and decode are one map-only pass with
+    * per-partition decoder init. */
   def mmDecodeAudio(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val decoderClass =
-      s.conf.get(AudioDecoderConfKey, classOf[Codecs.WavDecoder].getName)
-    val encoded = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val n = (160 + id % 64).toInt
-          val samples = new Array[Short](n)
-          var i = 0
-          while (i < n) {
-            samples(i) = (((id * 37 + i.toLong * i * 13) % 4096) - 2048).toShort
-            i += 1
-          }
-          (id, Codecs.wavEncode(8000, samples))
-        }
-      }.toDF("doc_id", "wav")
-    encoded.as[(Long, Array[Byte])].mapPartitions { it =>
-      val dec = instantiate[Codecs.AudioDecoder](decoderClass)
-      it.map { case (id, bytes) =>
+    val bound = audioDecoder.resolve(s)
+    docIds(s, dir).mapPartitions { it =>
+      val dec = bound.load()
+      it.map { id =>
+        val bytes =
+          Codecs.wavEncode(8000, WavPcm.pcm(id, (160 + id % 64).toInt))
         val au = dec.decode(bytes)
-        var sumAbs = 0L; var maxAbs = 0L
-        var i = 0
-        while (i < au.samples.length) {
-          val a = math.abs(au.samples(i).toLong)
-          sumAbs += a
-          if (a > maxAbs) maxAbs = a
-          i += 1
-        }
+        val (sumAbs, maxAbs) = absStats(au.samples)
         (id, bytes.length.toLong, au.sampleRate,
           au.samples.length.toLong, sumAbs, maxAbs)
       }
@@ -2072,6 +1799,31 @@ object Multimodal {
       "sum_abs", "max_abs")
       .orderBy("doc_id")
   }
+
+  /** The deterministic multi-frame AVI clip per document shared by
+    * [[mmDecodeVideo]] and [[mmArgmaxTrack]] (one pattern, one
+    * oracle CTE chain — the shared-literal rule). */
+  private def videoClips(s: SparkSession, dir: String)
+      : Dataset[(Long, Array[Byte])] =
+    videoClipsOn(docIds(s, dir))
+
+  /** The clips of any id relation — pure mapPartitions, so it is
+    * STREAMING-LEGAL (a readStream of ids encodes the same clips;
+    * StreamingSpec proves decode-stats equivalence batch vs stream). */
+  private def videoClipsOn(ids: Dataset[Long])
+      : Dataset[(Long, Array[Byte])] = {
+    val s = ids.sparkSession
+    import s.implicits._
+    ids.mapPartitions(_.map { id =>
+      val (w, h, nf) = aviClipDims(id)
+      (id, Codecs.aviEncode(w, h, 10, clip(ClipRgb, id, nf, w, h)))
+    })
+  }
+
+  /** The AVI clips' dims and frame count: w in [8, 15], h in [6, 10],
+    * 3-6 frames. */
+  private def aviClipDims(id: Long): (Int, Int, Int) =
+    ((8 + id % 8).toInt, (6 + id % 5).toInt, (3 + id % 4).toInt)
 
   /** L5k: REAL video container decode — the modality the reference
     * actually exists to process (raw_to_samples.py:173-196 is a
@@ -2090,7 +1842,8 @@ object Multimodal {
     * header, stride, row-order, chunk-offset, or timing bug
     * hash-mismatches the oracle's arithmetic replay (which also
     * recomputes the closed-form container size [[Codecs.aviSize]]).
-    * MP4 stays the documented surrogate boundary (no media libs).
+    * The MP4 twin is [[mmMp4DecodeFrames]]; compressed codec
+    * payloads (H.264 etc.) stay the documented surrogate boundary.
     *
     * Dimensions stay small (w<=15, h<=10, nf<=6) so the oracle's
     * explicit frame-pixel relation stays bounded.
@@ -2098,89 +1851,42 @@ object Multimodal {
     * Scale: encode+decode are map-only over the documents scan — no
     * shuffle before the final orderBy; at 100 TB clips ride their
     * source partitioning and decoders amortize per partition. */
-  /** The deterministic multi-frame AVI clip per document shared by
-    * [[mmDecodeVideo]] and [[mmArgmaxTrack]] (one pattern, one
-    * oracle CTE chain — the shared-literal rule). */
-  private def videoClips(s: SparkSession, dir: String): DataFrame =
-    videoClipsOn(Tables.documents(s, dir).select(col("doc_id"))
-      .as[Long](org.apache.spark.sql.Encoders.scalaLong))
-
-  /** Clip builder over any id relation — pure mapPartitions, so it is
-    * STREAMING-LEGAL (a readStream of ids encodes the same clips;
-    * StreamingSpec proves decode-stats equivalence batch vs stream). */
-  private def videoClipsOn(
-      ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
-    val s = ids.sparkSession
-    import s.implicits._
-    ids
-      .mapPartitions { it =>
-        it.map { id =>
-          val w = (8 + id % 8).toInt
-          val h = (6 + id % 5).toInt
-          val nf = (3 + id % 4).toInt
-          val frames = (0 until nf).map { f =>
-            val px = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val base = (y * w + x) * 3
-                px(base) =
-                  ((id * 7 + f * 41 + x * 13 + y * 31) % 256).toByte
-                px(base + 1) =
-                  ((id * 11 + f * 19 + x * 17 + y * 5) % 256).toByte
-                px(base + 2) =
-                  ((id * 3 + f * 53 + x * 29 + y * 23) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            px
-          }
-          (id, Codecs.aviEncode(w, h, 10, frames))
-        }
-      }.toDF("doc_id", "avi")
-  }
-
   def mmDecodeVideo(s: SparkSession, dir: String): DataFrame =
-    mmDecodeVideoOn(
-      Tables.documents(s, dir).select(col("doc_id"))
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong))
-      .orderBy("doc_id")
+    mmDecodeVideoOn(docIds(s, dir)).orderBy("doc_id")
 
   /** Streaming-legal core (no sort; encode + decode are both pure
     * mapPartitions passes): works identically on a batch id relation
     * and a readStream of ids — the codec boundary composes with
     * Structured Streaming unchanged. */
-  def mmDecodeVideoOn(
-      ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  def mmDecodeVideoOn(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
-    val decoderClass =
-      s.conf.get(VideoDecoderConfKey, classOf[Codecs.AviDecoder].getName)
-    val encoded = videoClipsOn(ids)
-    encoded.as[(Long, Array[Byte])].mapPartitions { it =>
-      val dec = instantiate[Codecs.VideoDecoder](decoderClass)
-      it.map { case (id, bytes) =>
-        val v = dec.decode(bytes)
-        val denom = v.width.toLong * v.height * 3
-        var sumRgb = 0L
-        var nCuts = 0L
-        var prevM = -1L
-        v.frames.foreach { f =>
-          var fs = 0L
-          var i = 0
-          while (i < f.length) { fs += f(i) & 0xff; i += 1 }
-          sumRgb += fs
-          val m = fs * 1000 / denom
-          if (prevM >= 0 && math.abs(m - prevM) >= 20000) nCuts += 1
-          prevM = m
-        }
-        (id, bytes.length.toLong, v.width, v.height,
-          v.frames.length.toLong, v.fps, sumRgb, nCuts)
-      }
+    val bound = videoDecoder.resolve(s)
+    videoClipsOn(ids).mapPartitions { it =>
+      val dec = bound.load()
+      it.map { case (id, bytes) => videoRow(id, bytes, dec.decode(bytes)) }
     }.toDF("doc_id", "n_bytes", "width", "height", "n_frames", "fps",
       "sum_rgb", "n_cuts")
+  }
+
+  /** A decoded clip's stats row: (doc_id, n_bytes, width, height,
+    * n_frames, fps, sum_rgb, n_cuts), n_cuts counting inter-frame
+    * mean-value jumps >= 20000 milli. */
+  private def videoRow(id: Long, bytes: Array[Byte], v: Codecs.DecodedVideo)
+      : (Long, Long, Int, Int, Long, Int, Long, Long) = {
+    val denom = v.width.toLong * v.height * 3
+    var sumRgb = 0L
+    var nCuts = 0L
+    var prevM = -1L
+    v.frames.foreach { f =>
+      val fs = byteSum(f)
+      sumRgb += fs
+      val m = fs * 1000 / denom
+      if (prevM >= 0 && math.abs(m - prevM) >= 20000) nCuts += 1
+      prevM = m
+    }
+    (id, bytes.length.toLong, v.width, v.height, v.frames.length.toLong,
+      v.fps, sumRgb, nCuts)
   }
 
   /** L5m: per-frame argmax "detector" + track statistics over REAL
@@ -2203,25 +1909,15 @@ object Multimodal {
     * frames arrive as independent rows). */
   def mmArgmaxTrack(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val decoderClass =
-      s.conf.get(VideoDecoderConfKey, classOf[Codecs.AviDecoder].getName)
-    videoClips(s, dir).as[(Long, Array[Byte])].mapPartitions { it =>
-      val dec = instantiate[Codecs.VideoDecoder](decoderClass)
+    val bound = videoDecoder.resolve(s)
+    videoClips(s, dir).mapPartitions { it =>
+      val dec = bound.load()
       it.flatMap { case (id, bytes) =>
         val v = dec.decode(bytes)
         var prevX = 0
         var prevY = 0
         v.frames.iterator.zipWithIndex.map { case (fr, f) =>
-          var best = -1
-          var bi = 0
-          var i = 0
-          val n = v.width * v.height
-          while (i < n) {
-            val lum = (fr(3 * i) & 0xff) + (fr(3 * i + 1) & 0xff) +
-              (fr(3 * i + 2) & 0xff)
-            if (lum > best) { best = lum; bi = i }
-            i += 1
-          }
+          val (best, bi) = brightest(fr, v.width * v.height)
           val x = bi % v.width
           val y = bi / v.width
           val step = if (f == 0) 0L
@@ -2232,6 +1928,35 @@ object Multimodal {
       }
     }.toDF("doc_id", "f", "x_max", "y_max", "v_max", "step_l1")
       .orderBy("doc_id", "f")
+  }
+
+  /** The argmax "detector": (max R+G+B, its pixel index) over the
+    * first `n` pixels of a frame, first in row-major order on ties. */
+  private def brightest(fr: Array[Byte], n: Int): (Int, Int) = {
+    var best = -1
+    var bi = 0
+    var i = 0
+    while (i < n) {
+      val lum = (fr(3 * i) & 0xff) + (fr(3 * i + 1) & 0xff) +
+        (fr(3 * i + 2) & 0xff)
+      if (lum > best) { best = lum; bi = i }
+      i += 1
+    }
+    (best, bi)
+  }
+
+  /** The `cw` x `ch` window at (x1, y1) of a `width`-wide frame — the
+    * reference's frame[y1:y2, x1:x2] slice. */
+  private def crop(fr: Array[Byte], width: Int, x1: Int, y1: Int, cw: Int,
+      ch: Int): Array[Byte] = {
+    val out = new Array[Byte](cw * ch * 3)
+    var y = 0
+    while (y < ch) {
+      System.arraycopy(fr, ((y + y1) * width + x1) * 3, out, y * cw * 3,
+        cw * 3)
+      y += 1
+    }
+    out
   }
 
   /** L5n: REAL container transcode — the reference's .mov -> .mp4
@@ -2252,43 +1977,19 @@ object Multimodal {
     * final orderBy. */
   def mmTranscodeReal(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val imgDec =
-      s.conf.get(ImageDecoderConfKey, classOf[Codecs.BmpDecoder].getName)
-    val vidDec =
-      s.conf.get(VideoDecoderConfKey, classOf[Codecs.AviDecoder].getName)
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
+    val imgBound = imageDecoder.resolve(s)
+    val vidBound = videoDecoder.resolve(s)
+    docIds(s, dir)
       .mapPartitions { it =>
-        val bd = instantiate[Codecs.ImageDecoder](imgDec)
-        val vd = instantiate[Codecs.VideoDecoder](vidDec)
+        val bd = imgBound.load()
+        val vd = vidBound.load()
         it.map { id =>
-          val w = (16 + id % 16).toInt
-          val h = (12 + id % 8).toInt
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val base = (y * w + x) * 3
-              px(base) = ((id * 7 + x * 13 + y * 31) % 256).toByte
-              px(base + 1) = ((id * 11 + x * 17 + y * 5) % 256).toByte
-              px(base + 2) = ((id * 3 + x * 29 + y * 23) % 256).toByte
-              x += 1
-            }
-            y += 1
-          }
+          val (w, h, px) = stillRaster(id)
           val src = Codecs.bmpEncode(w, h, px)
           val im = bd.decode(src)
           val dst = Codecs.aviEncode(im.width, im.height, 10, Seq(im.rgb))
           val vv = vd.decode(dst)
-          val fr = vv.frames(0)
-          var sr = 0L; var sg = 0L; var sb = 0L
-          var i = 0
-          while (i < fr.length) {
-            sr += fr(i) & 0xff
-            sg += fr(i + 1) & 0xff
-            sb += fr(i + 2) & 0xff
-            i += 3
-          }
+          val (sr, sg, sb) = channelSums(vv.frames(0))
           (id, src.length.toLong, dst.length.toLong,
             vv.width, vv.height, sr, sg, sb)
         }
@@ -2319,32 +2020,40 @@ object Multimodal {
     * scan, no shuffle before the final orderBy. */
   def mmDecodeAv(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val decoderClass =
-      s.conf.get(AvDecoderConfKey, classOf[Codecs.AviAvDecoder].getName)
-    val encoded = mmDecodeAvClips(s, dir)
-    encoded.as[(Long, Array[Byte])].mapPartitions { it =>
-      val dec = instantiate[Codecs.AvDecoder](decoderClass)
-      it.map { case (id, bytes) =>
-        val av = dec.decode(bytes)
-        var sumRgb = 0L
-        av.video.frames.foreach { fr =>
-          var i = 0
-          while (i < fr.length) { sumRgb += fr(i) & 0xff; i += 1 }
-        }
-        var sumAbs = 0L
-        var i = 0
-        while (i < av.audio.samples.length) {
-          sumAbs += math.abs(av.audio.samples(i).toLong)
-          i += 1
-        }
-        (id, bytes.length.toLong, av.video.width, av.video.height,
-          av.video.frames.length.toLong, av.video.fps,
-          av.audio.sampleRate, av.audio.samples.length.toLong,
-          sumRgb, sumAbs)
+    val bound = avDecoder.resolve(s)
+    docIds(s, dir).mapPartitions { it =>
+      val dec = bound.load()
+      it.map { id =>
+        val bytes = avClip(id, g711 = false)
+        avRow(id, bytes, dec.decode(bytes))
       }
     }.toDF("doc_id", "n_bytes", "width", "height", "n_frames", "fps",
       "sample_rate", "n_samples", "sum_rgb", "sum_abs")
       .orderBy("doc_id")
+  }
+
+  /** A decoded two-modality container's stats row: (doc_id, n_bytes,
+    * width, height, n_frames, fps, sample_rate, n_samples, sum_rgb,
+    * sum_abs). */
+  private def avRow(id: Long, bytes: Array[Byte], av: Codecs.DecodedAv)
+      : (Long, Long, Int, Int, Long, Int, Int, Long, Long, Long) =
+    (id, bytes.length.toLong, av.video.width, av.video.height,
+      av.video.frames.length.toLong, av.video.fps,
+      av.audio.sampleRate, av.audio.samples.length.toLong,
+      av.video.frames.map(byteSum).sum, absStats(av.audio.samples)._1)
+
+  /** The two-stream AVI clip per doc: [[AvRgb]] frames plus the
+    * [[AvAudio]] track, as PCM16 or, with `g711`, as G.711 codewords
+    * (µ-law for even docs, A-law for odd). */
+  private def avClip(id: Long, g711: Boolean): Array[Byte] = {
+    val w = (8 + id % 6).toInt
+    val h = (5 + id % 4).toInt
+    val nf = (2 + id % 3).toInt
+    val spf = (20 + (id % 10) * 2).toInt
+    val frames = clip(AvRgb, id, nf, w, h)
+    if (g711) Codecs.aviEncodeAvG711(w, h, 10, frames, spf,
+      AvAudio.bytes(id, nf * spf), mulaw = id % 2 == 0)
+    else Codecs.aviEncodeAv(w, h, 10, frames, spf, AvAudio.pcm(id, nf * spf))
   }
 
   /** L5p: cross-modal per-frame ALIGNMENT audit over the two-stream
@@ -2360,40 +2069,44 @@ object Multimodal {
     *
     * Scale: one map-only pass (both modalities live in the same
     * binary column), frames of a clip colocated by construction. */
-  def mmAvSyncAudit(s: SparkSession, dir: String): DataFrame = {
+  def mmAvSyncAudit(s: SparkSession, dir: String): DataFrame =
+    avSyncAudit(s, dir, g711 = false, loudAt = 1024L)
+      .drop("n_bytes", "law").orderBy("doc_id", "f")
+
+  /** The per-frame audit both AV-sync legs share: one AV-binding
+    * parse of each doc's [[avClip]], the audio track sliced into
+    * per-frame spans (span length from the PARSED stream lengths),
+    * and per frame the decoded RGB mean (milli) beside the decoded
+    * |sample| mean, `bright` at 382500 milli, `loud` at `loudAt`. */
+  private def avSyncAudit(s: SparkSession, dir: String, g711: Boolean,
+      loudAt: Long): DataFrame = {
     import s.implicits._
-    val decoderClass =
-      s.conf.get(AvDecoderConfKey, classOf[Codecs.AviAvDecoder].getName)
-    // same clip relation as mm_decode_av (shared pattern literals)
-    val encoded = mmDecodeAvClips(s, dir)
-    encoded.as[(Long, Array[Byte])].mapPartitions { it =>
-      val dec = instantiate[Codecs.AvDecoder](decoderClass)
-      it.flatMap { case (id, bytes) =>
+    val bound = avDecoder.resolve(s)
+    docIds(s, dir).mapPartitions { it =>
+      val dec = bound.load()
+      it.flatMap { id =>
+        val bytes = avClip(id, g711)
+        val law = if (!g711) "pcm" else if (id % 2 == 0) "mulaw" else "alaw"
         val av = dec.decode(bytes)
         val nf = av.video.frames.length
         val spf = av.audio.samples.length / nf
         val denom = av.video.width.toLong * av.video.height * 3
         (0 until nf).map { f =>
-          val fr = av.video.frames(f)
-          var sRgb = 0L
-          var i = 0
-          while (i < fr.length) { sRgb += fr(i) & 0xff; i += 1 }
           var sAbs = 0L
           var j = f * spf
           while (j < (f + 1) * spf) {
             sAbs += math.abs(av.audio.samples(j).toLong); j += 1
           }
-          val rgbMeanMilli = sRgb * 1000 / denom
+          val rgbMeanMilli = byteSum(av.video.frames(f)) * 1000 / denom
           val absMean = sAbs / spf
           val bright = rgbMeanMilli >= 382500L
-          val loud = absMean >= 1024L
-          (id, f.toLong, rgbMeanMilli, absMean, bright, loud,
-            bright != loud)
+          val loud = absMean >= loudAt
+          (id, f.toLong, bytes.length.toLong, law, rgbMeanMilli, absMean,
+            bright, loud, bright != loud)
         }
       }
-    }.toDF("doc_id", "f", "rgb_mean_milli", "abs_mean", "bright",
-      "loud", "mismatch")
-      .orderBy("doc_id", "f")
+    }.toDF("doc_id", "f", "n_bytes", "law", "rgb_mean_milli", "abs_mean",
+      "bright", "loud", "mismatch")
   }
 
   /** L5p2: the COMPANDED-audio leg of the AV-sync family — the same
@@ -2410,105 +2123,8 @@ object Multimodal {
     *
     * Scale: one map-only pass; both modalities decode in the same
     * partition-local parse. */
-  def mmAvSyncG711(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val decoderClass =
-      s.conf.get(AvDecoderConfKey, classOf[Codecs.AviAvDecoder].getName)
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        val dec = instantiate[Codecs.AvDecoder](decoderClass)
-        it.flatMap { id =>
-          // shared pattern literals with mmDecodeAvClips (video) and
-          // the codeword image (audio)
-          val w = (8 + id % 6).toInt
-          val h = (5 + id % 4).toInt
-          val nf = (2 + id % 3).toInt
-          val spf = (20 + (id % 10) * 2).toInt
-          val mu = id % 2 == 0
-          val frames = (0 until nf).map { f =>
-            val px = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val base = (y * w + x) * 3
-                px(base) =
-                  ((id * 5 + f * 37 + x * 11 + y * 19) % 256).toByte
-                px(base + 1) =
-                  ((id * 13 + f * 23 + x * 7 + y * 3) % 256).toByte
-                px(base + 2) =
-                  ((id * 17 + f * 29 + x * 31 + y * 41) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            px
-          }
-          val codes = Array.tabulate(nf * spf)(i =>
-            ((id * 53 + i.toLong * i * 7) % 256).toByte)
-          val bytes = Codecs.aviEncodeAvG711(w, h, 10, frames, spf,
-            codes, mu)
-          val av = dec.decode(bytes)
-          val spfDec = av.audio.samples.length / av.video.frames.length
-          val denom = av.video.width.toLong * av.video.height * 3
-          (0 until av.video.frames.length).map { f =>
-            val fr = av.video.frames(f)
-            var sRgb = 0L
-            var i = 0
-            while (i < fr.length) { sRgb += fr(i) & 0xff; i += 1 }
-            var sAbs = 0L
-            var j = f * spfDec
-            while (j < (f + 1) * spfDec) {
-              sAbs += math.abs(av.audio.samples(j).toLong); j += 1
-            }
-            val rgbMeanMilli = sRgb * 1000 / denom
-            val absMean = sAbs / spfDec
-            (id, f.toLong, bytes.length.toLong,
-              if (mu) "mulaw" else "alaw", rgbMeanMilli, absMean,
-              rgbMeanMilli >= 382500L, absMean >= 4096L,
-              (rgbMeanMilli >= 382500L) != (absMean >= 4096L))
-          }
-        }
-      }.toDF("doc_id", "f", "n_bytes", "law", "rgb_mean_milli",
-        "abs_mean", "bright", "loud", "mismatch")
-      .orderBy("doc_id", "f")
-  }
-
-  /** The [[mmDecodeAv]] clip builder, shared with [[mmAvSyncAudit]]. */
-  private def mmDecodeAvClips(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val w = (8 + id % 6).toInt
-          val h = (5 + id % 4).toInt
-          val nf = (2 + id % 3).toInt
-          val spf = (20 + (id % 10) * 2).toInt
-          val frames = (0 until nf).map { f =>
-            val px = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val base = (y * w + x) * 3
-                px(base) =
-                  ((id * 5 + f * 37 + x * 11 + y * 19) % 256).toByte
-                px(base + 1) =
-                  ((id * 13 + f * 23 + x * 7 + y * 3) % 256).toByte
-                px(base + 2) =
-                  ((id * 17 + f * 29 + x * 31 + y * 41) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            px
-          }
-          val samples = Array.tabulate(nf * spf)(i =>
-            ((id * 53 + i.toLong * i * 7) % 4096 - 2048).toShort)
-          (id, Codecs.aviEncodeAv(w, h, 10, frames, spf, samples))
-        }
-      }.toDF("doc_id", "avi")
-  }
+  def mmAvSyncG711(s: SparkSession, dir: String): DataFrame =
+    avSyncAudit(s, dir, g711 = true, loudAt = 4096L).orderBy("doc_id", "f")
 
   /** L5q: crop + re-encode SAMPLE EMISSION over real bytes — the
     * reference's actual output operation (raw_to_samples.py:241-258:
@@ -2528,42 +2144,21 @@ object Multimodal {
     * partition (the reference's per-video inner loop shape). */
   def mmCropClip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val decoderClass =
-      s.conf.get(VideoDecoderConfKey, classOf[Codecs.AviDecoder].getName)
-    videoClips(s, dir).as[(Long, Array[Byte])].mapPartitions { it =>
-      val dec = instantiate[Codecs.VideoDecoder](decoderClass)
+    val bound = videoDecoder.resolve(s)
+    videoClips(s, dir).mapPartitions { it =>
+      val dec = bound.load()
       it.map { case (id, bytes) =>
         val v = dec.decode(bytes)
         val x1 = (id % 2).toInt
         val y1 = ((id / 2) % 2).toInt
         val cw = v.width - x1 - 1
         val ch = v.height - y1 - 1
-        val cropped = v.frames.map { fr =>
-          val out = new Array[Byte](cw * ch * 3)
-          var y = 0
-          while (y < ch) {
-            var x = 0
-            while (x < cw) {
-              val src = ((y + y1) * v.width + (x + x1)) * 3
-              val dst = (y * cw + x) * 3
-              out(dst) = fr(src)
-              out(dst + 1) = fr(src + 1)
-              out(dst + 2) = fr(src + 2)
-              x += 1
-            }
-            y += 1
-          }
-          out
-        }
-        val sub = Codecs.aviEncode(cw, ch, v.fps, cropped.toSeq)
+        val sub = Codecs.aviEncode(cw, ch, v.fps,
+          v.frames.map(crop(_, v.width, x1, y1, cw, ch)).toSeq)
         val v2 = dec.decode(sub)
-        var sum = 0L
-        v2.frames.foreach { fr =>
-          var i = 0
-          while (i < fr.length) { sum += fr(i) & 0xff; i += 1 }
-        }
         (id, bytes.length.toLong, sub.length.toLong,
-          v2.width, v2.height, v2.frames.length.toLong, sum)
+          v2.width, v2.height, v2.frames.length.toLong,
+          v2.frames.map(byteSum).sum)
       }
     }.toDF("doc_id", "src_bytes", "crop_bytes", "crop_w", "crop_h",
       "n_frames", "sum_rgb_crop")
@@ -2600,9 +2195,8 @@ object Multimodal {
     * the reference's per-video loop, embarrassingly parallel over a
     * 100 TB corpus of clips. */
   def refEp3Real(s: SparkSession, dir: String): DataFrame =
-    ep3Chain(segClips(s, dir),
-      s.conf.get(VideoDecoderConfKey, classOf[Codecs.AviDecoder].getName),
-      (w, h, fps, fr) => Codecs.aviEncode(w, h, fps, fr))
+    ep3Chain(segClips(s, dir), videoDecoder.resolve(s),
+      Codecs.aviEncode(_, _, _, _))
 
   /** L5v: [[refEp3Real]] on the reference's ACTUAL container — the
     * same step-3 chain (decode -> fps*2 segmentation -> per-frame
@@ -2619,9 +2213,7 @@ object Multimodal {
     * rows equal ref_ep3_real's on every column except the container
     * size, whose closed form swaps aviSize for mp4SizeVideo. */
   def refEp3Mp4(s: SparkSession, dir: String): DataFrame =
-    ep3Chain(segClipsMp4(s, dir),
-      s.conf.get(Mp4VideoDecoderConfKey,
-        classOf[Codecs.Mp4VideoDecoder].getName),
+    ep3Chain(segClipsMp4(s, dir), mp4VideoDecoder.resolve(s),
       (w, h, fps, fr) => Codecs.mp4EncodeVideo(600, 600 / fps, w, h, fr))
 
   /** L5w: [[refEp3Real]] over a genuinely COMPRESSED video codec —
@@ -2640,12 +2232,8 @@ object Multimodal {
     * no re-quantization touches the cropped pixels), and sub_bytes
     * is aviSize's closed form. */
   def refEp3Mjpeg(s: SparkSession, dir: String): DataFrame =
-    ep3Chain(segClipsMjpeg(s, dir),
-      s.conf.get(MjpegDecoderConfKey,
-        classOf[Jpeg.MjpegAviDecoder].getName),
-      (w, h, fps, fr) => Codecs.aviEncode(w, h, fps, fr),
-      subDecoderClass = s.conf.get(VideoDecoderConfKey,
-        classOf[Codecs.AviDecoder].getName))
+    ep3Chain(segClipsMjpeg(s, dir), mjpegDecoder.resolve(s),
+      Codecs.aviEncode(_, _, _, _), sub = Some(videoDecoder.resolve(s)))
 
   /** L6a: the END-TO-END reference capstone — ALL THREE entry points
     * chained as ONE lazy plan, the way the reference is actually
@@ -2696,14 +2284,12 @@ object Multimodal {
     * decode pass twice. */
   def refPipelineE2e(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val mjpegClass = s.conf.get(MjpegDecoderConfKey,
-      classOf[Jpeg.MjpegAviDecoder].getName)
-    val aviClass =
-      s.conf.get(VideoDecoderConfKey, classOf[Codecs.AviDecoder].getName)
-    val perDoc = Tables.documents(s, dir).select(col("doc_id")).as[Long]
+    val mjpegBound = mjpegDecoder.resolve(s)
+    val aviBound = videoDecoder.resolve(s)
+    val perDoc = docIds(s, dir)
       .mapPartitions { it =>
-        val mjpegDec = instantiate[Codecs.VideoDecoder](mjpegClass)
-        val aviDec = instantiate[Codecs.VideoDecoder](aviClass)
+        val mjpegDec = mjpegBound.load()
+        val aviDec = aviBound.load()
         it.map { id =>
           val existing = id % 11 == 3 // already converted in a prior run
           val corrupt = !existing && id % 13 == 5 // EP1 exception class
@@ -2714,35 +2300,8 @@ object Multimodal {
           val w = bw * 8; val h = bh * 8
           val grays = (0 until nf).map(f => jpegBlockGray(id, f, bw, bh))
           val src =
-            if (isMov)
-              // alternate gray / 4:2:0-color scans per frame (the
-              // segClipsMjpeg convention — decoded rasters identical,
-              // oracle untouched, chroma path exercised)
-              Jpeg.aviEncodeMjpeg(w, h, 2, grays.zipWithIndex.map {
-                case (g, f) =>
-                  if (f % 2 == 0) Jpeg.encodeGray(w, h, g)
-                  else {
-                    val rgb = new Array[Byte](g.length * 3)
-                    var i = 0
-                    while (i < g.length) {
-                      rgb(3 * i) = g(i); rgb(3 * i + 1) = g(i)
-                      rgb(3 * i + 2) = g(i)
-                      i += 1
-                    }
-                    Jpeg.encodeColor420(w, h, rgb)
-                  }
-              })
-            else
-              Codecs.aviEncode(w, h, 2, grays.map { g =>
-                val px = new Array[Byte](g.length * 3)
-                var i = 0
-                while (i < g.length) {
-                  px(3 * i) = g(i); px(3 * i + 1) = g(i)
-                  px(3 * i + 2) = g(i)
-                  i += 1
-                }
-                px
-              })
+            if (isMov) Jpeg.aviEncodeMjpeg(w, h, 2, mjpegFrames(w, h, grays))
+            else Codecs.aviEncode(w, h, 2, grays.map(grayToRgb))
           val bytes =
             if (corrupt) java.util.Arrays.copyOf(src, src.length / 2)
             else src
@@ -2763,8 +2322,7 @@ object Multimodal {
             // EP3: parse the post-EP1 container (step 3 re-reads the
             // raw file EP1/EP2 wrote) and run the shared chain
             val samples = ep3Samples(aviDec.decode(raw),
-              (cw, ch, fps, fr) => Codecs.aviEncode(cw, ch, fps, fr),
-              aviDec).toSeq
+              Codecs.aviEncode(_, _, _, _), aviDec).toSeq
             (id, "ok", fmt, action, path, existing,
               Option(raw.length.toLong), samples)
           } catch {
@@ -2815,20 +2373,19 @@ object Multimodal {
 
   /** The step-3 chain body shared by the AVI and MP4 spellings —
     * container-independent by construction: parameterized only by
-    * the clip relation, the decoder binding, and the sample
-    * re-encoder (a capture-free function, safe to ship to tasks). */
-  private def ep3Chain(clips: DataFrame, decoderClass: String,
+    * the clip relation, the resolved decoder binding (`sub`, when
+    * given, parses the emitted samples), and the sample re-encoder
+    * (a capture-free function, safe to ship to tasks). */
+  private def ep3Chain(clips: Dataset[(Long, Array[Byte])],
+      decoder: Bound[Codecs.VideoDecoder],
       reencode: (Int, Int, Int, Seq[Array[Byte]]) => Array[Byte],
-      subDecoderClass: String = null): DataFrame = {
+      sub: Option[Bound[Codecs.VideoDecoder]] = None): DataFrame = {
     val s = clips.sparkSession
     import s.implicits._
-    val subClass =
-      if (subDecoderClass == null) decoderClass else subDecoderClass
-    clips.as[(Long, Array[Byte])].mapPartitions { it =>
-      val dec = instantiate[Codecs.VideoDecoder](decoderClass)
-      val subDec =
-        if (subClass == decoderClass) dec
-        else instantiate[Codecs.VideoDecoder](subClass)
+    val subBound = sub.getOrElse(decoder)
+    clips.mapPartitions { it =>
+      val dec = decoder.load()
+      val subDec = if (subBound == decoder) dec else subBound.load()
       it.flatMap { case (id, bytes) =>
         ep3Samples(dec.decode(bytes), reencode, subDec).map {
           case (seg, start, end, x1, y1, cw, ch, subBytes, sum) =>
@@ -2854,66 +2411,104 @@ object Multimodal {
       subDec: Codecs.VideoDecoder)
       : Iterator[(Long, Long, Long, Long, Long, Long, Long, Long, Long)] = {
     val fq = v.fps * SegmentLengthSec
-    val nf = v.frames.length
-    Iterator.range(0, nf, fq).flatMap { start =>
-      val end = math.min(start + fq + 1, nf)
-      if (end - start < fq) None
-      else {
-        // per-frame argmax detections over the segment's frames
-        val track = (start until end).map { f =>
-          val fr = v.frames(f)
-          var best = -1; var bi = 0
-          var i = 0
-          val n = v.width * v.height
-          while (i < n) {
-            val lum = (fr(3 * i) & 0xff) + (fr(3 * i + 1) & 0xff) +
-              (fr(3 * i + 2) & 0xff)
-            if (lum > best) { best = lum; bi = i }
-            i += 1
-          }
-          (bi % v.width, bi / v.width)
-        }
-        // pad-1 clamped track bbox (the :63-72 rule)
-        val x1 = math.max(0, track.map(_._1).min - 1)
-        val x2 = math.min(v.width - 1, track.map(_._1).max + 1)
-        val y1 = math.max(0, track.map(_._2).min - 1)
-        val y2 = math.min(v.height - 1, track.map(_._2).max + 1)
-        val cw = x2 - x1 + 1
-        val ch = y2 - y1 + 1
-        val cropped = (start until end).map { f =>
-          val fr = v.frames(f)
-          val out = new Array[Byte](cw * ch * 3)
-          var y = 0
-          while (y < ch) {
-            var x = 0
-            while (x < cw) {
-              val src = ((y + y1) * v.width + (x + x1)) * 3
-              val dst = (y * cw + x) * 3
-              out(dst) = fr(src)
-              out(dst + 1) = fr(src + 1)
-              out(dst + 2) = fr(src + 2)
-              x += 1
-            }
-            y += 1
-          }
-          out
-        }
-        val sub = reencode(cw, ch, v.fps, cropped)
-        val v2 = subDec.decode(sub)
-        var sum = 0L
-        v2.frames.foreach { fr =>
-          var i = 0
-          while (i < fr.length) { sum += fr(i) & 0xff; i += 1 }
-        }
-        Some(((start / fq).toLong, start.toLong, end.toLong,
-          x1.toLong, y1.toLong, cw.toLong, ch.toLong,
-          sub.length.toLong, sum))
+    segmentSpans(v.frames.length, fq).map { case (start, end) =>
+      // per-frame argmax detections over the segment's frames
+      val track = (start until end).map { f =>
+        val bi = brightest(v.frames(f), v.width * v.height)._2
+        (bi % v.width, bi / v.width)
       }
+      // pad-1 clamped track bbox (the :63-72 rule)
+      val x1 = math.max(0, track.map(_._1).min - 1)
+      val x2 = math.min(v.width - 1, track.map(_._1).max + 1)
+      val y1 = math.max(0, track.map(_._2).min - 1)
+      val y2 = math.min(v.height - 1, track.map(_._2).max + 1)
+      val cw = x2 - x1 + 1
+      val ch = y2 - y1 + 1
+      val cropped = (start until end).map(f =>
+        crop(v.frames(f), v.width, x1, y1, cw, ch))
+      val sub = reencode(cw, ch, v.fps, cropped)
+      val v2 = subDec.decode(sub)
+      ((start / fq).toLong, start.toLong, end.toLong,
+        x1.toLong, y1.toLong, cw.toLong, ch.toLong,
+        sub.length.toLong, v2.frames.map(byteSum).sum)
     }
   }
 
   /** The reference's segment length (raw_to_samples.py:16). */
   val SegmentLengthSec = 2
+
+  /** [[jpegBlockGray]] frames (the JPEG codec's invertible class)
+    * muxed as M-JPEG AVIs at fps 2 — the source relation of
+    * [[refEp3Mjpeg]]. Gray block rasters: R=G=B per pixel, so the
+    * oracle's pixel value is 3x the block gray. */
+  private def segClipsMjpeg(s: SparkSession, dir: String)
+      : Dataset[(Long, Array[Byte])] = {
+    import s.implicits._
+    docIds(s, dir).mapPartitions(_.map { id =>
+      val bw = (2 + id % 2).toInt
+      val bh = (1 + id % 2).toInt
+      val nf = (6 + id % 6).toInt
+      val grays = (0 until nf).map(f => jpegBlockGray(id, f, bw, bh))
+      (id, Jpeg.aviEncodeMjpeg(bw * 8, bh * 8, 2,
+        mjpegFrames(bw * 8, bh * 8, grays)))
+    })
+  }
+
+  /** Gray planes as M-JPEG frames that alternate grayscale and 4:2:0
+    * COLOR JPEG scans (M-JPEG frames are independent, so mixed
+    * variants in one stream are legal); gray-valued rasters decode
+    * identically through both paths, so every downstream stat — and
+    * the oracle — is unchanged while the chain exercises chroma
+    * upsampling inside the RIFF walk. */
+  private def mjpegFrames(w: Int, h: Int, grays: Seq[Array[Byte]])
+      : Seq[Array[Byte]] =
+    grays.zipWithIndex.map { case (g, f) =>
+      if (f % 2 == 0) Jpeg.encodeGray(w, h, g)
+      else Jpeg.encodeColor420(w, h, grayToRgb(g))
+    }
+
+  /** Longer low-fps clips (fps 2, so frames_per_segment = 4 fits the
+    * 6-13 frame range) shared by [[mmVideoSegments]] and
+    * [[refEp3Real]] — one pattern, one oracle CTE chain. */
+  private def segClips(s: SparkSession, dir: String)
+      : Dataset[(Long, Array[Byte])] = {
+    import s.implicits._
+    docIds(s, dir).mapPartitions(_.map { id =>
+      val (w, h, frames) = segClipFrames(id)
+      (id, Codecs.aviEncode(w, h, 2, frames))
+    })
+  }
+
+  /** [[segClips]]'s VERBATIM frame pattern muxed into genuine MP4
+    * containers (fps 2 = timescale 600 / sample delta 300; both
+    * muxer box orders by doc parity) — the source relation of
+    * [[refEp3Mp4]]. One pattern, one oracle CTE chain. */
+  private def segClipsMp4(s: SparkSession, dir: String)
+      : Dataset[(Long, Array[Byte])] = {
+    import s.implicits._
+    docIds(s, dir).mapPartitions(_.map { id =>
+      val (w, h, frames) = segClipFrames(id)
+      (id, Codecs.mp4EncodeVideo(600, 300, w, h, frames,
+        moovLast = id % 2 == 0))
+    })
+  }
+
+  /** The low-fps clips' dims and [[ClipRgb]] frames: w in [8, 11],
+    * h in [6, 8], 6-13 frames. */
+  private def segClipFrames(id: Long): (Int, Int, Seq[Array[Byte]]) = {
+    val w = (8 + id % 4).toInt
+    val h = (6 + id % 3).toInt
+    (w, h, clip(ClipRgb, id, (6 + id % 8).toInt, w, h))
+  }
+
+  /** The reference's segment spans over `nf` frames at `fq` frames per
+    * segment: starts every `fq` frames (:330), one overlap frame from
+    * the successor (:339), a trailing window shorter than `fq`
+    * dropped (:340-341). */
+  private def segmentSpans(nf: Int, fq: Int): Iterator[(Int, Int)] =
+    Iterator.range(0, nf, fq)
+      .map(start => (start, math.min(start + fq + 1, nf)))
+      .filter { case (start, end) => end - start >= fq }
 
   /** L5l: the reference's CORE segmentation loop over REAL container
     * bytes — raw_to_samples.py:330-341 verbatim semantics:
@@ -2926,149 +2521,28 @@ object Multimodal {
     * dropped (:340-341). Every emitted stat — frame spans, per-segment
     * RGB mass, mean byte value — is computed from frames genuinely
     * decoded out of the movi chunk list, so this is the reference's
-    * ep3 inner loop running on real bytes end to end (MP4 remains the
-    * documented surrogate boundary). The relational spelling of the
-    * same rule over metadata is [[pipeline.Reference]]'s ref_segments;
+    * ep3 inner loop running on real bytes end to end (its MP4
+    * spelling is [[refEp3Mp4]]). The relational spelling of the same
+    * rule over metadata is [[pipeline.Reference]]'s ref_segments;
     * this is the decode-path twin.
     *
     * Scale: encode+decode+segment are map-only over the documents
     * scan (per-partition decoder init, segments flatMapped in the
     * same pass) — no shuffle before the final orderBy. */
-  /** Longer low-fps clips (fps 2, so frames_per_segment = 4 fits the
-    * 6-13 frame range) shared by [[mmVideoSegments]] and
-    * [[refEp3Real]] — one pattern, one oracle CTE chain. */
-  /** [[jpegBlockGray]] frames (the JPEG codec's invertible class)
-    * muxed as M-JPEG AVIs at fps 2 — the source relation of
-    * [[refEp3Mjpeg]]. Gray block rasters: R=G=B per pixel, so the
-    * oracle's pixel value is 3x the block gray. */
-  private def segClipsMjpeg(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val bw = (2 + id % 2).toInt
-          val bh = (1 + id % 2).toInt
-          val nf = (6 + id % 6).toInt
-          // frames alternate grayscale and 4:2:0 COLOR JPEG scans
-          // (M-JPEG frames are independent, so mixed variants in one
-          // stream are legal); gray-valued rasters decode identically
-          // through both paths, so every downstream stat — and the
-          // oracle — is unchanged while the chain exercises chroma
-          // upsampling inside the RIFF walk
-          val frames = (0 until nf).map { f =>
-            val g = jpegBlockGray(id, f, bw, bh)
-            if (f % 2 == 0) Jpeg.encodeGray(bw * 8, bh * 8, g)
-            else {
-              val rgb = new Array[Byte](g.length * 3)
-              var i = 0
-              while (i < g.length) {
-                rgb(3 * i) = g(i); rgb(3 * i + 1) = g(i)
-                rgb(3 * i + 2) = g(i)
-                i += 1
-              }
-              Jpeg.encodeColor420(bw * 8, bh * 8, rgb)
-            }
-          }
-          (id, Jpeg.aviEncodeMjpeg(bw * 8, bh * 8, 2, frames))
-        }
-      }.toDF("doc_id", "avi")
-  }
-
-  private def segClips(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val w = (8 + id % 4).toInt
-          val h = (6 + id % 3).toInt
-          val nf = (6 + id % 8).toInt
-          val frames = (0 until nf).map { f =>
-            val px = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val base = (y * w + x) * 3
-                px(base) =
-                  ((id * 7 + f * 41 + x * 13 + y * 31) % 256).toByte
-                px(base + 1) =
-                  ((id * 11 + f * 19 + x * 17 + y * 5) % 256).toByte
-                px(base + 2) =
-                  ((id * 3 + f * 53 + x * 29 + y * 23) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            px
-          }
-          (id, Codecs.aviEncode(w, h, 2, frames))
-        }
-      }.toDF("doc_id", "avi")
-  }
-
-  /** [[segClips]]'s VERBATIM frame pattern muxed into genuine MP4
-    * containers (fps 2 = timescale 600 / sample delta 300; both
-    * muxer box orders by doc parity) — the source relation of
-    * [[refEp3Mp4]]. One pattern, one oracle CTE chain. */
-  private def segClipsMp4(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val w = (8 + id % 4).toInt
-          val h = (6 + id % 3).toInt
-          val nf = (6 + id % 8).toInt
-          val frames = (0 until nf).map { f =>
-            val px = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val base = (y * w + x) * 3
-                px(base) =
-                  ((id * 7 + f * 41 + x * 13 + y * 31) % 256).toByte
-                px(base + 1) =
-                  ((id * 11 + f * 19 + x * 17 + y * 5) % 256).toByte
-                px(base + 2) =
-                  ((id * 3 + f * 53 + x * 29 + y * 23) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            px
-          }
-          (id, Codecs.mp4EncodeVideo(600, 300, w, h, frames,
-            moovLast = id % 2 == 0))
-        }
-      }.toDF("doc_id", "mp4")
-  }
-
   def mmVideoSegments(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val decoderClass =
-      s.conf.get(VideoDecoderConfKey, classOf[Codecs.AviDecoder].getName)
-    val encoded = segClips(s, dir)
-    encoded.as[(Long, Array[Byte])].mapPartitions { it =>
-      val dec = instantiate[Codecs.VideoDecoder](decoderClass)
+    val bound = videoDecoder.resolve(s)
+    segClips(s, dir).mapPartitions { it =>
+      val dec = bound.load()
       it.flatMap { case (id, bytes) =>
         val v = dec.decode(bytes)
         val fq = v.fps * SegmentLengthSec // frames_per_segment, :330
-        val nf = v.frames.length
         val denom = v.width.toLong * v.height * 3
-        Iterator.range(0, nf, fq).flatMap { start =>
-          val end = math.min(start + fq + 1, nf) // +1 overlap, :339
-          if (end - start < fq) None // trailing drop, :340-341
-          else {
-            var sum = 0L
-            (start until end).foreach { f =>
-              val fr = v.frames(f)
-              var i = 0
-              while (i < fr.length) { sum += fr(i) & 0xff; i += 1 }
-            }
-            Some((id, (start / fq).toLong, start.toLong, end.toLong,
-              (end - start).toLong, sum,
-              sum * 1000 / ((end - start) * denom)))
-          }
+        segmentSpans(v.frames.length, fq).map { case (start, end) =>
+          val sum = (start until end).map(f => byteSum(v.frames(f))).sum
+          (id, (start / fq).toLong, start.toLong, end.toLong,
+            (end - start).toLong, sum,
+            sum * 1000 / ((end - start) * denom))
         }
       }
     }.toDF("doc_id", "seg", "start_frame", "end_frame",
@@ -3097,29 +2571,16 @@ object Multimodal {
     * all-pairs; verify reads two 8-byte halves per candidate. */
   def mmPhashReal(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val decoderClass =
-      s.conf.get(ImageDecoderConfKey, classOf[Codecs.BmpDecoder].getName)
-    val hashes = Tables.documents(s, dir).select(col("doc_id")).as[Long]
+    val bound = imageDecoder.resolve(s)
+    val hashes = docIds(s, dir)
       .mapPartitions { it =>
-        val dec = instantiate[Codecs.ImageDecoder](decoderClass)
+        val dec = bound.load()
         it.map { id =>
           val g = id % 97
           val o = ((id / 97) % 3).toInt
-          val w = (16 + g % 16).toInt
-          val h = (12 + g % 8).toInt
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val v = (((g * 7 + x * 13 + y * 31) % 240) + o).toByte
-              val base = (y * w + x) * 3
-              px(base) = v; px(base + 1) = v; px(base + 2) = v
-              x += 1
-            }
-            y += 1
-          }
-          val im = dec.decode(Codecs.bmpEncode(w, h, px))
+          val (w, h) = stillDims(g)
+          val im = dec.decode(Codecs.bmpEncode(w, h,
+            grayToRgb(raster(PhashGray, g, 0, w, h, bias = o))))
           val bs = new Array[Long](64)
           val bn = new Array[Long](64)
           var tot = 0L
@@ -3195,34 +2656,24 @@ object Multimodal {
     * scan (per-partition probe init); no shuffle before the final
     * orderBy. */
   def mmMp4Probe(s: SparkSession, dir: String): DataFrame =
-    mmMp4ProbeOn(
-      Tables.documents(s, dir).select(col("doc_id"))
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong))
-      .orderBy("doc_id")
+    mmMp4ProbeOn(docIds(s, dir)).orderBy("doc_id")
 
   /** Streaming-legal core (no sort; encode + probe are one pure
     * mapPartitions pass) — works identically on a batch id relation
     * and a readStream of ids. */
-  def mmMp4ProbeOn(ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  def mmMp4ProbeOn(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
-    val probeClass =
-      s.conf.get(Mp4ProbeConfKey, classOf[Codecs.Mp4Probe].getName)
+    val bound = mp4Probe.resolve(s)
     ids
       .mapPartitions { it =>
-        val probe = instantiate[Codecs.ContainerProbe](probeClass)
+        val probe = bound.load()
         it.map { id =>
           val delta = (20 + (id % 4) * 10).toInt
           val nf = (24 + id % 48).toInt
           val w = (32 + (id % 8) * 16).toInt
           val h = (24 + (id % 6) * 16).toInt
-          val plen = nf * (7 + id % 9).toInt
-          val payload = new Array[Byte](plen)
-          var i = 0
-          while (i < plen) {
-            payload(i) = ((id * 31 + i.toLong * i * 5) % 251).toByte
-            i += 1
-          }
+          val payload = Mp4Payload.bytes(id, nf * (7 + id % 9).toInt, 251)
           val bytes = Codecs.mp4Encode(600, nf, delta, w, h, payload,
             moovLast = id % 2 == 0)
           val m = probe.probe(bytes)
@@ -3257,30 +2708,20 @@ object Multimodal {
     * this is the shape of clipping N frames out of a shard of videos
     * without decoding them. */
   def mmMp4Extract(s: SparkSession, dir: String): DataFrame =
-    mmMp4ExtractOn(
-      Tables.documents(s, dir).select(col("doc_id"))
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong))
-      .orderBy("doc_id", "k")
+    mmMp4ExtractOn(docIds(s, dir)).orderBy("doc_id", "k")
 
   /** Streaming-legal core (no sort; one pure mapPartitions pass). */
-  def mmMp4ExtractOn(ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  def mmMp4ExtractOn(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
-    val indexerClass =
-      s.conf.get(Mp4IndexerConfKey, classOf[Codecs.Mp4Indexer].getName)
+    val bound = mp4Indexer.resolve(s)
     ids
       .mapPartitions { it =>
-        val idx = instantiate[Codecs.ContainerIndexer](indexerClass)
+        val idx = bound.load()
         it.flatMap { id =>
           val nf = (6 + id % 6).toInt
           val sizes = Array.tabulate(nf)(k => (10 + ((id + k * 7) % 20)).toInt)
-          val plen = sizes.sum
-          val payload = new Array[Byte](plen)
-          var g = 0
-          while (g < plen) {
-            payload(g) = ((id * 13 + g.toLong * g * 3) % 251).toByte
-            g += 1
-          }
+          val payload = Mp4IndexedPayload.bytes(id, sizes.sum, 251)
           val bytes = Codecs.mp4EncodeIndexed(600, 50, 32, 24, sizes,
             payload, moovLast = id % 2 == 0)
           idx.index(bytes).iterator.map { sm =>
@@ -3316,66 +2757,30 @@ object Multimodal {
     *
     * Scale: one map-only pass, per-partition decoder init. */
   def mmMp4DecodeFrames(s: SparkSession, dir: String): DataFrame =
-    mmMp4DecodeFramesOn(
-      Tables.documents(s, dir).select(col("doc_id"))
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong))
-      .orderBy("doc_id")
+    mmMp4DecodeFramesOn(docIds(s, dir)).orderBy("doc_id")
 
   /** Streaming-legal core (no sort; one pure mapPartitions pass). */
-  def mmMp4DecodeFramesOn(
-      ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  def mmMp4DecodeFramesOn(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
-    val decoderClass = s.conf.get(Mp4VideoDecoderConfKey,
-      classOf[Codecs.Mp4VideoDecoder].getName)
+    val bound = mp4VideoDecoder.resolve(s)
     ids.mapPartitions { it =>
-      val dec = instantiate[Codecs.VideoDecoder](decoderClass)
+      val dec = bound.load()
       it.map { id =>
-        val w = (8 + id % 6).toInt
-        val h = (6 + id % 4).toInt
-        val nf = (3 + id % 4).toInt
+        val (w, h, nf) = mp4ClipDims(id)
         val delta = (20 + (id % 3) * 20).toInt // fps 30 / 15 / 10
-        val frames = (0 until nf).map { f =>
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val base = (y * w + x) * 3
-              px(base) =
-                ((id * 9 + f * 43 + x * 11 + y * 29) % 256).toByte
-              px(base + 1) =
-                ((id * 15 + f * 23 + x * 19 + y * 7) % 256).toByte
-              px(base + 2) =
-                ((id * 5 + f * 47 + x * 31 + y * 17) % 256).toByte
-              x += 1
-            }
-            y += 1
-          }
-          px
-        }
-        val bytes = Codecs.mp4EncodeVideo(600, delta, w, h, frames,
-          moovLast = id % 2 == 0)
-        val v = dec.decode(bytes)
-        val denom = v.width.toLong * v.height * 3
-        var sumRgb = 0L
-        var nCuts = 0L
-        var prevM = -1L
-        v.frames.foreach { fr =>
-          var fs = 0L
-          var i = 0
-          while (i < fr.length) { fs += fr(i) & 0xff; i += 1 }
-          sumRgb += fs
-          val m = fs * 1000 / denom
-          if (prevM >= 0 && math.abs(m - prevM) >= 20000) nCuts += 1
-          prevM = m
-        }
-        (id, bytes.length.toLong, v.width, v.height,
-          v.frames.length.toLong, v.fps, sumRgb, nCuts)
+        val bytes = Codecs.mp4EncodeVideo(600, delta, w, h,
+          clip(Mp4Rgb, id, nf, w, h), moovLast = id % 2 == 0)
+        videoRow(id, bytes, dec.decode(bytes))
       }
     }.toDF("doc_id", "n_bytes", "width", "height", "n_frames", "fps",
       "sum_rgb", "n_cuts")
   }
+
+  /** The MP4 clips' dims and frame count: w in [8, 13], h in [6, 9],
+    * 3-6 frames. */
+  private def mp4ClipDims(id: Long): (Int, Int, Int) =
+    ((8 + id % 6).toInt, (6 + id % 4).toInt, (3 + id % 4).toInt)
 
   /** L5w: TWO-TRACK MP4 AV decode through the MULTI-CHUNK index —
     * the MP4 sibling of [[mmDecodeAv]], and the op that forces the
@@ -3396,64 +2801,24 @@ object Multimodal {
     *
     * Scale: one map-only pass, per-partition decoder init. */
   def mmMp4DecodeAv(s: SparkSession, dir: String): DataFrame =
-    mmMp4DecodeAvOn(
-      Tables.documents(s, dir).select(col("doc_id"))
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong))
-      .orderBy("doc_id")
+    mmMp4DecodeAvOn(docIds(s, dir)).orderBy("doc_id")
 
   /** Streaming-legal core (no sort; one pure mapPartitions pass). */
-  def mmMp4DecodeAvOn(
-      ids: org.apache.spark.sql.Dataset[Long]): DataFrame = {
+  def mmMp4DecodeAvOn(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
-    val decoderClass = s.conf.get(Mp4AvDecoderConfKey,
-      classOf[Codecs.Mp4AvDecoder].getName)
+    val bound = mp4AvDecoder.resolve(s)
     ids.mapPartitions { it =>
-      val dec = instantiate[Codecs.AvDecoder](decoderClass)
+      val dec = bound.load()
       it.map { id =>
         val w = (8 + id % 5).toInt
         val h = (5 + id % 3).toInt
         val nf = (2 + id % 3).toInt
         val spf = (16 + (id % 8) * 2).toInt
-        val frames = (0 until nf).map { f =>
-          val px = new Array[Byte](w * h * 3)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val base = (y * w + x) * 3
-              px(base) =
-                ((id * 7 + f * 31 + x * 17 + y * 13) % 256).toByte
-              px(base + 1) =
-                ((id * 19 + f * 11 + x * 23 + y * 29) % 256).toByte
-              px(base + 2) =
-                ((id * 3 + f * 41 + x * 37 + y * 7) % 256).toByte
-              x += 1
-            }
-            y += 1
-          }
-          px
-        }
-        val samples = Array.tabulate(nf * spf)(i =>
-          ((id * 61 + i.toLong * i * 11) % 4096 - 2048).toShort)
-        val bytes = Codecs.mp4EncodeAv(600, 200, w, h, frames, spf,
-          samples, moovLast = id % 2 == 0)
-        val av = dec.decode(bytes)
-        var sumRgb = 0L
-        av.video.frames.foreach { fr =>
-          var i = 0
-          while (i < fr.length) { sumRgb += fr(i) & 0xff; i += 1 }
-        }
-        var sumAbs = 0L
-        var i = 0
-        while (i < av.audio.samples.length) {
-          sumAbs += math.abs(av.audio.samples(i).toLong)
-          i += 1
-        }
-        (id, bytes.length.toLong, av.video.width, av.video.height,
-          av.video.frames.length.toLong, av.video.fps,
-          av.audio.sampleRate, av.audio.samples.length.toLong,
-          sumRgb, sumAbs)
+        val bytes = Codecs.mp4EncodeAv(600, 200, w, h,
+          clip(Mp4AvRgb, id, nf, w, h), spf, Mp4AvPcm.pcm(id, nf * spf),
+          moovLast = id % 2 == 0)
+        avRow(id, bytes, dec.decode(bytes))
       }
     }.toDF("doc_id", "n_bytes", "width", "height", "n_frames", "fps",
       "sample_rate", "n_samples", "sum_rgb", "sum_abs")

@@ -2364,6 +2364,144 @@ class MultimodalSpec extends SparkSpecBase {
       assert(z.getLong(0) == 0L && z.getLong(1) == 1L)
     } finally spark.conf.unset(key)
   }
+
+  test("one definition per decision in Multimodal.scala: conf lookups " +
+    "and reflection only in the decoder binding, pixel loops only in " +
+    "`raster`, one gray-to-RGB replication, one id source") {
+    import scala.jdk.CollectionConverters._
+    val f = new java.io.File("src/main/scala/graft/multimodal/Multimodal.scala")
+    assert(f.isFile, f.getAbsolutePath)
+    val lines = java.nio.file.Files.readAllLines(f.toPath).asScala.toIndexedSeq
+    // a member's lines: its opening line through its closing brace
+    def member(open: String): Range = {
+      val a = lines.indexWhere(_.startsWith(open))
+      assert(a >= 0, open)
+      a to lines.indexWhere(_ == "  }", a)
+    }
+    def at(s: String): Seq[Int] = lines.indices.filter(lines(_).contains(s))
+    def where(is: Seq[Int]) = is.map(i => s"Multimodal.scala:${i + 1}")
+      .mkString("\n")
+    val binding = member("  private[multimodal] final class Binding[") ++
+      member("  private[multimodal] final case class Bound[")
+    val rasterDef = member("  private def raster(")
+    for (s <- Seq("conf.get(", "instantiate[", ".newInstance()"))
+      assert(at(s).forall(binding.contains), s"$s\n" + where(at(s)))
+    assert(at("conf.get(").size == 1, where(at("conf.get(")))
+    val pixelLoops = at("while (x < w)")
+    assert(pixelLoops.size == 1 && rasterDef.contains(pixelLoops.head),
+      where(pixelLoops))
+    assert(at("rgb(3 * i) = g(i)").size == 1, where(at("rgb(3 * i) = g(i)")))
+    val idSource = at("""Tables.documents(s, dir).select(col("doc_id"))""")
+    assert(idSource.size == 1, where(idSource))
+  }
+
+  test("codec operators are output-stable: SHA-256 of the sorted rows " +
+    "of every catalog codec operator, mm_mp4_probe through ref_ep3_mp4") {
+    // pins the engine-side patterns without DuckDB: a raster, waveform,
+    // binding or body edit that moves any output moves its hash
+    val names = Seq("mm_mp4_probe", "mm_mp4_extract", "mm_mp4_decode_frames",
+      "mm_mp4_decode_av", "mm_decode_png", "mm_decode_gif", "mm_decode_jpeg",
+      "mm_decode_jpeg_prog", "mm_decode_jpeg_prog_sa", "mm_decode_mjpeg",
+      "mm_pipeline_full", "ref_ep3_mjpeg", "ref_pipeline_e2e",
+      "mm_transcode_jpeg", "mm_transcode_jpeg420", "mm_sniff_decode",
+      "mm_decode_quarantine", "mm_transcode_png", "mm_transcode_png_adam7",
+      "mm_transcode_gif", "mm_phash_real", "mm_decode_image",
+      "mm_decode_audio", "mm_decode_g711", "mm_decode_tiff",
+      "mm_transcode_tiff", "mm_transcode_tiff_lzw", "mm_transcode_g711",
+      "mm_decode_video", "mm_video_segments", "mm_argmax_track",
+      "mm_transcode_real", "mm_decode_av", "mm_av_sync_audit",
+      "mm_av_sync_g711", "mm_crop_clip", "ref_ep3_real", "ref_ep3_mp4")
+    import org.apache.spark.sql.types._
+    val got = names.map { n =>
+      val df = multimodal.Multimodal.queries(n)(spark, sf)
+      df.schema.fields.foreach(f => assert(f.dataType match {
+        case IntegerType | LongType | BooleanType | StringType => true
+        case _ => false
+      }, s"$n.${f.name}: ${f.dataType}"))
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      md.update((df.schema.simpleString +: df.collect().map(_.toString)
+        .sorted).mkString("\n").getBytes("UTF-8"))
+      n -> md.digest().map(x => f"${x & 0xff}%02x").mkString
+    }.toMap
+    val pinned = Map(
+      "mm_mp4_probe" ->
+        "9766909912ffaf2a82e08e0688a1a731f3f9da2fa149cd327dc85103e712264b",
+      "mm_mp4_extract" ->
+        "58cbe74f264b805284bbeb5ac203bbd4414868eaa2ef911ef57b7795f8cfa05d",
+      "mm_mp4_decode_frames" ->
+        "2e53f09098c20007a9ffd037c8fe6c4240a0c978bee2ea1f0cd73054fc8692eb",
+      "mm_mp4_decode_av" ->
+        "237d0671fae9eec6c05f5f34f4531fa12a65ce3ed1817bea089b00946d99ad1c",
+      "mm_decode_png" ->
+        "c682d23ac5bcde80c189e59a8714ac3b1aea8a8e4ac1d17b6c07bb66e1ab57fc",
+      "mm_decode_gif" ->
+        "72ba2e6dc5b5d9b63b55238c1021e14431d6f9d0d850388210f8fa8da6cdc84d",
+      "mm_decode_jpeg" ->
+        "7c27b982735796093395a20c6043a8075a676948df878571232fa5131483017e",
+      "mm_decode_jpeg_prog" ->
+        "67f4c67c9482c1e812951995136cc219da86b7f33c443e7eb3d48e58b1ac7882",
+      "mm_decode_jpeg_prog_sa" ->
+        "67f4c67c9482c1e812951995136cc219da86b7f33c443e7eb3d48e58b1ac7882",
+      "mm_decode_mjpeg" ->
+        "71ae1e927a70225bb4a73f0721436a20acb8f55d24febf948d0cc83f045b3175",
+      "mm_pipeline_full" ->
+        "bbe2aa4da5c22d9d9fce15cd21a0e8bd64b7d79695d63307a2e906839804bb16",
+      "ref_ep3_mjpeg" ->
+        "c29480d6f56cb2c2f910fbe521b6a42c408c49bfcaecb6443b93ae26b722bf74",
+      "ref_pipeline_e2e" ->
+        "e24861994aede9096033ab509d0e61fb986d35c37b106dc7150f21583e029990",
+      "mm_transcode_jpeg" ->
+        "e0997502ea2c68253007d2de065dabf40fb209c44aaf0ae14211f1b578b41a77",
+      "mm_transcode_jpeg420" ->
+        "e0997502ea2c68253007d2de065dabf40fb209c44aaf0ae14211f1b578b41a77",
+      "mm_sniff_decode" ->
+        "16441a41ed44724f3cf4c4ef397d2e12f83478888d3c396a8d51c9081026e059",
+      "mm_decode_quarantine" ->
+        "8460a070df19751b7b6877464e3142d208b127a3a9d10714f3948aa358bb2aa5",
+      "mm_transcode_png" ->
+        "1e860401ff419f3e1263655f720dacdbfa5248de5cbc8d9dd8de320f937855f0",
+      "mm_transcode_png_adam7" ->
+        "1e860401ff419f3e1263655f720dacdbfa5248de5cbc8d9dd8de320f937855f0",
+      "mm_transcode_gif" ->
+        "c9d9586a3114116513ca8fad1a8542d8339bb8a945dd811554aaf4740a756938",
+      "mm_phash_real" ->
+        "813b7ded1e0d76e7053e8dd610d1d694ed4ae8e1de17cd32aac77f1302109b33",
+      "mm_decode_image" ->
+        "2dcb5eddf8f2ed6853cc955626fce782fc90523650b35f2d5f1feb1ccb80727a",
+      "mm_decode_audio" ->
+        "ce8aa6e9d9f3b9451c7f27c96209af09c41d3e1c302148463e03b36f6ff334fa",
+      "mm_decode_g711" ->
+        "32b75e961b33ac8b5a27d99fe862b08e109676d901f9c7b6f174f80fdd6ce67c",
+      "mm_decode_tiff" ->
+        "ac52b717afdbbd066af7dfd1852ac1a1f1520047b4bc73323e4856ac9b2fc6b2",
+      "mm_transcode_tiff" ->
+        "100004917d89c15dcdcac5efa76ec902a9edecd856cd8fca9dcc6c94179dad52",
+      "mm_transcode_tiff_lzw" ->
+        "558b48ad49fa0bfbeab10544ab0f18e144eeea16128b3933a4e19ed989600e82",
+      "mm_transcode_g711" ->
+        "e697c2cc0cd94f824984546eb03e761c5323a7c4721213f12b5933b8e135ea65",
+      "mm_decode_video" ->
+        "48a8377a67d3989560b178f74ec9c424bef16be35c4f4d09789106eb86e3916d",
+      "mm_video_segments" ->
+        "6eb05b0e261df4dae444ea33ec2e10d8759d1c82bae91537668e027c08c9ef3e",
+      "mm_argmax_track" ->
+        "5eccff08bc84adfcb0d4dd7a0a9f886a773f630b57318d10bf4d90a873d782c6",
+      "mm_transcode_real" ->
+        "83094e2ec62779038d7c940ae749ef1bd40a260b110d610779b05c938479a62f",
+      "mm_decode_av" ->
+        "ae4761783370c51af35751dae026b63de53a5f96a5123fd0a1bb4e67ad7446c1",
+      "mm_av_sync_audit" ->
+        "e16e443166bcaaee412cbf4accd20dddca26c692919b8680884be1e569d321b2",
+      "mm_av_sync_g711" ->
+        "d81f40414731539eaff2d56d66169a455cd09d31482b415fd77b12937eb02b41",
+      "mm_crop_clip" ->
+        "5c9fc037483b15432e34c5959235e3b2d9490f0468e83938e829ed6eb8151151",
+      "ref_ep3_real" ->
+        "7b0474746ab057d0971a28c269fdbccc80c7cee121af64e1ad10629f063aba06",
+      "ref_ep3_mp4" ->
+        "dabed41628d8aa32b57d2b74690ec2b80010a732397bcf130c3da32ff2fdc89a")
+    names.foreach(n => assert(got(n) == pinned(n), n))
+  }
 }
 
 /** Test-only indexer that ignores the bytes — proves the catalog

@@ -176,6 +176,17 @@ class WalkBudgetSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(na == nb && na.size == 6 * 5)
+    // and on ids shifted by 10^10: walk_id * 1103515245 would leave
+    // the long range, so the draw reduces the id mod 2^31 first
+    val big = e.select(($"src" + 10000000000L).as("src"),
+      ($"dst" + 10000000000L).as("dst"))
+    val ba = Clusters.graphNode2vecWalkOn(big, steps = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSet
+    val bb = Clusters.graphNode2vecWalkAdjOn(big, steps = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSet
+    assert(ba == bb && ba.size == 6 * 5)
     // and on the real catalog corpus: the JOIN spelling vs the
     // ADJACENCY spelling (the catalog key delegates to the latter,
     // so comparing through graphNode2vecWalk would be a tautology)
