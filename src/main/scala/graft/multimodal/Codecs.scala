@@ -453,7 +453,7 @@ object Codecs {
 
   private def requireFrames(width: Int, height: Int,
       frames: Seq[Array[Byte]]): Unit =
-    frames.foreach(f => require(f.length == width * height * 3,
+    frames.foreach(f => require(f.length == width.toLong * height * 3,
       s"frame length ${f.length} != $width x $height x 3"))
 
   /** The uncompressed video stream of an AVI: 'vids'/'DIB ' with a
@@ -707,6 +707,155 @@ object Codecs {
     b(off + 1) = (v & 0xff).toByte
   }
 
+  /** One box of an MP4 being written: its type, `len` bytes of its own
+    * fields (zero except what `put` writes, from the offset just past
+    * the 8-byte header), then its children in order. The size is
+    * derived from the contents — the writing mirror of [[boxWalk]]. */
+  private final class BoxOut(tp: String, len: Long, kids: Seq[BoxOut],
+      put: (Array[Byte], Int) => Unit) {
+    val size: Long = 8 + len + kids.map(_.size).sum
+    def write(out: Array[Byte], at: Int): Int = {
+      wbe32(out, at, size.toInt); wTag(out, at + 4, tp)
+      put(out, at + 8)
+      kids.foldLeft(at + 8 + len.toInt)((o, k) => k.write(out, o))
+    }
+  }
+
+  /** A box of `len` field bytes, written by `put`. */
+  private def fields(tp: String, len: Long)(
+      put: (Array[Byte], Int) => Unit): BoxOut = new BoxOut(tp, len, Nil, put)
+
+  /** A box of child boxes only. */
+  private def nest(tp: String, kids: BoxOut*): BoxOut =
+    new BoxOut(tp, 0, kids, (_, _) => ())
+
+  /** What an MP4 writer says about one track: its hdlr handler, tkhd
+    * dims (0x0 for sound), media timescale, the one stts run of
+    * `nSamples` samples `delta` ticks apart, its stsd sample entry (none
+    * for a timing-only track), and its stsz/stsc/stco given the absolute
+    * offset of the mdat payload. */
+  private final case class TrakOut(handler: String, width: Int,
+      height: Int, timescale: Int, nSamples: Int, delta: Int,
+      entry: Option[BoxOut], index: Int => Seq[BoxOut])
+
+  /** The one MP4 muxer (ISO/IEC 14496-12 layouts, version-0 full boxes):
+    * ftyp('isom') + moov(mvhd + one trak per track) + mdat holding the
+    * `mdat` parts back to back, or ftyp + mdat + moov when `moovLast`
+    * (the streaming-muxer order). The first track's media timescale and
+    * stts span are the movie's; every stco points into mdat wherever
+    * it lands. */
+  private def mp4Mux(traks: Seq[TrakOut], mdat: Seq[Array[Byte]],
+      moovLast: Boolean): Array[Byte] = {
+    val timescale = traks.head.timescale
+    val duration = traks.head.nSamples * traks.head.delta
+    val ftyp = fields("ftyp", 24) { (b, o) =>
+      wTag(b, o, "isom"); wbe32(b, o + 4, 0x200) // major brand, minor
+      wTag(b, o + 8, "isom"); wTag(b, o + 12, "iso2") // compatible
+      wTag(b, o + 16, "mp41"); wTag(b, o + 20, "mp42")
+    }
+    def moov(data: Int): BoxOut = nest("moov", fields("mvhd", 100) {
+      (b, o) =>
+        // timescale, duration, rate 1.0, volume 1.0, identity matrix
+        wbe32(b, o + 12, timescale); wbe32(b, o + 16, duration)
+        wbe32(b, o + 20, 0x10000); wbe16(b, o + 24, 0x100)
+        wbe32(b, o + 36, 0x10000); wbe32(b, o + 52, 0x10000)
+        wbe32(b, o + 68, 0x40000000)
+        wbe32(b, o + 96, traks.length + 1) // next_track_ID
+    } +: traks.indices.map(i => trak(traks(i), i + 1, duration, data)): _*)
+    val media = fields("mdat", mdat.map(_.length.toLong).sum) { (b, o) =>
+      mdat.foldLeft(o) { (p, part) =>
+        System.arraycopy(part, 0, b, p, part.length); p + part.length
+      }
+    }
+    val data = ftyp.size + (if (moovLast) 0 else moov(0).size) + 8
+    val boxes = if (moovLast) Seq(ftyp, media, moov(data.toInt))
+      else Seq(ftyp, moov(data.toInt), media)
+    val total = boxes.map(_.size).sum
+    require(total <= Int.MaxValue, s"mp4 of $total bytes overflows one buffer")
+    val out = new Array[Byte](total.toInt)
+    boxes.foldLeft(0)((o, box) => box.write(out, o))
+    out
+  }
+
+  /** Track `id`: tkhd (flags enabled + in movie, the movie duration,
+    * 16.16 dims) + mdia(mdhd (media timescale and duration, language
+    * 'und') + hdlr + minf(stbl(stsd + stts + the track's index))). */
+  private def trak(t: TrakOut, id: Int, duration: Int, data: Int): BoxOut = {
+    require(t.timescale > 0 && t.nSamples > 0 && t.delta > 0 &&
+      (t.handler == "soun" || t.width > 0 && t.height > 0),
+      "bad mp4 parameters")
+    require(t.width <= 65535 && t.height <= 65535,
+      s"mp4 track ${t.width}x${t.height} overflows the 16.16 tkhd dims")
+    val stsd = t.entry.map(e =>
+      new BoxOut("stsd", 8, Seq(e), (b, o) => wbe32(b, o + 4, 1)))
+    val stts = fields("stts", 16) { (b, o) =>
+      wbe32(b, o + 4, 1); wbe32(b, o + 8, t.nSamples); wbe32(b, o + 12, t.delta)
+    }
+    nest("trak",
+      fields("tkhd", 84) { (b, o) =>
+        b(o + 3) = 3
+        wbe32(b, o + 12, id); wbe32(b, o + 20, duration)
+        wbe32(b, o + 40, 0x10000); wbe32(b, o + 56, 0x10000)
+        wbe32(b, o + 72, 0x40000000)
+        wbe32(b, o + 76, t.width << 16); wbe32(b, o + 80, t.height << 16)
+      },
+      nest("mdia",
+        fields("mdhd", 24) { (b, o) =>
+          wbe32(b, o + 12, t.timescale); wbe32(b, o + 16, t.nSamples * t.delta)
+          wbe16(b, o + 20, 0x55c4)
+        },
+        // handler_type; name = one NUL byte
+        fields("hdlr", 25)((b, o) => wTag(b, o + 8, t.handler)),
+        nest("minf", nest("stbl", stsd.toSeq ++ (stts +: t.index(data)): _*))))
+  }
+
+  /** The 'raw ' VisualSampleEntry: uncompressed packed RGB24 rows. */
+  private def rawEntry(width: Int, height: Int): BoxOut =
+    fields("raw ", 78) { (b, o) =>
+      wbe16(b, o + 6, 1)                   // data_reference_index
+      wbe16(b, o + 24, width); wbe16(b, o + 26, height)
+      wbe32(b, o + 28, 0x480000)           // 72 dpi, 16.16 fixed
+      wbe32(b, o + 32, 0x480000)
+      wbe16(b, o + 40, 1)                  // frame_count per sample
+      wbe16(b, o + 74, 24)                 // depth: packed RGB24
+      wbe16(b, o + 76, 0xffff)             // pre_defined = -1
+    }
+
+  /** The 'sowt' AudioSampleEntry: mono little-endian PCM16 at `rate`. */
+  private def sowtEntry(rate: Int): BoxOut = {
+    require(rate > 0 && rate <= 65535,
+      s"audio rate $rate overflows the 16.16 sample entry rate")
+    fields("sowt", 28) { (b, o) =>
+      wbe16(b, o + 6, 1)                   // data_reference_index
+      wbe16(b, o + 16, 1)                  // channelcount: mono
+      wbe16(b, o + 18, 16)                 // samplesize bits
+      wbe32(b, o + 24, rate << 16)
+    }
+  }
+
+  /** stsz: `n` samples of `fixed` bytes each, or, when `fixed` is 0,
+    * one size per sample from `table`. */
+  private def stsz(n: Int, fixed: Int,
+      table: Array[Int] = Array.emptyIntArray): BoxOut =
+    fields("stsz", 12 + 4L * table.length) { (b, o) =>
+      wbe32(b, o + 4, fixed); wbe32(b, o + 8, n)
+      table.indices.foreach(i => wbe32(b, o + 12 + 4 * i, table(i)))
+    }
+
+  /** stsc: one run — every chunk holds `spc` samples of entry 1. */
+  private def stsc(spc: Int): BoxOut = fields("stsc", 20) { (b, o) =>
+    wbe32(b, o + 4, 1)
+    wbe32(b, o + 8, 1); wbe32(b, o + 12, spc); wbe32(b, o + 16, 1)
+  }
+
+  /** stco: the absolute offsets of chunks that start `rel` bytes into
+    * the mdat payload at `data`. */
+  private def stco(data: Int, rel: Seq[Int]): BoxOut =
+    fields("stco", 8 + 4L * rel.length) { (b, o) =>
+      wbe32(b, o + 4, rel.length)
+      rel.indices.foreach(i => wbe32(b, o + 8 + 4 * i, data + rel(i)))
+    }
+
   /** Container-level metadata of one MP4: everything a pipeline's
     * probe step (ffprobe / cv2 property reads) extracts WITHOUT
     * touching the codec payload, plus the mdat extent and a payload
@@ -736,66 +885,9 @@ object Codecs {
     * boxes, not assume offsets. */
   def mp4Encode(timescale: Int, nSamples: Int, sampleDelta: Int,
       width: Int, height: Int, payload: Array[Byte],
-      moovLast: Boolean = false): Array[Byte] = {
-    require(timescale > 0 && nSamples > 0 && sampleDelta > 0 &&
-      width > 0 && height > 0, "bad mp4 parameters")
-    val duration = nSamples * sampleDelta
-    val out = new Array[Byte](mp4Size(payload.length))
-    var o = 0
-    def box(size: Int, tp: String): Int = {
-      wbe32(out, o, size); wTag(out, o + 4, tp); o += 8; o - 8
-    }
-    // ftyp: major 'isom', minor 0x200, compatible isom/iso2/mp41
-    box(32, "ftyp")
-    wTag(out, o, "isom"); wbe32(out, o + 4, 0x200)
-    wTag(out, o + 8, "isom"); wTag(out, o + 12, "iso2")
-    wTag(out, o + 16, "mp41"); wTag(out, o + 20, "mp42"); o += 24
-    def writeMdat(): Unit = {
-      box(8 + payload.length, "mdat")
-      System.arraycopy(payload, 0, out, o, payload.length)
-      o += payload.length
-    }
-    if (moovLast) writeMdat()
-    box(329, "moov")
-    // mvhd v0: timescale, duration, rate 1.0, volume 1.0, identity
-    // matrix, next_track_ID 2
-    box(108, "mvhd")
-    wbe32(out, o + 12, timescale); wbe32(out, o + 16, duration)
-    wbe32(out, o + 20, 0x10000); wbe16(out, o + 24, 0x100)
-    wbe32(out, o + 36, 0x10000); wbe32(out, o + 52, 0x10000)
-    wbe32(out, o + 68, 0x40000000)
-    wbe32(out, o + 96, 2)
-    o += 100
-    box(213, "trak")
-    // tkhd v0, flags 3 (enabled+in-movie): track 1, dims 16.16 fixed
-    box(92, "tkhd")
-    out(o + 3) = 3
-    wbe32(out, o + 12, 1) // track_ID
-    wbe32(out, o + 20, duration)
-    wbe32(out, o + 40, 0x10000); wbe32(out, o + 56, 0x10000)
-    wbe32(out, o + 72, 0x40000000)
-    wbe32(out, o + 76, width << 16); wbe32(out, o + 80, height << 16)
-    o += 84
-    box(113, "mdia")
-    // mdhd v0: media timescale + duration, language 'und'
-    box(32, "mdhd")
-    wbe32(out, o + 12, timescale); wbe32(out, o + 16, duration)
-    wbe16(out, o + 20, 0x55c4)
-    o += 24
-    box(33, "hdlr")
-    wTag(out, o + 8, "vide") // handler_type; name = one NUL byte
-    o += 25
-    box(40, "minf")
-    box(32, "stbl")
-    // stts: one (sample_count, sample_delta) run
-    box(24, "stts")
-    wbe32(out, o + 4, 1)
-    wbe32(out, o + 8, nSamples); wbe32(out, o + 12, sampleDelta)
-    o += 16
-    if (!moovLast) writeMdat()
-    require(o == out.length, s"encoder wrote $o of ${out.length}")
-    out
-  }
+      moovLast: Boolean = false): Array[Byte] =
+    mp4Mux(Seq(TrakOut("vide", width, height, timescale, nSamples,
+      sampleDelta, None, _ => Nil)), Seq(payload), moovLast)
 
   /** One indexed sample: its ordinal, ABSOLUTE byte offset in the
     * container, and size — what stsz/stsc/stco resolve to. */
@@ -820,80 +912,13 @@ object Codecs {
   def mp4EncodeIndexed(timescale: Int, sampleDelta: Int,
       width: Int, height: Int, sampleSizes: Array[Int],
       payload: Array[Byte], moovLast: Boolean = false): Array[Byte] = {
-    val n = sampleSizes.length
-    require(timescale > 0 && sampleDelta > 0 && n > 0 &&
-      width > 0 && height > 0, "bad mp4 parameters")
     require(sampleSizes.forall(_ >= 0) &&
       sampleSizes.map(_.toLong).sum == payload.length,
       "sample sizes must be non-negative and sum to the payload length")
-    val duration = n * sampleDelta
-    val out = new Array[Byte](mp4SizeIndexed(n, payload.length))
-    val mdatOff = if (moovLast) 32 else 32 + 397 + 4 * n
-    var o = 0
-    def box(size: Int, tp: String): Int = {
-      wbe32(out, o, size); wTag(out, o + 4, tp); o += 8; o - 8
-    }
-    box(32, "ftyp")
-    wTag(out, o, "isom"); wbe32(out, o + 4, 0x200)
-    wTag(out, o + 8, "isom"); wTag(out, o + 12, "iso2")
-    wTag(out, o + 16, "mp41"); wTag(out, o + 20, "mp42"); o += 24
-    def writeMdat(): Unit = {
-      require(o == mdatOff, s"mdat at $o, expected $mdatOff")
-      box(8 + payload.length, "mdat")
-      System.arraycopy(payload, 0, out, o, payload.length)
-      o += payload.length
-    }
-    if (moovLast) writeMdat()
-    box(397 + 4 * n, "moov")
-    box(108, "mvhd")
-    wbe32(out, o + 12, timescale); wbe32(out, o + 16, duration)
-    wbe32(out, o + 20, 0x10000); wbe16(out, o + 24, 0x100)
-    wbe32(out, o + 36, 0x10000); wbe32(out, o + 52, 0x10000)
-    wbe32(out, o + 68, 0x40000000)
-    wbe32(out, o + 96, 2)
-    o += 100
-    box(281 + 4 * n, "trak")
-    box(92, "tkhd")
-    out(o + 3) = 3
-    wbe32(out, o + 12, 1)
-    wbe32(out, o + 20, duration)
-    wbe32(out, o + 40, 0x10000); wbe32(out, o + 56, 0x10000)
-    wbe32(out, o + 72, 0x40000000)
-    wbe32(out, o + 76, width << 16); wbe32(out, o + 80, height << 16)
-    o += 84
-    box(181 + 4 * n, "mdia")
-    box(32, "mdhd")
-    wbe32(out, o + 12, timescale); wbe32(out, o + 16, duration)
-    wbe16(out, o + 20, 0x55c4)
-    o += 24
-    box(33, "hdlr")
-    wTag(out, o + 8, "vide")
-    o += 25
-    box(108 + 4 * n, "minf")
-    box(100 + 4 * n, "stbl")
-    box(24, "stts")
-    wbe32(out, o + 4, 1)
-    wbe32(out, o + 8, n); wbe32(out, o + 12, sampleDelta)
-    o += 16
-    box(20 + 4 * n, "stsz")
-    wbe32(out, o + 4, 0) // sample_size 0 => per-sample table follows
-    wbe32(out, o + 8, n)
-    var i = 0
-    while (i < n) { wbe32(out, o + 12 + i * 4, sampleSizes(i)); i += 1 }
-    o += 12 + 4 * n
-    box(28, "stsc")
-    wbe32(out, o + 4, 1)
-    wbe32(out, o + 8, 1)     // first_chunk
-    wbe32(out, o + 12, n)    // samples_per_chunk: all in one chunk
-    wbe32(out, o + 16, 1)    // sample_description_index
-    o += 20
-    box(20, "stco")
-    wbe32(out, o + 4, 1)
-    wbe32(out, o + 8, mdatOff + 8) // absolute offset of sample 0
-    o += 12
-    if (!moovLast) writeMdat()
-    require(o == out.length, s"encoder wrote $o of ${out.length}")
-    out
+    val n = sampleSizes.length
+    mp4Mux(Seq(TrakOut("vide", width, height, timescale, n, sampleDelta,
+      None, data => Seq(stsz(n, 0, sampleSizes), stsc(n), stco(data, Seq(0))))),
+      Seq(payload), moovLast)
   }
 
   /** Parse one stsz box into per-sample sizes — fixed form or table
@@ -1175,92 +1200,12 @@ object Codecs {
   def mp4EncodeVideo(timescale: Int, sampleDelta: Int, width: Int,
       height: Int, frames: Seq[Array[Byte]],
       moovLast: Boolean = false): Array[Byte] = {
+    requireFrames(width, height, frames)
     val nf = frames.length
-    require(timescale > 0 && sampleDelta > 0 && nf > 0 &&
-      width > 0 && height > 0, "bad mp4 parameters")
-    require(width.toLong * height * 3 * nf + 539 <= Int.MaxValue,
-      s"payload of $nf ${width}x$height frames overflows one buffer")
-    val fsize = width * height * 3
-    frames.foreach(f => require(f.length == fsize,
-      s"frame length ${f.length} != $width x $height x 3"))
-    val duration = nf * sampleDelta
-    val out = new Array[Byte](mp4SizeVideo(nf * fsize))
-    val mdatOff = if (moovLast) 32 else 531
-    var o = 0
-    def box(size: Int, tp: String): Unit = {
-      wbe32(out, o, size); wTag(out, o + 4, tp); o += 8
-    }
-    box(32, "ftyp")
-    wTag(out, o, "isom"); wbe32(out, o + 4, 0x200)
-    wTag(out, o + 8, "isom"); wTag(out, o + 12, "iso2")
-    wTag(out, o + 16, "mp41"); wTag(out, o + 20, "mp42"); o += 24
-    def writeMdat(): Unit = {
-      require(o == mdatOff, s"mdat at $o, expected $mdatOff")
-      box(8 + nf * fsize, "mdat")
-      frames.foreach { f =>
-        System.arraycopy(f, 0, out, o, fsize); o += fsize
-      }
-    }
-    if (moovLast) writeMdat()
-    box(499, "moov")
-    box(108, "mvhd")
-    wbe32(out, o + 12, timescale); wbe32(out, o + 16, duration)
-    wbe32(out, o + 20, 0x10000); wbe16(out, o + 24, 0x100)
-    wbe32(out, o + 36, 0x10000); wbe32(out, o + 52, 0x10000)
-    wbe32(out, o + 68, 0x40000000)
-    wbe32(out, o + 96, 2)
-    o += 100
-    box(383, "trak")
-    box(92, "tkhd")
-    out(o + 3) = 3
-    wbe32(out, o + 12, 1)
-    wbe32(out, o + 20, duration)
-    wbe32(out, o + 40, 0x10000); wbe32(out, o + 56, 0x10000)
-    wbe32(out, o + 72, 0x40000000)
-    wbe32(out, o + 76, width << 16); wbe32(out, o + 80, height << 16)
-    o += 84
-    box(283, "mdia")
-    box(32, "mdhd")
-    wbe32(out, o + 12, timescale); wbe32(out, o + 16, duration)
-    wbe16(out, o + 20, 0x55c4)
-    o += 24
-    box(33, "hdlr")
-    wTag(out, o + 8, "vide")
-    o += 25
-    box(210, "minf")
-    box(202, "stbl")
-    // stsd: one VisualSampleEntry (86 bytes), fourcc 'raw ', depth 24
-    box(102, "stsd")
-    wbe32(out, o + 4, 1) // entry_count (version/flags at o+0 are 0)
-    val e = o + 8
-    wbe32(out, e, 86); wTag(out, e + 4, "raw ")
-    wbe16(out, e + 14, 1)                 // data_reference_index
-    wbe16(out, e + 32, width); wbe16(out, e + 34, height)
-    wbe32(out, e + 36, 0x480000)          // 72 dpi, 16.16 fixed
-    wbe32(out, e + 40, 0x480000)
-    wbe16(out, e + 48, 1)                 // frame_count per sample
-    wbe16(out, e + 82, 24)                // depth: packed RGB24
-    wbe16(out, e + 84, 0xffff)            // pre_defined = -1
-    o += 94
-    box(24, "stts")
-    wbe32(out, o + 4, 1)
-    wbe32(out, o + 8, nf); wbe32(out, o + 12, sampleDelta)
-    o += 16
-    box(20, "stsz")
-    wbe32(out, o + 4, fsize) // fixed sample size: no per-sample table
-    wbe32(out, o + 8, nf)
-    o += 12
-    box(28, "stsc")
-    wbe32(out, o + 4, 1)
-    wbe32(out, o + 8, 1); wbe32(out, o + 12, nf); wbe32(out, o + 16, 1)
-    o += 20
-    box(20, "stco")
-    wbe32(out, o + 4, 1)
-    wbe32(out, o + 8, mdatOff + 8)
-    o += 12
-    if (!moovLast) writeMdat()
-    require(o == out.length, s"encoder wrote $o of ${out.length}")
-    out
+    mp4Mux(Seq(TrakOut("vide", width, height, timescale, nf, sampleDelta,
+      Some(rawEntry(width, height)), data =>
+        Seq(stsz(nf, width * height * 3), stsc(nf), stco(data, Seq(0))))),
+      frames, moovLast)
   }
 
   /** The real MP4 VIDEO decoder — frame rasters parsed out of the
@@ -1335,155 +1280,36 @@ object Codecs {
       height: Int, frames: Seq[Array[Byte]], samplesPerFrame: Int,
       samples: Array[Short], moovLast: Boolean = false): Array[Byte] = {
     val nf = frames.length
-    require(timescale > 0 && sampleDelta > 0 && nf > 0 &&
-      width > 0 && height > 0 && samplesPerFrame > 0 &&
+    require(timescale > 0 && sampleDelta > 0 && samplesPerFrame > 0 &&
       timescale % sampleDelta == 0, "bad mp4 parameters")
-    require(samples.length == nf * samplesPerFrame,
+    require(samples.length.toLong == nf.toLong * samplesPerFrame,
       s"audio length ${samples.length} != $nf x $samplesPerFrame")
-    require((width.toLong * height * 3 + 2L * samplesPerFrame) * nf
-      + 864L + 8L * nf <= Int.MaxValue,
-      s"payload of $nf ${width}x$height AV frames overflows one buffer")
+    requireFrames(width, height, frames)
     val fsize = width * height * 3
-    frames.foreach(f => require(f.length == fsize,
-      s"frame length ${f.length} != $width x $height x 3"))
-    val duration = nf * sampleDelta
     val audioRate = (timescale / sampleDelta) * samplesPerFrame
-    val abytes = 2 * samplesPerFrame
-    val out = new Array[Byte](mp4SizeAv(width, height, nf,
-      samplesPerFrame))
-    val mdatOff = if (moovLast) 32 else 856 + 8 * nf
-    var o = 0
-    def box(size: Int, tp: String): Unit = {
-      wbe32(out, o, size); wTag(out, o + 4, tp); o += 8
-    }
-    def chunkOff(f: Int): Int = mdatOff + 8 + f * (fsize + abytes)
-    box(32, "ftyp")
-    wTag(out, o, "isom"); wbe32(out, o + 4, 0x200)
-    wTag(out, o + 8, "isom"); wTag(out, o + 12, "iso2")
-    wTag(out, o + 16, "mp41"); wTag(out, o + 20, "mp42"); o += 24
-    def writeMdat(): Unit = {
-      require(o == mdatOff, s"mdat at $o, expected $mdatOff")
-      box(8 + nf * (fsize + abytes), "mdat")
-      var f = 0
-      while (f < nf) {
-        System.arraycopy(frames(f), 0, out, o, fsize); o += fsize
-        var i = 0
-        while (i < samplesPerFrame) {
-          // 'sowt' = little-endian PCM16 (the QuickTime fourcc)
-          w16(out, o, samples(f * samplesPerFrame + i) & 0xffff)
-          o += 2; i += 1
-        }
-        f += 1
+    // each frame's audio block as 'sowt' = little-endian PCM16
+    val pcm = frames.indices.map { f =>
+      val a = new Array[Byte](2 * samplesPerFrame)
+      var i = 0
+      while (i < samplesPerFrame) {
+        w16(a, 2 * i, samples(f * samplesPerFrame + i) & 0xffff)
+        i += 1
       }
+      a
     }
-    if (moovLast) writeMdat()
-    box(824 + 8 * nf, "moov")
-    box(108, "mvhd")
-    wbe32(out, o + 12, timescale); wbe32(out, o + 16, duration)
-    wbe32(out, o + 20, 0x10000); wbe16(out, o + 24, 0x100)
-    wbe32(out, o + 36, 0x10000); wbe32(out, o + 52, 0x10000)
-    wbe32(out, o + 68, 0x40000000)
-    wbe32(out, o + 96, 3) // next_track_ID: two tracks used
-    o += 100
-    // ---- video trak ----
-    box(379 + 4 * nf, "trak")
-    box(92, "tkhd")
-    out(o + 3) = 3
-    wbe32(out, o + 12, 1)
-    wbe32(out, o + 20, duration)
-    wbe32(out, o + 40, 0x10000); wbe32(out, o + 56, 0x10000)
-    wbe32(out, o + 72, 0x40000000)
-    wbe32(out, o + 76, width << 16); wbe32(out, o + 80, height << 16)
-    o += 84
-    box(279 + 4 * nf, "mdia")
-    box(32, "mdhd")
-    wbe32(out, o + 12, timescale); wbe32(out, o + 16, duration)
-    wbe16(out, o + 20, 0x55c4)
-    o += 24
-    box(33, "hdlr")
-    wTag(out, o + 8, "vide")
-    o += 25
-    box(206 + 4 * nf, "minf")
-    box(198 + 4 * nf, "stbl")
-    box(102, "stsd")
-    wbe32(out, o + 4, 1)
-    val ve = o + 8
-    wbe32(out, ve, 86); wTag(out, ve + 4, "raw ")
-    wbe16(out, ve + 14, 1)
-    wbe16(out, ve + 32, width); wbe16(out, ve + 34, height)
-    wbe32(out, ve + 36, 0x480000); wbe32(out, ve + 40, 0x480000)
-    wbe16(out, ve + 48, 1)
-    wbe16(out, ve + 82, 24)
-    wbe16(out, ve + 84, 0xffff)
-    o += 94
-    box(24, "stts")
-    wbe32(out, o + 4, 1)
-    wbe32(out, o + 8, nf); wbe32(out, o + 12, sampleDelta)
-    o += 16
-    box(20, "stsz")
-    wbe32(out, o + 4, fsize); wbe32(out, o + 8, nf)
-    o += 12
-    box(28, "stsc")
-    wbe32(out, o + 4, 1)
-    wbe32(out, o + 8, 1); wbe32(out, o + 12, 1); wbe32(out, o + 16, 1)
-    o += 20
-    box(16 + 4 * nf, "stco")
-    wbe32(out, o + 4, nf)
-    var f = 0
-    while (f < nf) { wbe32(out, o + 8 + f * 4, chunkOff(f)); f += 1 }
-    o += 8 + 4 * nf
-    // ---- audio trak ----
-    box(329 + 4 * nf, "trak")
-    box(92, "tkhd")
-    out(o + 3) = 3
-    wbe32(out, o + 12, 2) // track_ID 2; dims stay 0x0 for audio
-    wbe32(out, o + 20, duration)
-    wbe32(out, o + 40, 0x10000); wbe32(out, o + 56, 0x10000)
-    wbe32(out, o + 72, 0x40000000)
-    o += 84
-    box(229 + 4 * nf, "mdia")
-    box(32, "mdhd")
-    wbe32(out, o + 12, audioRate) // media timescale = sample rate
-    wbe32(out, o + 16, nf * samplesPerFrame)
-    wbe16(out, o + 20, 0x55c4)
-    o += 24
-    box(33, "hdlr")
-    wTag(out, o + 8, "soun")
-    o += 25
-    box(156 + 4 * nf, "minf")
-    box(148 + 4 * nf, "stbl")
-    // stsd: one AudioSampleEntry (36 bytes), fourcc 'sowt' (PCM16 LE)
-    box(52, "stsd")
-    wbe32(out, o + 4, 1)
-    val ae = o + 8
-    wbe32(out, ae, 36); wTag(out, ae + 4, "sowt")
-    wbe16(out, ae + 14, 1)            // data_reference_index
-    wbe16(out, ae + 24, 1)            // channelcount: mono
-    wbe16(out, ae + 26, 16)           // samplesize bits
-    wbe32(out, ae + 32, audioRate << 16) // 16.16 fixed
-    o += 44
-    box(24, "stts")
-    wbe32(out, o + 4, 1)
-    wbe32(out, o + 8, nf * samplesPerFrame); wbe32(out, o + 12, 1)
-    o += 16
-    box(20, "stsz")
-    wbe32(out, o + 4, 2); wbe32(out, o + 8, nf * samplesPerFrame)
-    o += 12
-    box(28, "stsc")
-    wbe32(out, o + 4, 1)
-    wbe32(out, o + 8, 1); wbe32(out, o + 12, samplesPerFrame)
-    wbe32(out, o + 16, 1)
-    o += 20
-    box(16 + 4 * nf, "stco")
-    wbe32(out, o + 4, nf)
-    f = 0
-    while (f < nf) {
-      wbe32(out, o + 8 + f * 4, chunkOff(f) + fsize); f += 1
-    }
-    o += 8 + 4 * nf
-    if (!moovLast) writeMdat()
-    require(o == out.length, s"encoder wrote $o of ${out.length}")
-    out
+    // mdat alternates frame f's raster and its audio block: chunk f of
+    // the video and of the audio track
+    def chunks(first: Int): Seq[Int] =
+      frames.indices.map(f => f * (fsize + 2 * samplesPerFrame) + first)
+    mp4Mux(Seq(
+      TrakOut("vide", width, height, timescale, nf, sampleDelta,
+        Some(rawEntry(width, height)),
+        data => Seq(stsz(nf, fsize), stsc(1), stco(data, chunks(0)))),
+      TrakOut("soun", 0, 0, audioRate, nf * samplesPerFrame, 1,
+        Some(sowtEntry(audioRate)),
+        data => Seq(stsz(nf * samplesPerFrame, 2), stsc(samplesPerFrame),
+          stco(data, chunks(fsize))))),
+      frames.zip(pcm).flatMap { case (v, a) => Seq(v, a) }, moovLast)
   }
 
   /** The real TWO-TRACK MP4 decoder: the per-trak parse of
@@ -1986,9 +1812,11 @@ object Codecs {
     * (spec'd against hand-built files since round 10). */
   def gifEncode(width: Int, height: Int, indices: Array[Byte],
       interlaced: Boolean): Array[Byte] = {
-    require(width > 0 && height > 0 &&
-      indices.length == width * height,
+    require(indices.length == width.toLong * height,
       s"index raster length ${indices.length} != $width x $height")
+    // the screen and image descriptors hold the dims as 16-bit fields
+    require(width > 0 && height > 0 && width <= 65535 && height <= 65535,
+      s"GIF dims ${width}x$height outside the 16-bit descriptor fields")
     val out = new java.io.ByteArrayOutputStream()
     out.write('G'); out.write('I'); out.write('F')
     out.write('8'); out.write('7'); out.write('a')

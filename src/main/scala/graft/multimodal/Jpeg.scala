@@ -227,7 +227,7 @@ object Jpeg {
   // ----------------------------------------------------------------
 
   /** Encoder-side table: code word + length per symbol value. */
-  private final class HuffEnc(bits: Array[Int], vals: Array[Byte]) {
+  private final class HuffEnc(val bits: Array[Int], val vals: Array[Byte]) {
     val codeOf = new Array[Int](256)
     val lenOf = new Array[Int](256)
     locally {
@@ -271,6 +271,18 @@ object Jpeg {
       }
       require(k == vals.length, "DHT BITS sum != HUFFVAL count")
     }
+
+    /** The next symbol of `br` (F.2.2.3 DECODE). */
+    def decode(br: BitReader): Int = {
+      var code = br.nextBit()
+      var l = 1
+      while (code > maxCode(l)) {
+        require(l < 16, "invalid Huffman code in entropy data")
+        code = (code << 1) | br.nextBit()
+        l += 1
+      }
+      huffVal(valPtr(l) + code - minCode(l)) & 0xff
+    }
   }
 
   // ----------------------------------------------------------------
@@ -293,6 +305,12 @@ object Jpeg {
         i -= 1
       }
     }
+    /** The code of `sym` in table `t`. */
+    def code(t: HuffEnc, sym: Int): Unit = put(t.codeOf(sym), t.lenOf(sym))
+    /** The `s` magnitude bits of `v` (F.1.2.1: a negative value as
+      * v - 1 in s bits). */
+    def bits(v: Int, s: Int): Unit =
+      put(if (v < 0) v + (1 << s) - 1 else v, s)
     /** Pad the final byte with 1-bits (B.1.1.5). */
     def flush(): Unit = if (n > 0) put((1 << (8 - n)) - 1, 8 - n)
   }
@@ -353,20 +371,128 @@ object Jpeg {
     out.write(0xff); out.write(m)
   }
 
-  private def writeDqt(out: java.io.ByteArrayOutputStream, id: Int,
-      qNat: Array[Int]): Unit = {
-    marker(out, 0xdb); wbe16(out, 67); out.write(id) // Pq=0 (8-bit), Tq=id
-    var k = 0
-    while (k < 64) { out.write(qNat(Zigzag(k))); k += 1 }
+  /** Per table set (0 = luminance, 1 = chrominance): the K.1/K.2
+    * quantizer and the K.3 DC and AC Huffman tables. */
+  private val Quant = Array(QLum, QChr)
+  private val DcEnc =
+    Array(new HuffEnc(DcLumBits, DcLumVals), new HuffEnc(DcChrBits, DcChrVals))
+  private val AcEnc =
+    Array(new HuffEnc(AcLumBits, AcLumVals), new HuffEnc(AcChrBits, AcChrVals))
+
+  /** The 32 symbols an AC SUCCESSIVE-APPROXIMATION refinement scan
+    * can emit (G.1.2.3): EOBn for n=0..14, ZRL, and (r,1) for
+    * r=0..15 — the stock Annex K AC table lacks the EOBn codes, so
+    * SA scans carry their own canonical table (31 codes at 5 bits +
+    * one at 6; Kraft 63/64, the all-ones code stays reserved per
+    * C.2). */
+  private val AcRefEnc = new HuffEnc(
+    Array(0, 0, 0, 0, 31, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0), {
+      val b = new Array[Byte](32)
+      var i = 0
+      while (i < 15) { b(i) = (i << 4).toByte; i += 1 } // EOBn
+      b(15) = 0xf0.toByte                               // ZRL
+      var r = 0
+      while (r < 16) { b(16 + r) = ((r << 4) | 1).toByte; r += 1 }
+      b
+    })
+
+  /** One component of a frame being encoded: sampling factors h x v,
+    * table set t (it picks the DQT and both DHTs), and its sample at
+    * full-resolution pixel (x, y). */
+  private final case class Component(h: Int, v: Int, t: Int,
+      sample: (Int, Int) => Int)
+
+  /** The one JPEG frame writer: SOI, APP0 (JFIF 1.1, no density, no
+    * thumbnail), a DQT per table set in use, SOFn (`sof` 0xc0 baseline,
+    * 0xc2 progressive; component c has id c + 1), a DC and an AC DHT
+    * per table set (plus the refinement AC table as AC table 1 when
+    * `refine`), a DRI when `restart` > 0, then the scans `scans` writes,
+    * then EOI. */
+  private def frame(width: Int, height: Int, sof: Int,
+      comps: Seq[Component], restart: Int = 0, refine: Boolean = false)(
+      scans: java.io.ByteArrayOutputStream => Unit): Array[Byte] = {
+    require(width > 0 && height > 0 && width <= 65535 && height <= 65535,
+      s"JPEG dims ${width}x$height outside the 16-bit SOF fields")
+    require(restart >= 0 && restart <= 65535, s"bad DRI $restart")
+    val out = new java.io.ByteArrayOutputStream()
+    val sets = comps.map(_.t).distinct
+    marker(out, 0xd8) // SOI
+    marker(out, 0xe0); wbe16(out, 16)
+    out.write("JFIF".getBytes("US-ASCII")); out.write(0)
+    out.write(1); out.write(1); out.write(0)
+    wbe16(out, 1); wbe16(out, 1); out.write(0); out.write(0)
+    sets.foreach { t =>
+      marker(out, 0xdb); wbe16(out, 67); out.write(t) // Pq=0 (8-bit), Tq=t
+      Zigzag.foreach(nat => out.write(Quant(t)(nat)))
+    }
+    marker(out, sof); wbe16(out, 8 + 3 * comps.length)
+    out.write(8); wbe16(out, height); wbe16(out, width)
+    out.write(comps.length)
+    comps.zipWithIndex.foreach { case (k, c) =>
+      out.write(c + 1); out.write((k.h << 4) | k.v); out.write(k.t)
+    }
+    def dht(clazz: Int, id: Int, h: HuffEnc): Unit = {
+      marker(out, 0xc4); wbe16(out, 2 + 17 + h.vals.length)
+      out.write((clazz << 4) | id)
+      h.bits.foreach(out.write(_))
+      out.write(h.vals, 0, h.vals.length)
+    }
+    sets.foreach { t => dht(0, t, DcEnc(t)); dht(1, t, AcEnc(t)) }
+    if (refine) dht(1, 1, AcRefEnc)
+    if (restart > 0) { marker(out, 0xdd); wbe16(out, 4); wbe16(out, restart) }
+    scans(out)
+    marker(out, 0xd9) // EOI
+    out.toByteArray
   }
 
-  private def writeDht(out: java.io.ByteArrayOutputStream, clazz: Int,
-      id: Int, bits: Array[Int], vals: Array[Byte]): Unit = {
-    marker(out, 0xc4); wbe16(out, 2 + 17 + vals.length)
-    out.write((clazz << 4) | id)
-    var l = 0
-    while (l < 16) { out.write(bits(l)); l += 1 }
-    out.write(vals, 0, vals.length)
+  /** The one scan writer: SOS naming each scan component as (id,
+    * Td << 4 | Ta), the spectral band [ss, se] and the
+    * successive-approximation bits, then the entropy-coded segment
+    * `code` writes through one BitWriter, padded to a byte. */
+  private def scan(out: java.io.ByteArrayOutputStream, sel: Seq[(Int, Int)],
+      ss: Int, se: Int, ah: Int, al: Int)(code: BitWriter => Unit): Unit = {
+    marker(out, 0xda); wbe16(out, 6 + 2 * sel.length)
+    out.write(sel.length)
+    sel.foreach { case (id, tables) => out.write(id); out.write(tables) }
+    out.write(ss); out.write(se); out.write((ah << 4) | al)
+    val bw = new BitWriter(out)
+    code(bw)
+    bw.flush()
+  }
+
+  /** The components sampled onto the MCU grid of a width x height
+    * raster: mcusX x mcusY MCUs of 8·hMax x 8·vMax pixels, pixels past
+    * the raster edge-replicated (the standard encoder treatment of
+    * partial boundary blocks). A component sampled below hMax x vMax
+    * takes the mean, rounded half up, of the full-resolution samples
+    * each of its samples covers (the 2x2 box mean of 4:2:0 chroma — the
+    * filter T.81 leaves to the encoder; the decoder's replication
+    * upsample is its inverse on constant 2x2 quads). Returns mcusX,
+    * mcusY and the planes, component c's mcusX·h·8 samples per row. */
+  private def mcuGrid(width: Int, height: Int, comps: Seq[Component])
+      : (Int, Int, Seq[Array[Int]]) = {
+    val hMax = comps.map(_.h).max
+    val vMax = comps.map(_.v).max
+    val mcusX = (width + 8 * hMax - 1) / (8 * hMax)
+    val mcusY = (height + 8 * vMax - 1) / (8 * vMax)
+    (mcusX, mcusY, comps.map { k =>
+      val (sx, sy) = (hMax / k.h, vMax / k.v)
+      val pw = mcusX * k.h * 8
+      Array.tabulate(pw * mcusY * k.v * 8) { i =>
+        var sum = 0
+        var dy = 0
+        while (dy < sy) {
+          var dx = 0
+          while (dx < sx) {
+            sum += k.sample(math.min((i % pw) * sx + dx, width - 1),
+              math.min((i / pw) * sy + dy, height - 1))
+            dx += 1
+          }
+          dy += 1
+        }
+        (sum + sx * sy / 2) / (sx * sy)
+      }
+    })
   }
 
   /** FDCT + quantize one block; returns the 64 quantized coefficients
@@ -396,412 +522,196 @@ object Jpeg {
     }
   }
 
-  /** Huffman-encode one zigzag block (F.1.2): DC difference category
-    * + magnitude bits, AC run/size symbols with ZRL and EOB. Returns
-    * the new DC predictor. */
-  private def encodeBlock(bw: BitWriter, zz: Array[Int], pred: Int,
-      dc: HuffEnc, ac: HuffEnc): Int = {
-    val diff = zz(0) - pred
+  /** The DC first-scan coder, also the baseline DC (F.1.2.1): the
+    * difference of `dc` from `pred` as its category code + magnitude
+    * bits. Returns `dc`, the next predictor. */
+  private def dcFirst(bw: BitWriter, dc: Int, pred: Int, t: HuffEnc): Int = {
+    val diff = dc - pred
     val cat = bitLength(math.abs(diff))
-    bw.put(dc.codeOf(cat), dc.lenOf(cat))
-    if (cat > 0)
-      bw.put(if (diff < 0) diff + (1 << cat) - 1 else diff, cat)
+    bw.code(t, cat)
+    bw.bits(diff, cat)
+    dc
+  }
+
+  /** The AC first-scan coder, also the baseline AC (F.1.2.2): band
+    * [ss, se] of one zigzag block at point transform `al` (truncating
+    * toward zero, G.1.2.1 — unlike DC's arithmetic shift) as run/size
+    * codes + magnitude bits, a ZRL per 16 zeros before a nonzero, and
+    * one EOB (a run of one block) when the band ends in zeros. */
+  private def acFirst(bw: BitWriter, zz: Array[Int], ss: Int, se: Int,
+      al: Int, t: HuffEnc): Unit = {
     var run = 0
-    var k = 1
-    while (k < 64) {
-      val v = zz(k)
+    var k = ss
+    while (k <= se) {
+      val v = if (zz(k) < 0) -((-zz(k)) >> al) else zz(k) >> al
       if (v == 0) run += 1
       else {
-        while (run >= 16) { bw.put(ac.codeOf(0xf0), ac.lenOf(0xf0)); run -= 16 }
+        while (run >= 16) { bw.code(t, 0xf0); run -= 16 }
         val s = bitLength(math.abs(v))
-        val sym = (run << 4) | s
-        bw.put(ac.codeOf(sym), ac.lenOf(sym))
-        bw.put(if (v < 0) v + (1 << s) - 1 else v, s)
+        bw.code(t, (run << 4) | s)
+        bw.bits(v, s)
         run = 0
       }
       k += 1
     }
-    if (run > 0) bw.put(ac.codeOf(0x00), ac.lenOf(0x00)) // EOB
-    zz(0)
+    if (run > 0) bw.code(t, 0x00) // EOB
   }
 
-  /** Pad a sample plane to multiples of 8 by edge replication (the
-    * standard encoder treatment of partial boundary blocks). */
-  private def padPlane(w: Int, h: Int, get: (Int, Int) => Int): (Array[Int], Int, Int) = {
-    val pw = (w + 7) / 8 * 8
-    val ph = (h + 7) / 8 * 8
-    val p = new Array[Int](pw * ph)
-    var y = 0
-    while (y < ph) {
-      val sy = if (y < h) y else h - 1
-      var x = 0
-      while (x < pw) {
-        p(y * pw + x) = get(if (x < w) x else w - 1, sy)
-        x += 1
-      }
-      y += 1
+  /** The AC refinement-scan coder (G.1.2.3) over band [ss, se] of every
+    * block, Ah = al + 1, with the refinement table. At this scan's
+    * precision a coefficient of magnitude 1 is new (its run of
+    * zero-history positions, then its sign), one of magnitude >= 2 was
+    * sent before and gets its correction bit (bit 0 of the magnitude)
+    * where the decoder's advance reaches it, and blocks with nothing
+    * new go as EOBn runs carrying their correction bits. */
+  private def acRefine(bw: BitWriter, blocks: Array[Array[Int]], ss: Int,
+      se: Int, al: Int): Unit = {
+    var eobrun = 0
+    val pending = new java.io.ByteArrayOutputStream() // one bit/byte
+    def flushEob(): Unit = if (eobrun > 0) {
+      val r = 31 - Integer.numberOfLeadingZeros(eobrun)
+      bw.code(AcRefEnc, r << 4)
+      bw.put(eobrun - (1 << r), r)
+      pending.toByteArray.foreach(bit => bw.put(bit, 1))
+      pending.reset(); eobrun = 0
     }
-    (p, pw, ph)
-  }
-
-  private val DcLumEnc = new HuffEnc(DcLumBits, DcLumVals)
-  private val AcLumEnc = new HuffEnc(AcLumBits, AcLumVals)
-  private val DcChrEnc = new HuffEnc(DcChrBits, DcChrVals)
-  private val AcChrEnc = new HuffEnc(AcChrBits, AcChrVals)
-
-  /** Encode an 8-bit grayscale plane (row-major, w*h bytes) as a
-    * baseline JFIF JPEG: SOI, APP0, K.1 luminance DQT, SOF0 (one
-    * component, 1x1 sampling), the two K.3 luminance DHTs, a single
-    * interleaved SOS, byte-stuffed entropy data, EOI. */
-  def encodeGray(width: Int, height: Int, gray: Array[Byte]): Array[Byte] =
-    encodeGray(width, height, gray, 0)
-
-  /** [[encodeGray]] with a DRI restart interval: every `restart` MCUs
-    * the entropy stream byte-aligns, emits the cycling RST0-7 marker,
-    * and resets the DC predictor (T.81 B.2.4.4/E.1.4) — the
-    * resilience feature real camera JPEGs carry; 0 = none. */
-  def encodeGray(width: Int, height: Int, gray: Array[Byte],
-      restart: Int): Array[Byte] = {
-    require(width > 0 && height > 0 && gray.length == width * height,
-      s"plane length ${gray.length} != $width x $height")
-    require(restart >= 0 && restart <= 65535, s"bad DRI $restart")
-    val (plane, pw, ph) = padPlane(width, height,
-      (x, y) => gray(y * width + x) & 0xff)
-    val out = new java.io.ByteArrayOutputStream()
-    marker(out, 0xd8) // SOI
-    // APP0 JFIF v1.1, no density, no thumbnail
-    marker(out, 0xe0); wbe16(out, 16)
-    out.write("JFIF".getBytes("US-ASCII")); out.write(0)
-    out.write(1); out.write(1); out.write(0)
-    wbe16(out, 1); wbe16(out, 1); out.write(0); out.write(0)
-    writeDqt(out, 0, QLum)
-    marker(out, 0xc0); wbe16(out, 11) // SOF0, 1 component
-    out.write(8); wbe16(out, height); wbe16(out, width); out.write(1)
-    out.write(1); out.write(0x11); out.write(0) // id 1, H=V=1, Tq 0
-    writeDht(out, 0, 0, DcLumBits, DcLumVals)
-    writeDht(out, 1, 0, AcLumBits, AcLumVals)
-    if (restart > 0) { marker(out, 0xdd); wbe16(out, 4); wbe16(out, restart) }
-    marker(out, 0xda); wbe16(out, 8) // SOS
-    out.write(1); out.write(1); out.write(0x00) // comp 1 uses Td=Ta=0
-    out.write(0); out.write(63); out.write(0)   // Ss, Se, AhAl
-    var bw = new BitWriter(out)
-    val zz = new Array[Int](64)
-    var pred = 0
-    val totalMcus = (ph / 8) * (pw / 8)
-    var mcu = 0
-    var rstN = 0
-    while (mcu < totalMcus) {
-      val bx = mcu % (pw / 8)
-      val by = mcu / (pw / 8)
-      quantBlock(plane, pw, bx * 8, by * 8, QLum, zz)
-      pred = encodeBlock(bw, zz, pred, DcLumEnc, AcLumEnc)
-      mcu += 1
-      if (restart > 0 && mcu % restart == 0 && mcu < totalMcus) {
-        bw.flush() // byte-align before the marker
-        marker(out, 0xd0 + rstN)
-        rstN = (rstN + 1) % 8
-        pred = 0
-        bw = new BitWriter(out)
-      }
-    }
-    bw.flush()
-    marker(out, 0xd9) // EOI
-    out.toByteArray
-  }
-
-  /** Encode an 8-bit grayscale plane as a PROGRESSIVE JPEG (SOF2,
-    * T.81 Annex G.2) with the simplest legal spectral-selection
-    * progression: scan 1 carries the complete DC band ([0,0], Ah=Al=0)
-    * and scan 2 the complete AC band ([1,63], Ah=Al=0) — no
-    * successive approximation, every EOB an EOB0. The quantized
-    * coefficients are IDENTICAL to [[encodeGray]]'s (same DQT, same
-    * FDCT, same half-away quantizer), so decoding the progressive
-    * stream must reproduce the baseline decode bit-for-bit — the
-    * cross-mode equivalence theorem MultimodalJpegSpec pins, and the
-    * reason the invertible-class oracle carries over unchanged. */
-  def encodeGrayProgressive(width: Int, height: Int,
-      gray: Array[Byte]): Array[Byte] = {
-    require(width > 0 && height > 0 && gray.length == width * height,
-      s"plane length ${gray.length} != $width x $height")
-    val (plane, pw, ph) = padPlane(width, height,
-      (x, y) => gray(y * width + x) & 0xff)
-    val out = new java.io.ByteArrayOutputStream()
-    marker(out, 0xd8) // SOI
-    marker(out, 0xe0); wbe16(out, 16)
-    out.write("JFIF".getBytes("US-ASCII")); out.write(0)
-    out.write(1); out.write(1); out.write(0)
-    wbe16(out, 1); wbe16(out, 1); out.write(0); out.write(0)
-    writeDqt(out, 0, QLum)
-    marker(out, 0xc2); wbe16(out, 11) // SOF2, 1 component
-    out.write(8); wbe16(out, height); wbe16(out, width); out.write(1)
-    out.write(1); out.write(0x11); out.write(0) // id 1, H=V=1, Tq 0
-    writeDht(out, 0, 0, DcLumBits, DcLumVals)
-    writeDht(out, 1, 0, AcLumBits, AcLumVals)
-    // quantize every block once; both scans read the same coefficients
-    val nbx = pw / 8; val nby = ph / 8
-    val blocks = Array.ofDim[Int](nbx * nby, 64)
-    var bi = 0
-    while (bi < nbx * nby) {
-      quantBlock(plane, pw, (bi % nbx) * 8, (bi / nbx) * 8, QLum,
-        blocks(bi))
-      bi += 1
-    }
-    // scan 1: DC band (diff category + magnitude bits, as baseline)
-    marker(out, 0xda); wbe16(out, 8)
-    out.write(1); out.write(1); out.write(0x00)
-    out.write(0); out.write(0); out.write(0) // Ss=0, Se=0, AhAl=0
-    var bw = new BitWriter(out)
-    var pred = 0
-    bi = 0
-    while (bi < nbx * nby) {
-      val diff = blocks(bi)(0) - pred
-      pred = blocks(bi)(0)
-      val cat = bitLength(math.abs(diff))
-      bw.put(DcLumEnc.codeOf(cat), DcLumEnc.lenOf(cat))
-      if (cat > 0)
-        bw.put(if (diff < 0) diff + (1 << cat) - 1 else diff, cat)
-      bi += 1
-    }
-    bw.flush()
-    // scan 2: AC band [1,63] (run/size + ZRL, EOB0 per early-ending
-    // block — a legal EOB run of exactly one)
-    marker(out, 0xda); wbe16(out, 8)
-    out.write(1); out.write(1); out.write(0x00)
-    out.write(1); out.write(63); out.write(0) // Ss=1, Se=63, AhAl=0
-    bw = new BitWriter(out)
-    bi = 0
-    while (bi < nbx * nby) {
-      val zz = blocks(bi)
-      var run = 0
-      var k = 1
-      while (k < 64) {
-        val v = zz(k)
-        if (v == 0) run += 1
-        else {
-          while (run >= 16) {
-            bw.put(AcLumEnc.codeOf(0xf0), AcLumEnc.lenOf(0xf0))
-            run -= 16
+    blocks.foreach { zz =>
+      def mag(p: Int): Int = math.abs(zz(p)) >> al
+      var k = ss
+      var blockOpen = true
+      while (blockOpen && k <= se) {
+        // next insertion position at or after k
+        var j = k
+        while (j <= se && mag(j) != 1) j += 1
+        if (j > se) {
+          // EOB region: the tail's correction bits ride the run
+          var p = k
+          while (p <= se) {
+            if (mag(p) >= 2) pending.write(mag(p) & 1)
+            p += 1
           }
-          val s = bitLength(math.abs(v))
-          val sym = (run << 4) | s
-          bw.put(AcLumEnc.codeOf(sym), AcLumEnc.lenOf(sym))
-          bw.put(if (v < 0) v + (1 << s) - 1 else v, s)
-          run = 0
-        }
-        k += 1
-      }
-      if (run > 0) bw.put(AcLumEnc.codeOf(0x00), AcLumEnc.lenOf(0x00))
-      bi += 1
-    }
-    bw.flush()
-    marker(out, 0xd9) // EOI
-    out.toByteArray
-  }
-
-  /** The 32 symbols an AC SUCCESSIVE-APPROXIMATION refinement scan
-    * can emit (G.1.2.3): EOBn for n=0..14, ZRL, and (r,1) for
-    * r=0..15 — the stock Annex K AC table lacks the EOBn codes, so
-    * SA scans carry their own canonical table (31 codes at 5 bits +
-    * one at 6; Kraft 63/64, the all-ones code stays reserved per
-    * C.2). */
-  private val AcRefBits = Array(0, 0, 0, 0, 31, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-  private val AcRefVals: Array[Byte] = {
-    val b = new Array[Byte](32)
-    var i = 0
-    while (i < 15) { b(i) = (i << 4).toByte; i += 1 } // EOBn
-    b(15) = 0xf0.toByte                               // ZRL
-    var r = 0
-    while (r < 16) { b(16 + r) = ((r << 4) | 1).toByte; r += 1 }
-    b
-  }
-  private val AcRefEnc = new HuffEnc(AcRefBits, AcRefVals)
-
-  /** Encode an 8-bit grayscale plane as a SIX-SCAN progressive JPEG
-    * with spectral selection AND successive approximation (T.81
-    * G.1.2): DC first at Al=1, AC first scans for the [1,5] and
-    * [6,63] bands at Al=1, then the DC refinement bit and the two AC
-    * refinement scans at Ah=1/Al=0 — real EOB runs (dedicated
-    * refinement Huffman table carrying the EOBn codes the stock
-    * Annex K table lacks), correction bits interleaved exactly as
-    * G.1.2.3's advance walk reads them, and +-1 insertions over
-    * zero-history positions. The point transform loses nothing by
-    * the time the progression completes (DC: arithmetic shift +
-    * correction bit; AC: truncate-toward-zero halving + correction
-    * bit for |c| >= 2, +-1 insertion for |c| == 1), so the final
-    * coefficients equal [[encodeGray]]'s exactly and the decode is
-    * byte-identical to baseline — the same cross-mode equivalence
-    * theorem [[encodeGrayProgressive]] pins, now through the
-    * refinement paths. */
-  def encodeGrayProgressiveSA(width: Int, height: Int,
-      gray: Array[Byte]): Array[Byte] = {
-    require(width > 0 && height > 0 && gray.length == width * height,
-      s"plane length ${gray.length} != $width x $height")
-    val (plane, pw, ph) = padPlane(width, height,
-      (x, y) => gray(y * width + x) & 0xff)
-    val out = new java.io.ByteArrayOutputStream()
-    marker(out, 0xd8) // SOI
-    marker(out, 0xe0); wbe16(out, 16)
-    out.write("JFIF".getBytes("US-ASCII")); out.write(0)
-    out.write(1); out.write(1); out.write(0)
-    wbe16(out, 1); wbe16(out, 1); out.write(0); out.write(0)
-    writeDqt(out, 0, QLum)
-    marker(out, 0xc2); wbe16(out, 11) // SOF2, 1 component
-    out.write(8); wbe16(out, height); wbe16(out, width); out.write(1)
-    out.write(1); out.write(0x11); out.write(0) // id 1, H=V=1, Tq 0
-    writeDht(out, 0, 0, DcLumBits, DcLumVals)
-    writeDht(out, 1, 0, AcLumBits, AcLumVals)
-    writeDht(out, 1, 1, AcRefBits, AcRefVals)
-    val nbx = pw / 8; val nby = ph / 8
-    val blocks = Array.ofDim[Int](nbx * nby, 64)
-    var bi = 0
-    while (bi < nbx * nby) {
-      quantBlock(plane, pw, (bi % nbx) * 8, (bi / nbx) * 8, QLum,
-        blocks(bi))
-      bi += 1
-    }
-    def sos(ta: Int, ss: Int, se: Int, ahAl: Int): BitWriter = {
-      marker(out, 0xda); wbe16(out, 8)
-      out.write(1); out.write(1); out.write(ta)
-      out.write(ss); out.write(se); out.write(ahAl)
-      new BitWriter(out)
-    }
-    // AC point transform truncates toward ZERO (G.1.2.1 — unlike
-    // DC's arithmetic shift), preserving sign and |t| = |c| >> Al
-    def pt(v: Int): Int = if (v < 0) -((-v) >> 1) else v >> 1
-
-    // scan 1: DC first, Al=1 — diff coding over the SHIFTED values
-    var bw = sos(0, 0, 0, 0x01)
-    var pred = 0
-    bi = 0
-    while (bi < nbx * nby) {
-      val t = blocks(bi)(0) >> 1 // arithmetic shift (G.1.2.1, DC)
-      val diff = t - pred
-      pred = t
-      val cat = bitLength(math.abs(diff))
-      bw.put(DcLumEnc.codeOf(cat), DcLumEnc.lenOf(cat))
-      if (cat > 0)
-        bw.put(if (diff < 0) diff + (1 << cat) - 1 else diff, cat)
-      bi += 1
-    }
-    bw.flush()
-    // scans 2-3: AC first for each band at Al=1 (stock table,
-    // EOB0 per early-ending block)
-    for ((ss, se) <- Seq((1, 5), (6, 63))) {
-      bw = sos(0, ss, se, 0x01)
-      bi = 0
-      while (bi < nbx * nby) {
-        val zz = blocks(bi)
-        var run = 0
-        var k = ss
-        while (k <= se) {
-          val t = pt(zz(k))
-          if (t == 0) run += 1
-          else {
-            while (run >= 16) {
-              bw.put(AcLumEnc.codeOf(0xf0), AcLumEnc.lenOf(0xf0))
-              run -= 16
-            }
-            val s = bitLength(math.abs(t))
-            val sym = (run << 4) | s
-            bw.put(AcLumEnc.codeOf(sym), AcLumEnc.lenOf(sym))
-            bw.put(if (t < 0) t + (1 << s) - 1 else t, s)
-            run = 0
-          }
-          k += 1
-        }
-        if (run > 0) bw.put(AcLumEnc.codeOf(0x00), AcLumEnc.lenOf(0x00))
-        bi += 1
-      }
-      bw.flush()
-    }
-    // scan 4: DC refinement — one raw bit per block (two's-complement
-    // bit 0; (c >> 1) << 1 | (c & 1) == c for either sign)
-    bw = sos(0, 0, 0, 0x10)
-    bi = 0
-    while (bi < nbx * nby) {
-      bw.put(blocks(bi)(0) & 1, 1)
-      bi += 1
-    }
-    bw.flush()
-    // scans 5-6: AC refinement per band (Ah=1, Al=0, refinement
-    // table) — history nonzero iff |c| >= 2 (sent in the first scan),
-    // insertion iff |c| == 1, correction bit = bit 0 of |c|
-    for ((ss, se) <- Seq((1, 5), (6, 63))) {
-      bw = sos(1, ss, se, 0x10)
-      var eobrun = 0
-      val pending = new java.io.ByteArrayOutputStream() // one bit/byte
-      def flushEob(): Unit = if (eobrun > 0) {
-        val r = 31 - Integer.numberOfLeadingZeros(eobrun)
-        bw.put(AcRefEnc.codeOf(r << 4), AcRefEnc.lenOf(r << 4))
-        if (r > 0) bw.put(eobrun - (1 << r), r)
-        val pb = pending.toByteArray
-        var i = 0
-        while (i < pb.length) { bw.put(pb(i), 1); i += 1 }
-        pending.reset(); eobrun = 0
-      }
-      bi = 0
-      while (bi < nbx * nby) {
-        val zz = blocks(bi)
-        var k = ss
-        var blockOpen = true
-        while (blockOpen && k <= se) {
-          // next insertion position at or after k
-          var j = k
-          while (j <= se && math.abs(zz(j)) != 1) j += 1
-          if (j > se) {
-            // EOB region: the tail's correction bits ride the run
-            var p = k
-            while (p <= se) {
-              if (math.abs(zz(p)) >= 2) pending.write(math.abs(zz(p)) & 1)
-              p += 1
-            }
-            eobrun += 1
-            if (eobrun == 32767) flushEob()
-            blockOpen = false
-          } else {
-            flushEob()
-            // ZRLs while >= 16 zero-history positions precede j; each
-            // consumes exactly 16 zeros with crossed corrections
-            // interleaved after its symbol (the decoder's advance)
-            var segStart = k
-            var emitted = false
-            while (!emitted) {
-              var zc = 0
-              var p = segStart
-              while (p < j) { if (zz(p) == 0) zc += 1; p += 1 }
-              if (zc < 16) {
-                bw.put(AcRefEnc.codeOf((zc << 4) | 1),
-                  AcRefEnc.lenOf((zc << 4) | 1))
-                bw.put(if (zz(j) > 0) 1 else 0, 1) // sign of +-1
-                p = segStart
-                while (p < j) {
-                  if (math.abs(zz(p)) >= 2)
-                    bw.put(math.abs(zz(p)) & 1, 1)
-                  p += 1
-                }
-                emitted = true
-              } else {
-                bw.put(AcRefEnc.codeOf(0xf0), AcRefEnc.lenOf(0xf0))
-                var consumed = 0
-                p = segStart
-                while (consumed < 16) {
-                  if (zz(p) == 0) consumed += 1
-                  else bw.put(math.abs(zz(p)) & 1, 1)
-                  p += 1
-                }
-                segStart = p
+          eobrun += 1
+          if (eobrun == 32767) flushEob()
+          blockOpen = false
+        } else {
+          flushEob()
+          // ZRLs while >= 16 zero-history positions precede j; each
+          // consumes exactly 16 zeros with crossed corrections
+          // interleaved after its symbol (the decoder's advance)
+          var segStart = k
+          var emitted = false
+          while (!emitted) {
+            var zc = 0
+            var p = segStart
+            while (p < j) { if (mag(p) == 0) zc += 1; p += 1 }
+            if (zc < 16) {
+              bw.code(AcRefEnc, (zc << 4) | 1)
+              bw.put(if (zz(j) > 0) 1 else 0, 1) // sign of +-1
+              p = segStart
+              while (p < j) {
+                if (mag(p) >= 2) bw.put(mag(p) & 1, 1)
+                p += 1
               }
+              emitted = true
+            } else {
+              bw.code(AcRefEnc, 0xf0)
+              var consumed = 0
+              p = segStart
+              while (consumed < 16) {
+                if (mag(p) == 0) consumed += 1
+                else bw.put(mag(p) & 1, 1)
+                p += 1
+              }
+              segStart = p
             }
-            k = j + 1
+          }
+          k = j + 1
+        }
+      }
+    }
+    flushEob()
+  }
+
+  /** The three baseline encoders' one body: SOF0 and a single
+    * interleaved sequential scan over the components in MCU order
+    * (T.81 A.2.3: each component's h x v blocks in raster order), each
+    * block FDCT-quantized and coded as its DC difference and AC
+    * run/size codes. Every `restart` MCUs the entropy stream
+    * byte-aligns, emits the cycling RST0-7 marker, and resets the DC
+    * predictors (T.81 B.2.4.4/E.1.4). */
+  private def baseline(width: Int, height: Int, comps: Seq[Component],
+      restart: Int = 0): Array[Byte] =
+    frame(width, height, 0xc0, comps, restart) { out =>
+      val (mcusX, mcusY, planes) = mcuGrid(width, height, comps)
+      val zz = new Array[Int](64)
+      val preds = new Array[Int](comps.length)
+      scan(out, comps.indices.map(c => (c + 1, comps(c).t * 0x11)),
+        0, 63, 0, 0) { bw =>
+        var mcu = 0
+        while (mcu < mcusX * mcusY) {
+          val (mx, my) = (mcu % mcusX, mcu / mcusX)
+          for (c <- comps.indices; k = comps(c); j <- 0 until k.v;
+              i <- 0 until k.h) {
+            quantBlock(planes(c), mcusX * k.h * 8, (mx * k.h + i) * 8,
+              (my * k.v + j) * 8, Quant(k.t), zz)
+            preds(c) = dcFirst(bw, zz(0), preds(c), DcEnc(k.t))
+            acFirst(bw, zz, 1, 63, 0, AcEnc(k.t))
+          }
+          mcu += 1
+          if (restart > 0 && mcu % restart == 0 && mcu < mcusX * mcusY) {
+            bw.flush() // byte-align before the marker
+            marker(out, 0xd0 + (mcu / restart - 1) % 8)
+            java.util.Arrays.fill(preds, 0)
           }
         }
-        bi += 1
       }
-      flushEob()
-      bw.flush()
     }
-    marker(out, 0xd9) // EOI
-    out.toByteArray
+
+  /** One scan of a progressive script: spectral band [ss, se] and
+    * successive-approximation bits ah (0 in a band's first scan), al. */
+  private final case class ScanStep(ss: Int, se: Int, ah: Int, al: Int)
+
+  /** The two progressive encoders' one body: SOF2, every block of the
+    * gray plane quantized once, then the `script`'s scans in order, each
+    * by the coder of its kind — DC first, AC first, DC refine (one raw
+    * bit per block: (c >> 1) << 1 | (c & 1) == c for either sign), AC
+    * refine — over the blocks in raster order. Only AC refinement scans
+    * use the refinement table, as AC table 1. */
+  private def progressive(width: Int, height: Int, gray: Array[Byte],
+      script: Seq[ScanStep]): Array[Byte] = {
+    val comps = Seq(grayComponent(width, height, gray))
+    def refining(s: ScanStep) = s.ss > 0 && s.ah > 0
+    frame(width, height, 0xc2, comps, refine = script.exists(refining)) {
+      out =>
+        val (mcusX, mcusY, planes) = mcuGrid(width, height, comps)
+        val blocks = Array.tabulate(mcusX * mcusY) { bi =>
+          val zz = new Array[Int](64)
+          quantBlock(planes.head, mcusX * 8, (bi % mcusX) * 8,
+            (bi / mcusX) * 8, QLum, zz)
+          zz
+        }
+        script.foreach { s =>
+          scan(out, Seq((1, if (refining(s)) 0x01 else 0x00)), s.ss, s.se,
+            s.ah, s.al) { bw =>
+            if (refining(s)) acRefine(bw, blocks, s.ss, s.se, s.al)
+            else if (s.ss > 0)
+              blocks.foreach(acFirst(bw, _, s.ss, s.se, s.al, AcEnc(0)))
+            else if (s.ah > 0)
+              blocks.foreach(zz => bw.put((zz(0) >> s.al) & 1, 1))
+            else blocks.foldLeft(0)((pred, zz) =>
+              dcFirst(bw, zz(0) >> s.al, pred, DcEnc(0)))
+          }
+        }
+    }
+  }
+
+  /** An 8-bit grayscale plane (row-major, w*h bytes) as one luminance
+    * component, 1x1 sampling. */
+  private def grayComponent(width: Int, height: Int,
+      gray: Array[Byte]): Component = {
+    require(gray.length == width.toLong * height,
+      s"plane length ${gray.length} != $width x $height")
+    Component(1, 1, 0, (x, y) => gray(y * width + x) & 0xff)
   }
 
   /** Integer BT.601 forward conversion at one pixel, clamped to the
@@ -823,64 +733,75 @@ object Jpeg {
     if (v < 0) 0 else if (v > 255) 255 else v
   }
 
+  /** A top-down RGB raster as Y (luminance tables, `yh` x `yh`
+    * sampling) + Cb + Cr (chrominance tables, 1x1). */
+  private def yccComponents(width: Int, height: Int, rgb: Array[Byte],
+      yh: Int): Seq[Component] = {
+    require(rgb.length == 3L * width * height,
+      s"raster length ${rgb.length} != $width x $height x 3")
+    Component(yh, yh, 0, yccAt(rgb, width, 0, _, _)) +:
+      (1 to 2).map(sel => Component(1, 1, 1, yccAt(rgb, width, sel, _, _)))
+  }
+
+  /** Encode an 8-bit grayscale plane (row-major, w*h bytes) as a
+    * baseline JFIF JPEG: SOI, APP0, K.1 luminance DQT, SOF0 (one
+    * component, 1x1 sampling), the two K.3 luminance DHTs, a single
+    * interleaved SOS, byte-stuffed entropy data, EOI. */
+  def encodeGray(width: Int, height: Int, gray: Array[Byte]): Array[Byte] =
+    encodeGray(width, height, gray, 0)
+
+  /** [[encodeGray]] with a DRI restart interval: every `restart` MCUs
+    * the entropy stream byte-aligns, emits the cycling RST0-7 marker,
+    * and resets the DC predictor (T.81 B.2.4.4/E.1.4) — the
+    * resilience feature real camera JPEGs carry; 0 = none. */
+  def encodeGray(width: Int, height: Int, gray: Array[Byte],
+      restart: Int): Array[Byte] =
+    baseline(width, height, Seq(grayComponent(width, height, gray)), restart)
+
+  /** Encode an 8-bit grayscale plane as a PROGRESSIVE JPEG (SOF2,
+    * T.81 Annex G.2) with the simplest legal spectral-selection
+    * progression: scan 1 carries the complete DC band ([0,0], Ah=Al=0)
+    * and scan 2 the complete AC band ([1,63], Ah=Al=0) — no
+    * successive approximation, every EOB an EOB0. The quantized
+    * coefficients are IDENTICAL to [[encodeGray]]'s (same DQT, same
+    * FDCT, same half-away quantizer), so decoding the progressive
+    * stream must reproduce the baseline decode bit-for-bit — the
+    * cross-mode equivalence theorem MultimodalJpegSpec pins, and the
+    * reason the invertible-class oracle carries over unchanged. */
+  def encodeGrayProgressive(width: Int, height: Int,
+      gray: Array[Byte]): Array[Byte] =
+    progressive(width, height, gray,
+      Seq(ScanStep(0, 0, 0, 0), ScanStep(1, 63, 0, 0)))
+
+  /** Encode an 8-bit grayscale plane as a SIX-SCAN progressive JPEG
+    * with spectral selection AND successive approximation (T.81
+    * G.1.2): DC first at Al=1, AC first scans for the [1,5] and
+    * [6,63] bands at Al=1, then the DC refinement bit and the two AC
+    * refinement scans at Ah=1/Al=0 — real EOB runs (dedicated
+    * refinement Huffman table carrying the EOBn codes the stock
+    * Annex K table lacks), correction bits interleaved exactly as
+    * G.1.2.3's advance walk reads them, and +-1 insertions over
+    * zero-history positions. The point transform loses nothing by
+    * the time the progression completes (DC: arithmetic shift +
+    * correction bit; AC: truncate-toward-zero halving + correction
+    * bit for |c| >= 2, +-1 insertion for |c| == 1), so the final
+    * coefficients equal [[encodeGray]]'s exactly and the decode is
+    * byte-identical to baseline — the same cross-mode equivalence
+    * theorem [[encodeGrayProgressive]] pins, now through the
+    * refinement paths. */
+  def encodeGrayProgressiveSA(width: Int, height: Int,
+      gray: Array[Byte]): Array[Byte] =
+    progressive(width, height, gray, Seq(ScanStep(0, 0, 0, 1),
+      ScanStep(1, 5, 0, 1), ScanStep(6, 63, 0, 1), ScanStep(0, 0, 1, 0),
+      ScanStep(1, 5, 1, 0), ScanStep(6, 63, 1, 0)))
+
   /** Encode a top-down RGB raster as a baseline 4:4:4 YCbCr JPEG
     * (three components, 1x1 sampling each, K.1/K.2 quantizers, all
     * four K.3 Huffman tables, one interleaved scan). The integer
     * BT.601 conversion coefficients sum exactly per channel, so gray
     * inputs (R=G=B) map to Y=v, Cb=Cr=128 without rounding loss. */
-  def encodeColor444(width: Int, height: Int, rgb: Array[Byte]): Array[Byte] = {
-    require(width > 0 && height > 0 && rgb.length == width * height * 3,
-      s"raster length ${rgb.length} != $width x $height x 3")
-    def ch(sel: Int)(x: Int, y: Int): Int = yccAt(rgb, width, sel, x, y)
-    val planes = (0 to 2).map(c => padPlane(width, height, ch(c)))
-    val out = new java.io.ByteArrayOutputStream()
-    marker(out, 0xd8)
-    marker(out, 0xe0); wbe16(out, 16)
-    out.write("JFIF".getBytes("US-ASCII")); out.write(0)
-    out.write(1); out.write(1); out.write(0)
-    wbe16(out, 1); wbe16(out, 1); out.write(0); out.write(0)
-    writeDqt(out, 0, QLum)
-    writeDqt(out, 1, QChr)
-    marker(out, 0xc0); wbe16(out, 17) // SOF0, 3 components
-    out.write(8); wbe16(out, height); wbe16(out, width); out.write(3)
-    out.write(1); out.write(0x11); out.write(0) // Y
-    out.write(2); out.write(0x11); out.write(1) // Cb
-    out.write(3); out.write(0x11); out.write(1) // Cr
-    writeDht(out, 0, 0, DcLumBits, DcLumVals)
-    writeDht(out, 1, 0, AcLumBits, AcLumVals)
-    writeDht(out, 0, 1, DcChrBits, DcChrVals)
-    writeDht(out, 1, 1, AcChrBits, AcChrVals)
-    marker(out, 0xda); wbe16(out, 12)
-    out.write(3)
-    out.write(1); out.write(0x00)
-    out.write(2); out.write(0x11)
-    out.write(3); out.write(0x11)
-    out.write(0); out.write(63); out.write(0)
-    val bw = new BitWriter(out)
-    val zz = new Array[Int](64)
-    val preds = new Array[Int](3)
-    val (_, pw, ph) = planes(0)
-    var by = 0
-    while (by < ph / 8) {
-      var bx = 0
-      while (bx < pw / 8) {
-        var c = 0
-        while (c < 3) {
-          val q = if (c == 0) QLum else QChr
-          quantBlock(planes(c)._1, pw, bx * 8, by * 8, q, zz)
-          preds(c) = encodeBlock(bw, zz, preds(c),
-            if (c == 0) DcLumEnc else DcChrEnc,
-            if (c == 0) AcLumEnc else AcChrEnc)
-          c += 1
-        }
-        bx += 1
-      }
-      by += 1
-    }
-    bw.flush()
-    marker(out, 0xd9)
-    out.toByteArray
-  }
+  def encodeColor444(width: Int, height: Int, rgb: Array[Byte]): Array[Byte] =
+    baseline(width, height, yccComponents(width, height, rgb, 1))
 
   /** Encode a top-down RGB raster as a baseline 4:2:0 YCbCr JPEG —
     * the subsampling real pipelines actually emit: Y at full
@@ -893,106 +814,8 @@ object Jpeg {
     * Gray inputs (R=G=B) have Cb=Cr=128 everywhere, so the
     * invertible-class analysis extends unchanged to subsampled
     * color — proven per class in the 4:2:0 round-trip spec. */
-  def encodeColor420(width: Int, height: Int, rgb: Array[Byte]): Array[Byte] = {
-    require(width > 0 && height > 0 && rgb.length == width * height * 3,
-      s"raster length ${rgb.length} != $width x $height x 3")
-    val mw = (width + 15) / 16 * 16
-    val mh = (height + 15) / 16 * 16
-    // Y at full resolution, edge-replicated to the 16-pixel MCU grid
-    val yP = new Array[Int](mw * mh)
-    var py = 0
-    while (py < mh) {
-      val sy = math.min(py, height - 1)
-      var px = 0
-      while (px < mw) {
-        yP(py * mw + px) = yccAt(rgb, width, 0, math.min(px, width - 1), sy)
-        px += 1
-      }
-      py += 1
-    }
-    // chroma at half resolution: 2x2 box mean over the edge-replicated
-    // full-res conversion (partial boundary quads replicate the edge)
-    val cw = mw / 2; val chh = mh / 2
-    val cbP = new Array[Int](cw * chh)
-    val crP = new Array[Int](cw * chh)
-    var cy = 0
-    while (cy < chh) {
-      var cx = 0
-      while (cx < cw) {
-        var sel = 1
-        while (sel <= 2) {
-          var sum = 0
-          var dy = 0
-          while (dy < 2) {
-            var dx = 0
-            while (dx < 2) {
-              sum += yccAt(rgb, width, sel,
-                math.min(2 * cx + dx, width - 1),
-                math.min(2 * cy + dy, height - 1))
-              dx += 1
-            }
-            dy += 1
-          }
-          val v = (sum + 2) / 4
-          if (sel == 1) cbP(cy * cw + cx) = v else crP(cy * cw + cx) = v
-          sel += 1
-        }
-        cx += 1
-      }
-      cy += 1
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    marker(out, 0xd8)
-    marker(out, 0xe0); wbe16(out, 16)
-    out.write("JFIF".getBytes("US-ASCII")); out.write(0)
-    out.write(1); out.write(1); out.write(0)
-    wbe16(out, 1); wbe16(out, 1); out.write(0); out.write(0)
-    writeDqt(out, 0, QLum)
-    writeDqt(out, 1, QChr)
-    marker(out, 0xc0); wbe16(out, 17) // SOF0, 3 components
-    out.write(8); wbe16(out, height); wbe16(out, width); out.write(3)
-    out.write(1); out.write(0x22); out.write(0) // Y, 2x2
-    out.write(2); out.write(0x11); out.write(1) // Cb, 1x1
-    out.write(3); out.write(0x11); out.write(1) // Cr, 1x1
-    writeDht(out, 0, 0, DcLumBits, DcLumVals)
-    writeDht(out, 1, 0, AcLumBits, AcLumVals)
-    writeDht(out, 0, 1, DcChrBits, DcChrVals)
-    writeDht(out, 1, 1, AcChrBits, AcChrVals)
-    marker(out, 0xda); wbe16(out, 12)
-    out.write(3)
-    out.write(1); out.write(0x00)
-    out.write(2); out.write(0x11)
-    out.write(3); out.write(0x11)
-    out.write(0); out.write(63); out.write(0)
-    val bw = new BitWriter(out)
-    val zz = new Array[Int](64)
-    val preds = new Array[Int](3)
-    var my = 0
-    while (my < mh / 16) {
-      var mx = 0
-      while (mx < mw / 16) {
-        var j = 0
-        while (j < 2) {
-          var i = 0
-          while (i < 2) {
-            quantBlock(yP, mw, (mx * 2 + i) * 8, (my * 2 + j) * 8, QLum, zz)
-            preds(0) = encodeBlock(bw, zz, preds(0), DcLumEnc, AcLumEnc)
-            i += 1
-          }
-          j += 1
-        }
-        quantBlock(cbP, cw, mx * 8, my * 8, QChr, zz)
-        preds(1) = encodeBlock(bw, zz, preds(1), DcChrEnc, AcChrEnc)
-        quantBlock(crP, cw, mx * 8, my * 8, QChr, zz)
-        preds(2) = encodeBlock(bw, zz, preds(2), DcChrEnc, AcChrEnc)
-        mx += 1
-      }
-      my += 1
-    }
-    bw.flush()
-    marker(out, 0xd9)
-    out.toByteArray
-  }
+  def encodeColor420(width: Int, height: Int, rgb: Array[Byte]): Array[Byte] =
+    baseline(width, height, yccComponents(width, height, rgb, 2))
 
   // ----------------------------------------------------------------
   // Decoder.
@@ -1023,6 +846,15 @@ object Jpeg {
       def be16(off: Int): Int = {
         require(off + 2 <= b.length, "truncated JPEG marker segment")
         ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
+      }
+
+      // T.81 B.1.1.2 permits any number of 0xFF fill bytes before a
+      // marker: the offset of the last 0xFF of the run starting at p
+      def skipFill(p: Int): Int = {
+        var q = p
+        while (q + 1 < b.length && (b(q) & 0xff) == 0xff &&
+          (b(q + 1) & 0xff) == 0xff) q += 1
+        q
       }
 
       val qTabs = new Array[Array[Int]](4) // zigzag order, as stored
@@ -1056,8 +888,7 @@ object Jpeg {
         while (scanStart < 0 && !eoiSeen) {
         require(pos + 2 <= b.length, "truncated JPEG (no SOS)")
         require((b(pos) & 0xff) == 0xff, f"expected marker at $pos")
-        // skip fill bytes (B.1.1.2 allows any number of 0xFF)
-        while (pos + 1 < b.length && (b(pos + 1) & 0xff) == 0xff) pos += 1
+        pos = skipFill(pos)
         val m = b(pos + 1) & 0xff
         pos += 2
         m match {
@@ -1250,34 +1081,42 @@ object Jpeg {
         c += 1
       }
 
+      // a restart boundary follows unit `done` of `total` (MCUs, or
+      // blocks of a non-interleaved scan) every restartInterval units
+      def atRestart(done: Int, total: Int): Boolean =
+        restartInterval > 0 && done % restartInterval == 0 && done < total
+
+      // at a restart boundary the entropy data byte-aligns, may carry
+      // fill bytes, must hold the cycling RSTn, and the DC predictors
+      // reset
+      def resync(br: BitReader, done: Int, preds: Array[Int]): Unit = {
+        val n = (done / restartInterval - 1) % 8
+        br.align()
+        br.pos = skipFill(br.pos)
+        require(br.pos + 2 <= b.length && (b(br.pos) & 0xff) == 0xff &&
+          (b(br.pos + 1) & 0xff) == 0xd0 + n,
+          s"missing RST$n after unit $done")
+        br.pos += 2
+        java.util.Arrays.fill(preds, 0)
+      }
+
       if (!progressive) {
       val br = new BitReader(b, scanStart, b.length)
       val preds = new Array[Int](nComp)
       val coef = new Array[Int](64)
       val samp = new Array[Int](64)
 
-      def decodeHuff(t: HuffDec): Int = {
-        var code = br.nextBit()
-        var l = 1
-        while (code > t.maxCode(l)) {
-          require(l < 16, "invalid Huffman code in entropy data")
-          code = (code << 1) | br.nextBit()
-          l += 1
-        }
-        t.huffVal(t.valPtr(l) + code - t.minCode(l)) & 0xff
-      }
-
       def decodeBlockTo(ci: Int, x0: Int, y0: Int): Unit = {
         java.util.Arrays.fill(coef, 0)
         val q = qTabs(cTq(ci))
-        val t = decodeHuff(dcTabs(cTd(ci)))
+        val t = dcTabs(cTd(ci)).decode(br)
         require(t <= 11, s"bad DC category $t")
         preds(ci) += extend(br.receive(t), t)
         coef(0) = preds(ci) * q(0)
         var k = 1
         var open = true
         while (open && k < 64) {
-          val rs = decodeHuff(acTabs(cTa(ci)))
+          val rs = acTabs(cTa(ci)).decode(br)
           val r = rs >> 4
           val s = rs & 0x0f
           if (s == 0) {
@@ -1314,7 +1153,6 @@ object Jpeg {
 
       val totalMcus = mcusX * mcusY
       var mcu = 0
-      var rstN = 0
       while (mcu < totalMcus) {
         val mx = mcu % mcusX
         val my = mcu / mcusX
@@ -1332,30 +1170,13 @@ object Jpeg {
           ci += 1
         }
         mcu += 1
-        if (restartInterval > 0 && mcu % restartInterval == 0 &&
-          mcu < totalMcus) {
-          br.align()
-          // T.81 B.1.1.2 permits optional 0xFF fill bytes before any
-          // marker — skip a run of them before the RSTn check, exactly
-          // as the EOI handling below does.
-          while (br.pos + 1 < b.length && (b(br.pos) & 0xff) == 0xff &&
-            (b(br.pos + 1) & 0xff) == 0xff) br.pos += 1
-          require(br.pos + 2 <= b.length &&
-            (b(br.pos) & 0xff) == 0xff &&
-            (b(br.pos + 1) & 0xff) == 0xd0 + rstN,
-            s"missing RST$rstN after MCU $mcu")
-          br.pos += 2
-          rstN = (rstN + 1) % 8
-          java.util.Arrays.fill(preds, 0)
-        }
+        if (atRestart(mcu, totalMcus)) resync(br, mcu, preds)
       }
 
       // the scan must be followed by EOI (possibly after fill bytes);
       // trailing bytes after EOI are tolerated (RIFF pad bytes etc.)
       br.align()
-      var p = br.pos
-      while (p + 1 < b.length && (b(p) & 0xff) == 0xff &&
-        (b(p + 1) & 0xff) == 0xff) p += 1
+      val p = skipFill(br.pos)
       require(p + 2 <= b.length && (b(p) & 0xff) == 0xff &&
         (b(p + 1) & 0xff) == 0xd9, "missing EOI after scan")
       } else {
@@ -1389,41 +1210,17 @@ object Jpeg {
           val br = new BitReader(b, scanStart, b.length)
           java.util.Arrays.fill(preds, 0)
           var eobrun = 0
-          var rstN = 0
 
-          def decodeHuff(t: HuffDec): Int = {
-            var code = br.nextBit()
-            var l = 1
-            while (code > t.maxCode(l)) {
-              require(l < 16, "invalid Huffman code in entropy data")
-              code = (code << 1) | br.nextBit()
-              l += 1
-            }
-            t.huffVal(t.valPtr(l) + code - t.minCode(l)) & 0xff
-          }
-
-          // RSTn boundary every restartInterval decode units (MCUs
-          // when interleaved, blocks when not) — resets DC preds AND
-          // the EOB run (G.1.2.2)
+          // an EOB run may not cross a restart boundary (G.1.2.2)
           def expectRst(done: Int, total: Int): Unit =
-            if (restartInterval > 0 && done % restartInterval == 0 &&
-              done < total) {
+            if (atRestart(done, total)) {
               require(eobrun == 0, "EOB run across a restart boundary")
-              br.align()
-              while (br.pos + 1 < b.length && (b(br.pos) & 0xff) == 0xff &&
-                (b(br.pos + 1) & 0xff) == 0xff) br.pos += 1
-              require(br.pos + 2 <= b.length &&
-                (b(br.pos) & 0xff) == 0xff &&
-                (b(br.pos + 1) & 0xff) == 0xd0 + rstN,
-                s"missing RST$rstN after unit $done")
-              br.pos += 2
-              rstN = (rstN + 1) % 8
-              java.util.Arrays.fill(preds, 0)
+              resync(br, done, preds)
             }
 
           def decodeDcAt(ci: Int, off: Int): Unit =
             if (scanAh == 0) {
-              val t = decodeHuff(dcTabs(cTd(ci)))
+              val t = dcTabs(cTd(ci)).decode(br)
               require(t <= 11, s"bad DC category $t")
               preds(ci) += extend(br.receive(t), t)
               coefs(ci)(off) = preds(ci) << scanAl
@@ -1441,7 +1238,7 @@ object Jpeg {
               var k = scanSs
               var open = true
               while (open && k <= scanSe) {
-                val rs = decodeHuff(acTabs(cTa(ci)))
+                val rs = acTabs(cTa(ci)).decode(br)
                 val r = rs >> 4
                 val s = rs & 0x0f
                 if (s == 0) {
@@ -1480,7 +1277,7 @@ object Jpeg {
             if (eobrun == 0) {
               var open = true
               while (open && k <= scanSe) {
-                val rs = decodeHuff(acTabs(cTa(ci)))
+                val rs = acTabs(cTa(ci)).decode(br)
                 var r = rs >> 4
                 val s = rs & 0x0f
                 var newval = 0

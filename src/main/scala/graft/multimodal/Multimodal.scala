@@ -1800,24 +1800,13 @@ object Multimodal {
       .orderBy("doc_id")
   }
 
-  /** The deterministic multi-frame AVI clip per document shared by
-    * [[mmDecodeVideo]] and [[mmArgmaxTrack]] (one pattern, one
-    * oracle CTE chain — the shared-literal rule). */
-  private def videoClips(s: SparkSession, dir: String)
-      : Dataset[(Long, Array[Byte])] =
-    videoClipsOn(docIds(s, dir))
-
-  /** The clips of any id relation — pure mapPartitions, so it is
-    * STREAMING-LEGAL (a readStream of ids encodes the same clips;
-    * StreamingSpec proves decode-stats equivalence batch vs stream). */
-  private def videoClipsOn(ids: Dataset[Long])
-      : Dataset[(Long, Array[Byte])] = {
-    val s = ids.sparkSession
-    import s.implicits._
-    ids.mapPartitions(_.map { id =>
-      val (w, h, nf) = aviClipDims(id)
-      (id, Codecs.aviEncode(w, h, 10, clip(ClipRgb, id, nf, w, h)))
-    })
+  /** The deterministic multi-frame AVI clip of document `id`, shared
+    * by [[mmDecodeVideo]], [[mmArgmaxTrack]] and [[mmCropClip]] (one
+    * pattern, one oracle CTE chain — the shared-literal rule). Each
+    * operator encodes it inside its own decoding pass. */
+  private def aviClip(id: Long): Array[Byte] = {
+    val (w, h, nf) = aviClipDims(id)
+    Codecs.aviEncode(w, h, 10, clip(ClipRgb, id, nf, w, h))
   }
 
   /** The AVI clips' dims and frame count: w in [8, 15], h in [6, 10],
@@ -1854,17 +1843,20 @@ object Multimodal {
   def mmDecodeVideo(s: SparkSession, dir: String): DataFrame =
     mmDecodeVideoOn(docIds(s, dir)).orderBy("doc_id")
 
-  /** Streaming-legal core (no sort; encode + decode are both pure
-    * mapPartitions passes): works identically on a batch id relation
+  /** Streaming-legal core (no sort; encode + decode are one pure
+    * mapPartitions pass): works identically on a batch id relation
     * and a readStream of ids — the codec boundary composes with
     * Structured Streaming unchanged. */
   def mmDecodeVideoOn(ids: Dataset[Long]): DataFrame = {
     val s = ids.sparkSession
     import s.implicits._
     val bound = videoDecoder.resolve(s)
-    videoClipsOn(ids).mapPartitions { it =>
+    ids.mapPartitions { it =>
       val dec = bound.load()
-      it.map { case (id, bytes) => videoRow(id, bytes, dec.decode(bytes)) }
+      it.map { id =>
+        val bytes = aviClip(id)
+        videoRow(id, bytes, dec.decode(bytes))
+      }
     }.toDF("doc_id", "n_bytes", "width", "height", "n_frames", "fps",
       "sum_rgb", "n_cuts")
   }
@@ -1910,10 +1902,10 @@ object Multimodal {
   def mmArgmaxTrack(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val bound = videoDecoder.resolve(s)
-    videoClips(s, dir).mapPartitions { it =>
+    docIds(s, dir).mapPartitions { it =>
       val dec = bound.load()
-      it.flatMap { case (id, bytes) =>
-        val v = dec.decode(bytes)
+      it.flatMap { id =>
+        val v = dec.decode(aviClip(id))
         var prevX = 0
         var prevY = 0
         v.frames.iterator.zipWithIndex.map { case (fr, f) =>
@@ -2145,9 +2137,10 @@ object Multimodal {
   def mmCropClip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val bound = videoDecoder.resolve(s)
-    videoClips(s, dir).mapPartitions { it =>
+    docIds(s, dir).mapPartitions { it =>
       val dec = bound.load()
-      it.map { case (id, bytes) =>
+      it.map { id =>
+        val bytes = aviClip(id)
         val v = dec.decode(bytes)
         val x1 = (id % 2).toInt
         val y1 = ((id / 2) % 2).toInt
@@ -2195,7 +2188,7 @@ object Multimodal {
     * the reference's per-video loop, embarrassingly parallel over a
     * 100 TB corpus of clips. */
   def refEp3Real(s: SparkSession, dir: String): DataFrame =
-    ep3Chain(segClips(s, dir), videoDecoder.resolve(s),
+    ep3Chain(docIds(s, dir), segClip, videoDecoder.resolve(s),
       Codecs.aviEncode(_, _, _, _))
 
   /** L5v: [[refEp3Real]] on the reference's ACTUAL container — the
@@ -2208,12 +2201,12 @@ object Multimodal {
     * real box-walk + stsz/stsc/stco seek path, and each emitted
     * sample re-encodes as ITS OWN MP4 — exactly the files
     * raw_to_samples.py writes (mp4 in, sample mp4s out). The frame
-    * pattern is [[segClips]]'s verbatim (the shared-literal rule), so
+    * pattern is [[segClip]]'s verbatim (the shared-literal rule), so
     * container independence is a THEOREM the spec checks: this op's
     * rows equal ref_ep3_real's on every column except the container
     * size, whose closed form swaps aviSize for mp4SizeVideo. */
   def refEp3Mp4(s: SparkSession, dir: String): DataFrame =
-    ep3Chain(segClipsMp4(s, dir), mp4VideoDecoder.resolve(s),
+    ep3Chain(docIds(s, dir), segClipMp4, mp4VideoDecoder.resolve(s),
       (w, h, fps, fr) => Codecs.mp4EncodeVideo(600, 600 / fps, w, h, fr))
 
   /** L5w: [[refEp3Real]] over a genuinely COMPRESSED video codec —
@@ -2232,7 +2225,7 @@ object Multimodal {
     * no re-quantization touches the cropped pixels), and sub_bytes
     * is aviSize's closed form. */
   def refEp3Mjpeg(s: SparkSession, dir: String): DataFrame =
-    ep3Chain(segClipsMjpeg(s, dir), mjpegDecoder.resolve(s),
+    ep3Chain(docIds(s, dir), segClipMjpeg, mjpegDecoder.resolve(s),
       Codecs.aviEncode(_, _, _, _), sub = Some(videoDecoder.resolve(s)))
 
   /** L6a: the END-TO-END reference capstone — ALL THREE entry points
@@ -2373,21 +2366,22 @@ object Multimodal {
 
   /** The step-3 chain body shared by the AVI and MP4 spellings —
     * container-independent by construction: parameterized only by
-    * the clip relation, the resolved decoder binding (`sub`, when
-    * given, parses the emitted samples), and the sample re-encoder
-    * (a capture-free function, safe to ship to tasks). */
-  private def ep3Chain(clips: Dataset[(Long, Array[Byte])],
+    * the ids, the clip of an id (encoded in the decoding pass), the
+    * resolved decoder binding (`sub`, when given, parses the emitted
+    * samples), and the sample re-encoder (capture-free functions,
+    * safe to ship to tasks). */
+  private def ep3Chain(ids: Dataset[Long], clipOf: Long => Array[Byte],
       decoder: Bound[Codecs.VideoDecoder],
       reencode: (Int, Int, Int, Seq[Array[Byte]]) => Array[Byte],
       sub: Option[Bound[Codecs.VideoDecoder]] = None): DataFrame = {
-    val s = clips.sparkSession
+    val s = ids.sparkSession
     import s.implicits._
     val subBound = sub.getOrElse(decoder)
-    clips.mapPartitions { it =>
+    ids.mapPartitions { it =>
       val dec = decoder.load()
       val subDec = if (subBound == decoder) dec else subBound.load()
-      it.flatMap { case (id, bytes) =>
-        ep3Samples(dec.decode(bytes), reencode, subDec).map {
+      it.flatMap { id =>
+        ep3Samples(dec.decode(clipOf(id)), reencode, subDec).map {
           case (seg, start, end, x1, y1, cw, ch, subBytes, sum) =>
             (id, seg, start, end, x1, y1, cw, ch, subBytes, sum)
         }
@@ -2438,20 +2432,15 @@ object Multimodal {
   val SegmentLengthSec = 2
 
   /** [[jpegBlockGray]] frames (the JPEG codec's invertible class)
-    * muxed as M-JPEG AVIs at fps 2 — the source relation of
+    * muxed as an M-JPEG AVI at fps 2 — the source clip of
     * [[refEp3Mjpeg]]. Gray block rasters: R=G=B per pixel, so the
     * oracle's pixel value is 3x the block gray. */
-  private def segClipsMjpeg(s: SparkSession, dir: String)
-      : Dataset[(Long, Array[Byte])] = {
-    import s.implicits._
-    docIds(s, dir).mapPartitions(_.map { id =>
-      val bw = (2 + id % 2).toInt
-      val bh = (1 + id % 2).toInt
-      val nf = (6 + id % 6).toInt
-      val grays = (0 until nf).map(f => jpegBlockGray(id, f, bw, bh))
-      (id, Jpeg.aviEncodeMjpeg(bw * 8, bh * 8, 2,
-        mjpegFrames(bw * 8, bh * 8, grays)))
-    })
+  private def segClipMjpeg(id: Long): Array[Byte] = {
+    val bw = (2 + id % 2).toInt
+    val bh = (1 + id % 2).toInt
+    val nf = (6 + id % 6).toInt
+    val grays = (0 until nf).map(f => jpegBlockGray(id, f, bw, bh))
+    Jpeg.aviEncodeMjpeg(bw * 8, bh * 8, 2, mjpegFrames(bw * 8, bh * 8, grays))
   }
 
   /** Gray planes as M-JPEG frames that alternate grayscale and 4:2:0
@@ -2467,30 +2456,22 @@ object Multimodal {
       else Jpeg.encodeColor420(w, h, grayToRgb(g))
     }
 
-  /** Longer low-fps clips (fps 2, so frames_per_segment = 4 fits the
-    * 6-13 frame range) shared by [[mmVideoSegments]] and
-    * [[refEp3Real]] — one pattern, one oracle CTE chain. */
-  private def segClips(s: SparkSession, dir: String)
-      : Dataset[(Long, Array[Byte])] = {
-    import s.implicits._
-    docIds(s, dir).mapPartitions(_.map { id =>
-      val (w, h, frames) = segClipFrames(id)
-      (id, Codecs.aviEncode(w, h, 2, frames))
-    })
+  /** The longer low-fps clip of document `id` (fps 2, so
+    * frames_per_segment = 4 fits the 6-13 frame range) shared by
+    * [[mmVideoSegments]] and [[refEp3Real]] — one pattern, one oracle
+    * CTE chain. */
+  private def segClip(id: Long): Array[Byte] = {
+    val (w, h, frames) = segClipFrames(id)
+    Codecs.aviEncode(w, h, 2, frames)
   }
 
-  /** [[segClips]]'s VERBATIM frame pattern muxed into genuine MP4
-    * containers (fps 2 = timescale 600 / sample delta 300; both
-    * muxer box orders by doc parity) — the source relation of
-    * [[refEp3Mp4]]. One pattern, one oracle CTE chain. */
-  private def segClipsMp4(s: SparkSession, dir: String)
-      : Dataset[(Long, Array[Byte])] = {
-    import s.implicits._
-    docIds(s, dir).mapPartitions(_.map { id =>
-      val (w, h, frames) = segClipFrames(id)
-      (id, Codecs.mp4EncodeVideo(600, 300, w, h, frames,
-        moovLast = id % 2 == 0))
-    })
+  /** [[segClip]]'s VERBATIM frame pattern muxed into a genuine MP4
+    * container (fps 2 = timescale 600 / sample delta 300; both muxer
+    * box orders by doc parity) — the source clip of [[refEp3Mp4]].
+    * One pattern, one oracle CTE chain. */
+  private def segClipMp4(id: Long): Array[Byte] = {
+    val (w, h, frames) = segClipFrames(id)
+    Codecs.mp4EncodeVideo(600, 300, w, h, frames, moovLast = id % 2 == 0)
   }
 
   /** The low-fps clips' dims and [[ClipRgb]] frames: w in [8, 11],
@@ -2532,10 +2513,10 @@ object Multimodal {
   def mmVideoSegments(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val bound = videoDecoder.resolve(s)
-    segClips(s, dir).mapPartitions { it =>
+    docIds(s, dir).mapPartitions { it =>
       val dec = bound.load()
-      it.flatMap { case (id, bytes) =>
-        val v = dec.decode(bytes)
+      it.flatMap { id =>
+        val v = dec.decode(segClip(id))
         val fq = v.fps * SegmentLengthSec // frames_per_segment, :330
         val denom = v.width.toLong * v.height * 3
         segmentSpans(v.frames.length, fq).map { case (start, end) =>
@@ -2878,7 +2859,7 @@ object Multimodal {
 
   /** The low-fps clip relation (pv with x, y) + the reference's
     * segment spans (sg raw starts, sb surviving spans) replaying
-    * [[segClips]] — shared by the mm_video_segments and ref_ep3_real
+    * [[segClip]] — shared by the mm_video_segments and ref_ep3_real
     * oracles. */
   private val segClipSql: String =
     """d AS (SELECT doc_id, 8 + doc_id % 4 AS w,
@@ -2899,7 +2880,7 @@ object Multimodal {
       |  WHERE LEAST(start_frame + 5, nf) - start_frame >= 4)""".stripMargin
 
   /** The deterministic clip relation `pv(doc_id, w, h, nf, f, x, y,
-    * v)` replaying [[videoClips]]'s pattern — shared by the
+    * v)` replaying [[aviClip]]'s pattern — shared by the
     * mm_decode_video and mm_argmax_track oracles. */
   private val videoClipSql: String =
     """d AS (SELECT doc_id, 8 + doc_id % 8 AS w,

@@ -747,11 +747,75 @@ class MultimodalSpec extends SparkSpecBase {
       yield Codecs.wavEncodeG711(8000 + n,
         Array.tabulate(n)(i => ((i * 37) % 256).toByte), mu)
     val bmp = (5 to 8).map(w => Codecs.bmpEncode(w, h, frames(w).head))
+    // MP4: both box orders (moov first / mdat first) at widths 5 and 13
+    val mp4Cases = for (w <- Seq(5, 13); last <- Seq(false, true))
+      yield (w, last)
+    val mp4 = mp4Cases.map { case (w, last) =>
+      val p = Array.tabulate(11 + w)(i => (i * 37 + w).toByte)
+      val b = Codecs.mp4Encode(600, 3, 200, w, h, p, last)
+      assert(b.length == Codecs.mp4Size(p.length), s"mp4Size w=$w")
+      b
+    }
+    val mp4Indexed = mp4Cases.map { case (w, last) =>
+      val sizes = Array(3, 0, 7 + w)
+      val p = Array.tabulate(sizes.sum)(i => (i * 41 + w).toByte)
+      val b = Codecs.mp4EncodeIndexed(600, 50, w, h, sizes, p, last)
+      assert(b.length == Codecs.mp4SizeIndexed(sizes.length, p.length),
+        s"mp4SizeIndexed w=$w")
+      b
+    }
+    val mp4Video = mp4Cases.map { case (w, last) =>
+      val b = Codecs.mp4EncodeVideo(600, 300, w, h, frames(w), last)
+      assert(b.length == Codecs.mp4SizeVideo(nf * w * h * 3),
+        s"mp4SizeVideo w=$w")
+      b
+    }
+    val mp4Av = for ((w, last) <- mp4Cases; spf <- Seq(7, 8)) yield {
+      val s = Array.tabulate(nf * spf)(i => ((i * 1237) % 65536 - 32768).toShort)
+      val b = Codecs.mp4EncodeAv(30, 3, w, h, frames(w), spf, s, last)
+      assert(b.length == Codecs.mp4SizeAv(w, h, nf, spf), s"mp4SizeAv w=$w")
+      b
+    }
+    // JPEG: widths and heights off the 8- and 16-pixel grids; flat
+    // blocks (EOB runs) beside textured ones (long AC runs, ZRL)
+    val jpegDims = Seq((13, 11), (37, 19))
+    def gray(w: Int, hh: Int): Array[Byte] = Array.tabulate(w * hh) { i =>
+      val (x, y) = (i % w, i / w)
+      (if ((x / 8 + y / 8) % 3 == 0) 96 + 2 * (x / 8)
+       else (x * x * 7 + y * 13 + x * y) % 256).toByte
+    }
+    def rgb(w: Int, hh: Int): Array[Byte] = Array.tabulate(w * hh * 3) { i =>
+      val (p, c) = (i / 3, i % 3)
+      ((p % w) * (11 + 5 * c) + (p / w) * (7 + 3 * c) + c * 40).toByte
+    }
+    // the bytes before the entropy data are GrayHeaderLen less EOI,
+    // grown by the 6-byte DRI segment when one is written
+    def grayJpeg(restart: Int) = jpegDims.map { case (w, hh) =>
+      val b = Jpeg.encodeGray(w, hh, gray(w, hh), restart)
+      val sos = b.indexOfSlice(Seq(0xff, 0xda).map(_.toByte))
+      assert(sos + 10 == Jpeg.GrayHeaderLen - 2 + (if (restart > 0) 6 else 0),
+        s"encodeGray header w=$w restart=$restart")
+      assert(b.takeRight(2).toSeq == Seq(0xff, 0xd9).map(_.toByte))
+      b
+    }
+    def jpeg(enc: (Int, Int) => Array[Byte]) =
+      jpegDims.map { case (w, hh) => enc(w, hh) }
     val got = Map("aviEncode" -> sha(avi), "aviEncodeAv" -> sha(av),
       "aviEncodeAvG711 mu-law" -> sha(g711(true)),
       "aviEncodeAvG711 A-law" -> sha(g711(false)),
       "aviEncodeMjpeg" -> sha(mjpeg), "wavEncode" -> sha(wav),
-      "wavEncodeG711" -> sha(wavG711), "bmpEncode" -> sha(bmp))
+      "wavEncodeG711" -> sha(wavG711), "bmpEncode" -> sha(bmp),
+      "mp4Encode" -> sha(mp4), "mp4EncodeIndexed" -> sha(mp4Indexed),
+      "mp4EncodeVideo" -> sha(mp4Video), "mp4EncodeAv" -> sha(mp4Av),
+      "encodeGray" -> sha(grayJpeg(0)), "encodeGray DRI" -> sha(grayJpeg(2)),
+      "encodeGrayProgressive" ->
+        sha(jpeg((w, hh) => Jpeg.encodeGrayProgressive(w, hh, gray(w, hh)))),
+      "encodeGrayProgressiveSA" ->
+        sha(jpeg((w, hh) => Jpeg.encodeGrayProgressiveSA(w, hh, gray(w, hh)))),
+      "encodeColor444" ->
+        sha(jpeg((w, hh) => Jpeg.encodeColor444(w, hh, rgb(w, hh)))),
+      "encodeColor420" ->
+        sha(jpeg((w, hh) => Jpeg.encodeColor420(w, hh, rgb(w, hh)))))
     val pinned = Map(
       "aviEncode" ->
         "a2a84d9d58271b71b815dc72eced4fa5e25f9a7573565bc944f17fb3e703ff9b",
@@ -768,8 +832,108 @@ class MultimodalSpec extends SparkSpecBase {
       "wavEncodeG711" ->
         "dac5554d9d2028147a5344c70a2accc4f5539faea6f1fc8006e1d617c0a376ae",
       "bmpEncode" ->
-        "5042102abe70b47351ed522e459b75df16036d10fe267732513a0fcbec75ba62")
+        "5042102abe70b47351ed522e459b75df16036d10fe267732513a0fcbec75ba62",
+      "mp4Encode" ->
+        "d2e69ee1a9c8e4dffc6fc9f742f673c21ad9c845605776df93c24130f94a740f",
+      "mp4EncodeIndexed" ->
+        "6976cf520406094f8cb1edcfeafee34e65bb329fb629b7972e9874926a3cda3d",
+      "mp4EncodeVideo" ->
+        "77f717ec0a285a09cf1e6e82dc441e0f8a63249cd1403beaa53bd35d5521aae3",
+      "mp4EncodeAv" ->
+        "8e6b810fb08e41fef2511f270451bbd669835bc3b1c688be4d980971c85d2f70",
+      "encodeGray" ->
+        "93142077e4616ecc25ed8d505d1dd18e535195eaf67c22a4ba336a0c9c94fce5",
+      "encodeGray DRI" ->
+        "786f5e1edfd3cd96ff75be969744e1d74e03f8448430ad8ada4b31ced6f6ea4e",
+      "encodeGrayProgressive" ->
+        "8dfead8a76751704f003367da1e4f78937a23a6be96a672df4ae352ecb310a06",
+      "encodeGrayProgressiveSA" ->
+        "d5c1c6c5a301313791bef0c25be7c1bcdfdc7f2ac884427f8bcec3bb5e752dc3",
+      "encodeColor444" ->
+        "d83e285cd2f5f9ad8056e04a5b01dc4c19f7aedd2bda0ff9f36196f65ff13544",
+      "encodeColor420" ->
+        "c53eb20abcd99be075aeea77ad60999577fd591528abe289829b5e932c55fc06")
     assert(got == pinned)
+  }
+
+  test("writers reject what their 16-bit fields cannot hold: every MP4 " +
+    "and JPEG writer and gifEncode throw at width 65536 and mp4EncodeAv " +
+    "at an audio rate of 65536; at 65535 each writes a file that decodes " +
+    "at that width or rate") {
+    import multimodal.{Codecs, Jpeg}
+    def writers(w: Int): Seq[(String, () => Array[Byte])] = {
+      val (g, rgb) = (new Array[Byte](w), new Array[Byte](3 * w))
+      Seq(
+        "mp4Encode" -> (() => Codecs.mp4Encode(30, 1, 1, w, 1, Array[Byte](1))),
+        "mp4EncodeIndexed" -> (() =>
+          Codecs.mp4EncodeIndexed(30, 1, w, 1, Array(1), Array[Byte](1))),
+        "mp4EncodeVideo" -> (() => Codecs.mp4EncodeVideo(30, 1, w, 1, Seq(rgb))),
+        "mp4EncodeAv" -> (() =>
+          Codecs.mp4EncodeAv(30, 1, w, 1, Seq(rgb), 1, Array[Short](7))),
+        "encodeGray" -> (() => Jpeg.encodeGray(w, 1, g)),
+        "encodeGray DRI" -> (() => Jpeg.encodeGray(w, 1, g, 5)),
+        "encodeGrayProgressive" -> (() => Jpeg.encodeGrayProgressive(w, 1, g)),
+        "encodeGrayProgressiveSA" ->
+          (() => Jpeg.encodeGrayProgressiveSA(w, 1, g)),
+        "encodeColor444" -> (() => Jpeg.encodeColor444(w, 1, rgb)),
+        "encodeColor420" -> (() => Jpeg.encodeColor420(w, 1, rgb)),
+        "gifEncode" -> (() => Codecs.gifEncode(w, 1, g)))
+    }
+    writers(65536).foreach { case (n, write) =>
+      withClue(n)(intercept[IllegalArgumentException](write()))
+    }
+    val ok = writers(65535).map { case (n, write) => n -> write() }.toMap
+    val mp4v = new Codecs.Mp4VideoDecoder().decode(ok("mp4EncodeVideo"))
+    assert(mp4v.width == 65535 && mp4v.frames.head.length == 3 * 65535)
+    assert(new Codecs.Mp4Probe().probe(ok("mp4Encode")).width == 65535)
+    assert(new Codecs.Mp4AvDecoder().decode(ok("mp4EncodeAv")).video.width ==
+      65535)
+    val jpeg = new Jpeg.JpegDecoder()
+    for (n <- ok.keys.filter(_.startsWith("encode")))
+      assert(jpeg.decode(ok(n)).width == 65535, n)
+    assert(new Codecs.GifLzwDecoder().decode(ok("gifEncode")).width == 65535)
+    // the 'sowt' entry's rate is 16.16 fixed: 32 fps x 2048 samples does
+    // not fit, 15 fps x 4369 = 65535 does
+    val frame = new Array[Byte](3)
+    intercept[IllegalArgumentException](Codecs.mp4EncodeAv(32, 1, 1, 1,
+      Seq(frame), 2048, new Array[Short](2048)))
+    val av = Codecs.mp4EncodeAv(15, 1, 1, 1, Seq(frame), 4369,
+      new Array[Short](4369))
+    assert(new Codecs.Mp4AvDecoder().decode(av).audio.sampleRate == 65535)
+  }
+
+  test("one writer per container family: no MP4 box size is a literal and " +
+    "ftyp/mvhd are written once in Codecs.scala; one JFIF header, one SOS " +
+    "writer and one DC and one AC magnitude coder in the JPEG encoders") {
+    import scala.jdk.CollectionConverters._
+    def lines(name: String): IndexedSeq[String] = {
+      val f = new java.io.File(s"src/main/scala/graft/multimodal/$name")
+      assert(f.isFile, f.getAbsolutePath)
+      java.nio.file.Files.readAllLines(f.toPath).asScala.toIndexedSeq
+    }
+    def where(name: String, ls: IndexedSeq[String], is: Seq[Int]) =
+      is.map(i => s"$name:${i + 1}: ${ls(i).trim}").mkString("\n")
+    def at(ls: IndexedSeq[String], r: scala.util.matching.Regex) =
+      ls.indices.filter(i => r.findFirstIn(ls(i)).isDefined)
+    val codecs = lines("Codecs.scala")
+    val sized = at(codecs, """\bbox\(\s*\d""".r)
+    assert(sized.isEmpty, where("Codecs.scala", codecs, sized))
+    // a reader matches a box type with `case "mvhd" =>`; a writer names it
+    for (tp <- Seq("ftyp", "mvhd")) {
+      val written = at(codecs, ("(?<!case )\"" + tp + "\"").r)
+      assert(written.size == 1, where("Codecs.scala", codecs, written))
+    }
+    val jpeg = lines("Jpeg.scala")
+    val jfif = at(jpeg, "\"JFIF\"".r)
+    assert(jfif.size == 1, where("Jpeg.scala", jpeg, jfif))
+    val sos = at(jpeg, """marker\([^)]*0xda\)""".r)
+    assert(sos.size == 1, where("Jpeg.scala", jpeg, sos))
+    val encoder = jpeg.indexWhere(_.contains("// Encoder.")) until
+      jpeg.indexWhere(_.contains("// Decoder."))
+    assert(encoder.nonEmpty)
+    val magnitude = at(jpeg, """bitLength\(math\.abs\(""".r)
+      .filter(encoder.contains)
+    assert(magnitude.size <= 2, where("Jpeg.scala", jpeg, magnitude))
   }
 
   test("mm_argmax_track: per-frame argmax detections from decoded " +
